@@ -56,7 +56,8 @@ def memo_col(key: tuple, build: Callable[[], Column]) -> Column:
     every input that shapes the tree (builder name, input column via
     :func:`col_key`, every parameter). Entries are dropped when the
     SparkContext changes (the Column wraps a JVM handle from the old
-    gateway)."""
+    gateway): a miss evicts every entry of a dead context, so the memo
+    never pins old gateways' handles."""
     from pyspark import SparkContext
 
     sc = SparkContext._active_spark_context
@@ -65,6 +66,8 @@ def memo_col(key: tuple, build: Callable[[], Column]) -> Column:
         return ent[1]
     col = build()
     if sc is not None:
+        for stale in [k for k, (ctx, _) in _MEMO_COLS.items() if ctx is not sc]:
+            del _MEMO_COLS[stale]
         _MEMO_COLS[key] = (sc, col)
     return col
 

@@ -9,16 +9,33 @@ vector to executors inside a *pickled lambda closure*, map every row to
 Our engine keeps the math but fixes the physics (SURVEY §4.2):
   * weights go out via ``sc.broadcast`` (torrent, once per executor) —
     not per-task closure pickling;
-  * per-row Python lambdas → ONE Arrow-batched ``mapInPandas`` pass that
-    emits a single (cost, grad) partial per partition; the driver sums
+  * per-row Python lambdas → ONE ``mapInArrow`` pass that emits a
+    single (cost, grad) partial per partition; the driver sums
     #partitions small rows — the same partial-aggregation shape as
-    MLlib's ``treeAggregate``;
+    MLlib's ``treeAggregate``. The kernel reads the ``indices``/
+    ``values`` list columns as flat Arrow buffers through their offsets
+    and reduces with ``np.bincount`` — no pandas conversion, no per-row
+    ``np.asarray``;
   * features stay SPARSE ``(indices, values)`` end-to-end — the
     reference's dense 10k-dim row (80 KB/row) is its scaling cliff;
-  * the featurized DataFrame is ``persist()``-ed before the loop — the
-    reference re-runs the full tokenize→join→groupBy lineage on every
-    one of its 300 iterations (SURVEY §4.1, 'the single biggest perf
-    fix').
+  * the features are cached before the loop — the reference re-runs the
+    full tokenize→join→groupBy lineage on every one of its 300
+    iterations (SURVEY §4.1, 'the single biggest perf fix'). An input
+    that is already cached (``storageLevel`` not ``NONE``) is read
+    through its own cache; only an uncached input gets a cached copy,
+    materialized once and released when the fit ends. A second copy
+    would cost an extra job per fit and the memory of the features;
+  * an iteration is bound by fixed costs at the JVM/Python boundary,
+    not by arithmetic, so each task first installs
+    :func:`.worker.spark_zips_read_once`. Every Python task starts with
+    ``importlib.invalidate_caches()``, which makes the worker re-read
+    the central directory of Spark's own ``pyspark.zip`` and py4j zip
+    through every cached ``zipimporter``: 0.13–0.24 s per task (4-core
+    host, pyspark 4.1.2, CPython 3.11.7). Skipping those two immutable
+    archives spares a reused worker that cost on every later task.
+
+The worker closure is self-contained — nested functions only, pickled
+by value — so executors need numpy and pyarrow, not this package.
 
 Optimizer update rules are the standard published forms (SGD, Momentum,
 Nesterov, Adam, Adagrad, RMSprop). The reference's Nesterov and RMSprop
@@ -33,10 +50,12 @@ from collections.abc import Iterator
 from dataclasses import dataclass, field
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
+
+from .worker import spark_zips_read_once
 
 
 def sparse_features(
@@ -57,39 +76,68 @@ def sparse_features(
 
 
 def _partials(loss: str, k: int, weights_bc) -> callable:
-    """mapInPandas generator: one (cost, grad, n) partial per partition."""
+    """mapInArrow generator: one (cost, grad, n) partial per partition.
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    Reads ``indices``/``values`` as flat buffers through each
+    ``ListArray``'s offsets (a sliced batch's ``offsets[0]`` is honoured)
+    and reduces with ``np.bincount``. θ is summed per row in element
+    order, and the gradient is ONE bincount over the partition's
+    contributions in arrival order — the order of accumulating element
+    by element with ``np.add.at``, so the gradient does not depend on
+    how Spark cuts a partition into batches.
+    """
+    if loss not in ("logistic", "hinge"):
+        raise ValueError(loss)
+    keep_spark_zips = spark_zips_read_once()
+
+    def flat(arr: pa.ListArray) -> tuple[np.ndarray, np.ndarray]:
+        """(per-row lengths, flat child values) of a possibly sliced list array."""
+        off = arr.offsets.to_numpy()
+        child = arr.values.slice(off[0], off[-1] - off[0])
+        return np.diff(off), child.to_numpy(zero_copy_only=False)
+
+    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        keep_spark_zips()
         w = weights_bc.value
         cost = 0.0
-        grad = np.zeros(k, dtype=np.float64)
         n = 0
-        for pdf in batches:
-            if pdf.empty:
+        grad_cols, grad_terms = [], []
+        for batch in batches:
+            rows = batch.num_rows
+            if rows == 0:
                 continue
-            rows = len(pdf)
-            cols = np.concatenate([np.asarray(a, dtype=np.int64) for a in pdf["indices"]])
-            vals = np.concatenate([np.asarray(a, dtype=np.float64) for a in pdf["values"]])
-            lens = pdf["indices"].map(len).to_numpy()
+            lens, cols = flat(batch.column("indices"))
+            _, vals = flat(batch.column("values"))
+            vals = vals.astype(np.float64, copy=False)
             row_ids = np.repeat(np.arange(rows), lens)
-            y = pdf["label"].to_numpy(dtype=np.float64)
-            theta = np.zeros(rows)
-            np.add.at(theta, row_ids, vals * w[cols])
+            y = batch.column("label").to_numpy(zero_copy_only=False).astype(np.float64)
+            theta = np.bincount(row_ids, weights=vals * w[cols], minlength=rows)
             if loss == "logistic":
                 # cost = -yθ + log(1+e^θ); grad = x·(σ(θ) - y)
                 cost += float(np.sum(-y * theta + np.logaddexp(0.0, theta)))
                 resid = 1.0 / (1.0 + np.exp(-theta)) - y
-            elif loss == "hinge":
+            else:
                 # y∈{-1,1}; cost = max(0, 1-yθ); grad = -y·x where margin<1
                 ypm = 2.0 * y - 1.0
                 margin = ypm * theta
                 cost += float(np.sum(np.maximum(0.0, 1.0 - margin)))
                 resid = np.where(margin < 1.0, -ypm, 0.0)
-            else:
-                raise ValueError(loss)
-            np.add.at(grad, cols, vals * resid[row_ids])
+            grad_cols.append(cols)
+            grad_terms.append(vals * resid[row_ids])
             n += rows
-        yield pd.DataFrame({"cost": [cost], "grad": [grad.tolist()], "n": [n]})
+        grad = (
+            np.bincount(np.concatenate(grad_cols), weights=np.concatenate(grad_terms), minlength=k)
+            if grad_cols
+            else np.zeros(k, dtype=np.float64)
+        )
+        yield pa.RecordBatch.from_arrays(
+            [
+                pa.array([cost], pa.float64()),
+                pa.ListArray.from_arrays(pa.array([0, len(grad)], pa.int32()), pa.array(grad)),
+                pa.array([n], pa.int64()),
+            ],
+            names=["cost", "grad", "n"],
+        )
 
     return gen
 
@@ -215,10 +263,13 @@ class GDTrainer:
     def fit(self, features: DataFrame) -> "GDTrainer":
         spark = features.sparkSession
         sc = spark.sparkContext
-        feat = features.select("label", "indices", "values").persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        feat.count()  # materialize once; loop reuses the cached partitions
+        feat = features.select("label", "indices", "values")
+        # a cached input is read through its cache (the projection hits
+        # the cache manager); only an uncached one gets its own copy
+        owned = features.storageLevel == StorageLevel.NONE
+        if owned:
+            feat = feat.persist(StorageLevel.MEMORY_AND_DISK)
+            feat.count()  # materialize once; loop reuses the cached partitions
         w = np.zeros(self.k, dtype=np.float64)
         opt = Optimizer(name=self.optimizer, lr=self.lr, compat=self.compat)
         lr = self.lr
@@ -228,7 +279,7 @@ class GDTrainer:
         schema = "cost double, grad array<double>, n long"
         for _ in range(self.iterations):
             bw = sc.broadcast(w)
-            parts = feat.mapInPandas(_partials(self.loss, self.k, bw), schema=schema).collect()
+            parts = feat.mapInArrow(_partials(self.loss, self.k, bw), schema=schema).collect()
             bw.destroy()
             cost = sum(p["cost"] for p in parts)
             grad = np.sum([np.asarray(p["grad"]) for p in parts], axis=0)
@@ -258,7 +309,8 @@ class GDTrainer:
             else:
                 w = opt.step(w, grad)
             prev_cost = cost
-        feat.unpersist()
+        if owned:
+            feat.unpersist()
         self.weights_ = w
         return self
 

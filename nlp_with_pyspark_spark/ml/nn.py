@@ -27,6 +27,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.storagelevel import StorageLevel
 
+from .worker import spark_zips_read_once
+
 
 def _leaky_relu(x: np.ndarray, alpha: float = 0.01) -> np.ndarray:
     return np.where(x > 0, x, alpha * x)
@@ -41,7 +43,10 @@ def _sigmoid(x: np.ndarray) -> np.ndarray:
 
 
 def _nn_partials(k: int, h: int, weights_bc) -> callable:
+    keep_spark_zips = spark_zips_read_once()
+
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        keep_spark_zips()
         w1, b1, w2, b2 = (
             weights_bc.value["w1"],
             weights_bc.value["b1"],
@@ -119,10 +124,11 @@ class NNTrainer:
     def fit(self, features: DataFrame) -> "NNTrainer":
         spark = features.sparkSession
         sc = spark.sparkContext
-        feat = features.select("label", "indices", "values").persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        feat.count()
+        feat = features.select("label", "indices", "values")
+        owned = features.storageLevel == StorageLevel.NONE  # same rule as GDTrainer.fit
+        if owned:
+            feat = feat.persist(StorageLevel.MEMORY_AND_DISK)
+            feat.count()
         rng = np.random.default_rng(self.seed)
         k, h = self.k, self.hidden
         w = {
@@ -180,7 +186,8 @@ class NNTrainer:
                     for key in w:
                         w[key] = w[key] - lr * grads[key]
             prev_cost = cost
-        feat.unpersist()
+        if owned:
+            feat.unpersist()
         self.weights_ = w
         return self
 

@@ -20,3 +20,14 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture
+def restore_zipimporter():
+    """Undo the worker-side ``zipimporter.invalidate_caches`` patch
+    (ml/worker.py) that a trainer kernel run in the test process installs."""
+    import zipimport
+
+    saved = zipimport.zipimporter.invalidate_caches
+    yield
+    zipimport.zipimporter.invalidate_caches = saved

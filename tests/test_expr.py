@@ -77,6 +77,19 @@ def test_memo_col_distinct_keys_distinct_trees(spark):
     assert (row.x, row.y) == (1, 2)
 
 
+def test_memo_col_evicts_dead_context_entries(spark):
+    """A miss drops every entry built under a SparkContext that is no
+    longer active, and keeps the live context's entries."""
+    from nlp_with_pyspark_spark.functions.expr import _MEMO_COLS, memo_col
+
+    live = memo_col(("memo-test", "live"), lambda: F.lit(1))
+    _MEMO_COLS[("memo-test", "dead")] = (object(), F.lit(0))
+    fresh = memo_col(("memo-test", "fresh"), lambda: F.lit(2))
+    assert ("memo-test", "dead") not in _MEMO_COLS
+    assert _MEMO_COLS[("memo-test", "live")][1] is live
+    assert _MEMO_COLS[("memo-test", "fresh")][1] is fresh
+
+
 def test_hygiene_gates_expr_matches_standalone_gates(spark, sf_dir):
     """The combined gate struct's fields are bit-identical to the
     standalone quality_score_expr / is_repetitive_expr and the

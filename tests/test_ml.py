@@ -2,11 +2,13 @@
 gradient checks, cost-decrease properties, and learnability smoke tests."""
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 import pyspark.sql.functions as F
 import pytest
+from pyspark.storagelevel import StorageLevel
 
 from nlp_with_pyspark_spark.functions.text import tokens_pipeline
+from nlp_with_pyspark_spark.ml import gd
 from nlp_with_pyspark_spark.ml.gd import GDTrainer, _partials, sparse_features
 from nlp_with_pyspark_spark.ml.nn import NNTrainer
 from nlp_with_pyspark_spark.operators.features import tf_idf
@@ -20,25 +22,33 @@ class _FakeBC:
 
 
 def _tiny_batch():
-    return pd.DataFrame(
+    return pa.RecordBatch.from_pydict(
         {
-            "label": [1, 0, 1],
-            "indices": [[0, 2], [1, 3], [0, 4]],
-            "values": [[0.5, 1.0], [0.3, 0.7], [1.2, 0.1]],
+            "label": pa.array([1, 0, 1], pa.int32()),
+            "indices": pa.array([[0, 2], [1, 3], [0, 4]], pa.list_(pa.int32())),
+            "values": pa.array([[0.5, 1.0], [0.3, 0.7], [1.2, 0.1]], pa.list_(pa.float64())),
         }
     )
 
 
+def _run_partials(loss, k, w, batches):
+    """(cost, grad, n) of the single partial ``_partials`` yields."""
+    out = list(_partials(loss, k, _FakeBC(w))(iter(batches)))
+    assert len(out) == 1 and out[0].num_rows == 1
+    row = out[0].to_pylist()[0]
+    return row["cost"], np.asarray(row["grad"]), row["n"]
+
+
 @pytest.mark.parametrize("loss", ["logistic", "hinge"])
-def test_gradient_matches_finite_difference(loss):
+def test_gradient_matches_finite_difference(loss, restore_zipimporter):
     k = 5
     rng = np.random.default_rng(0)
     w = rng.normal(0, 0.5, k)
-    pdf = _tiny_batch()
+    batch = _tiny_batch()
 
     def eval_at(wv):
-        out = next(_partials(loss, k, _FakeBC(wv))(iter([pdf])))
-        return float(out["cost"][0]), np.asarray(out["grad"][0])
+        cost, grad, _ = _run_partials(loss, k, wv, [batch])
+        return cost, grad
 
     cost0, grad = eval_at(w)
     eps = 1e-6
@@ -49,6 +59,34 @@ def test_gradient_matches_finite_difference(loss):
         wm[j] -= eps
         fd = (eval_at(wp)[0] - eval_at(wm)[0]) / (2 * eps)
         assert abs(fd - grad[j]) < 1e-4, f"{loss} grad[{j}]: fd={fd} analytic={grad[j]}"
+
+
+@pytest.mark.parametrize("loss", ["logistic", "hinge"])
+def test_partials_read_empty_and_sliced_batches(loss, restore_zipimporter):
+    """An empty batch adds nothing and a sliced batch is read from its
+    own offsets: the partial over [batch, empty, batch.slice(1, 2)]
+    equals a row-by-row numpy computation over rows 0,1,2,1,2."""
+    k = 5
+    w = np.random.default_rng(1).normal(0, 0.5, k)
+    batch = _tiny_batch()
+    cost, grad, n = _run_partials(loss, k, w, [batch, batch.slice(0, 0), batch.slice(1, 2)])
+
+    rows = batch.to_pylist()
+    want_cost, want_grad = 0.0, np.zeros(k)
+    for r in rows + rows[1:3]:
+        cols, vals, y = np.asarray(r["indices"]), np.asarray(r["values"]), float(r["label"])
+        theta = float(vals @ w[cols])
+        if loss == "logistic":
+            want_cost += np.logaddexp(0.0, theta) - y * theta
+            resid = 1.0 / (1.0 + np.exp(-theta)) - y
+        else:
+            ypm = 2.0 * y - 1.0
+            want_cost += max(0.0, 1.0 - ypm * theta)
+            resid = -ypm if ypm * theta < 1.0 else 0.0
+        np.add.at(want_grad, cols, vals * resid)
+    assert n == 5
+    np.testing.assert_allclose(cost, want_cost, rtol=1e-12)
+    np.testing.assert_allclose(grad, want_grad, rtol=1e-12, atol=1e-15)
 
 
 @pytest.fixture(scope="module")
@@ -91,6 +129,50 @@ def test_reference_compat_optimizers_descend(doc_features, optimizer):
     std.fit(feats)
     assert ref.costs_[-1] < ref.costs_[0]
     assert ref.costs_ != std.costs_
+
+
+def _persistent_rdd_ids(spark):
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def _fit_watching_cache(spark, monkeypatch, feats):
+    """Fit Adam on ``feats``; return the persistent RDD ids seen before,
+    during (at every optimizer step) and after the fit."""
+    during = []
+    step = gd.Optimizer.step
+
+    def spy(self, w, g):
+        during.append(_persistent_rdd_ids(spark))
+        return step(self, w, g)
+
+    monkeypatch.setattr(gd.Optimizer, "step", spy)
+    before = _persistent_rdd_ids(spark)
+    GDTrainer(k=50, loss="logistic", optimizer="adam", iterations=2).fit(feats)
+    return before, during, _persistent_rdd_ids(spark)
+
+
+def test_fit_reuses_a_cached_input(spark, doc_features, monkeypatch):
+    """A cached input is read through its own cache: fit adds no second
+    cached copy and leaves the input's storage level as it was."""
+    _, feats = doc_features
+    feats.count()  # materialize the fixture's own cache first
+    level = feats.storageLevel
+    before, during, after = _fit_watching_cache(spark, monkeypatch, feats)
+    assert len(during) == 2
+    assert all(ids <= before for ids in during), "fit persisted a second copy"
+    assert after <= before
+    assert feats.storageLevel == level
+
+
+def test_fit_on_uncached_input_leaves_nothing_cached(spark, doc_features, monkeypatch):
+    """An uncached input gets its own cached copy for the loop, released
+    when the fit ends."""
+    _, cached = doc_features
+    feats = spark.createDataFrame(cached.collect(), cached.schema)
+    before, during, after = _fit_watching_cache(spark, monkeypatch, feats)
+    assert all(len(ids - before) == 1 for ids in during)
+    assert not after - before, "fit left its cached copy behind"
+    assert feats.storageLevel == StorageLevel.NONE
 
 
 @pytest.mark.slow  # heavy e2e/marathon; kin + oracle parity cover the default run
