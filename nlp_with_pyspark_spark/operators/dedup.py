@@ -36,6 +36,8 @@ from typing import NamedTuple
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from . import store
+
 
 # ---------------------------------------------------------------------------
 # exact
@@ -1668,77 +1670,12 @@ NEARDUP_STORE_TABLES = {
 }
 
 
-def _neardup_tombstones_sidecar_path(spark, table_prefix: str) -> str:
-    """Canonical on-disk home of a survivor store's tombstone list: a
-    sibling of the docs data dir (``<docs>__tombstones``), so it shares
-    the store's lifecycle whether the store is external or
-    warehouse-managed — the ``<postings>__tombstones`` convention of
-    operators/search.py applied to the dedup store."""
-    from ..sources.io import table_bucket_spec
-
-    _, _, dpath = table_bucket_spec(spark, f"{table_prefix}_docs")
-    return dpath.rstrip("/") + "__tombstones"
-
-
-def _neardup_id_type(spark, table_prefix: str, id_col: str) -> str:
-    """SQL type of the store's id column, read from the docs table —
-    the tombstone table must match it exactly or the exclusion
-    anti-joins would insert casts that defeat bucket pruning."""
-    for f in spark.table(f"{table_prefix}_docs").schema.fields:
-        if f.name == id_col:
-            return f.dataType.simpleString()
-    raise ValueError(
-        f"{table_prefix}_docs has no column {id_col!r}; pass the id_col "
-        "the store was built with"
-    )
-
-
-def _heal_neardup_tombstones(
-    spark, table_prefix: str, id_col: str = "doc_id"
-) -> bool:
-    """Restart self-heal for the survivor store's tombstone table — the
-    same story ``register_bucketed_table`` gives docs/keys/features: the
-    catalog entry is per-session, the ``<docs>__tombstones`` data dir is
-    not. Without this, a fresh session's delta checks would let a
-    taken-down document keep suppressing its near-duplicates. Schema is
-    declared, not inferred (a post-vacuum empty dir has no footer), with
-    the id type read from the docs table. Local-filesystem stores only
-    (the engine's test/laptop path — ``os.path`` probes the dir); a
-    non-local store (hdfs://, s3a://) keeps a live metastore, where the
-    table never needs healing. Returns True if the table exists after
-    the call."""
-    import os
-
-    tomb_tbl = f"{table_prefix}_tombstones"
-    if spark.catalog.tableExists(tomb_tbl):
-        return True
-    if not spark.catalog.tableExists(f"{table_prefix}_docs"):
-        return False
-    tpath = _neardup_tombstones_sidecar_path(spark, table_prefix)
-    if not os.path.isdir(tpath):
-        return False
-    id_type = _neardup_id_type(spark, table_prefix, id_col)
-    spark.sql(
-        f"CREATE TABLE {tomb_tbl} (`doc_id` {id_type}) USING parquet "
-        f"LOCATION '{tpath}'"
-    )
-    return True
-
-
 def neardup_store_tombstones(
     spark, table_prefix: str, id_col: str = "doc_id"
 ):
     """The store's LIVE tombstone list as a (doc_id) DataFrame, or
-    ``None`` when there are no tombstones — checked ONCE at load so a
-    never-deleted-into (or freshly vacuumed) store keeps its exact
-    pre-delete plan shape, no anti-join added (the
-    ``load_posting_index`` convention)."""
-    tomb_tbl = f"{table_prefix}_tombstones"
-    if not _heal_neardup_tombstones(spark, table_prefix, id_col):
-        return None
-    spark.catalog.refreshTable(tomb_tbl)
-    tombs = spark.table(tomb_tbl)
-    return None if tombs.isEmpty() else tombs
+    ``None`` when there are no tombstones (operators/store.live)."""
+    return store.live(spark, store.neardup(table_prefix, id_col))
 
 
 def remove_from_neardup_store(
@@ -1746,9 +1683,9 @@ def remove_from_neardup_store(
 ) -> int:
     """Logically DELETE documents from a persisted dedup-on-ingest
     survivor store (streaming/sinks.neardup_upsert_batch's bucketed
-    layout) — the right-to-be-forgotten takedown the posting index
-    already has (operators/search.remove_from_posting_index). The ids
-    land in a ``{prefix}_tombstones`` table; every subsequent delta
+    layout) through the shared tombstone protocol (operators/store.py).
+    The ids land in a ``{prefix}_tombstones`` table whose ``doc_id``
+    column has the docs table's ``id_col`` type; every subsequent delta
     check excludes tombstoned docs from candidate generation AND from
     the Jaccard/Hamming/cosine verify (the sink anti-joins its index
     views), so a deleted document stops suppressing near-duplicates of
@@ -1758,208 +1695,46 @@ def remove_from_neardup_store(
     original tables with the tombstoned docs' rows filtered out (pinned
     in tests/test_streaming.py).
 
-    Replay-safe and idempotent: already-tombstoned ids are dropped by
-    an anti-join before the append (re-running a crashed delete adds
-    nothing) and ids absent from the docs ledger are ignored (deleting
-    a never-stored doc is a no-op, not an error). Returns the number of
-    NEWLY tombstoned ids.
-
-    A tombstoned id stays deleted until a vacuum: the sink's docs-guard
-    anti-join still sees it in the ledger, so re-ingesting the same id
-    requires vacuuming first — the posting-index rule, kept identical
-    so one takedown stream can drive both stores.
+    Replay-safe and idempotent; ids absent from the docs ledger are
+    ignored. Returns the number of NEWLY tombstoned ids. A tombstoned
+    id stays deleted until a vacuum: the sink's docs-guard anti-join
+    still sees it in the ledger, so re-ingesting the same id requires
+    vacuuming first.
 
     ``doc_ids``: a one-column DataFrame or any iterable of ids."""
-    from pyspark.sql import DataFrame as _DF
-
-    docs_tbl = f"{table_prefix}_docs"
-    tomb_tbl = f"{table_prefix}_tombstones"
-    if not spark.catalog.tableExists(docs_tbl):
-        raise ValueError(
-            f"{docs_tbl} not found: survivor-store deletes need the "
-            "bucketed store layout (neardup_upsert_batch with "
-            "table_prefix)"
-        )
-    id_type = _neardup_id_type(spark, table_prefix, id_col)
-    if not isinstance(doc_ids, _DF):
-        doc_ids = spark.createDataFrame(
-            [(i,) for i in doc_ids], f"doc_id {id_type}"
-        )
-    ids = doc_ids.select(
-        F.col(doc_ids.columns[0]).cast(id_type).alias("doc_id")
-    )
-    spark.catalog.refreshTable(docs_tbl)
-    # only ids the ledger knows can die; already-dead ids are replays
-    fresh = ids.distinct().join(
-        spark.table(docs_tbl).select(F.col(id_col).alias("doc_id")),
-        "doc_id",
-        "left_semi",
-    )
-    has_tombs = _heal_neardup_tombstones(spark, table_prefix, id_col)
-    if has_tombs:
-        spark.catalog.refreshTable(tomb_tbl)
-        fresh = fresh.join(
-            F.broadcast(spark.table(tomb_tbl)), "doc_id", "left_anti"
-        )
-    # takedown lists are broadcast-sized by the store contract, so the
-    # newly dead ids are collected (ONE bounded job) and appended
-    # driver-side; a contract-violating corpus-sized frame degrades to
-    # the distributed append instead of OOMing the driver
-    # (io.append_ids_table)
-    from ..sources.io import append_ids_table
-
-    return append_ids_table(
-        spark, fresh, f"doc_id {id_type}", tomb_tbl,
-        _neardup_tombstones_sidecar_path(spark, table_prefix),
-    )
-
-
-def _rewrite_neardup_tombstones(
-    spark, table_prefix: str, live, id_col: str = "doc_id"
-) -> None:
-    """Overwrite the survivor store's tombstone table with ``live``'s
-    rows, keeping an EXTERNAL table at its sidecar location (a bare
-    saveAsTable would recreate it MANAGED, orphaning the old ids for
-    the next session's self-heal to resurrect as live tombstones — the
-    search.py lesson). ``live`` may read from the table itself, so it
-    is materialized first. Bounded: tombstone tables hold takedown id
-    lists."""
-    from .search import _table_path_if_external
-
-    tomb_tbl = f"{table_prefix}_tombstones"
-    writer = live.localCheckpoint().write.mode("overwrite").format("parquet")
-    tpath = _table_path_if_external(spark, tomb_tbl)
-    if tpath is not None:
-        writer = writer.option("path", tpath)
-    writer.saveAsTable(tomb_tbl)
+    return store.remove(spark, store.neardup(table_prefix, id_col), doc_ids)
 
 
 def vacuum_neardup_store(
     spark, table_prefix: str, hash_family: str, id_col: str = "doc_id"
 ) -> dict:
-    """Physically drop tombstoned docs' rows from all three store
-    tables (docs + the family's keys/features — their shingles, band
+    """Physically drop tombstoned docs' rows from the docs table and
+    the family's keys/features tables that exist (their shingles, band
     keys, fingerprints or normalized vectors leave disk, completing the
-    takedown), then clear the tombstones table — each table a
-    spec-preserving staged rewrite + directory swap
-    (``compact_bucketed_table``'s crash-recoverable protocol through
-    its ``transform`` seam), exactly
-    :func:`~.search.vacuum_posting_index` applied to the survivor
-    store. Delta-check results are identical before and after (the
-    sink's anti-join was already excluding those rows — pinned in
-    tests); vacuum reclaims space, restores scan cost to live data,
-    and resets the broadcast tombstone list. A crash after the
-    rewrites but before the clear leaves tombstones whose rows are
-    already gone — the anti-joins then subtract nothing and re-running
-    the vacuum completes the clear; the residual hazard (a re-ingest
-    of a folded id admitted while its stale tombstone row still
-    shadows it) is closed structurally by the ingest sink, which
-    scrubs stale tombstone rows for the ids it admits
-    (streaming/sinks.neardup_upsert_batch — the vector store's
-    protocol, pinned in tests). Returns per-table rewrite reports
-    plus the number of tombstones folded."""
-    from ..sources.io import compact_bucketed_tables
-
+    takedown), then clear the tombstones table (operators/store.vacuum).
+    Delta-check results are identical before and after (the sink's
+    anti-join was already excluding those rows — pinned in tests).
+    Returns per-table rewrite reports (keyed by table suffix) plus the
+    number of tombstones folded."""
     if hash_family not in NEARDUP_STORE_TABLES:
         raise ValueError(
             f"unknown hash_family {hash_family!r} "
             "(minhash | simhash | semantic)"
         )
-    tomb_tbl = f"{table_prefix}_tombstones"
-    if not _heal_neardup_tombstones(spark, table_prefix, id_col):
-        return {"tombstones_folded": 0}
-    spark.catalog.refreshTable(tomb_tbl)
-    # no checkpoint: `dead` is only consumed by the folds below, all of
-    # which commit BEFORE the clear rewrites the table it reads
-    dead = spark.table(tomb_tbl)
-    n_dead = dead.count()
-    report: dict = {"tombstones_folded": n_dead}
-    if n_dead:
-        keys_sfx, feats_sfx = NEARDUP_STORE_TABLES[hash_family]
-        dead_as_id = dead.select(F.col("doc_id").alias(id_col))
-
-        def drop_dead_docs(df):
-            return df.join(F.broadcast(dead_as_id), id_col, "left_anti")
-
-        def drop_dead_index(df):
-            return df.join(F.broadcast(dead), "doc_id", "left_anti")
-
-        # the three table rewrites are independent — overlapped (§2.6)
-        jobs = {f"{table_prefix}_docs": drop_dead_docs}
-        for sfx in (keys_sfx, feats_sfx):
-            tbl = f"{table_prefix}_{sfx}"
-            if spark.catalog.tableExists(tbl):
-                jobs[tbl] = drop_dead_index
-        for tbl, rep in compact_bucketed_tables(spark, jobs).items():
-            report[tbl.removeprefix(f"{table_prefix}_")] = rep
-    # the clear writes a 0-row artifact — driver-side, no Spark job
-    from ..sources.io import write_small_table
-    from .search import _table_path_if_external
-
-    id_type = _neardup_id_type(spark, table_prefix, id_col)
-    write_small_table(
-        spark, [], f"doc_id {id_type}", tomb_tbl,
-        _table_path_if_external(spark, tomb_tbl),
+    index = tuple(
+        t
+        for t in (f"{table_prefix}_{sfx}" for sfx in NEARDUP_STORE_TABLES[hash_family])
+        if spark.catalog.tableExists(t)
     )
-    return report
-
-
-def _exact_store_tombstones_sidecar_path(spark, table: str) -> str:
-    """``<data>__tombstones`` sibling of the exact-dedup store's data
-    dir — the same lifecycle-sharing convention as the survivor-store
-    and posting-index sidecars."""
-    from ..sources.io import table_bucket_spec
-
-    _, _, dpath = table_bucket_spec(spark, table)
-    return dpath.rstrip("/") + "__tombstones"
-
-
-def _exact_store_key_schema(spark, table: str, key_cols: tuple) -> str:
-    """DDL fragment for the store's key columns, read from the store
-    table (the tombstone table must match the key types exactly)."""
-    fields = {f.name: f.dataType.simpleString() for f in spark.table(table).schema.fields}
-    missing = [k for k in key_cols if k not in fields]
-    if missing:
-        raise ValueError(f"{table} has no key column(s) {missing}")
-    return ", ".join(f"`{k}` {fields[k]}" for k in key_cols)
-
-
-def _heal_exact_store_tombstones(
-    spark, table: str, key_cols: tuple = ("event_id",)
-) -> bool:
-    """Restart self-heal for the exact-dedup store's tombstone table
-    (the ``_heal_neardup_tombstones`` story, single-table store).
-    Local-filesystem stores only; a non-local store pairs with a live
-    metastore where the heal is never needed."""
-    import os
-
-    tomb_tbl = f"{table}_tombstones"
-    if spark.catalog.tableExists(tomb_tbl):
-        return True
-    if not spark.catalog.tableExists(table):
-        return False
-    tpath = _exact_store_tombstones_sidecar_path(spark, table)
-    if not os.path.isdir(tpath):
-        return False
-    schema = _exact_store_key_schema(spark, table, key_cols)
-    spark.sql(
-        f"CREATE TABLE {tomb_tbl} ({schema}) USING parquet LOCATION '{tpath}'"
-    )
-    return True
+    return store.vacuum(spark, store.neardup(table_prefix, id_col, index))
 
 
 def exact_dedup_store_tombstones(
     spark, table: str, key_cols: tuple = ("event_id",)
 ):
     """The exact-dedup store's LIVE tombstone list (key-cols frame), or
-    ``None`` when empty — checked once at load so a never-deleted-into
-    store reads with no extra join (the load_posting_index convention)."""
-    tomb_tbl = f"{table}_tombstones"
-    if not _heal_exact_store_tombstones(spark, table, key_cols):
-        return None
-    spark.catalog.refreshTable(tomb_tbl)
-    tombs = spark.table(tomb_tbl)
-    return None if tombs.isEmpty() else tombs
+    ``None`` when empty (operators/store.live)."""
+    return store.live(spark, store.exact(table, key_cols))
 
 
 def load_exact_dedup_store(
@@ -1984,116 +1759,29 @@ def remove_from_exact_dedup_store(
     spark, keys, table: str, key_cols: tuple = ("event_id",)
 ) -> int:
     """Logically DELETE keys from a persisted exact-dedup store
-    (streaming/sinks.incremental_dedup_sink's bucketed layout) — the
-    right-to-be-forgotten takedown, completing the pattern across all
-    four persisted stores (posting index + three near-dup families +
-    this). Tombstoned rows leave every :func:`load_exact_dedup_store`
-    read immediately; :func:`vacuum_exact_dedup_store` folds them out
-    physically. A tombstoned key stays dead until a vacuum — the sink's
-    append guard still sees it in the store table, so an identical
-    re-crawl is admitted only after the vacuum (the posting-index rule;
-    admitting it earlier would let the vacuum's key-level fold delete
-    the re-admitted row too).
+    (streaming/sinks.incremental_dedup_sink's bucketed layout) through
+    the shared tombstone protocol (operators/store.py). Tombstoned rows
+    leave every :func:`load_exact_dedup_store` read immediately;
+    :func:`vacuum_exact_dedup_store` folds them out physically. A
+    tombstoned key stays dead until a vacuum — the sink's append guard
+    still sees it in the store table, so an identical re-crawl is
+    admitted only after the vacuum (admitting it earlier would let the
+    vacuum's key-level fold delete the re-admitted row too).
 
     Replay-safe and idempotent: already-tombstoned and never-stored
-    keys are dropped by anti-joins before the append. Returns the
-    number of NEWLY tombstoned keys.
+    keys are ignored. Returns the number of NEWLY tombstoned keys.
 
     ``keys``: a DataFrame carrying ``key_cols``, or (single-key
     stores) any iterable of key values."""
-    from pyspark.sql import DataFrame as _DF
-
-    tomb_tbl = f"{table}_tombstones"
-    if not spark.catalog.tableExists(table):
-        raise ValueError(
-            f"{table} not found: exact-store deletes need the bucketed "
-            "store layout (incremental_dedup_sink with table=...)"
-        )
-    schema = _exact_store_key_schema(spark, table, key_cols)
-    if not isinstance(keys, _DF):
-        if len(key_cols) != 1:
-            raise ValueError(
-                "iterable keys only supported for single-column stores; "
-                "pass a DataFrame carrying " + repr(key_cols)
-            )
-        keys = spark.createDataFrame([(k,) for k in keys], schema)
-    ids = keys.select(*key_cols)
-    spark.catalog.refreshTable(table)
-    fresh = ids.distinct().join(
-        spark.table(table).select(*key_cols), list(key_cols), "left_semi"
-    )
-    has_tombs = _heal_exact_store_tombstones(spark, table, key_cols)
-    if has_tombs:
-        spark.catalog.refreshTable(tomb_tbl)
-        fresh = fresh.join(
-            F.broadcast(spark.table(tomb_tbl)), list(key_cols), "left_anti"
-        )
-    # takedown key lists are broadcast-sized by the store contract —
-    # collected (ONE bounded job) and appended driver-side
-    # (io.append_ids_table; falls back to a Spark append for key types
-    # outside the DDL subset, or for a contract-violating corpus-sized
-    # frame instead of OOMing the driver)
-    from ..sources.io import append_ids_table
-
-    return append_ids_table(
-        spark, fresh, schema, tomb_tbl,
-        _exact_store_tombstones_sidecar_path(spark, table),
-    )
-
-
-def _rewrite_exact_store_tombstones(spark, table: str, live) -> None:
-    """Overwrite the exact store's tombstone table with ``live``'s
-    rows, keeping an EXTERNAL table at its sidecar location (the
-    search.py lesson). ``live`` may read from the table itself, so it
-    is materialized first. Bounded: takedown key lists."""
-    from .search import _table_path_if_external
-
-    tomb_tbl = f"{table}_tombstones"
-    writer = live.localCheckpoint().write.mode("overwrite").format("parquet")
-    tpath = _table_path_if_external(spark, tomb_tbl)
-    if tpath is not None:
-        writer = writer.option("path", tpath)
-    writer.saveAsTable(tomb_tbl)
+    return store.remove(spark, store.exact(table, key_cols), keys)
 
 
 def vacuum_exact_dedup_store(
     spark, table: str, key_cols: tuple = ("event_id",)
 ) -> dict:
-    """Physically drop tombstoned keys' rows from the store table (a
-    spec-preserving staged rewrite through compact's ``transform``
-    seam), then clear the tombstone table at its external sidecar
-    location — :func:`vacuum_neardup_store` for the single-table exact
-    store. After the vacuum the store genuinely forgets the keys: the
-    sink's append guard no longer sees them, so identical future
-    content is admitted as a first occurrence again (and the residual
-    crash window — stale tombstone rows for already-folded keys — is
-    scrubbed by the ingest sink when it admits those keys,
-    streaming/sinks.incremental_dedup_sink)."""
-    from ..sources.io import compact_bucketed_table
-
-    tomb_tbl = f"{table}_tombstones"
-    if not _heal_exact_store_tombstones(spark, table, key_cols):
-        return {"tombstones_folded": 0}
-    spark.catalog.refreshTable(tomb_tbl)
-    # no checkpoint: `dead` is only consumed by the fold below, which
-    # commits BEFORE the clear rewrites the table it reads
-    dead = spark.table(tomb_tbl)
-    n_dead = dead.count()
-    report: dict = {"tombstones_folded": n_dead}
-    if n_dead:
-        report["store"] = compact_bucketed_table(
-            spark,
-            table,
-            transform=lambda df: df.join(
-                F.broadcast(dead), list(key_cols), "left_anti"
-            ),
-        )
-    # the clear writes a 0-row artifact — driver-side, no Spark job
-    from ..sources.io import write_small_table
-    from .search import _table_path_if_external
-
-    schema = _exact_store_key_schema(spark, table, key_cols)
-    write_small_table(
-        spark, [], schema, tomb_tbl, _table_path_if_external(spark, tomb_tbl)
-    )
-    return report
+    """Physically drop tombstoned keys' rows from the store table, then
+    clear the tombstone table (operators/store.vacuum; report key
+    ``store``). After the vacuum the store genuinely forgets the keys:
+    the sink's append guard no longer sees them, so identical future
+    content is admitted as a first occurrence again."""
+    return store.vacuum(spark, store.exact(table, key_cols))

@@ -58,6 +58,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import store
+
 
 def _bm25_topk(
     tf: DataFrame,
@@ -350,64 +352,6 @@ def persist_posting_index(
     )
 
 
-def _table_path_if_external(spark: SparkSession, table: str) -> str | None:
-    """Data path of ``table`` when it is EXTERNAL, else None. The
-    maintenance overwrites below must carry this path through
-    ``option('path', ...)``: a bare ``mode('overwrite').saveAsTable``
-    DROPS an external table and recreates it MANAGED at the warehouse
-    (verified on pyspark 4.1.2), orphaning the on-disk store dir —
-    a path-addressed store would silently stop reflecting committed
-    state."""
-    rows = spark.sql(f"DESCRIBE TABLE EXTENDED {table}").collect()
-    info = {r.col_name: r.data_type for r in rows}
-    if info.get("Type", "").strip().upper() != "EXTERNAL":
-        return None
-    loc = info["Location"]
-    return loc[len("file:"):] if loc.startswith("file:") else loc
-
-
-def _tombstones_sidecar_path(spark: SparkSession, table_prefix: str) -> str:
-    """Canonical on-disk home of the tombstone list: a sibling of the
-    postings data dir (``<postings>__tombstones``), so it shares the
-    store's lifecycle whether the store is external or
-    warehouse-managed."""
-    from ..sources.io import table_bucket_spec
-
-    _, _, ppath = table_bucket_spec(spark, f"{table_prefix}_postings")
-    return ppath.rstrip("/") + "__tombstones"
-
-
-def _heal_tombstones(spark: SparkSession, table_prefix: str) -> bool:
-    """Restart self-heal for the tombstone table — the same story
-    ``register_bucketed_table`` gives postings/docs: the catalog entry
-    is per-session, the ``<postings>__tombstones`` data dir is not.
-    Without this, a fresh session would serve tombstoned (taken-down)
-    docs again and the sink's stats recompute would resurrect their
-    counts. Re-registers an EXTERNAL table over surviving sidecar data
-    (schema declared, not inferred — a post-vacuum empty dir has no
-    footer to read); no-ops when the table is live or the store was
-    never deleted into. Local-filesystem stores only (the engine's
-    test/laptop path — the sidecar probe is ``os.path``): a non-local
-    store (hdfs://, s3a://) pairs with a live metastore, where catalog
-    entries survive restarts and the heal is never needed. Returns
-    True if the table exists after the call."""
-    import os
-
-    tomb_tbl = f"{table_prefix}_tombstones"
-    if spark.catalog.tableExists(tomb_tbl):
-        return True
-    if not spark.catalog.tableExists(f"{table_prefix}_postings"):
-        return False
-    tpath = _tombstones_sidecar_path(spark, table_prefix)
-    if not os.path.isdir(tpath):
-        return False
-    spark.sql(
-        f"CREATE TABLE {tomb_tbl} (`doc_id` bigint) USING parquet "
-        f"LOCATION '{tpath}'"
-    )
-    return True
-
-
 def load_posting_index(spark: SparkSession, table_prefix: str) -> PostingIndex:
     """Load the store for querying. Every table is refreshed first —
     the family-wide read-entry idiom (vector_store.load_vector_index):
@@ -417,7 +361,6 @@ def load_posting_index(spark: SparkSession, table_prefix: str) -> PostingIndex:
     append/delete would read dropped files (or miss new ones) without
     the refresh."""
     docs_tbl = f"{table_prefix}_docs"
-    tomb_tbl = f"{table_prefix}_tombstones"
     # existence-guarded (like docs below): an unconditional refresh of a
     # nonexistent table raises a catalog error far less informative than
     # a store-not-found message
@@ -431,20 +374,13 @@ def load_posting_index(spark: SparkSession, table_prefix: str) -> PostingIndex:
             spark.catalog.refreshTable(f"{table_prefix}_{sub}")
     if spark.catalog.tableExists(docs_tbl):
         spark.catalog.refreshTable(docs_tbl)
-    tombs = None
-    if _heal_tombstones(spark, table_prefix):
-        spark.catalog.refreshTable(tomb_tbl)
-        tombs = spark.table(tomb_tbl)
-        if tombs.isEmpty():
-            # post-vacuum (or never-deleted-into) store: checked ONCE at
-            # load so every query plan stays anti-join-free, exactly the
-            # pre-delete plan shape (plan-asserted in tests)
-            tombs = None
     return PostingIndex(
         spark.table(f"{table_prefix}_postings"),
         spark.table(f"{table_prefix}_stats"),
         spark.table(docs_tbl) if spark.catalog.tableExists(docs_tbl) else None,
-        tombs,
+        # None when empty: query plans keep the pre-delete shape
+        # (plan-asserted in tests)
+        store.live(spark, store.posting(table_prefix)),
     )
 
 
@@ -502,22 +438,10 @@ def append_to_posting_index(index_delta: PostingIndex, table_prefix: str) -> Non
     # list, the postings anti-join and the docs append — pin it once
     fresh_docs = fresh_docs.localCheckpoint()
     batch_ids = F.broadcast(fresh_docs.select("doc_id"))
-    # vacuum-crash-window scrub (the vector store's protocol,
-    # operators/vector_store.append_to_vector_index): an ADMITTED id —
-    # absent from the ledger — that still has a tombstone row can only
-    # be a vacuum that died between its physical fold and its tombstone
-    # clear (live tombstones are in the ledger and never admitted).
-    # Scrub those rows before the data appends, or the re-ingested doc
-    # would be invisibly suppressed at query time, excluded from the
-    # derived stats, and physically folded by the next vacuum.
-    if _heal_tombstones(spark, table_prefix):
-        tomb_tbl = f"{table_prefix}_tombstones"
-        spark.catalog.refreshTable(tomb_tbl)
-        tombs = spark.table(tomb_tbl)
-        if not tombs.join(batch_ids, "doc_id", "left_semi").isEmpty():
-            _rewrite_tombstones(
-                spark, table_prefix, tombs.join(batch_ids, "doc_id", "left_anti")
-            )
+    # stale tombstones of admitted ids go before the data appends (the
+    # vacuum crash window, operators/store.py)
+    spec = store.posting(table_prefix)
+    store.scrub(spark, spec, batch_ids, store.table(spark, spec))
     to_append = index_delta.postings.join(batch_ids, "doc_id", "left_semi")
     stale = spark.table(postings_tbl).join(batch_ids, "doc_id", "left_semi")
     to_append = to_append.join(stale, ["word", "doc_id"], "left_anti")
@@ -531,14 +455,11 @@ def _live_docs(spark: SparkSession, table_prefix: str) -> DataFrame:
     set every derived quantity (stats, rebuild-equivalence) is defined
     over."""
     docs_tbl = f"{table_prefix}_docs"
-    tomb_tbl = f"{table_prefix}_tombstones"
     spark.catalog.refreshTable(docs_tbl)
     live = spark.table(docs_tbl)
-    if _heal_tombstones(spark, table_prefix):
-        spark.catalog.refreshTable(tomb_tbl)
-        live = live.join(
-            F.broadcast(spark.table(tomb_tbl)), "doc_id", "left_anti"
-        )
+    tombs = store.table(spark, store.posting(table_prefix))
+    if tombs is not None:
+        live = live.join(F.broadcast(tombs), "doc_id", "left_anti")
     return live
 
 
@@ -562,7 +483,7 @@ def _refresh_stats(spark: SparkSession, table_prefix: str) -> None:
         .collect()[0]
     )
     spath = (
-        _table_path_if_external(spark, stats_tbl)
+        store._table_path_if_external(spark, stats_tbl)
         if spark.catalog.tableExists(stats_tbl)
         else None
     )
@@ -575,31 +496,12 @@ def _refresh_stats(spark: SparkSession, table_prefix: str) -> None:
     )
 
 
-def _rewrite_tombstones(
-    spark: SparkSession, table_prefix: str, live: DataFrame
-) -> None:
-    """Overwrite the tombstone table with ``live``'s rows, preserving
-    its external location (an EXTERNAL tombstone table — the normal
-    case, created at ``<postings>__tombstones`` — must keep its
-    location through the overwrite: a bare saveAsTable would drop it
-    and recreate MANAGED at the warehouse, leaving the old ids orphaned
-    on disk for the next session's self-heal to resurrect as live
-    tombstones). ``live`` may read from the table itself, so it is
-    materialized first. Bounded: tombstone tables hold takedown id
-    lists."""
-    tomb_tbl = f"{table_prefix}_tombstones"
-    writer = live.localCheckpoint().write.mode("overwrite").format("parquet")
-    tpath = _table_path_if_external(spark, tomb_tbl)
-    if tpath is not None:
-        writer = writer.option("path", tpath)
-    writer.saveAsTable(tomb_tbl)
-
-
 def remove_from_posting_index(
     spark: SparkSession, doc_ids, table_prefix: str
 ) -> int:
     """Logically DELETE documents from a persisted index (takedown /
-    recrawl-replacement maintenance): the ids land in a
+    recrawl-replacement maintenance) through the shared tombstone
+    protocol (operators/store.py): the ids land in a
     ``{prefix}_tombstones`` table, stats re-derive over the live ledger
     (committed minus tombstoned — so n_docs/avgdl immediately reflect
     the deletion), and :func:`bm25_topk_indexed` excludes tombstoned
@@ -608,54 +510,14 @@ def remove_from_posting_index(
     (pinned in tests): tf rows drop before df is counted, and the
     stats are the rebuild's exact integers.
 
-    Replay-safe and idempotent: ids already tombstoned are dropped by
-    an anti-join before the append (re-running a crashed delete adds
-    nothing), and ids absent from the docs ledger are ignored (deleting
-    a never-indexed doc is a no-op, not an error). Returns the number
-    of NEWLY tombstoned ids.
-
-    Scale shape: tombstones stay query-time-broadcastable because
-    :func:`vacuum_posting_index` periodically folds them into a
-    physical rewrite and clears the table — the LSM delete pattern.
-    A tombstoned id stays deleted until a vacuum; re-ingesting it
-    requires vacuuming first (the append guard treats ledger ids as
+    Replay-safe and idempotent; ids absent from the docs ledger are
+    ignored. Returns the number of NEWLY tombstoned ids. A tombstoned
+    id stays deleted until :func:`vacuum_posting_index`; re-ingesting
+    it requires vacuuming first (the append guard treats ledger ids as
     committed).
 
     ``doc_ids``: a one-column DataFrame or any iterable of ids."""
-    if not isinstance(doc_ids, DataFrame):
-        doc_ids = spark.createDataFrame(
-            [(int(i),) for i in doc_ids], "doc_id bigint"
-        )
-    ids = doc_ids.select(F.col(doc_ids.columns[0]).cast("long").alias("doc_id"))
-    docs_tbl = f"{table_prefix}_docs"
-    tomb_tbl = f"{table_prefix}_tombstones"
-    if not spark.catalog.tableExists(docs_tbl):
-        raise ValueError(
-            f"{docs_tbl} not found: deletes need the docs ledger — rebuild "
-            "the store with persist_posting_index first"
-        )
-    spark.catalog.refreshTable(docs_tbl)
-    # only ids the ledger knows can die; already-dead ids are replays
-    fresh = ids.distinct().join(
-        spark.table(docs_tbl).select("doc_id"), "doc_id", "left_semi"
-    )
-    has_tombs = _heal_tombstones(spark, table_prefix)
-    if has_tombs:
-        spark.catalog.refreshTable(tomb_tbl)
-        fresh = fresh.join(F.broadcast(spark.table(tomb_tbl)), "doc_id", "left_anti")
-    # takedown lists are broadcast-sized by the store contract, so the
-    # newly dead ids are collected (ONE bounded job) and appended
-    # driver-side — replacing localCheckpoint + count + a Spark write
-    # job; a contract-violating corpus-sized frame degrades to the
-    # distributed append instead of OOMing the driver
-    # (io.append_ids_table); the tombstone home is the
-    # `<postings>__tombstones` sidecar either way
-    from ..sources.io import append_ids_table
-
-    n = append_ids_table(
-        spark, fresh, "doc_id bigint", tomb_tbl,
-        _tombstones_sidecar_path(spark, table_prefix),
-    )
+    n = store.remove(spark, store.posting(table_prefix), doc_ids)
     if n:
         _refresh_stats(spark, table_prefix)
     return n
@@ -663,60 +525,18 @@ def remove_from_posting_index(
 
 def vacuum_posting_index(spark: SparkSession, table_prefix: str) -> dict:
     """Physically drop tombstoned docs' rows from the postings table
-    and the docs ledger — a spec-preserving staged rewrite + directory
-    swap per table (``compact_bucketed_table``'s crash-recoverable
-    protocol, riding its ``transform`` seam) — then clear the
-    tombstones table. Query results are identical before and after
-    (the anti-join was already excluding those rows — pinned in
-    tests); vacuum reclaims space, restores scan cost to live-data
-    size, compacts as a side effect, and resets the broadcast
-    tombstone list that query-time carries.
-
-    Crash ordering: each table swap is individually crash-recovered
-    (``recover_compact_swap``); a crash after the rewrites but before
-    the tombstone clear leaves tombstones whose rows are already gone —
-    the query-time anti-join and the stats derivation then subtract
-    nothing, and re-running the vacuum completes the clear. The
-    residual hazard inside that window — a RE-INGEST of a folded
-    doc_id admitted by the ledger guard while its stale tombstone row
-    still shadows it — is closed structurally by
-    :func:`append_to_posting_index`, which scrubs stale tombstone rows
-    for the ids it admits (the vector store's protocol, pinned in
-    tests). Returns per-table rewrite reports plus the number of
+    and the docs ledger, then clear the tombstones table
+    (operators/store.vacuum) and re-derive the stats. Query results are
+    identical before and after (the anti-join was already excluding
+    those rows — pinned in tests); vacuum reclaims space, restores scan
+    cost to live-data size, compacts as a side effect, and resets the
+    broadcast tombstone list that query-time carries. Returns per-table
+    rewrite reports (``postings``, ``docs``) plus the number of
     tombstones folded."""
-    from ..sources.io import compact_bucketed_tables
-
-    tomb_tbl = f"{table_prefix}_tombstones"
-    if not _heal_tombstones(spark, table_prefix):
-        return {"tombstones_folded": 0}
-    spark.catalog.refreshTable(tomb_tbl)
-    # no checkpoint: `dead` is only consumed by the folds below, all of
-    # which commit BEFORE the clear rewrites the table it reads
-    dead = spark.table(tomb_tbl)
-    n_dead = dead.count()
-    report: dict = {"tombstones_folded": n_dead}
-    if n_dead:
-        drop_dead = lambda df: df.join(F.broadcast(dead), "doc_id", "left_anti")  # noqa: E731
-        # the two table rewrites are independent — overlapped (§2.6)
-        report.update(
-            compact_bucketed_tables(
-                spark,
-                {
-                    f"{table_prefix}_postings": drop_dead,
-                    f"{table_prefix}_docs": drop_dead,
-                },
-            )
-        )
-        report["postings"] = report.pop(f"{table_prefix}_postings")
-        report["docs"] = report.pop(f"{table_prefix}_docs")
-    # the clear writes a 0-row artifact — driver-side, no Spark job
-    from ..sources.io import write_small_table
-
-    write_small_table(
-        spark, [], "doc_id bigint", tomb_tbl,
-        _table_path_if_external(spark, tomb_tbl),
-    )
-    _refresh_stats(spark, table_prefix)
+    spec = store.posting(table_prefix)
+    report = store.vacuum(spark, spec)
+    if spark.catalog.tableExists(spec.tombstones):
+        _refresh_stats(spark, table_prefix)
     return report
 
 

@@ -29,8 +29,7 @@ the identical contract, built from the same proven pieces:
     re-deriving anything. Both are bounded-small (n_lists rows;
     m·ksub rows) and are collected into plan literals at load.
   * ``<codes>__tombstones`` sidecar + ``{prefix}_tombstones`` table —
-    the LSM delete, byte-for-byte the posting index's pattern
-    (operators/search.remove_from_posting_index): idempotent appends,
+    the shared LSM delete (operators/store.py): idempotent appends,
     broadcast anti-join at serve time, restart self-heal from the
     sidecar, vacuum folds + clears.
 
@@ -50,6 +49,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from . import store
 from .similarity import (
     _d2_sql,
     _dot_sql,
@@ -81,7 +81,7 @@ class VectorIndex:
     """A loaded persisted IVF-PQ store: the two data tables plus the
     quantizer literals (collected once — n_lists and m·ksub rows) and
     the live tombstone list (``None`` when empty, so every serve plan
-    stays anti-join-free after a vacuum — the posting-index idiom)."""
+    stays anti-join-free after a vacuum)."""
 
     codes: DataFrame
     vecs: DataFrame
@@ -239,48 +239,13 @@ def train_and_persist_vector_index(
     )
 
 
-def _tombstones_sidecar_path(spark: SparkSession, table_prefix: str) -> str:
-    from ..sources.io import table_bucket_spec
-
-    _, _, cpath = table_bucket_spec(spark, f"{table_prefix}_codes")
-    return cpath.rstrip("/") + "__tombstones"
-
-
-def _heal_tombstones(spark: SparkSession, table_prefix: str) -> bool:
-    """Restart self-heal for the tombstone table over its surviving
-    sidecar data — operators/search._heal_tombstones verbatim for the
-    vector store (same local-filesystem scope, same rationale: a
-    non-local store pairs with a live metastore where catalog entries
-    survive and the heal is never needed)."""
-    import os
-
-    tomb_tbl = f"{table_prefix}_tombstones"
-    if spark.catalog.tableExists(tomb_tbl):
-        return True
-    if not spark.catalog.tableExists(f"{table_prefix}_codes"):
-        return False
-    tpath = _tombstones_sidecar_path(spark, table_prefix)
-    if not os.path.isdir(tpath):
-        return False
-    spark.sql(
-        f"CREATE TABLE {tomb_tbl} (`vec_id` bigint) USING parquet "
-        f"LOCATION '{tpath}'"
-    )
-    return True
-
-
 def vector_index_tombstones(
     spark: SparkSession, table_prefix: str
 ) -> DataFrame | None:
     """The live tombstone list, or ``None`` when the store has none —
     healed from the sidecar first, so a fresh session never serves
     taken-down vectors."""
-    if not _heal_tombstones(spark, table_prefix):
-        return None
-    tomb_tbl = f"{table_prefix}_tombstones"
-    spark.catalog.refreshTable(tomb_tbl)
-    tombs = spark.table(tomb_tbl)
-    return None if tombs.isEmpty() else tombs
+    return store.live(spark, store.vector(table_prefix))
 
 
 def register_vector_index(
@@ -294,7 +259,7 @@ def register_vector_index(
     remembering the build-time value; ``n_buckets`` is only the
     fallback for sidecar-less pre-existing stores), quantizer tables
     from their parquet footers, tombstones from the ``__tombstones``
-    sidecar (:func:`_heal_tombstones`). Also resolves any half-finished
+    sidecar (operators/store.heal). Also resolves any half-finished
     compaction swap first. No-op for every entry that is already live;
     after this, :func:`load_vector_index` serves the committed state
     exactly — including still-pending takedowns."""
@@ -317,7 +282,7 @@ def register_vector_index(
         tbl, p = f"{table_prefix}_{sub}", f"{store_path}/{sub}"
         if not spark.catalog.tableExists(tbl) and os.path.isdir(p):
             spark.catalog.createTable(tbl, path=p, source="parquet")
-    _heal_tombstones(spark, table_prefix)
+    store.heal(spark, store.vector(table_prefix))
 
 
 def load_vector_index(spark: SparkSession, table_prefix: str) -> VectorIndex:
@@ -325,13 +290,12 @@ def load_vector_index(spark: SparkSession, table_prefix: str) -> VectorIndex:
     into literals here — bounded by construction (n_lists rows and
     m·ksub rows, the artifact's size, independent of corpus size).
 
-    Every table is refreshed first — the family-wide read-entry idiom
-    (operators/search.append_to_posting_index): a streaming sink's
-    foreachBatch writes through a CLONED SparkSession, so the clone's
-    cache invalidation never reaches this session's cached file
-    listing, and a serve after a streamed append would silently miss
-    the new rows without the refresh (caught by the drift-cycle test
-    in tests/test_vector_store.py)."""
+    Every table is refreshed first — the family-wide read-entry idiom:
+    a streaming sink's foreachBatch writes through a CLONED
+    SparkSession, so the clone's cache invalidation never reaches this
+    session's cached file listing, and a serve after a streamed append
+    would silently miss the new rows without the refresh (caught by
+    the drift-cycle test in tests/test_vector_store.py)."""
     for sub in ("codes", "vecs", "centroids", "codebooks"):
         spark.catalog.refreshTable(f"{table_prefix}_{sub}")
     cent_rows = spark.table(f"{table_prefix}_centroids").collect()
@@ -358,10 +322,8 @@ def append_to_vector_index(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> int:
-    """Ingest a batch into the persisted store, REPLAY-SAFELY — the
-    posting index's append protocol (operators/search.
-    append_to_posting_index) with the vecs ledger in the docs-ledger
-    role:
+    """Ingest a batch into the persisted store, REPLAY-SAFELY, with the
+    vecs ledger as the replay guard:
 
       * ids already in the ledger leave the batch up front (anti-join —
         re-appending a committed vector after a crash is a no-op);
@@ -374,13 +336,10 @@ def append_to_vector_index(
     A tombstoned id is still in the ledger, so re-ingesting it
     pre-vacuum is suppressed — a taken-down vector stays dead until the
     vacuum physically forgets it, after which a re-ingest is admitted
-    as a first occurrence (the exact-dedup store's pinned semantics).
-    An admitted id that still HAS a tombstone row can only mean a
-    vacuum crashed between its physical fold and its tombstone clear
-    (live tombstones are in the ledger and never admitted) — such
-    stale rows are scrubbed here before the data appends, so the
-    re-ingested vector serves immediately instead of being invisibly
-    shadowed until the next vacuum.
+    as a first occurrence. Stale tombstone rows of admitted ids (a
+    vacuum that crashed between fold and clear) are scrubbed before the
+    data appends (operators/store.scrub), so the re-ingested vector
+    serves immediately instead of being invisibly shadowed.
 
     Scale shape: the encode is the literal projection; the ledger
     guard semi-filters a bucketed key-only scan by the broadcast batch
@@ -411,14 +370,7 @@ def append_to_vector_index(
     if not n_new:
         return 0
     batch_ids = F.broadcast(fresh.select("vec_id"))
-    if idx.tombstones is not None:
-        stale = idx.tombstones.join(batch_ids, "vec_id", "left_semi")
-        if not stale.isEmpty():
-            _rewrite_tombstones(
-                spark,
-                table_prefix,
-                idx.tombstones.join(batch_ids, "vec_id", "left_anti"),
-            )
+    store.scrub(spark, store.vector(table_prefix), batch_ids, idx.tombstones)
     new_codes = _encode(
         fresh, idx.centroids, idx.codebooks, "embedding", "vec_id"
     ).localCheckpoint()  # consumed by the list collect, the guard, the append
@@ -439,108 +391,24 @@ def append_to_vector_index(
 def remove_from_vector_index(
     spark: SparkSession, vec_ids, table_prefix: str
 ) -> int:
-    """Logically DELETE vectors (takedown): ids land in the tombstone
-    table; serving excludes them via a broadcast anti-join on the
-    probed-candidate frame BEFORE the shortlist rank, so the answer
-    equals an index rebuilt without them (next-best candidates fill the
-    freed shortlist slots — pinned in tests). Idempotent and replay-safe
-    exactly like operators/search.remove_from_posting_index: already-
-    tombstoned ids are dropped before the append, never-ingested ids
-    are ignored. Returns the number of NEWLY tombstoned ids."""
-    if not isinstance(vec_ids, DataFrame):
-        vec_ids = spark.createDataFrame(
-            [(int(i),) for i in vec_ids], "vec_id bigint"
-        )
-    ids = vec_ids.select(F.col(vec_ids.columns[0]).cast("long").alias("vec_id"))
-    vecs_tbl = f"{table_prefix}_vecs"
-    tomb_tbl = f"{table_prefix}_tombstones"
-    spark.catalog.refreshTable(vecs_tbl)
-    fresh = ids.distinct().join(
-        spark.table(vecs_tbl).select("vec_id"), "vec_id", "left_semi"
-    )
-    has_tombs = _heal_tombstones(spark, table_prefix)
-    if has_tombs:
-        spark.catalog.refreshTable(tomb_tbl)
-        fresh = fresh.join(F.broadcast(spark.table(tomb_tbl)), "vec_id", "left_anti")
-    # takedown lists are broadcast-sized by the store contract, so the
-    # newly dead ids are collected (ONE bounded job) and appended
-    # driver-side; a contract-violating corpus-sized frame degrades to
-    # the distributed append instead of OOMing the driver
-    # (io.append_ids_table)
-    from ..sources.io import append_ids_table
-
-    return append_ids_table(
-        spark, fresh, "vec_id bigint", tomb_tbl,
-        _tombstones_sidecar_path(spark, table_prefix),
-    )
-
-
-def _rewrite_tombstones(
-    spark: SparkSession, table_prefix: str, live: DataFrame
-) -> None:
-    """Overwrite the tombstone table with ``live``'s rows, preserving
-    its external location. ``live`` may read from the table itself, so
-    it is materialized first (overwriting a path being read from is an
-    error). Bounded: tombstone tables hold takedown id lists."""
-    from .search import _table_path_if_external
-
-    tomb_tbl = f"{table_prefix}_tombstones"
-    writer = live.localCheckpoint().write.mode("overwrite").format("parquet")
-    tpath = _table_path_if_external(spark, tomb_tbl)
-    if tpath is not None:
-        writer = writer.option("path", tpath)
-    writer.saveAsTable(tomb_tbl)
+    """Logically DELETE vectors (takedown) through the shared tombstone
+    protocol (operators/store.remove): serving excludes them via a
+    broadcast anti-join on the probed-candidate frame BEFORE the
+    shortlist rank, so the answer equals an index rebuilt without them
+    (next-best candidates fill the freed shortlist slots — pinned in
+    tests). Idempotent and replay-safe; never-ingested ids are ignored.
+    Returns the number of NEWLY tombstoned ids."""
+    return store.remove(spark, store.vector(table_prefix), vec_ids)
 
 
 def vacuum_vector_index(spark: SparkSession, table_prefix: str) -> dict:
-    """Physically fold tombstoned vectors out of ``codes`` and ``vecs``
-    (spec-preserving staged rewrite + crash-recoverable swap —
-    ``io.compact_bucketed_table``'s transform seam, the same machinery
-    every other store family vacuums through), then clear the tombstone
-    table preserving its external location. Serve results are identical
-    before and after; the rewrite reclaims space and resets the
-    broadcast list. Returns per-table rewrite reports + fold count.
-
-    Ordering hazard (and its repair): the physical fold MUST precede
-    the tombstone clear — the reverse order would briefly serve
-    taken-down vectors if the process died in between, which a takedown
-    can never tolerate. The residual window (died after the folds,
-    before the clear) leaves stale tombstone rows for ids the ledger no
-    longer holds; a replayed vacuum folds nothing and completes the
-    clear, and ``append_to_vector_index`` scrubs any such stale row for
-    an id it admits, so a re-ingest inside the window is never
-    invisibly shadowed (pinned in tests/test_vector_store.py)."""
-    from ..sources.io import compact_bucketed_tables
-
-    tomb_tbl = f"{table_prefix}_tombstones"
-    if not _heal_tombstones(spark, table_prefix):
-        return {"tombstones_folded": 0}
-    spark.catalog.refreshTable(tomb_tbl)
-    # no checkpoint: `dead` is only consumed by the folds below, all of
-    # which commit BEFORE the clear rewrites the table it reads
-    dead = spark.table(tomb_tbl)
-    n_dead = dead.count()
-    report: dict = {"tombstones_folded": n_dead}
-    if n_dead:
-        drop_dead = lambda df: df.join(F.broadcast(dead), "vec_id", "left_anti")  # noqa: E731
-        # the two table rewrites are independent — overlapped (§2.6)
-        report.update(
-            compact_bucketed_tables(
-                spark,
-                {f"{table_prefix}_codes": drop_dead, f"{table_prefix}_vecs": drop_dead},
-            )
-        )
-        report["codes"] = report.pop(f"{table_prefix}_codes")
-        report["vecs"] = report.pop(f"{table_prefix}_vecs")
-    # the clear writes a 0-row artifact — driver-side, no Spark job
-    from ..sources.io import write_small_table
-    from .search import _table_path_if_external
-
-    write_small_table(
-        spark, [], "vec_id bigint", tomb_tbl,
-        _table_path_if_external(spark, tomb_tbl),
-    )
-    return report
+    """Physically fold tombstoned vectors out of ``codes`` and ``vecs``,
+    then clear the tombstone table (operators/store.vacuum — fold
+    before clear, so a crash in between never serves a taken-down
+    vector). Serve results are identical before and after; the rewrite
+    reclaims space and resets the broadcast list. Returns per-table
+    rewrite reports (``codes``, ``vecs``) + fold count."""
+    return store.vacuum(spark, store.vector(table_prefix))
 
 
 def merge_vector_indexes(
@@ -889,9 +757,7 @@ def _overwrite_centroids(
     spark: SparkSession, table_prefix: str, rows: list[tuple[int, list[float]]]
 ) -> None:
     """Overwrite the (tiny) centroid table preserving its external
-    location — the ``_rewrite_tombstones`` idiom for the quantizer."""
-    from .search import _table_path_if_external
-
+    location (see ``store._table_path_if_external``)."""
     from ..sources.io import write_small_table
 
     tbl = f"{table_prefix}_centroids"
@@ -900,7 +766,7 @@ def _overwrite_centroids(
         [(int(i), [float(x) for x in c]) for i, c in rows],
         "list_id int, centroid array<double>",
         tbl,
-        _table_path_if_external(spark, tbl),
+        store._table_path_if_external(spark, tbl),
     )
     spark.catalog.refreshTable(tbl)
 

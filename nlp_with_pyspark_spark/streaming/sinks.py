@@ -19,6 +19,22 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.utils import AnalysisException
 
+from ..operators import store
+
+
+def _run_foreach_batch(stream: DataFrame, fn, checkpoint: str):
+    """Run ``fn(batch_df, batch_id)`` on every micro-batch of ``stream``
+    until the input available at start is drained (``availableNow``),
+    checkpointed at ``checkpoint``; returns the finished query."""
+    q = (
+        stream.writeStream.foreachBatch(fn)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return q
+
 
 def incremental_dedup_sink(
     stream_df: DataFrame,
@@ -74,26 +90,13 @@ def incremental_dedup_sink(
             if spark.catalog.tableExists(table):
                 spark.catalog.refreshTable(table)
                 fresh = fresh.join(spark.table(table).select(*keys), keys, "left_anti")
-                from ..operators.dedup import (
-                    _rewrite_exact_store_tombstones,
-                    exact_dedup_store_tombstones,
-                )
-
-                tombs = exact_dedup_store_tombstones(spark, table, key_cols)
+                # stale tombstones of admitted keys go before the append
+                # (the vacuum crash window, operators/store.py)
+                spec = store.exact(table, key_cols)
+                tombs = store.live(spark, spec)
                 if tombs is not None:
-                    # vacuum-crash-window scrub (the vector store's
-                    # protocol): an ADMITTED key — absent from the store
-                    # table — that still has a tombstone row can only be
-                    # a vacuum that died between its physical fold and
-                    # its tombstone clear. Scrub it, or the re-ingested
-                    # row would be invisibly excluded by every consumer
-                    # that anti-joins the tombstone list.
                     fresh = fresh.localCheckpoint()
-                    b_keys = F.broadcast(fresh.select(*keys))
-                    if not tombs.join(b_keys, keys, "left_semi").isEmpty():
-                        _rewrite_exact_store_tombstones(
-                            spark, table, tombs.join(b_keys, keys, "left_anti")
-                        )
+                    store.scrub(spark, spec, F.broadcast(fresh.select(*keys)), tombs)
                 append_to_bucketed_table(fresh, table)
             else:
                 write_bucketed(fresh, table, keys[0], n_buckets, path=path)
@@ -122,14 +125,7 @@ def incremental_dedup_sink(
         ):
             compact_parquet(spark, path)
 
-    q = (
-        stream_df.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return _run_foreach_batch(stream_df, upsert, checkpoint)
 
 
 def _neardup_family(
@@ -473,28 +469,15 @@ def neardup_upsert_batch(
         # folds it into the tables (the LSM cadence); checked once per
         # batch so a never-deleted-into store adds no join at all. The
         # docs-guard anti-join above still sees tombstoned ids in the
-        # ledger — re-ingesting one requires a vacuum first, the
-        # posting-index rule. Before the views load: an ADMITTED id
-        # (absent from the ledger) that still has a tombstone row can
-        # only be a vacuum that died between its physical fold and its
-        # tombstone clear — scrub those stale rows now (the vector
-        # store's protocol) or the re-ingested doc would be invisibly
-        # excluded from every future delta check's index views.
-        from ..operators.dedup import (
-            _rewrite_neardup_tombstones,
-            neardup_store_tombstones,
-        )
-
-        tombs = neardup_store_tombstones(spark, table_prefix, id_col)
-        if tombs is not None:
-            b_ids = F.broadcast(fresh_ids)
-            if not tombs.join(b_ids, "doc_id", "left_semi").isEmpty():
-                _rewrite_neardup_tombstones(
-                    spark,
-                    table_prefix,
-                    tombs.join(b_ids, "doc_id", "left_anti"),
-                )
-                tombs = neardup_store_tombstones(spark, table_prefix, id_col)
+        # ledger — re-ingesting one requires a vacuum first. Before the
+        # views load, stale tombstones of admitted ids are scrubbed (the
+        # vacuum crash window, operators/store.py), or the re-ingested
+        # doc would be invisibly excluded from every future delta
+        # check's index views.
+        spec = store.neardup(table_prefix, id_col)
+        tombs = store.live(spark, spec)
+        if store.scrub(spark, spec, F.broadcast(fresh_ids), tombs):
+            tombs = store.live(spark, spec)
         if tombs is not None and keys_raw is not None:
             t_ids = F.broadcast(tombs.select("doc_id"))
             keys_raw = keys_raw.join(t_ids, "doc_id", "left_anti")
@@ -653,14 +636,7 @@ def neardup_dedup_sink(
             **kwargs,
         )
 
-    q = (
-        stream_docs.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return _run_foreach_batch(stream_docs, upsert, checkpoint)
 
 
 def search_index_upsert_batch(
@@ -799,19 +775,14 @@ def search_index_upsert_batch(
     # stats: DERIVED from the committed docs table (exact BIGINTs), so
     # the overwrite is idempotent under any replay; docs tombstoned by
     # operators/search.remove_from_posting_index stay subtracted (the
-    # recompute must not resurrect their counts). _heal_tombstones
-    # gives the tombstone list the SAME restart story this function
-    # gives postings/docs above — a fresh session's first batch must
-    # not resurrect takedowns committed by the previous session.
-    from ..operators.search import _heal_tombstones
-
+    # recompute must not resurrect their counts). The tombstone list is
+    # healed first — the SAME restart story this function gives
+    # postings/docs above — so a fresh session's first batch does not
+    # resurrect takedowns committed by the previous session.
     committed = _load(docs_path, docs_tbl)
-    tomb_tbl = f"{table_prefix}_tombstones" if bucketed else None
-    if tomb_tbl and _heal_tombstones(spark, table_prefix):
-        spark.catalog.refreshTable(tomb_tbl)
-        committed = committed.join(
-            F.broadcast(spark.table(tomb_tbl)), "doc_id", "left_anti"
-        )
+    tombs = store.table(spark, store.posting(table_prefix)) if bucketed else None
+    if tombs is not None:
+        committed = committed.join(F.broadcast(tombs), "doc_id", "left_anti")
     stats = committed.agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("dl").cast("long").alias("total_dl"),
@@ -862,14 +833,7 @@ def search_index_sink(
             batch_df, store_path, tokens_col=tokens_col, id_col=id_col, **kwargs
         )
 
-    q = (
-        stream_docs.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return _run_foreach_batch(stream_docs, upsert, checkpoint)
 
 
 def neardup_delete_batch(
@@ -880,41 +844,25 @@ def neardup_delete_batch(
     vacuum_threshold_tombstones: int | None = None,
 ) -> int:
     """One streaming takedown step against a dedup-on-ingest survivor
-    store: tombstone this micro-batch's ids
-    (operators/dedup.remove_from_neardup_store — the delete half of
-    :func:`neardup_upsert_batch`'s append), so a taken-down document
+    store (operators/dedup.remove_from_neardup_store — the delete half
+    of :func:`neardup_upsert_batch`'s append), so a taken-down document
     stops suppressing near-duplicates of its content as soon as the
-    batch commits. Idempotence comes from the delete itself
-    (already-dead and never-stored ids are dropped by anti-joins before
-    the tombstone append), so a foreachBatch replay after a crash adds
-    nothing — no sink-side ledger needed.
-
-    ``vacuum_threshold_tombstones``: the LSM maintenance cadence —
-    after the delete commits, if the live tombstone list has grown past
-    the threshold, :func:`~..operators.dedup.vacuum_neardup_store`
-    folds it into a physical rewrite of all three store tables, keeping
-    the per-batch broadcast anti-join list small no matter how long the
-    takedown stream runs. A crash between the delete and the vacuum is
-    safe: the vacuum is itself crash-recoverable and the next batch
-    re-triggers it.
-
-    Returns the number of newly tombstoned ids."""
-    from ..operators.dedup import (
-        neardup_store_tombstones,
-        remove_from_neardup_store,
-        vacuum_neardup_store,
-    )
+    batch commits; with ``vacuum_threshold_tombstones`` set,
+    :func:`~..operators.dedup.vacuum_neardup_store` runs once the list
+    reaches it (operators/store.delete_batch). Returns the number of
+    newly tombstoned ids."""
+    from ..operators.dedup import remove_from_neardup_store, vacuum_neardup_store
 
     spark = batch_df.sparkSession
-    n_new = remove_from_neardup_store(
-        spark, batch_df.select(id_col), table_prefix, id_col=id_col
+    return store.delete_batch(
+        spark,
+        store.neardup(table_prefix, id_col),
+        vacuum_threshold_tombstones,
+        lambda: remove_from_neardup_store(
+            spark, batch_df.select(id_col), table_prefix, id_col=id_col
+        ),
+        lambda: vacuum_neardup_store(spark, table_prefix, hash_family, id_col=id_col),
     )
-    if vacuum_threshold_tombstones is not None:
-        tombs = neardup_store_tombstones(spark, table_prefix, id_col)
-        if tombs is not None and tombs.count() >= vacuum_threshold_tombstones:
-            vacuum_neardup_store(spark, table_prefix, hash_family, id_col=id_col)
-    return n_new
-
 
 def neardup_delete_sink(
     stream_ids: DataFrame,
@@ -944,14 +892,7 @@ def neardup_delete_sink(
             vacuum_threshold_tombstones=vacuum_threshold_tombstones,
         )
 
-    q = (
-        stream_ids.writeStream.foreachBatch(delete)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return _run_foreach_batch(stream_ids, delete, checkpoint)
 
 
 def dedup_store_delete_batch(
@@ -962,25 +903,24 @@ def dedup_store_delete_batch(
 ) -> int:
     """One streaming takedown step against an exact-dedup store
     (operators/dedup.remove_from_exact_dedup_store — the delete half of
-    :func:`incremental_dedup_sink`'s append): idempotent under replay,
-    with the same threshold-triggered vacuum cadence as the other
-    delete sinks. Returns the number of newly tombstoned keys."""
+    :func:`incremental_dedup_sink`'s append), with the threshold vacuum
+    of operators/store.delete_batch. Returns the number of newly
+    tombstoned keys."""
     from ..operators.dedup import (
-        exact_dedup_store_tombstones,
         remove_from_exact_dedup_store,
         vacuum_exact_dedup_store,
     )
 
     spark = batch_df.sparkSession
-    n_new = remove_from_exact_dedup_store(
-        spark, batch_df.select(*key_cols), table, key_cols=key_cols
+    return store.delete_batch(
+        spark,
+        store.exact(table, key_cols),
+        vacuum_threshold_tombstones,
+        lambda: remove_from_exact_dedup_store(
+            spark, batch_df.select(*key_cols), table, key_cols=key_cols
+        ),
+        lambda: vacuum_exact_dedup_store(spark, table, key_cols=key_cols),
     )
-    if vacuum_threshold_tombstones is not None:
-        tombs = exact_dedup_store_tombstones(spark, table, key_cols)
-        if tombs is not None and tombs.count() >= vacuum_threshold_tombstones:
-            vacuum_exact_dedup_store(spark, table, key_cols=key_cols)
-    return n_new
-
 
 def dedup_store_delete_sink(
     stream_keys: DataFrame,
@@ -1004,14 +944,7 @@ def dedup_store_delete_sink(
             vacuum_threshold_tombstones=vacuum_threshold_tombstones,
         )
 
-    q = (
-        stream_keys.writeStream.foreachBatch(delete)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return _run_foreach_batch(stream_keys, delete, checkpoint)
 
 
 def search_index_delete_batch(
@@ -1023,41 +956,19 @@ def search_index_delete_batch(
     """One streaming takedown step: tombstone this micro-batch's ids in
     the persisted posting index (operators/search.remove_from_posting_
     index — the delete half of :func:`search_index_upsert_batch`'s
-    append). Idempotence comes from the delete itself: already-dead and
-    never-indexed ids are dropped by anti-joins before the tombstone
-    append, so a foreachBatch replay after a crash adds nothing and the
-    stats re-derivation is a no-op — no sink-side ledger needed.
-
-    ``vacuum_threshold_tombstones``: when set, the LSM maintenance
-    cadence — after the delete commits, if the live tombstone list has
-    grown past the threshold, :func:`~..operators.search.vacuum_
-    posting_index` folds it into a physical rewrite, keeping the
-    query-time anti-join list broadcast-small no matter how long the
-    takedown stream runs (the compact_threshold_files pattern of the
-    append sinks, applied to deletes). A crash between the delete and
-    the vacuum is safe: the vacuum is itself crash-recoverable and the
-    next batch re-triggers it.
-
-    Returns the number of newly tombstoned ids."""
-    from ..operators.search import (
-        _heal_tombstones,
-        remove_from_posting_index,
-        vacuum_posting_index,
-    )
+    append), with the threshold vacuum of operators/store.delete_batch
+    (the compact_threshold_files pattern of the append sinks, applied
+    to deletes). Returns the number of newly tombstoned ids."""
+    from ..operators.search import remove_from_posting_index, vacuum_posting_index
 
     spark = batch_df.sparkSession
-    n_new = remove_from_posting_index(
-        spark, batch_df.select(id_col), table_prefix
+    return store.delete_batch(
+        spark,
+        store.posting(table_prefix),
+        vacuum_threshold_tombstones,
+        lambda: remove_from_posting_index(spark, batch_df.select(id_col), table_prefix),
+        lambda: vacuum_posting_index(spark, table_prefix),
     )
-    if vacuum_threshold_tombstones is not None and _heal_tombstones(
-        spark, table_prefix
-    ):
-        tomb_tbl = f"{table_prefix}_tombstones"
-        spark.catalog.refreshTable(tomb_tbl)
-        if spark.table(tomb_tbl).count() >= vacuum_threshold_tombstones:
-            vacuum_posting_index(spark, table_prefix)
-    return n_new
-
 
 def vector_index_upsert_batch(
     batch_df: DataFrame,
@@ -1147,14 +1058,7 @@ def vector_index_sink(
             compact_threshold_files=compact_threshold_files,
         )
 
-    q = (
-        stream_df.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return _run_foreach_batch(stream_df, upsert, checkpoint)
 
 
 def vector_index_delete_batch(
@@ -1165,23 +1069,19 @@ def vector_index_delete_batch(
 ) -> int:
     """One streaming takedown step against the persisted vector index
     (operators/vector_store.remove_from_vector_index — the delete half
-    of :func:`vector_index_upsert_batch`): idempotent under replay,
-    with the same threshold-triggered vacuum cadence as the other
-    delete sinks. Returns the number of newly tombstoned ids."""
-    from ..operators.vector_store import (
-        remove_from_vector_index,
-        vacuum_vector_index,
-        vector_index_tombstones,
-    )
+    of :func:`vector_index_upsert_batch`), with the threshold vacuum of
+    operators/store.delete_batch. Returns the number of newly
+    tombstoned ids."""
+    from ..operators.vector_store import remove_from_vector_index, vacuum_vector_index
 
     spark = batch_df.sparkSession
-    n_new = remove_from_vector_index(spark, batch_df.select(id_col), table_prefix)
-    if vacuum_threshold_tombstones is not None:
-        tombs = vector_index_tombstones(spark, table_prefix)
-        if tombs is not None and tombs.count() >= vacuum_threshold_tombstones:
-            vacuum_vector_index(spark, table_prefix)
-    return n_new
-
+    return store.delete_batch(
+        spark,
+        store.vector(table_prefix),
+        vacuum_threshold_tombstones,
+        lambda: remove_from_vector_index(spark, batch_df.select(id_col), table_prefix),
+        lambda: vacuum_vector_index(spark, table_prefix),
+    )
 
 def vector_index_delete_sink(
     stream_ids: DataFrame,
@@ -1203,14 +1103,20 @@ def vector_index_delete_sink(
             vacuum_threshold_tombstones=vacuum_threshold_tombstones,
         )
 
-    q = (
-        stream_ids.writeStream.foreachBatch(delete)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return _run_foreach_batch(stream_ids, delete, checkpoint)
+
+
+#: takedown target kind → (delete step, store-name key, {option: default})
+_TAKEDOWN_KINDS = {
+    "posting": (search_index_delete_batch, "table_prefix", {"id_col": "doc_id"}),
+    "neardup": (
+        neardup_delete_batch,
+        "table_prefix",
+        {"hash_family": "minhash", "id_col": "doc_id"},
+    ),
+    "exact": (dedup_store_delete_batch, "table", {"key_cols": ("event_id",)}),
+    "vector": (vector_index_delete_batch, "table_prefix", {"id_col": "doc_id"}),
+}
 
 
 def takedown_fanout_batch(batch_df: DataFrame, targets: list[dict]) -> dict:
@@ -1239,41 +1145,18 @@ def takedown_fanout_batch(batch_df: DataFrame, targets: list[dict]) -> dict:
     processed in ``targets`` order. Returns {store_label: n_new}."""
     out = {}
     for t in targets:
-        kind = t["kind"]
-        if kind == "posting":
-            out[t["table_prefix"]] = search_index_delete_batch(
-                batch_df,
-                t["table_prefix"],
-                id_col=t.get("id_col", "doc_id"),
-                vacuum_threshold_tombstones=t.get("vacuum_threshold_tombstones"),
-            )
-        elif kind == "neardup":
-            out[t["table_prefix"]] = neardup_delete_batch(
-                batch_df,
-                t["table_prefix"],
-                hash_family=t.get("hash_family", "minhash"),
-                id_col=t.get("id_col", "doc_id"),
-                vacuum_threshold_tombstones=t.get("vacuum_threshold_tombstones"),
-            )
-        elif kind == "exact":
-            out[t["table"]] = dedup_store_delete_batch(
-                batch_df,
-                t["table"],
-                key_cols=tuple(t.get("key_cols", ("event_id",))),
-                vacuum_threshold_tombstones=t.get("vacuum_threshold_tombstones"),
-            )
-        elif kind == "vector":
-            out[t["table_prefix"]] = vector_index_delete_batch(
-                batch_df,
-                t["table_prefix"],
-                id_col=t.get("id_col", "doc_id"),
-                vacuum_threshold_tombstones=t.get("vacuum_threshold_tombstones"),
-            )
-        else:
+        if t["kind"] not in _TAKEDOWN_KINDS:
             raise ValueError(
-                f"unknown takedown target kind {kind!r} "
+                f"unknown takedown target kind {t['kind']!r} "
                 "(posting | neardup | exact | vector)"
             )
+        step, name, opts = _TAKEDOWN_KINDS[t["kind"]]
+        out[t[name]] = step(
+            batch_df,
+            t[name],
+            vacuum_threshold_tombstones=t.get("vacuum_threshold_tombstones"),
+            **{k: t.get(k, default) for k, default in opts.items()},
+        )
     return out
 
 
@@ -1292,14 +1175,7 @@ def takedown_fanout_sink(
     def delete(batch_df: DataFrame, batch_id: int) -> None:
         takedown_fanout_batch(batch_df, targets)
 
-    q = (
-        stream_ids.writeStream.foreachBatch(delete)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return _run_foreach_batch(stream_ids, delete, checkpoint)
 
 
 def search_index_delete_sink(
@@ -1326,11 +1202,4 @@ def search_index_delete_sink(
             vacuum_threshold_tombstones=vacuum_threshold_tombstones,
         )
 
-    q = (
-        stream_ids.writeStream.foreachBatch(delete)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return _run_foreach_batch(stream_ids, delete, checkpoint)

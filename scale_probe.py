@@ -176,20 +176,21 @@ def build_replicated_dir(
 ) -> None:
     """Materialize ``tables`` x factor into out_dir; symlink the rest.
 
-    A ``_FACTOR`` marker stamps what the directory was built with:
-    reusing ``--out`` across factors (or table sets) previously returned
-    the OLD dataset silently and labelled its timings with the NEW
-    factor — now it's a hard error.
+    A ``_FACTOR`` marker stamps what the directory was built with — the
+    factor, the table set and the absolute source dir: reusing ``--out``
+    across factors, table sets or source corpora (two corpora whose dirs
+    share a basename) would return the OLD dataset silently, so any
+    mismatch is a hard error.
     """
     os.makedirs(out_dir, exist_ok=True)
     stamp = os.path.join(out_dir, "_FACTOR")
-    want = f"{factor}:{','.join(sorted(tables))}"
+    want = f"{factor}:{','.join(sorted(tables))}:{os.path.abspath(base_dir)}"
     if os.path.exists(stamp):
         with open(stamp) as fh:
             got = fh.read().strip()
         if got != want:
             raise SystemExit(
-                f"scale_probe: {out_dir} was built with factor/tables {got!r}, "
+                f"scale_probe: {out_dir} was built with factor/tables/source {got!r}, "
                 f"requested {want!r} — use a different --out or delete the dir"
             )
     for name in os.listdir(base_dir):

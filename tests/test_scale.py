@@ -219,3 +219,23 @@ def test_bucketed_maintenance_rejects_remote_paths(spark):
 
     with pytest.raises(NotImplementedError, match="local-filesystem-only"):
         register_bucketed_table(spark, "t_remote", "k", 8, "s3a://bucket/store")
+
+
+def test_replica_stamp_rejects_another_source_corpus(tmp_path):
+    """``build_replicated_dir`` stamps the absolute source dir: a replica
+    built from a different corpus whose dir has the same basename is a
+    hard error, and a matching stamp reuses the replica (no Spark)."""
+    from scale_probe import build_replicated_dir
+
+    a, b = tmp_path / "a" / "sf0.1", tmp_path / "b" / "sf0.1"
+    for base in (a, b):
+        base.mkdir(parents=True)
+        (base / "orders.parquet").mkdir()
+    out = tmp_path / "rep"
+    out.mkdir()
+    (out / "documents.parquet").mkdir()
+    (out / "_FACTOR").write_text(f"10:documents:{a}")
+    build_replicated_dir(None, str(a), str(out), 10)  # reused as is
+    assert (out / "orders.parquet").is_symlink()
+    with pytest.raises(SystemExit, match="source"):
+        build_replicated_dir(None, str(b), str(out), 10)

@@ -696,8 +696,8 @@ def test_posting_index_tombstones_survive_restart(spark, tokenized_docs, tmp_pat
     is simulated the way the postings/docs restart tests do — DROP the
     catalog entries, keep the files, re-register."""
     from pyspark.sql import functions as F  # noqa: F811
+    from nlp_with_pyspark_spark.operators.store import _table_path_if_external
     from nlp_with_pyspark_spark.operators.search import (
-        _table_path_if_external,
         bm25_topk,
         bm25_topk_indexed,
         build_posting_index,
@@ -759,8 +759,8 @@ def test_vacuum_keeps_external_locations_and_disk_state(
     session's self-heal resurrects nothing — and ``{path}/stats`` on
     disk carries the live counts a path-addressed reader expects."""
     from pyspark.sql import functions as F  # noqa: F811
+    from nlp_with_pyspark_spark.operators.store import _table_path_if_external
     from nlp_with_pyspark_spark.operators.search import (
-        _table_path_if_external,
         build_posting_index,
         load_posting_index,
         persist_posting_index,

@@ -1,0 +1,304 @@
+"""The tombstone lifecycle of every persisted store family in the default
+run, on stores of at most 200 rows: remove → replay → restart heal →
+vacuum crashed between fold and clear → re-ingest → vacuum.
+
+Each family is driven only through its public API; the tombstone
+table's sidecar path and column types are pinned literally, so a store
+written by an earlier build must heal to the same table."""
+
+import pytest
+from pyspark.sql import functions as F
+
+from nlp_with_pyspark_spark.sources import io as io_mod
+
+N = 120
+DEAD = [3, 10, 17, 44, 91]
+NEVER_STORED = 10**9
+
+
+def _location(spark, table):
+    info = {
+        r.col_name: r.data_type
+        for r in spark.sql(f"DESCRIBE TABLE EXTENDED {table}").collect()
+    }
+    return info["Location"].removeprefix("file:")
+
+
+class _Posting:
+    tomb_types = [("doc_id", "bigint")]
+    report_keys = {"tombstones_folded", "postings", "docs"}
+
+    def __init__(self, spark, tmp, sf_dir):
+        from nlp_with_pyspark_spark.operators.search import (
+            build_posting_index,
+            persist_posting_index,
+        )
+
+        self.spark, self.prefix = spark, "t_lc_posting"
+        self.path = f"{tmp}/bm"
+        self.sidecar = f"{self.path}/postings__tombstones"
+        # an int ledger id: tombstones stay bigint
+        self.docs = spark.createDataFrame(
+            [(i, [f"w{i % 7}", f"u{i}", "common"]) for i in range(N)],
+            "doc_id int, tokens array<string>",
+        )
+        persist_posting_index(
+            build_posting_index(self.docs), self.prefix, n_buckets=4, path=self.path
+        )
+
+    def remove(self, ids):
+        from nlp_with_pyspark_spark.operators.search import remove_from_posting_index
+
+        return remove_from_posting_index(self.spark, ids, self.prefix)
+
+    def vacuum(self):
+        from nlp_with_pyspark_spark.operators.search import vacuum_posting_index
+
+        return vacuum_posting_index(self.spark, self.prefix)
+
+    def live(self):
+        from nlp_with_pyspark_spark.operators.search import load_posting_index
+
+        return load_posting_index(self.spark, self.prefix).tombstones
+
+    def ingest(self, ids):
+        from nlp_with_pyspark_spark.operators.search import (
+            append_to_posting_index,
+            build_posting_index,
+        )
+
+        delta = self.docs.where(F.col("doc_id").isin(ids))
+        append_to_posting_index(build_posting_index(delta), self.prefix)
+
+    def served(self):
+        from nlp_with_pyspark_spark.operators.search import load_posting_index
+
+        idx = load_posting_index(self.spark, self.prefix)
+        docs = idx.docs
+        if idx.tombstones is not None:
+            docs = docs.join(F.broadcast(idx.tombstones), "doc_id", "left_anti")
+        ids = {r.doc_id for r in docs.collect()}
+        # stats re-derive over the live ledger after every remove/vacuum
+        assert idx.stats.first().n_docs == len(ids)
+        return ids
+
+    def tables(self):
+        return [f"{self.prefix}_{s}" for s in ("postings", "docs", "stats", "tombstones")]
+
+
+class _Vector:
+    tomb_types = [("vec_id", "bigint")]
+    report_keys = {"tombstones_folded", "codes", "vecs"}
+
+    def __init__(self, spark, tmp, sf_dir):
+        from nlp_with_pyspark_spark.operators.similarity import pq_fixed_codebooks
+        from nlp_with_pyspark_spark.operators.vector_store import persist_vector_index
+        from nlp_with_pyspark_spark.sources.io import read_table
+
+        self.spark, self.prefix = spark, "t_lc_vector"
+        self.path = f"{tmp}/vec"
+        self.sidecar = f"{self.path}/codes__tombstones"
+        self.emb = (
+            read_table(spark, sf_dir, "embeddings").where(F.col("vec_id") < N).localCheckpoint()
+        )
+        cent = [
+            (int(r.vec_id), [float(x) for x in r.embedding])
+            for r in self.emb.where(F.col("vec_id") < 8).collect()
+        ]
+        persist_vector_index(
+            self.emb, cent, pq_fixed_codebooks(), self.prefix, n_buckets=4, path=self.path
+        )
+
+    def remove(self, ids):
+        from nlp_with_pyspark_spark.operators.vector_store import remove_from_vector_index
+
+        return remove_from_vector_index(self.spark, ids, self.prefix)
+
+    def vacuum(self):
+        from nlp_with_pyspark_spark.operators.vector_store import vacuum_vector_index
+
+        return vacuum_vector_index(self.spark, self.prefix)
+
+    def live(self):
+        from nlp_with_pyspark_spark.operators.vector_store import vector_index_tombstones
+
+        return vector_index_tombstones(self.spark, self.prefix)
+
+    def ingest(self, ids):
+        from nlp_with_pyspark_spark.operators.vector_store import append_to_vector_index
+
+        append_to_vector_index(self.emb.where(F.col("vec_id").isin(ids)), self.prefix)
+
+    def served(self):
+        from nlp_with_pyspark_spark.operators.vector_store import load_vector_index
+
+        idx = load_vector_index(self.spark, self.prefix)
+        vecs = idx.vecs
+        if idx.tombstones is not None:
+            vecs = vecs.join(F.broadcast(idx.tombstones), "vec_id", "left_anti")
+        return {r.vec_id for r in vecs.collect()}
+
+    def tables(self):
+        return [
+            f"{self.prefix}_{s}"
+            for s in ("codes", "vecs", "centroids", "codebooks", "tombstones")
+        ]
+
+
+class _NeardupMinhash:
+    # tombstones are `doc_id` with the docs table's `id` type
+    tomb_types = [("doc_id", "int")]
+    report_keys = {"tombstones_folded", "docs", "buckets", "shingles"}
+
+    def __init__(self, spark, tmp, sf_dir):
+        self.spark, self.prefix = spark, "t_lc_neardup"
+        self.path = f"{tmp}/nd"
+        self.sidecar = f"{self.path}/docs__tombstones"
+        # every doc's tokens are its own: no near-duplicate pairs
+        self.docs = spark.createDataFrame(
+            [(i, [f"d{i}t{j}" for j in range(6)]) for i in range(N)],
+            "id int, tokens array<string>",
+        )
+        self.ingest(list(range(N)))
+
+    def remove(self, ids):
+        from nlp_with_pyspark_spark.operators.dedup import remove_from_neardup_store
+
+        return remove_from_neardup_store(self.spark, ids, self.prefix, id_col="id")
+
+    def vacuum(self):
+        from nlp_with_pyspark_spark.operators.dedup import vacuum_neardup_store
+
+        return vacuum_neardup_store(self.spark, self.prefix, "minhash", id_col="id")
+
+    def live(self):
+        from nlp_with_pyspark_spark.operators.dedup import neardup_store_tombstones
+
+        return neardup_store_tombstones(self.spark, self.prefix, id_col="id")
+
+    def ingest(self, ids):
+        from nlp_with_pyspark_spark.streaming.sinks import neardup_upsert_batch
+
+        neardup_upsert_batch(
+            self.docs.where(F.col("id").isin(ids)), self.path, id_col="id",
+            table_prefix=self.prefix, n_buckets=4,
+        )
+
+    def served(self):
+        docs = f"{self.prefix}_docs"
+        self.spark.catalog.refreshTable(docs)
+        stored = {r.id for r in self.spark.table(docs).collect()}
+        tombs = self.live()
+        return stored - ({r.doc_id for r in tombs.collect()} if tombs is not None else set())
+
+    def tables(self):
+        return [f"{self.prefix}_{s}" for s in ("docs", "buckets", "shingles", "tombstones")]
+
+
+class _Exact:
+    tomb_types = [("event_id", "bigint")]
+    report_keys = {"tombstones_folded", "store"}
+
+    def __init__(self, spark, tmp, sf_dir):
+        self.spark, self.tmp, self.table = spark, tmp, "t_lc_exact"
+        self.path = f"{tmp}/ex"
+        self.sidecar = f"{self.path}__tombstones"
+        self.n_ingest = 0
+        self.ingest(list(range(N)))
+
+    def remove(self, ids):
+        from nlp_with_pyspark_spark.operators.dedup import remove_from_exact_dedup_store
+
+        return remove_from_exact_dedup_store(self.spark, ids, self.table)
+
+    def vacuum(self):
+        from nlp_with_pyspark_spark.operators.dedup import vacuum_exact_dedup_store
+
+        return vacuum_exact_dedup_store(self.spark, self.table)
+
+    def live(self):
+        from nlp_with_pyspark_spark.operators.dedup import exact_dedup_store_tombstones
+
+        return exact_dedup_store_tombstones(self.spark, self.table)
+
+    def ingest(self, ids):
+        from nlp_with_pyspark_spark.streaming.sinks import incremental_dedup_sink
+
+        self.n_ingest += 1
+        src = f"{self.tmp}/src{self.n_ingest}"
+        self.spark.createDataFrame(
+            [(int(i), f"e{i}") for i in ids], "event_id long, payload string"
+        ).coalesce(1).write.parquet(src)
+        stream = self.spark.readStream.schema("event_id long, payload string").parquet(src)
+        incremental_dedup_sink(
+            stream, self.path, f"{self.tmp}/ck{self.n_ingest}", table=self.table, n_buckets=4
+        )
+
+    def served(self):
+        from nlp_with_pyspark_spark.operators.dedup import load_exact_dedup_store
+
+        return {r.event_id for r in load_exact_dedup_store(self.spark, self.table).collect()}
+
+    def tables(self):
+        return [self.table, f"{self.table}_tombstones"]
+
+
+FAMILIES = {
+    "posting": _Posting,
+    "vector": _Vector,
+    "neardup-minhash": _NeardupMinhash,
+    "exact": _Exact,
+}
+
+
+@pytest.mark.parametrize("family", list(FAMILIES))
+def test_tombstone_lifecycle_matrix(spark, sf_dir, tmp_path, monkeypatch, family):
+    store = FAMILIES[family](spark, str(tmp_path), sf_dir)
+    tomb = store.tables()[-1]  # the tombstone table
+    everything = set(range(N))
+    try:
+        assert store.served() == everything
+        # remove returns n, then 0 on replay; a never-stored id is ignored
+        assert store.remove(DEAD) == len(DEAD)
+        assert store.remove(DEAD) == 0
+        assert store.remove([NEVER_STORED]) == 0
+
+        # restart: the catalog entry goes, the sidecar dir stays; the
+        # next read heals the table at the pinned path and column types
+        spark.sql(f"DROP TABLE {tomb}")
+        assert sorted(r[0] for r in store.live().collect()) == DEAD
+        assert _location(spark, tomb) == store.sidecar
+        assert [
+            (f.name, f.dataType.simpleString()) for f in spark.table(tomb).schema.fields
+        ] == store.tomb_types
+        assert store.served() == everything - set(DEAD)
+
+        # a vacuum that dies between its fold and its clear
+        real = io_mod.write_small_table
+
+        def crash_at_clear(spark_, rows, ddl, table, path):
+            if table == tomb:
+                raise RuntimeError("simulated crash before the clear")
+            return real(spark_, rows, ddl, table, path)
+
+        monkeypatch.setattr(io_mod, "write_small_table", crash_at_clear)
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            store.vacuum()
+        monkeypatch.setattr(io_mod, "write_small_table", real)
+        assert sorted(r[0] for r in store.live().collect()) == DEAD
+
+        # re-ingest of the folded ids: admitted, stale tombstones scrubbed
+        store.ingest(DEAD)
+        assert store.live() is None
+        assert store.served() == everything
+
+        # vacuum folds a new wave and empties the list
+        assert store.remove(DEAD[:2]) == 2
+        report = store.vacuum()
+        assert set(report) == store.report_keys
+        assert report["tombstones_folded"] == 2
+        assert store.live() is None
+        assert store.served() == everything - set(DEAD[:2])
+    finally:
+        for t in store.tables():
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
