@@ -1661,12 +1661,9 @@ def semantic_delta_pairs(
 
 #: (keys_table_suffix, features_table_suffix) per dedup-on-ingest hash
 #: family — the index tables streaming/sinks.neardup_upsert_batch keeps
-#: alongside ``{prefix}_docs``. Every one of these tables carries a
-#: ``doc_id`` column, which is all the maintenance pass below needs.
+#: alongside ``{prefix}_docs`` (operators/store.NEARDUP_INDEX).
 NEARDUP_STORE_TABLES = {
-    "minhash": ("buckets", "shingles"),
-    "simhash": ("keys", "fingerprints"),
-    "semantic": ("keys", "assigned"),
+    family: (keys[0], feats[0]) for family, (keys, feats) in store.NEARDUP_INDEX.items()
 }
 
 
@@ -1716,17 +1713,7 @@ def vacuum_neardup_store(
     anti-join was already excluding those rows — pinned in tests).
     Returns per-table rewrite reports (keyed by table suffix) plus the
     number of tombstones folded."""
-    if hash_family not in NEARDUP_STORE_TABLES:
-        raise ValueError(
-            f"unknown hash_family {hash_family!r} "
-            "(minhash | simhash | semantic)"
-        )
-    index = tuple(
-        t
-        for t in (f"{table_prefix}_{sfx}" for sfx in NEARDUP_STORE_TABLES[hash_family])
-        if spark.catalog.tableExists(t)
-    )
-    return store.vacuum(spark, store.neardup(table_prefix, id_col, index))
+    return store.vacuum(spark, store.neardup(table_prefix, id_col, hash_family))
 
 
 def exact_dedup_store_tombstones(

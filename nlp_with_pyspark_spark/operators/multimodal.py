@@ -111,7 +111,7 @@ def asset_stats(assets: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Decode / feature-extract (mapInPandas; deterministic fake codec)
+# Decode / feature-extract (mapInArrow; deterministic fake codec)
 # ---------------------------------------------------------------------------
 
 DECODED_SCHEMA = T.StructType(
@@ -142,44 +142,15 @@ def decode_asset_real(content: bytes, meta: dict) -> np.ndarray:
     )
 
 
-def decode_features(assets: DataFrame, n_bins: int = 16) -> DataFrame:
+def decode_features_arrow(assets: DataFrame, n_bins: int = 16) -> DataFrame:
     """Decode + feature-extract in ONE pass: per asset, sample count,
     mean/std, and an ``n_bins``-bucket byte histogram (the cheap stand-in
-    for a real embedding)."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for aid, modality, content in zip(
-                pdf["asset_id"], pdf["modality"], pdf["content"]
-            ):
-                v = _fake_decode(content)
-                hist = np.bincount(v >> 4, minlength=n_bins)[:n_bins]
-                out.append(
-                    (
-                        aid,
-                        modality,
-                        int(v.size),
-                        float(v.mean()) if v.size else 0.0,
-                        float(v.std()) if v.size else 0.0,
-                        hist.tolist(),
-                    )
-                )
-            yield pd.DataFrame(
-                out, columns=["asset_id", "modality", "n_samples", "mean_val", "std_val", "histogram"]
-            )
-
-    return assets.mapInPandas(gen, schema=DECODED_SCHEMA)
-
-
-def decode_features_arrow(assets: DataFrame, n_bins: int = 16) -> DataFrame:
-    """``mapInArrow`` variant of decode_features: RecordBatch in/out,
-    skipping the Arrow→pandas conversion entirely.
+    for a real embedding), through ``mapInArrow`` — RecordBatch in/out,
+    no Arrow→pandas conversion.
 
     For binary-heavy columns this is the cheapest Python boundary Spark
     offers — pandas wraps each payload in a Python object per row, while
     Arrow keeps the batch as contiguous buffers until we slice them.
-    Same output as decode_features (asserted in tests).
     """
     import pyarrow as pa
 

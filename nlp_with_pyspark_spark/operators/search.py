@@ -386,68 +386,78 @@ def load_posting_index(spark: SparkSession, table_prefix: str) -> PostingIndex:
 
 def append_to_posting_index(index_delta: PostingIndex, table_prefix: str) -> None:
     """Append a new batch into the persisted index, REPLAY-SAFELY, and
-    refresh the one-row stats table from committed data. Both appends
-    go through ``append_to_bucketed_table`` (bucket spec read from the
-    catalog, never the caller), so the Exchange-free query layout
-    survives every append.
+    refresh the one-row stats table from committed data, through the
+    shared append protocol (operators/store.py: admit → commit, the
+    ``{prefix}_docs`` ledger last). Both appends go through
+    ``append_to_bucketed_table`` (bucket spec read from the catalog,
+    never the caller), so the Exchange-free query layout survives every
+    append.
 
-    Idempotence / crash ordering (the ingest sink's protocol,
-    streaming/sinks.search_index_upsert_batch): docs already present in
-    the ``{prefix}_docs`` ledger are dropped from the delta up front
-    (anti-join against the ledger — re-appending a committed doc, the
-    natural recovery after a crash, is a no-op rather than a double
-    count). The delta's postings are then anti-joined against the
-    store's rows for the delta's own doc ids — (word, doc_id) is
-    row-identifying and the posting build is deterministic, so a
-    replay after a crash BETWEEN the postings append and the docs
-    append cancels row-for-row and appends only what the crashed
-    attempt did not commit. Append order is postings → docs (the
-    commit point) → stats; stats are DERIVED from the committed docs
-    ledger (exact BIGINTs, token-less docs included) and overwritten —
-    never a read-modify-write fold — so no sequence of crashes or
-    replays can double-count them, and ``avgdl`` after N appends
-    equals the one-shot build's to the last bit.
+    Idempotence: docs already in the ledger leave the delta up front
+    (re-appending a committed doc, the natural recovery after a crash,
+    is a no-op rather than a double count). The delta's postings are
+    then anti-joined against the store's rows for the delta's own doc
+    ids — (word, doc_id) is row-identifying and the posting build is
+    deterministic, so a replay after a crash BETWEEN the postings
+    append and the docs append cancels row-for-row and appends only
+    what the crashed attempt did not commit. Stats are DERIVED from the
+    committed ledger minus tombstones (exact BIGINTs, token-less docs
+    included) and overwritten — never a read-modify-write fold — so no
+    sequence of crashes or replays can double-count them, and ``avgdl``
+    after N appends equals the one-shot build's to the last bit; a
+    crash before the overwrite leaves them one batch stale until the
+    next append re-derives them.
 
     Scale shape: both guard joins semi-filter the store scan by the
     broadcast delta id list, so only this batch's (possibly stale)
     rows ever reach a join, and the ledger side is bucketed on the
     join key; the stats recompute is a keys-only ledger scan — an
     append-time, not query-time, cost."""
-    from ..sources.io import append_to_bucketed_table
-
     if index_delta.docs is None:
         raise ValueError(
             "append_to_posting_index needs a delta with a docs ledger "
             "(build_posting_index provides one); a legacy two-table store "
             "cannot be appended to replay-safely"
         )
-    spark = index_delta.postings.sparkSession
-    postings_tbl = f"{table_prefix}_postings"
     docs_tbl = f"{table_prefix}_docs"
-    if not spark.catalog.tableExists(docs_tbl):
+    if not index_delta.postings.sparkSession.catalog.tableExists(docs_tbl):
         raise ValueError(
             f"{docs_tbl} not found: the store predates the docs ledger — "
             "rebuild it with persist_posting_index before appending"
         )
-    spark.catalog.refreshTable(postings_tbl)
-    spark.catalog.refreshTable(docs_tbl)
-    # replay guard: committed docs leave the delta entirely
-    committed_ids = spark.table(docs_tbl).select("doc_id")
-    fresh_docs = index_delta.docs.join(committed_ids, "doc_id", "left_anti")
-    # the ledger delta is consumed by the stale-row guard's broadcast id
-    # list, the postings anti-join and the docs append — pin it once
-    fresh_docs = fresh_docs.localCheckpoint()
-    batch_ids = F.broadcast(fresh_docs.select("doc_id"))
-    # stale tombstones of admitted ids go before the data appends (the
-    # vacuum crash window, operators/store.py)
+    _append(index_delta.docs, table_prefix, index_delta.postings)
+
+
+def _append(
+    docs: DataFrame,
+    table_prefix: str,
+    postings: DataFrame | None = None,
+    path: str | None = None,
+    n_buckets: int | None = None,
+) -> None:
+    """Admit ``docs`` (doc_id, dl, and tokens when ``postings`` is
+    ``None``: the postings are then built from the admitted docs), append
+    the admitted docs' postings not already stored, commit the docs
+    ledger and re-derive the stats. ``path``/``n_buckets`` place tables
+    the store does not have yet (the streaming sink's first batch)."""
+    spark = docs.sparkSession
     spec = store.posting(table_prefix)
-    store.scrub(spark, spec, batch_ids, store.table(spark, spec))
-    to_append = index_delta.postings.join(batch_ids, "doc_id", "left_semi")
-    stale = spark.table(postings_tbl).join(batch_ids, "doc_id", "left_semi")
-    to_append = to_append.join(stale, ["word", "doc_id"], "left_anti")
-    append_to_bucketed_table(to_append, postings_tbl)
-    append_to_bucketed_table(fresh_docs, docs_tbl)  # commit point
-    _refresh_stats(spark, table_prefix)
+    fresh, _ = store.admit(spark, spec, docs)
+    batch_ids = F.broadcast(fresh.select("doc_id"))
+    if postings is None:
+        postings = build_posting_index(fresh).postings
+    else:
+        postings = postings.join(batch_ids, "doc_id", "left_semi")
+    postings_tbl = spec.tables[0][0]
+    if spark.catalog.tableExists(postings_tbl):
+        # stale rows: a crashed attempt's postings for THIS batch's docs
+        stale = spark.table(postings_tbl).join(batch_ids, "doc_id", "left_semi")
+        postings = postings.join(stale, ["word", "doc_id"], "left_anti")
+    store.commit(
+        spark, spec, path, n_buckets,
+        {postings_tbl: postings, spec.ledger: fresh.select("doc_id", "dl")},
+    )
+    _refresh_stats(spark, table_prefix, store._dir(path, "stats"))
 
 
 def _live_docs(spark: SparkSession, table_prefix: str) -> DataFrame:
@@ -463,14 +473,15 @@ def _live_docs(spark: SparkSession, table_prefix: str) -> DataFrame:
     return live
 
 
-def _refresh_stats(spark: SparkSession, table_prefix: str) -> None:
+def _refresh_stats(spark: SparkSession, table_prefix: str, path: str | None = None) -> None:
     """Overwrite ``{prefix}_stats`` with (n_docs, total_dl) DERIVED
     from the live ledger (committed docs minus tombstones) — exact
     BIGINTs, idempotent under any replay, never a read-modify-write
     fold. An EXTERNAL stats table keeps its location through the
     overwrite (``_table_path_if_external``): dropping it to a managed
     warehouse table would leave the store's on-disk ``stats/`` dir
-    stale — a path-addressed reader would see pre-delete counts."""
+    stale — a path-addressed reader would see pre-delete counts.
+    ``path`` places a stats table that does not exist yet."""
     from ..sources.io import write_small_table
 
     stats_tbl = f"{table_prefix}_stats"
@@ -485,7 +496,7 @@ def _refresh_stats(spark: SparkSession, table_prefix: str) -> None:
     spath = (
         store._table_path_if_external(spark, stats_tbl)
         if spark.catalog.tableExists(stats_tbl)
-        else None
+        else path
     )
     write_small_table(
         spark,

@@ -1,25 +1,62 @@
-"""The tombstone protocol every persisted store family shares — posting
-index, IVF-PQ vector store, near-dup survivor stores, exact-dedup store.
+"""The lifecycle every persisted store family shares — posting index,
+IVF-PQ vector store, near-dup survivor stores, exact-dedup store: one
+append protocol and one tombstone protocol. A family differs only in
+its table names, bucket columns and key columns, which a
+:class:`StoreSpec` binds; its own delta builders, derived refreshes and
+serve code live in its module.
 
-Deletes follow the LSM pattern. A takedown appends the dead keys to a
+Every store is a set of bucketed catalog tables with data under one
+store dir: one or more INDEX tables, and a LEDGER table holding every
+stored key (posting ``docs``, vector ``vecs``, near-dup ``docs``, the
+exact store's one table). Small plain SIDE tables ride along (posting
+``stats``, vector ``centroids``/``codebooks``). Local-filesystem stores
+only (probes are ``os.path``); a non-local store pairs with a live
+metastore whose catalog entries survive restarts.
+
+Append — ``open`` → ``admit`` → ``commit`` → ``compact``:
+
+* :func:`open` resolves half-finished compaction swaps, re-registers
+  every bucketed table from its ``_BUCKET_SPEC`` sidecar and every side
+  table from its parquet dir, and heals the tombstone table. The
+  catalog is per-session, the dirs are not: a store whose tables are
+  not registered must be re-registered, never read as "first batch".
+* :func:`admit` drops in-batch duplicates, anti-joins the batch against
+  the ledger's keys (the ledger is bucketed by its key, so its side of
+  the join crosses no Exchange; only the O(batch) side shuffles), pins
+  the delta once, and scrubs stale tombstones of the admitted keys
+  (below). A replayed batch admits nothing.
+* :func:`commit` writes the index tables (``append.index``) and the
+  side tables, and the ledger LAST (``append.ledger``, the commit
+  point). The family then refreshes what it derives from the
+  committed ledger (``append.derived``: the posting stats). A table is
+  created with ``write_bucketed`` when absent and appended with
+  ``append_to_bucketed_table`` otherwise, so the first batch runs the
+  same code path as every later one. The ledger goes last on the
+  first batch too: "the ledger exists" is what makes the next batch's
+  guard drop committed keys, so an index or side table written before a
+  crash is simply re-used by the replay, never a half-built store the
+  replay cannot open. A crash before the ledger
+  leaves index rows for keys absent from the ledger; the replay
+  re-admits those keys, and each family's idempotent append cancels
+  the stale index rows (recomputation is deterministic and its index
+  rows are row-identifying), so no duplicate index row is ever stored.
+* :func:`compact` rewrites any table past ``threshold`` files through
+  ``io.compact_bucketed_table`` (``compact.swap``, spec-preserving and
+  crash-recoverable by the next :func:`open`).
+
+Delete — the LSM pattern. A takedown appends the dead keys to a
 ``*_tombstones`` table; readers exclude them with a broadcast anti-join
 on a candidate-sized frame, and a periodic vacuum folds them into a
 physical rewrite of the store tables and clears the list, so the list
-stays broadcast-small and scan cost tracks live data. A family differs
-only in the table names and key columns, which a :class:`StoreSpec`
-binds; its own build and serve code lives in its module.
+stays broadcast-small and scan cost tracks live data. On disk the list
+lives in a ``<anchor data dir>__tombstones`` sidecar dir, so it shares
+the store's lifecycle whether the store is external or
+warehouse-managed; :func:`heal` re-registers the table over the
+surviving dir (schema declared, not inferred — a post-vacuum empty dir
+has no footer) before every operation, so a fresh session never
+serves, or lets suppress near-duplicates, a taken-down row.
 
-On disk the list lives in a ``<anchor data dir>__tombstones`` sidecar
-dir, so it shares the store's lifecycle whether the store is external
-or warehouse-managed. The catalog entry is per-session, the dir is not:
-:func:`heal` re-registers the table over the surviving dir (schema
-declared, not inferred — a post-vacuum empty dir has no footer) before
-every operation, so a fresh session never serves, or lets suppress
-near-duplicates, a taken-down row. Local-filesystem stores only (the
-probe is ``os.path``); a non-local store pairs with a live metastore
-whose catalog entries survive restarts.
-
-Commit points and crash windows:
+Commit points and crash windows of the delete half:
 
 * :func:`remove` drops keys the ledger never held and keys already
   tombstoned, then appends the rest in ONE bounded job
@@ -39,9 +76,9 @@ Commit points and crash windows:
   shadows it — the re-ingested row would be invisible to readers and
   folded out again by the next vacuum. Live tombstones are always in
   the ledger and never admitted, so an ADMITTED key with a tombstone
-  row can only be that stale row: every append path runs :func:`scrub`
-  on its admitted keys before its data append, which closes the
-  window.
+  row can only be that stale row. That is why :func:`scrub` runs inside
+  :func:`admit`, before any data write: every ingest path admits, so
+  none can skip it.
 """
 
 from __future__ import annotations
@@ -58,7 +95,7 @@ _INTEGRAL = {"tinyint", "smallint", "int", "bigint"}
 
 @dataclass(frozen=True)
 class StoreSpec:
-    """One store family's tombstone layout.
+    """One store family's layout.
 
     ``tombstones``: the tombstone table. ``anchor``: the table whose data
     dir hosts the ``<dir>__tombstones`` sidecar; :func:`heal` runs only
@@ -66,7 +103,11 @@ class StoreSpec:
     ``keys``: ``(ledger column, tombstone column)`` pairs. ``types``: the
     tombstone column types, or ``None`` to read the ledger's. ``folds``:
     ``(table, key columns, report label)`` per table a vacuum rewrites,
-    key columns matching the tombstone columns by position."""
+    key columns matching the tombstone columns by position. ``tables``:
+    ``(table, bucket column, data sub-dir)`` per bucketed table, index
+    tables first and the ledger last (sub-dir ``""`` is the store dir
+    itself). ``sides``: ``(table, data sub-dir)`` per plain side
+    table."""
 
     tombstones: str
     anchor: str
@@ -74,6 +115,8 @@ class StoreSpec:
     keys: tuple[tuple[str, str], ...]
     types: tuple[str, ...] | None
     folds: tuple[tuple[str, tuple[str, ...], str], ...]
+    tables: tuple[tuple[str, str, str], ...]
+    sides: tuple[tuple[str, str], ...]
 
 
 def posting(table_prefix: str) -> StoreSpec:
@@ -82,6 +125,8 @@ def posting(table_prefix: str) -> StoreSpec:
         f"{p}_tombstones", f"{p}_postings", f"{p}_docs", (("doc_id", "doc_id"),),
         ("bigint",),
         ((f"{p}_postings", ("doc_id",), "postings"), (f"{p}_docs", ("doc_id",), "docs")),
+        ((f"{p}_postings", "word", "postings"), (f"{p}_docs", "doc_id", "docs")),
+        ((f"{p}_stats", "stats"),),
     )
 
 
@@ -91,20 +136,40 @@ def vector(table_prefix: str) -> StoreSpec:
         f"{p}_tombstones", f"{p}_codes", f"{p}_vecs", (("vec_id", "vec_id"),),
         ("bigint",),
         ((f"{p}_codes", ("vec_id",), "codes"), (f"{p}_vecs", ("vec_id",), "vecs")),
+        ((f"{p}_codes", "list_id", "codes"), (f"{p}_vecs", "vec_id", "vecs")),
+        ((f"{p}_centroids", "centroids"), (f"{p}_codebooks", "codebooks")),
     )
 
 
+#: near-dup hash family → its (keys, features) index tables, each as
+#: (table suffix = data sub-dir, bucket column); every one carries doc_id
+NEARDUP_INDEX = {
+    "minhash": (("buckets", "band_hash"), ("shingles", "doc_id")),
+    "simhash": (("keys", "band_hash"), ("fingerprints", "doc_id")),
+    "semantic": (("keys", "band_hash"), ("assigned", "list_id")),
+}
+
+
 def neardup(
-    table_prefix: str, id_col: str = "doc_id", index_tables: tuple[str, ...] = ()
+    table_prefix: str, id_col: str = "doc_id", hash_family: str | None = None
 ) -> StoreSpec:
     """Survivor store: tombstones are ``doc_id`` with the docs table's
-    ``id_col`` type; ``index_tables`` (keyed by ``doc_id``) are folded
-    after the docs table."""
-    docs = f"{table_prefix}_docs"
+    ``id_col`` type. With ``hash_family`` the spec also binds that
+    family's index tables (keyed by ``doc_id``, folded after the docs
+    table); without it, only the docs ledger (enough for the delete
+    half)."""
+    if hash_family is not None and hash_family not in NEARDUP_INDEX:
+        raise ValueError(
+            f"unknown hash_family {hash_family!r} (minhash | simhash | semantic)"
+        )
+    p = table_prefix
+    docs = f"{p}_docs"
+    index = NEARDUP_INDEX[hash_family] if hash_family is not None else ()
     return StoreSpec(
-        f"{table_prefix}_tombstones", docs, docs, ((id_col, "doc_id"),), None,
-        ((docs, (id_col,), "docs"),)
-        + tuple((t, ("doc_id",), t.removeprefix(f"{table_prefix}_")) for t in index_tables),
+        f"{p}_tombstones", docs, docs, ((id_col, "doc_id"),), None,
+        ((docs, (id_col,), "docs"),) + tuple((f"{p}_{s}", ("doc_id",), s) for s, _ in index),
+        tuple((f"{p}_{s}", col, s) for s, col in index) + ((docs, id_col, "docs"),),
+        (),
     )
 
 
@@ -113,7 +178,13 @@ def exact(table: str, key_cols: tuple[str, ...]) -> StoreSpec:
     return StoreSpec(
         f"{table}_tombstones", table, table, tuple((k, k) for k in key_cols), None,
         ((table, key_cols, "store"),),
+        ((table, key_cols[0], ""),),
+        (),
     )
+
+
+def _dir(path: str | None, sub: str) -> str | None:
+    return None if path is None else (f"{path}/{sub}" if sub else path)
 
 
 def _table_path_if_external(spark: SparkSession, table: str) -> str | None:
@@ -277,9 +348,12 @@ def vacuum(spark: SparkSession, spec: StoreSpec) -> dict:
             keys = dead if list(cols) == tomb_cols else dead.toDF(*cols)
             return lambda df: df.join(F.broadcast(keys), list(cols), "left_anti")
 
-        # the table rewrites are independent — overlapped (§2.6)
-        reps = compact_bucketed_tables(spark, {t: drop(c) for t, c, _ in spec.folds})
-        report.update({label: reps[t] for t, _, label in spec.folds})
+        # absent index tables (a store whose batches never produced
+        # index rows) have nothing to fold; the rewrites are independent
+        # — overlapped (§2.6)
+        folds = [f for f in spec.folds if spark.catalog.tableExists(f[0])]
+        reps = compact_bucketed_tables(spark, {t: drop(c) for t, c, _ in folds})
+        report.update({label: reps[t] for t, _, label in folds})
     write_small_table(
         spark, [], _ddl(_columns(spark, spec)), spec.tombstones,
         _table_path_if_external(spark, spec.tombstones),
@@ -309,3 +383,103 @@ def delete_batch(
         if tombs is not None and tombs.count() >= threshold:
             vacuum_fn()
     return n_new
+
+
+def open(spark: SparkSession, spec: StoreSpec, path: str, n_buckets: int) -> None:
+    """Make the store at ``path`` readable in this session: resolve any
+    half-finished compaction swap, re-register each bucketed table from
+    its ``_BUCKET_SPEC`` sidecar (``n_buckets`` and the spec's bucket
+    column are only the fallback for a sidecar-less dir) and each side
+    table from its parquet dir, then heal the tombstone table. No-op for
+    every entry that is already live."""
+    from ..sources.io import (
+        parquet_data_files,
+        read_bucket_spec_sidecar,
+        recover_compact_swap,
+        register_bucketed_table,
+    )
+
+    for name, col, sub in spec.tables:
+        d = _dir(path, sub)
+        recover_compact_swap(d)
+        col, n = read_bucket_spec_sidecar(d) or (col, n_buckets)
+        register_bucketed_table(spark, name, col, n, d)
+    for name, sub in spec.sides:
+        d = _dir(path, sub)
+        if not spark.catalog.tableExists(name) and parquet_data_files(d):
+            spark.catalog.createTable(name, path=d, source="parquet")
+    heal(spark, spec)
+
+
+def admit(
+    spark: SparkSession, spec: StoreSpec, batch: DataFrame
+) -> tuple[DataFrame, DataFrame | None]:
+    """The batch's rows whose keys the ledger does not hold, one row per
+    key, pinned once (``localCheckpoint``), with stale tombstones of the
+    admitted keys scrubbed. Returns ``(delta, live tombstones or None)``.
+
+    Every bucketed table is refreshed first: a streaming sink's
+    foreachBatch writes through a CLONED SparkSession, whose cache
+    invalidation never reaches the caller's cached file listing."""
+    for name, _, _ in spec.tables:
+        if spark.catalog.tableExists(name):
+            spark.catalog.refreshTable(name)
+    keys = [c for c, _ in spec.keys]
+    delta = batch.dropDuplicates(keys)
+    if spark.catalog.tableExists(spec.ledger):
+        delta = delta.join(spark.table(spec.ledger).select(*keys), keys, "left_anti")
+    delta = delta.localCheckpoint()
+    tombs = live(spark, spec)
+    if tombs is not None:
+        admitted = F.broadcast(delta.select(*[F.col(c).alias(t) for c, t in spec.keys]))
+        if scrub(spark, spec, admitted, tombs):
+            tombs = live(spark, spec)
+    return delta, tombs
+
+
+def commit(
+    spark: SparkSession,
+    spec: StoreSpec,
+    path: str | None,
+    n_buckets: int | None,
+    frames: dict[str, DataFrame],
+    sides: dict[str, tuple[list, str]] | None = None,
+) -> None:
+    """Write ``frames`` (table → rows to add) into the bucketed tables:
+    the index tables first (overlapped — they are independent), then
+    ``sides`` (side table → ``(rows, DDL)``, overwritten driver-side),
+    then the ledger, the commit point. Absent tables are created under
+    ``path`` with ``n_buckets``; present ones keep their spec."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from ..sources.io import append_to_bucketed_table, write_bucketed, write_small_table
+
+    layout = {name: (col, sub) for name, col, sub in spec.tables}
+
+    def put(name: str) -> None:
+        if spark.catalog.tableExists(name):
+            append_to_bucketed_table(frames[name], name)
+        else:
+            col, sub = layout[name]
+            write_bucketed(frames[name], name, col, n_buckets, path=_dir(path, sub))
+
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        for f in [pool.submit(put, t) for t in frames if t != spec.ledger]:
+            f.result()
+    side_dirs = dict(spec.sides)
+    for name, (rows, ddl) in (sides or {}).items():
+        write_small_table(spark, rows, ddl, name, _dir(path, side_dirs[name]))
+    put(spec.ledger)
+
+
+def compact(spark: SparkSession, spec: StoreSpec, threshold: int | None) -> None:
+    """Compact every bucketed table holding more than ``threshold``
+    parquet files (no-op for ``None``): appends add one file set per
+    batch."""
+    if threshold is None:
+        return
+    from ..sources.io import compact_bucketed_table, parquet_file_count, table_bucket_spec
+
+    for name, _, _ in spec.tables:
+        if parquet_file_count(table_bucket_spec(spark, name)[2]) > threshold:
+            compact_bucketed_table(spark, name)

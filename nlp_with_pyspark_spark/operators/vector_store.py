@@ -169,26 +169,30 @@ def persist_vector_index(
     # rows), rows already on the driver — written without a Spark job
     # (io.write_small_table; two saveAsTable jobs here cost as much as
     # the corpus-sized bucketed writes above at local scale)
-    for name, ddl, rows in (
+    for (name, sub), (rows, ddl) in zip(
+        store.vector(table_prefix).sides, _quantizer_rows(centroids, codebooks)
+    ):
+        write_small_table(spark, rows, ddl, name, None if path is None else f"{path}/{sub}")
+
+
+def _quantizer_rows(
+    centroids: list[tuple[int, list[float]]], codebooks: list[list[list[float]]]
+) -> tuple[tuple[list, str], tuple[list, str]]:
+    """``(rows, DDL)`` of the centroids and codebooks tables."""
+    return (
         (
-            "centroids",
-            "list_id int, centroid array<double>",
             [(int(i), [float(x) for x in c]) for i, c in centroids],
+            "list_id int, centroid array<double>",
         ),
         (
-            "codebooks",
-            "subspace int, code int, centroid array<double>",
             [
                 (s, c, [float(x) for x in codebooks[s][c]])
                 for s in range(len(codebooks))
                 for c in range(len(codebooks[s]))
             ],
+            "subspace int, code int, centroid array<double>",
         ),
-    ):
-        write_small_table(
-            spark, rows, ddl, f"{table_prefix}_{name}",
-            None if path is None else f"{path}/{name}",
-        )
+    )
 
 
 def train_and_persist_vector_index(
@@ -252,37 +256,34 @@ def register_vector_index(
     spark: SparkSession, table_prefix: str, store_path: str, n_buckets: int = 8
 ) -> None:
     """Re-register the store's catalog entries over surviving on-disk
-    data after a session restart — the full-store restart story the
-    other families get piecemeal: bucketed tables (codes, vecs) from
-    their ``_BUCKET_SPEC`` sidecars (read directly, so a store built
-    with a non-default bucket count recovers without the caller
-    remembering the build-time value; ``n_buckets`` is only the
-    fallback for sidecar-less pre-existing stores), quantizer tables
-    from their parquet footers, tombstones from the ``__tombstones``
-    sidecar (operators/store.heal). Also resolves any half-finished
-    compaction swap first. No-op for every entry that is already live;
-    after this, :func:`load_vector_index` serves the committed state
-    exactly — including still-pending takedowns."""
-    import os
+    data after a session restart (operators/store.open): bucketed tables
+    (codes, vecs) from their ``_BUCKET_SPEC`` sidecars (read directly,
+    so a store built with a non-default bucket count recovers without
+    the caller remembering the build-time value; ``n_buckets`` is only
+    the fallback for sidecar-less pre-existing stores), quantizer tables
+    from their parquet dirs, tombstones from the ``__tombstones``
+    sidecar. Also resolves any half-finished compaction swap first.
+    No-op for every entry that is already live; after this,
+    :func:`load_vector_index` serves the committed state exactly —
+    including still-pending takedowns."""
+    store.open(spark, store.vector(table_prefix), store_path, n_buckets)
 
-    from ..sources.io import (
-        read_bucket_spec_sidecar,
-        recover_compact_swap,
-        register_bucketed_table,
-    )
 
-    for sub, key in (("codes", "list_id"), ("vecs", "vec_id")):
-        recover_compact_swap(f"{store_path}/{sub}")
-        spec = read_bucket_spec_sidecar(f"{store_path}/{sub}")
-        s_key, s_n = spec if spec is not None else (key, n_buckets)
-        register_bucketed_table(
-            spark, f"{table_prefix}_{sub}", s_key, s_n, f"{store_path}/{sub}"
-        )
+def _quantizer(
+    spark: SparkSession, table_prefix: str
+) -> tuple[list[tuple[int, list[float]]], list[list[list[float]]]]:
+    """The stored quantizer as plan literals: (centroids, codebooks)."""
     for sub in ("centroids", "codebooks"):
-        tbl, p = f"{table_prefix}_{sub}", f"{store_path}/{sub}"
-        if not spark.catalog.tableExists(tbl) and os.path.isdir(p):
-            spark.catalog.createTable(tbl, path=p, source="parquet")
-    store.heal(spark, store.vector(table_prefix))
+        spark.catalog.refreshTable(f"{table_prefix}_{sub}")
+    cent_rows = spark.table(f"{table_prefix}_centroids").collect()
+    centroids = sorted(
+        (int(r.list_id), [float(x) for x in r.centroid]) for r in cent_rows
+    )
+    cb_rows = spark.table(f"{table_prefix}_codebooks").collect()
+    by_key = {(int(r.subspace), int(r.code)): [float(x) for x in r.centroid] for r in cb_rows}
+    m = 1 + max(s for s, _ in by_key)
+    ksub = 1 + max(c for _, c in by_key)
+    return centroids, [[by_key[(s, c)] for c in range(ksub)] for s in range(m)]
 
 
 def load_vector_index(spark: SparkSession, table_prefix: str) -> VectorIndex:
@@ -296,17 +297,9 @@ def load_vector_index(spark: SparkSession, table_prefix: str) -> VectorIndex:
     session's cached file listing, and a serve after a streamed append
     would silently miss the new rows without the refresh (caught by
     the drift-cycle test in tests/test_vector_store.py)."""
-    for sub in ("codes", "vecs", "centroids", "codebooks"):
+    for sub in ("codes", "vecs"):
         spark.catalog.refreshTable(f"{table_prefix}_{sub}")
-    cent_rows = spark.table(f"{table_prefix}_centroids").collect()
-    centroids = sorted(
-        (int(r.list_id), [float(x) for x in r.centroid]) for r in cent_rows
-    )
-    cb_rows = spark.table(f"{table_prefix}_codebooks").collect()
-    by_key = {(int(r.subspace), int(r.code)): [float(x) for x in r.centroid] for r in cb_rows}
-    m = 1 + max(s for s, _ in by_key)
-    ksub = 1 + max(c for _, c in by_key)
-    codebooks = [[by_key[(s, c)] for c in range(ksub)] for s in range(m)]
+    centroids, codebooks = _quantizer(spark, table_prefix)
     return VectorIndex(
         spark.table(f"{table_prefix}_codes"),
         spark.table(f"{table_prefix}_vecs"),
@@ -322,8 +315,9 @@ def append_to_vector_index(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> int:
-    """Ingest a batch into the persisted store, REPLAY-SAFELY, with the
-    vecs ledger as the replay guard:
+    """Ingest a batch into the persisted store, REPLAY-SAFELY, through
+    the shared append protocol (operators/store.py: admit → commit, the
+    vecs ledger last):
 
       * ids already in the ledger leave the batch up front (anti-join —
         re-appending a committed vector after a crash is a no-op);
@@ -338,7 +332,7 @@ def append_to_vector_index(
     vacuum physically forgets it, after which a re-ingest is admitted
     as a first occurrence. Stale tombstone rows of admitted ids (a
     vacuum that crashed between fold and clear) are scrubbed before the
-    data appends (operators/store.scrub), so the re-ingested vector
+    data appends (operators/store.admit), so the re-ingested vector
     serves immediately instead of being invisibly shadowed.
 
     Scale shape: the encode is the literal projection; the ledger
@@ -351,40 +345,64 @@ def append_to_vector_index(
     per-batch append cost tracks the batch's lists, not the store
     (measured flat-decade in SCALING.md "Vector-index ingest cost vs
     store size"). Returns the number of newly ingested vectors."""
-    from ..sources.io import append_to_bucketed_table
-
-    spark = new_vectors.sparkSession
-    codes_tbl = f"{table_prefix}_codes"
     vecs_tbl = f"{table_prefix}_vecs"
-    spark.catalog.refreshTable(codes_tbl)
-    spark.catalog.refreshTable(vecs_tbl)
-    idx = load_vector_index(spark, table_prefix)
-    batch = new_vectors.select(
-        F.col(id_col).cast("long").alias("vec_id"),
-        F.col(vec_col).alias("embedding"),
-    ).dropDuplicates(["vec_id"])
-    fresh = batch.join(
-        spark.table(vecs_tbl).select("vec_id"), "vec_id", "left_anti"
-    ).localCheckpoint()
+    if not new_vectors.sparkSession.catalog.tableExists(vecs_tbl):
+        raise ValueError(
+            f"{vecs_tbl} not found: no vector index at this prefix — "
+            "build one with persist_vector_index first"
+        )
+    return _append(new_vectors, table_prefix, vec_col, id_col)
+
+
+def _append(
+    new_vectors: DataFrame,
+    table_prefix: str,
+    vec_col: str,
+    id_col: str,
+    path: str | None = None,
+    n_buckets: int | None = None,
+    quantizer: tuple[list, list] | None = None,
+) -> int:
+    """Admit, encode and commit a batch (see :func:`append_to_vector_index`).
+    The stored quantizer encodes when the store has one; otherwise
+    ``quantizer`` does, and its tables are committed before the ledger.
+    ``path``/``n_buckets`` place tables the store does not have yet (the
+    streaming sink's first batch)."""
+    spark = new_vectors.sparkSession
+    spec = store.vector(table_prefix)
+    fresh, _ = store.admit(
+        spark,
+        spec,
+        new_vectors.select(
+            F.col(id_col).cast("long").alias("vec_id"),
+            F.col(vec_col).alias("embedding"),
+        ),
+    )
     n_new = fresh.count()
     if not n_new:
         return 0
-    batch_ids = F.broadcast(fresh.select("vec_id"))
-    store.scrub(spark, store.vector(table_prefix), batch_ids, idx.tombstones)
+    sides = {}
+    if spark.catalog.tableExists(f"{table_prefix}_centroids"):
+        centroids, codebooks = _quantizer(spark, table_prefix)
+    else:
+        # the store's first quantizer: committed with the batch, before the ledger
+        centroids, codebooks = quantizer
+        sides = {name: t for (name, _), t in zip(spec.sides, _quantizer_rows(*quantizer))}
+    codes_tbl = spec.tables[0][0]
     new_codes = _encode(
-        fresh, idx.centroids, idx.codebooks, "embedding", "vec_id"
+        fresh, centroids, codebooks, "embedding", "vec_id"
     ).localCheckpoint()  # consumed by the list collect, the guard, the append
-    batch_lists = sorted(
-        r.list_id for r in new_codes.select("list_id").distinct().collect()
-    )  # bounded by n_lists — the quantizer's size, never the batch's
-    stale = (
-        spark.table(codes_tbl)
-        .where(F.col("list_id").isin([int(i) for i in batch_lists]))
-        .join(batch_ids, "vec_id", "left_semi")
-    )
-    new_codes = new_codes.join(stale.select("vec_id"), "vec_id", "left_anti")
-    append_to_bucketed_table(new_codes, codes_tbl)
-    append_to_bucketed_table(fresh, vecs_tbl)  # commit point
+    if spark.catalog.tableExists(codes_tbl):
+        batch_lists = sorted(
+            r.list_id for r in new_codes.select("list_id").distinct().collect()
+        )  # bounded by n_lists — the quantizer's size, never the batch's
+        stale = (
+            spark.table(codes_tbl)
+            .where(F.col("list_id").isin([int(i) for i in batch_lists]))
+            .join(F.broadcast(fresh.select("vec_id")), "vec_id", "left_semi")
+        )
+        new_codes = new_codes.join(stale.select("vec_id"), "vec_id", "left_anti")
+    store.commit(spark, spec, path, n_buckets, {codes_tbl: new_codes, spec.ledger: fresh}, sides)
     return n_new
 
 

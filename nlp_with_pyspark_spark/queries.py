@@ -1546,9 +1546,9 @@ def multimodal_asset_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def multimodal_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fake-codec decode + feature extraction (mean/std/byte-histogram)
     over every asset — the Python-boundary plumbing a real codec would
-    use. Serves the mapInArrow path (4.4× the mapInPandas variant at
+    use, through the mapInArrow path (4.4× a mapInPandas variant at
     sf0.1 — binary payloads skip the Arrow→pandas object conversion);
-    both paths are asserted identical in tests/test_multimodal.py.
+    checked against a numpy reference in tests/test_multimodal.py.
 
     Registry shape: floats rounded (6 dp, ≥1000× headroom) and the
     histogram stringified — the driver's canonicalizer pandas-sorts all
@@ -5560,7 +5560,7 @@ def events_distinct_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 #:                             customer_nation_revenue
 #:   high_balance_inactive   — anti-join; kin dormant_customers
 #:   promo_revenue_share     — conditional agg; kin revenue_rollup
-#:   multimodal_decode_features — mapInPandas decode plumbing; kin
+#:   multimodal_decode_features — mapInArrow decode plumbing; kin
 #:                             multimodal_resize + _frame_sample (return)
 #:   semantic_delta_pairs    — delta path; kin semantic_dedup_pairs +
 #:                             dedup_delta_pairs (same delta pattern)

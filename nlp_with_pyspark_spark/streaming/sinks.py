@@ -17,7 +17,6 @@ from types import SimpleNamespace
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.utils import AnalysisException
 
 from ..operators import store
 
@@ -41,89 +40,37 @@ def incremental_dedup_sink(
     path: str,
     checkpoint: str,
     key_cols: tuple[str, ...] = ("event_id",),
-    table: str | None = None,
+    *,
+    table: str,
     n_buckets: int = 32,
     compact_threshold_files: int | None = None,
 ):
-    """Continuously ingest a stream into a parquet store, keeping only
-    the FIRST occurrence of each key — streaming exact dedup with a
-    persistent, queryable output (the batch counterpart is
+    """Continuously ingest a stream into a store, keeping only the FIRST
+    occurrence of each key — streaming exact dedup with a persistent,
+    queryable output (the batch counterpart is
     operators/dedup.exact_dedup).
 
-    Per micro-batch: drop in-batch duplicates, anti-join the batch
-    against the store's existing keys (a key-only column scan — the
-    store read never loads payloads), append the survivors. Replayed
-    batches are no-ops (idempotent under foreachBatch's at-least-once
-    contract).
-
-    Scale notes: with the default plain-parquet layout the per-batch
-    guard is a sort-merge shuffle of the store's full key column —
-    honest but wrong at a billion rows. Passing ``table`` switches the
-    store to a bucketed catalog table (bucketed by ``key_cols[0]``,
-    data at ``path``): the guard's anti-join then reads the key column
-    already partitioned on the join key — zero store-side Exchange,
-    only the O(batch) side shuffles — exactly the layout the near-dup
-    sink below uses. ``compact_threshold_files`` wires in the
-    small-file maintenance pass (appends add one file set per batch).
-    Unlike ``dropDuplicates`` state, the store survives restarts with
-    NO watermark bound: dedup is against all history, not a time
-    window; a bucketed table also survives a session-scoped catalog
-    loss (metadata is re-registered over the surviving files).
+    The store is the bucketed catalog table ``table`` (bucketed by
+    ``key_cols[0]``, data at ``path``), and every micro-batch runs the
+    shared append protocol (operators/store.py): open, admit — drop
+    in-batch duplicates, anti-join the batch against the store's key
+    column (read already partitioned on the join key: zero store-side
+    Exchange, only the O(batch) side shuffles), scrub — then commit and
+    compact past ``compact_threshold_files`` (appends add one file set
+    per batch). Replayed batches are no-ops (idempotent under
+    foreachBatch's at-least-once contract). Unlike ``dropDuplicates``
+    state, the store survives restarts with NO watermark bound: dedup
+    is against all history, not a time window, and a session-scoped
+    catalog loss is healed by re-registering over the surviving files.
     """
-    keys = list(key_cols)
+    spec = store.exact(table, key_cols)
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        from ..sources.io import (
-            append_to_bucketed_table,
-            compact_bucketed_table,
-            compact_parquet,
-            recover_compact_swap,
-            register_bucketed_table,
-            write_bucketed,
-        )
-
         spark = batch_df.sparkSession
-        recover_compact_swap(path)
-        fresh = batch_df.dropDuplicates(keys)
-        if table is not None:
-            register_bucketed_table(spark, table, keys[0], n_buckets, path)
-            if spark.catalog.tableExists(table):
-                spark.catalog.refreshTable(table)
-                fresh = fresh.join(spark.table(table).select(*keys), keys, "left_anti")
-                # stale tombstones of admitted keys go before the append
-                # (the vacuum crash window, operators/store.py)
-                spec = store.exact(table, key_cols)
-                tombs = store.live(spark, spec)
-                if tombs is not None:
-                    fresh = fresh.localCheckpoint()
-                    store.scrub(spark, spec, F.broadcast(fresh.select(*keys)), tombs)
-                append_to_bucketed_table(fresh, table)
-            else:
-                write_bucketed(fresh, table, keys[0], n_buckets, path=path)
-            if (
-                compact_threshold_files is not None
-                and _parquet_file_count(path) > compact_threshold_files
-            ):
-                compact_bucketed_table(spark, table)
-            return
-        try:
-            existing = spark.read.parquet(path).select(*keys)
-            fresh = fresh.join(existing, keys, "left_anti")
-        except AnalysisException as exc:
-            # ONLY a missing store means "first batch". Any other
-            # analysis error (key column absent from an existing store,
-            # corrupt footer) must fail the batch — treating it as
-            # first-batch would skip the anti-join and append duplicates
-            # silently, voiding the sink's one guarantee.
-            cond = getattr(exc, "getErrorClass", lambda: None)() or str(exc)
-            if "PATH_NOT_FOUND" not in cond and "UNABLE_TO_INFER_SCHEMA" not in cond:
-                raise
-        fresh.write.mode("append").parquet(path)
-        if (
-            compact_threshold_files is not None
-            and _parquet_file_count(path) > compact_threshold_files
-        ):
-            compact_parquet(spark, path)
+        store.open(spark, spec, path, n_buckets)
+        fresh, _ = store.admit(spark, spec, batch_df)
+        store.commit(spark, spec, path, n_buckets, {table: fresh})
+        store.compact(spark, spec, compact_threshold_files)
 
     return _run_foreach_batch(stream_df, upsert, checkpoint)
 
@@ -142,10 +89,10 @@ def _neardup_family(
     assign_via: str = "literal",
 ):
     """Adapter between the sink's generic store logic and one near-dup
-    hash family. All families share the store shape — a per-doc
-    FEATURES table (one row per doc: shingle set / fingerprint /
-    normalized embedding, bucketed by ``feats_bucket_col``) and a
-    per-doc KEYS table (blocking keys, bucket-by band_hash) — and a
+    hash family. All families share the store shape
+    (operators/store.NEARDUP_INDEX) — a per-doc FEATURES table (one row
+    per doc: shingle set / fingerprint / normalized embedding) and a
+    per-doc KEYS table (blocking keys, bucketed by band_hash) — and a
     delta-pairs function whose index side is only consumed through
     broadcast semi-join prefilters. For ``'semantic'`` the blocking key
     IS the cluster label (band_id = 0, band_hash = list_id) and the
@@ -158,10 +105,6 @@ def _neardup_family(
     if hash_family == "minhash":
         mh_bands = 4 if bands is None else bands
         return SimpleNamespace(
-            keys_name="buckets",
-            feats_name="shingles",
-            keys_bucket_col="band_hash",
-            feats_bucket_col="doc_id",
             feats=lambda df, tokens_col, id_col: D._shingle_sets(
                 df, tokens_col, id_col, n
             ),
@@ -186,10 +129,6 @@ def _neardup_family(
     if hash_family == "simhash":
         sh_bands, sh_combo = D._simhash_blocking_params(max_hamming, bands, combo_size)
         return SimpleNamespace(
-            keys_name="keys",
-            feats_name="fingerprints",
-            keys_bucket_col="band_hash",
-            feats_bucket_col="doc_id",
             feats=lambda df, tokens_col, id_col: D.simhash_fingerprints(
                 df, tokens_col, id_col, hash_fn
             ),
@@ -252,10 +191,6 @@ def _neardup_family(
             )
 
         return SimpleNamespace(
-            keys_name="keys",
-            feats_name="assigned",
-            keys_bucket_col="band_hash",
-            feats_bucket_col="list_id",
             feats=sem_feats,
             keys=lambda feats: feats.select(
                 "doc_id",
@@ -267,12 +202,6 @@ def _neardup_family(
     raise ValueError(
         f"unknown hash_family {hash_family!r} (minhash | simhash | semantic)"
     )
-
-
-def _parquet_file_count(path: str) -> int:
-    from ..sources.io import parquet_file_count
-
-    return parquet_file_count(path)
 
 
 def neardup_upsert_batch(
@@ -289,7 +218,8 @@ def neardup_upsert_batch(
     hash_family: str = "minhash",
     max_hamming: int = 8,
     combo_size: int | None = None,
-    table_prefix: str | None = None,
+    *,
+    table_prefix: str,
     n_buckets: int = 32,
     compact_threshold_files: int | None = None,
     centroids=None,
@@ -316,24 +246,15 @@ def neardup_upsert_batch(
     is computed ONCE and shared by the index append and the delta
     check).
 
-    Store layouts — the scale knob:
-
-    * default (plain): parquet dirs under ``store_path`` (``docs/`` +
-      the two index dirs). The replay/duplicate-id guard anti-joins the
-      batch against the store's id column; Spark cannot broadcast the
-      left side of a left-anti join, so this is a sort-merge shuffle of
-      the full stored id column per batch — fine for moderate stores,
-      wrong at a billion docs.
-    * ``table_prefix`` given (bucketed): the store is three bucketed
-      catalog tables (``{prefix}_docs`` by ``id_col``, the keys table
-      by band_hash, the features table by doc_id) with data under
-      ``store_path``. The guard's anti-join then reads the docs table
-      id column ALREADY partitioned on the join key: zero store-side
-      Exchange (asserted on the plan in tests/test_streaming.py); only
-      the O(delta) batch side shuffles. Index appends go through
-      ``append_to_minhash_index``-style bucket-preserving appends, so
-      the delta check's zero-Exchange index contract survives every
-      batch.
+    The store is three bucketed catalog tables (``{prefix}_docs`` by
+    ``id_col`` — the ledger —, the keys table by band_hash, the features
+    table by doc_id, or list_id for semantic) with data under
+    ``store_path``, driven through the shared append protocol
+    (operators/store.py): open, admit (the docs ledger guard reads the
+    stored id column already partitioned on the join key — zero
+    store-side Exchange, asserted on the plan in
+    tests/test_streaming.py), commit (keys and features, then docs),
+    compact past ``compact_threshold_files``.
 
     Semantics — dedup-against-survivors, the standard incremental-ingest
     rule: a document is dropped iff its cluster (connected components
@@ -347,161 +268,67 @@ def neardup_upsert_batch(
     among survivors). For a single batch the two coincide exactly
     (tested).
 
-    Idempotence / crash ordering: append order is keys → features →
-    docs, so the docs append is the commit point (docs-first would
-    leave stored docs invisible to future near-dup checks, silently
-    voiding the invariant). A crash before the commit point leaves
-    index rows for docs absent from ``docs/``; on replay those docs
-    re-enter as delta, and two per-batch repairs make the replay exact:
-    (1) SCRUB — the index views exclude rows whose doc_id is in the
-    current delta (broadcast anti-join), restoring the delta/index
-    doc-id disjointness the delta check requires and keeping stale
-    members from inflating bucket sizes against
-    ``max_docs_per_bucket``; (2) IDEMPOTENT APPEND — recomputation is
-    deterministic, so the replay's index rows equal the crashed
-    attempt's, and anti-joining the to-append rows against the stale
-    rows ((doc_id, band_id) for keys, doc_id for features — both
-    row-identifying) means no duplicate index row is ever stored, even
-    across partial job commits. Fully-replayed batches hit the docs
-    guard and append nothing.
+    Replay: docs is the commit point (docs-first would leave stored docs
+    invisible to future near-dup checks, silently voiding the
+    invariant). A crash before it leaves index rows for docs absent
+    from the ledger; on replay those docs re-enter as delta, and two
+    per-batch repairs make the replay exact: (1) the index views
+    exclude rows whose doc_id is in the current delta (broadcast
+    anti-join), restoring the delta/index doc-id disjointness the delta
+    check requires and keeping stale members from inflating bucket
+    sizes against ``max_docs_per_bucket``; (2) IDEMPOTENT APPEND —
+    recomputation is deterministic, so the replay's index rows equal
+    the crashed attempt's, and anti-joining the to-append rows against
+    the stale rows ((doc_id, band_id) for keys, doc_id for features —
+    both row-identifying) means no duplicate index row is ever stored.
+    Takedowns (operators/dedup.remove_from_neardup_store): tombstoned
+    docs leave the index views, so deleted content stops suppressing
+    its future near-duplicates the moment the delete commits; the
+    ledger guard still sees tombstoned ids, so re-ingesting one requires
+    a vacuum first.
 
     Per-batch cost: the delta path of ``*_delta_pairs`` — the store's
     index is scanned keys-only under broadcast semi-join prefilters,
     never shuffled, the corpus text is never re-read, and the
-    scrub/idempotence joins broadcast the (small) batch id list. Each
-    batch appends one file set; with ``compact_threshold_files`` set,
-    any store table whose parquet file count exceeds it is compacted
-    after the batch commits (``compact_parquet`` for the plain layout,
-    ``compact_bucketed_table`` — bucket-spec preserving — for the
-    bucketed one), and every load first runs ``recover_compact_swap``
-    so a crash inside a compaction swap never reads as an empty store.
+    scrub/idempotence joins broadcast the (small) batch id list.
     """
     from ..operators.graph import connected_components
-    from ..sources.io import (
-        append_to_bucketed_table,
-        compact_bucketed_table,
-        compact_parquet,
-        recover_compact_swap,
-        register_bucketed_table,
-        table_bucket_spec,
-        write_bucketed,
-    )
 
     spark = batch_df.sparkSession
     fam = _neardup_family(
         hash_family, n, k, bands, threshold, max_hamming, combo_size,
         max_docs_per_bucket, hash_fn, centroids, assign_via,
     )
-    docs_path = f"{store_path}/docs"
-    keys_path = f"{store_path}/{fam.keys_name}"
-    feats_path = f"{store_path}/{fam.feats_name}"
-    for p in (docs_path, keys_path, feats_path):
-        recover_compact_swap(p)
-
-    bucketed = table_prefix is not None
-    docs_tbl = f"{table_prefix}_docs" if bucketed else None
-    keys_tbl = f"{table_prefix}_{fam.keys_name}" if bucketed else None
-    feats_tbl = f"{table_prefix}_{fam.feats_name}" if bucketed else None
-
-    fresh = batch_df.dropDuplicates([id_col])
-    keys_raw = feats_raw = None
-    docs_existed = False  # bucketed mode: docs table present pre-batch
-    if bucketed:
-        # restart self-heal: the in-memory catalog (tests, default local
-        # builds) loses table metadata across sessions while the data
-        # dirs survive — a store whose tables aren't registered must be
-        # re-registered, NOT treated as "first batch" (which would
-        # overwrite the corpus). No-op on a live metastore.
-        register_bucketed_table(spark, docs_tbl, id_col, n_buckets, docs_path)
-        register_bucketed_table(
-            spark, keys_tbl, fam.keys_bucket_col, n_buckets, keys_path
-        )
-        register_bucketed_table(
-            spark, feats_tbl, fam.feats_bucket_col, n_buckets, feats_path
-        )
-        docs_existed = spark.catalog.tableExists(docs_tbl)
-        if docs_existed:
-            # keys/feats re-register from their _BUCKET_SPEC sidecars
-            # even when they hold zero rows (all stored docs shingle-
-            # less); a legacy store without sidecars may lack the
-            # tables entirely — an absent index table means an EMPTY
-            # index (vacuously no candidates), not a crash
-            for t in (docs_tbl, keys_tbl, feats_tbl):
-                if spark.catalog.tableExists(t):
-                    spark.catalog.refreshTable(t)
-            # zero store-side Exchange: the docs table is bucketed by
-            # id_col, so its id column arrives at the sort-merge
-            # anti-join already partitioned on the join key — only the
-            # O(delta) batch side shuffles (plan pinned in tests)
-            fresh = fresh.join(
-                spark.table(docs_tbl).select(id_col), id_col, "left_anti"
-            )
-            # BOTH index tables or neither: a legacy store can be
-            # missing either one independently (pre-sidecar crash
-            # windows), and the delta check needs keys AND features
-            if spark.catalog.tableExists(keys_tbl) and spark.catalog.tableExists(
-                feats_tbl
-            ):
-                keys_raw = spark.table(keys_tbl)
-                feats_raw = spark.table(feats_tbl)
-    else:
-        try:
-            existing = spark.read.parquet(docs_path).select(id_col)
-            fresh = fresh.join(existing, id_col, "left_anti")
-            keys_raw = spark.read.parquet(keys_path)
-            feats_raw = spark.read.parquet(feats_path)
-        except AnalysisException as exc:
-            # ONLY a missing store means "first batch" — same contract
-            # as incremental_dedup_sink above
-            cond = getattr(exc, "getErrorClass", lambda: None)() or str(exc)
-            if "PATH_NOT_FOUND" not in cond and "UNABLE_TO_INFER_SCHEMA" not in cond:
-                raise
-    fresh = fresh.localCheckpoint()
+    spec = store.neardup(table_prefix, id_col, hash_family)
+    keys_tbl, feats_tbl = (t for t, _, _ in spec.tables[:2])
+    store.open(spark, spec, store_path, n_buckets)
+    fresh, tombs = store.admit(spark, spec, batch_df)
     if fresh.limit(1).count() == 0:
         return
-    fresh_ids = fresh.select(F.col(id_col).alias("doc_id"))
-    if bucketed and docs_existed:
-        # takedown exclusion (operators/dedup.remove_from_neardup_
-        # store): tombstoned docs leave candidate generation AND the
-        # verify, so deleted content stops suppressing its future
-        # near-duplicates the moment the delete commits. The broadcast
-        # list stays small because vacuum_neardup_store periodically
-        # folds it into the tables (the LSM cadence); checked once per
-        # batch so a never-deleted-into store adds no join at all. The
-        # docs-guard anti-join above still sees tombstoned ids in the
-        # ledger — re-ingesting one requires a vacuum first. Before the
-        # views load, stale tombstones of admitted ids are scrubbed (the
-        # vacuum crash window, operators/store.py), or the re-ingested
-        # doc would be invisibly excluded from every future delta
-        # check's index views.
-        spec = store.neardup(table_prefix, id_col)
-        tombs = store.live(spark, spec)
-        if store.scrub(spark, spec, F.broadcast(fresh_ids), tombs):
-            tombs = store.live(spark, spec)
-        if tombs is not None and keys_raw is not None:
-            t_ids = F.broadcast(tombs.select("doc_id"))
-            keys_raw = keys_raw.join(t_ids, "doc_id", "left_anti")
-            feats_raw = feats_raw.join(t_ids, "doc_id", "left_anti")
+    fresh_ids = F.broadcast(fresh.select(F.col(id_col).alias("doc_id")))
 
     delta_feats = fam.feats(fresh, tokens_col, id_col).localCheckpoint()
     # checkpointed: consumed by BOTH the index append and the delta
     # check — sharing only the lineage would re-run the band/signature
     # fold once per consumer (tiny table: ~bands rows per doc, ids+hashes)
     delta_keys = fam.keys(delta_feats).localCheckpoint()
-    if keys_raw is None:
-        # empty index with the right schemas (key types depend on
-        # hash_fn) — the first batch then dedups purely within itself
-        stale_keys = keys_view = delta_keys.limit(0)
-        stale_feats = feats_view = delta_feats.limit(0)
-    else:
-        # crash-window scrub (see docstring): stale index rows can only
-        # belong to the replaying batch's own ids — exclude them from
-        # the views, remember them for the idempotent append
-        stale_keys = keys_raw.join(F.broadcast(fresh_ids), "doc_id", "left_semi")
-        stale_feats = feats_raw.join(F.broadcast(fresh_ids), "doc_id", "left_semi")
-        keys_view = keys_raw.join(F.broadcast(fresh_ids), "doc_id", "left_anti")
-        feats_view = feats_raw.join(F.broadcast(fresh_ids), "doc_id", "left_anti")
 
+    def index(tbl: str, delta: DataFrame) -> tuple[DataFrame, DataFrame]:
+        """(stale rows of this batch's ids, the view the delta check
+        reads); an absent table is an EMPTY index with the delta's
+        schema (key types depend on hash_fn)."""
+        if not spark.catalog.tableExists(tbl):
+            return delta.limit(0), delta.limit(0)
+        rows = spark.table(tbl)
+        if tombs is not None:
+            rows = rows.join(F.broadcast(tombs.select("doc_id")), "doc_id", "left_anti")
+        return (
+            rows.join(fresh_ids, "doc_id", "left_semi"),
+            rows.join(fresh_ids, "doc_id", "left_anti"),
+        )
+
+    stale_keys, keys_view = index(keys_tbl, delta_keys)
+    stale_feats, feats_view = index(feats_tbl, delta_feats)
     pairs = fam.delta_pairs(
         fresh, keys_view, feats_view, tokens_col, id_col, delta_feats, delta_keys
     )
@@ -547,63 +374,11 @@ def neardup_upsert_batch(
     new_feats = new_feats.join(
         F.broadcast(stale_feats.select("doc_id")), "doc_id", "left_anti"
     )
-
-    # the two INDEX writes are order-independent (the idempotent-append
-    # anti-joins above cancel either table's stale rows on replay), so
-    # they run overlapped from a 2-thread pool (guide §2.6); the docs
-    # ledger is the COMMIT POINT and must stay strictly AFTER both —
-    # a store with docs committed but index rows missing would silently
-    # stop detecting those docs' near-duplicates
-    from concurrent.futures import ThreadPoolExecutor
-
-    if bucketed:
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            if keys_raw is None:
-                # first batch for the INDEX: CREATE its bucketed tables
-                # (overwrite clobbers any partial first-batch crash state)
-                fk = pool.submit(
-                    write_bucketed, new_keys, keys_tbl, fam.keys_bucket_col,
-                    n_buckets, path=keys_path,
-                )
-                ff = pool.submit(
-                    write_bucketed, new_feats, feats_tbl, fam.feats_bucket_col,
-                    n_buckets, path=feats_path,
-                )
-            else:
-                fk = pool.submit(append_to_bucketed_table, new_keys, keys_tbl)
-                ff = pool.submit(append_to_bucketed_table, new_feats, feats_tbl)
-            fk.result()
-            ff.result()
-        # docs existence is tracked SEPARATELY from the index's: a
-        # legacy store can hold docs while its index tables are absent
-        # (empty-index fallback above) — overwriting docs there would
-        # delete the stored corpus
-        if docs_existed:
-            append_to_bucketed_table(survivors, docs_tbl)
-        else:
-            write_bucketed(survivors, docs_tbl, id_col, n_buckets, path=docs_path)
-    else:
-        mode = "append" if keys_raw is not None else "overwrite"
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            fk = pool.submit(
-                lambda: new_keys.write.mode(mode).parquet(keys_path)
-            )
-            ff = pool.submit(
-                lambda: new_feats.write.mode(mode).parquet(feats_path)
-            )
-            fk.result()
-            ff.result()
-        survivors.write.mode("append").parquet(docs_path)
-
-    if compact_threshold_files is not None:
-        if bucketed:
-            for t in (keys_tbl, feats_tbl, docs_tbl):
-                if _parquet_file_count(table_bucket_spec(spark, t)[2]) > compact_threshold_files:
-                    compact_bucketed_table(spark, t)
-        else:
-            for p in (keys_path, feats_path, docs_path):
-                if _parquet_file_count(p) > compact_threshold_files:
-                    compact_parquet(spark, p)
+    store.commit(
+        spark, spec, store_path, n_buckets,
+        {keys_tbl: new_keys, feats_tbl: new_feats, spec.ledger: survivors},
+    )
+    store.compact(spark, spec, compact_threshold_files)
 
 
 def neardup_dedup_sink(
@@ -620,11 +395,11 @@ def neardup_dedup_sink(
     micro-batch runs :func:`neardup_upsert_batch` against the persistent
     store; the store's invariant — no near-dup pair among stored docs —
     survives restarts and has no watermark bound. All
-    :func:`neardup_upsert_batch` knobs pass through: ``hash_family``
+    :func:`neardup_upsert_batch` knobs pass through: ``table_prefix``
+    (required: the store's bucketed tables), ``hash_family``
     ('minhash' | 'simhash' | 'semantic' — the latter needs
-    ``centroids`` and an embedding ``tokens_col``), ``table_prefix``
-    (bucketed store — the 100 TB layout), ``compact_threshold_files``
-    (small-file maintenance)."""
+    ``centroids`` and an embedding ``tokens_col``),
+    ``compact_threshold_files`` (small-file maintenance)."""
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
         neardup_upsert_batch(
@@ -644,7 +419,8 @@ def search_index_upsert_batch(
     store_path: str,
     tokens_col: str = "tokens",
     id_col: str = "doc_id",
-    table_prefix: str | None = None,
+    *,
+    table_prefix: str,
     n_buckets: int = 32,
     compact_threshold_files: int | None = None,
 ) -> None:
@@ -654,162 +430,31 @@ def search_index_upsert_batch(
     the streaming write half of :func:`~..operators.search.
     bm25_topk_indexed`'s read path.
 
-    Store layout mirrors the near-dup sinks: ``postings/`` (word,
-    doc_id, tf, dl) and ``docs/`` (doc_id, dl) parquet dirs — or, with
-    ``table_prefix``, bucketed catalog tables (postings by word: the
-    query-time Exchange-free layout; docs by doc_id: the replay guard's
-    anti-join reads the stored ids already partitioned on the join key,
-    zero store-side Exchange). The ``{prefix}_stats`` table
-    :func:`~..operators.search.load_posting_index` expects is
-    maintained as a DERIVED value — recomputed from the committed docs
-    table after every append and overwritten — never a read-modify-
-    write fold, so a replayed batch cannot double-count it.
-
-    Idempotence / crash ordering (the near-dup sinks' protocol):
-    append order is postings → docs → stats, so the docs append is the
-    commit point. A replayed batch loses its docs to the guard
-    anti-join and appends nothing. A crash BETWEEN the postings append
-    and the docs append leaves postings rows for unstored docs; on
-    replay those docs re-enter as delta, and the idempotent append —
-    recomputation is deterministic, so the replay's rows equal the
-    crashed attempt's — anti-joins the to-append postings against the
-    store's stale rows for the delta's doc ids ((word, doc_id) is
-    row-identifying), so no duplicate posting is ever stored. A crash
-    after the docs append but before the stats overwrite leaves stats
-    stale by one batch; the next batch's recompute repairs it, and
-    BM25 degrades smoothly under a slightly-stale avgdl in the
-    meantime (a corpus-level smoothing constant, not a correctness
-    key). Every load first runs ``recover_compact_swap``; with
-    ``compact_threshold_files`` set, over-fragmented store tables are
-    compacted after the commit point.
-
-    Per-batch cost: the batch's postings build is O(batch); the guard
-    is a keys-only docs scan (zero store-side shuffle when bucketed);
-    the idempotence check semi-filters the postings scan by the
-    broadcast batch id list before the anti-join, so only stale rows of
-    THIS batch's docs ever reach the join.
+    The store is ``{prefix}_postings`` (word, doc_id, tf, dl — bucketed
+    by word: the query-time Exchange-free layout), the ``{prefix}_docs``
+    ledger (doc_id, dl — bucketed by doc_id) and the one-row
+    ``{prefix}_stats`` table, with data under ``store_path``. The step
+    opens the store (operators/store.open — restart self-heal included),
+    then runs :func:`~..operators.search.append_to_posting_index`'s
+    replay-safe append (admit, postings then docs, stats re-derived from
+    the live ledger), then compacts past ``compact_threshold_files``.
     """
-    from ..operators.search import build_posting_index
-    from ..sources.io import (
-        append_to_bucketed_table,
-        compact_bucketed_table,
-        compact_parquet,
-        recover_compact_swap,
-        register_bucketed_table,
-        write_bucketed,
-    )
+    from ..operators import search
 
     spark = batch_df.sparkSession
-    postings_path = f"{store_path}/postings"
-    docs_path = f"{store_path}/docs"
-    for p in (postings_path, docs_path):
-        recover_compact_swap(p)
-
-    bucketed = table_prefix is not None
-    postings_tbl = f"{table_prefix}_postings" if bucketed else None
-    docs_tbl = f"{table_prefix}_docs" if bucketed else None
-
-    fresh = batch_df.dropDuplicates([id_col]).select(
-        F.col(id_col).alias("doc_id"), F.col(tokens_col).alias("tokens")
+    spec = store.posting(table_prefix)
+    store.open(spark, spec, store_path, n_buckets)
+    search._append(
+        batch_df.select(
+            F.col(id_col).alias("doc_id"),
+            F.col(tokens_col).alias("tokens"),
+            F.size(tokens_col).alias("dl"),
+        ),
+        table_prefix,
+        path=store_path,
+        n_buckets=n_buckets,
     )
-
-    def _load(path: str, tbl: str | None):
-        """Store frame or None if absent. Absence is only 'first batch'
-        for a genuinely missing dir — any other read error must raise
-        (the incremental_dedup_sink rule: treating a corrupt store as
-        first-batch voids the guard silently)."""
-        if bucketed and spark.catalog.tableExists(tbl):
-            spark.catalog.refreshTable(tbl)
-            return spark.table(tbl)
-        try:
-            return spark.read.parquet(path)
-        except AnalysisException as exc:
-            cond = getattr(exc, "getErrorClass", lambda: None)() or str(exc)
-            if "PATH_NOT_FOUND" not in cond and "UNABLE_TO_INFER_SCHEMA" not in cond:
-                raise
-            return None
-
-    if bucketed:
-        # restart self-heal: re-register over surviving data dirs (the
-        # sidecar carries the spec; no-op on a live metastore)
-        register_bucketed_table(spark, postings_tbl, "word", n_buckets, postings_path)
-        register_bucketed_table(spark, docs_tbl, "doc_id", n_buckets, docs_path)
-
-    stored_docs = _load(docs_path, docs_tbl)
-    if stored_docs is not None:
-        # replay/duplicate-id guard; bucketed: store side Exchange-free
-        fresh = fresh.join(stored_docs.select("doc_id"), "doc_id", "left_anti")
-    # the delta is consumed by the postings build, the idempotence
-    # anti-join's broadcast id list, the docs append, and (bucketed
-    # first-batch) the table create — pin it once
-    fresh = fresh.localCheckpoint()
-
-    delta = build_posting_index(fresh, tokens_col="tokens", id_col="doc_id")
-    to_append = delta.postings
-    stored_postings = _load(postings_path, postings_tbl)
-    if stored_postings is not None:
-        # idempotent append: stale rows (a crashed attempt's postings
-        # for THIS batch's docs) are found under a broadcast semi-join
-        # prefilter, then cancelled row-for-row — (word, doc_id) is
-        # row-identifying and recomputation is deterministic
-        batch_ids = F.broadcast(fresh.select("doc_id"))
-        stale = stored_postings.join(batch_ids, "doc_id", "left_semi")
-        to_append = to_append.join(stale, ["word", "doc_id"], "left_anti")
-
-    docs_rows = fresh.select("doc_id", F.size("tokens").alias("dl"))
-    if bucketed:
-        if spark.catalog.tableExists(postings_tbl):
-            append_to_bucketed_table(to_append, postings_tbl)
-        else:
-            write_bucketed(
-                to_append, postings_tbl, "word", n_buckets, path=postings_path
-            )
-        if spark.catalog.tableExists(docs_tbl):
-            append_to_bucketed_table(docs_rows, docs_tbl)  # commit point
-        else:
-            write_bucketed(docs_rows, docs_tbl, "doc_id", n_buckets, path=docs_path)
-    else:
-        to_append.write.mode("append").parquet(postings_path)
-        docs_rows.write.mode("append").parquet(docs_path)  # commit point
-
-    # stats: DERIVED from the committed docs table (exact BIGINTs), so
-    # the overwrite is idempotent under any replay; docs tombstoned by
-    # operators/search.remove_from_posting_index stay subtracted (the
-    # recompute must not resurrect their counts). The tombstone list is
-    # healed first — the SAME restart story this function gives
-    # postings/docs above — so a fresh session's first batch does not
-    # resurrect takedowns committed by the previous session.
-    committed = _load(docs_path, docs_tbl)
-    tombs = store.table(spark, store.posting(table_prefix)) if bucketed else None
-    if tombs is not None:
-        committed = committed.join(F.broadcast(tombs), "doc_id", "left_anti")
-    stats = committed.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("dl").cast("long").alias("total_dl"),
-    )
-    if bucketed:
-        # collect-then-recreate: saveAsTable('overwrite') cannot read
-        # from the table it replaces, and the 1-row collect is bounded
-        row = stats.collect()[0]
-        spark.createDataFrame(
-            [(row["n_docs"], row["total_dl"])], "n_docs bigint, total_dl bigint"
-        ).write.mode("overwrite").format("parquet").option(
-            "path", f"{store_path}/stats"
-        ).saveAsTable(f"{table_prefix}_stats")
-    else:
-        stats.localCheckpoint().write.mode("overwrite").parquet(
-            f"{store_path}/stats"
-        )
-
-    if compact_threshold_files is not None:
-        if bucketed:
-            for tbl, path in ((postings_tbl, postings_path), (docs_tbl, docs_path)):
-                if _parquet_file_count(path) > compact_threshold_files:
-                    compact_bucketed_table(spark, tbl)
-        else:
-            for path in (postings_path, docs_path):
-                if _parquet_file_count(path) > compact_threshold_files:
-                    compact_parquet(spark, path)
+    store.compact(spark, spec, compact_threshold_files)
 
 
 def search_index_sink(
@@ -989,43 +634,29 @@ def vector_index_upsert_batch(
     path, and the fifth persisted store family to get the ingest-sink
     treatment.
 
-    First batch bootstraps the store (``persist_vector_index``); later
-    batches ride ``append_to_vector_index``'s replay-safe protocol
-    (ledger anti-join guard, codes→vecs commit ordering — the posting
-    sink's idempotence story). ``centroids``/``codebooks`` are consumed
-    only at bootstrap: the quantizer is a trained artifact FIXED for
-    the store's life (re-training re-encodes the store — that is a
-    rebuild, not an append), and later batches encode with the STORED
-    quantizer, so a sink restarted with different literals cannot fork
-    the code space. Restart self-heal: bucketed tables re-register from
-    their ``_BUCKET_SPEC`` sidecars, quantizer tables from their
-    parquet dirs. Returns newly ingested vector count."""
-    from ..operators.vector_store import (
-        append_to_vector_index,
-        persist_vector_index,
-        register_vector_index,
-    )
-    from ..sources.io import compact_bucketed_table
+    The step opens the store (operators/store.open: bucketed tables
+    from their ``_BUCKET_SPEC`` sidecars, quantizer tables from their
+    parquet dirs), then runs
+    :func:`~..operators.vector_store.append_to_vector_index`'s
+    replay-safe append, then compacts past ``compact_threshold_files``.
+    The first batch is the same append: it creates the tables, and the
+    vecs ledger is written last, so a first batch that crashed anywhere
+    replays cleanly. ``centroids``/``codebooks`` are used only while the
+    store has no quantizer tables: the quantizer is a trained artifact
+    FIXED for the store's life (re-training re-encodes the store — that
+    is a rebuild, not an append), and later batches encode with the
+    STORED quantizer, so a sink restarted with different literals
+    cannot fork the code space. Returns newly ingested vector count."""
+    from ..operators import vector_store
 
     spark = batch_df.sparkSession
-    register_vector_index(spark, table_prefix, store_path, n_buckets=n_buckets)
-    if not spark.catalog.tableExists(f"{table_prefix}_vecs"):
-        persist_vector_index(
-            batch_df.dropDuplicates([id_col]),
-            centroids,
-            codebooks,
-            table_prefix,
-            n_buckets=n_buckets,
-            path=store_path,
-            vec_col=vec_col,
-            id_col=id_col,
-        )
-        return batch_df.select(id_col).distinct().count()
-    n = append_to_vector_index(batch_df, table_prefix, vec_col=vec_col, id_col=id_col)
-    if compact_threshold_files is not None:
-        for sub in ("codes", "vecs"):
-            if _parquet_file_count(f"{store_path}/{sub}") > compact_threshold_files:
-                compact_bucketed_table(spark, f"{table_prefix}_{sub}")
+    spec = store.vector(table_prefix)
+    store.open(spark, spec, store_path, n_buckets)
+    n = vector_store._append(
+        batch_df, table_prefix, vec_col, id_col, store_path, n_buckets,
+        (centroids, codebooks),
+    )
+    store.compact(spark, spec, compact_threshold_files)
     return n
 
 

@@ -376,10 +376,8 @@ def sink_probe_leg(
     from pyspark.sql import functions as F
 
     from nlp_with_pyspark_spark.queries import _tokenized_documents
-    from nlp_with_pyspark_spark.streaming.sinks import (
-        _parquet_file_count,
-        neardup_upsert_batch,
-    )
+    from nlp_with_pyspark_spark.sources.io import parquet_file_count as _parquet_file_count
+    from nlp_with_pyspark_spark.streaming.sinks import neardup_upsert_batch
 
     spark = get_spark(app_name=f"sink-probe-{tag}")
     spark.sparkContext.setLogLevel("ERROR")

@@ -10,8 +10,9 @@ import pytest
 
 from nlp_with_pyspark_spark.operators.multimodal import (
     ASSET_SCHEMA,
+    _fake_decode,
     decode_asset_real,
-    decode_features,
+    decode_features_arrow,
     expected_sampled_frames,
     resize_images,
     sample_frames,
@@ -45,7 +46,7 @@ def test_modalities_partition_assets(assets):
 
 
 def test_decode_features_covers_all_assets(assets):
-    feats = decode_features(assets, n_bins=16)
+    feats = decode_features_arrow(assets, n_bins=16)
     rows = feats.collect()
     assert len(rows) == assets.count()
     for r in rows[:20]:
@@ -55,18 +56,30 @@ def test_decode_features_covers_all_assets(assets):
 
 
 def test_decode_arrow_equals_pandas_path(assets):
-    """mapInArrow and mapInPandas decode paths must produce identical
-    feature rows (same fake codec, different Python boundary)."""
-    from nlp_with_pyspark_spark.operators.multimodal import decode_features_arrow
+    """The mapInArrow decode kernel equals a driver-side numpy reference
+    over the same fake codec, row for row."""
+    import numpy as np
 
-    a = sorted(map(tuple, decode_features(assets).collect()))
-    b = sorted(map(tuple, decode_features_arrow(assets).collect()))
-    assert a == b
+    want = []
+    for r in assets.select("asset_id", "modality", "content").collect():
+        v = _fake_decode(bytes(r.content))
+        want.append(
+            (
+                r.asset_id,
+                r.modality,
+                int(v.size),
+                float(v.mean()) if v.size else 0.0,
+                float(v.std()) if v.size else 0.0,
+                np.bincount(v >> 4, minlength=16)[:16].tolist(),
+            )
+        )
+    got = sorted(map(tuple, decode_features_arrow(assets).collect()))
+    assert got == sorted(want)
 
 
 def test_decode_features_deterministic(assets):
-    a = sorted(map(tuple, decode_features(assets).collect()))
-    b = sorted(map(tuple, decode_features(assets).collect()))
+    a = sorted(map(tuple, decode_features_arrow(assets).collect()))
+    b = sorted(map(tuple, decode_features_arrow(assets).collect()))
     assert a == b
 
 

@@ -1,10 +1,13 @@
-"""The tombstone lifecycle of every persisted store family in the default
-run, on stores of at most 200 rows: remove → replay → restart heal →
-vacuum crashed between fold and clear → re-ingest → vacuum.
+"""The lifecycle of every persisted store family in the default run, on
+stores of at most 200 rows: remove → replay → restart heal → vacuum
+crashed between fold and clear → (sink-fed stores: a full catalog loss)
+→ re-ingest → vacuum; and a vector sink whose first batch crashed.
 
 Each family is driven only through its public API; the tombstone
 table's sidecar path and column types are pinned literally, so a store
 written by an earlier build must heal to the same table."""
+
+import warnings
 
 import pytest
 from pyspark.sql import functions as F
@@ -24,9 +27,19 @@ def _location(spark, table):
     return info["Location"].removeprefix("file:")
 
 
+def _is_external(spark, table):
+    info = {
+        r.col_name: r.data_type
+        for r in spark.sql(f"DESCRIBE TABLE EXTENDED {table}").collect()
+    }
+    return info["Type"].strip().upper() == "EXTERNAL"
+
+
 class _Posting:
     tomb_types = [("doc_id", "bigint")]
     report_keys = {"tombstones_folded", "postings", "docs"}
+    # ingest reopens the store after a catalog loss (sink-fed stores)
+    reopens = False
 
     def __init__(self, spark, tmp, sf_dir):
         from nlp_with_pyspark_spark.operators.search import (
@@ -86,9 +99,47 @@ class _Posting:
         return [f"{self.prefix}_{s}" for s in ("postings", "docs", "stats", "tombstones")]
 
 
+class _PostingSink(_Posting):
+    """The posting index fed by the streaming sink's per-batch step."""
+
+    reopens = True
+
+    def __init__(self, spark, tmp, sf_dir):
+        self.spark, self.prefix = spark, "t_lc_posting_sink"
+        self.path = f"{tmp}/bms"
+        self.sidecar = f"{self.path}/postings__tombstones"
+        self.docs = spark.createDataFrame(
+            [(i, [f"w{i % 7}", f"u{i}", "common"]) for i in range(N)],
+            "doc_id int, tokens array<string>",
+        )
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            self.ingest(list(range(N)))
+        assert not [w for w in caught if issubclass(w.category, FutureWarning)], [
+            str(w.message) for w in caught
+        ]
+
+    def ingest(self, ids):
+        from nlp_with_pyspark_spark.streaming.sinks import search_index_upsert_batch
+
+        search_index_upsert_batch(
+            self.docs.where(F.col("doc_id").isin(ids)), self.path,
+            table_prefix=self.prefix, n_buckets=4,
+        )
+
+    def served(self):
+        ids = super().served()
+        # the stats table stays the store's own dir, also after a reopen
+        stats = f"{self.prefix}_stats"
+        assert _is_external(self.spark, stats)
+        assert _location(self.spark, stats) == f"{self.path}/stats"
+        return ids
+
+
 class _Vector:
     tomb_types = [("vec_id", "bigint")]
     report_keys = {"tombstones_folded", "codes", "vecs"}
+    reopens = False
 
     def __init__(self, spark, tmp, sf_dir):
         from nlp_with_pyspark_spark.operators.similarity import pq_fixed_codebooks
@@ -149,6 +200,7 @@ class _NeardupMinhash:
     # tombstones are `doc_id` with the docs table's `id` type
     tomb_types = [("doc_id", "int")]
     report_keys = {"tombstones_folded", "docs", "buckets", "shingles"}
+    reopens = True
 
     def __init__(self, spark, tmp, sf_dir):
         self.spark, self.prefix = spark, "t_lc_neardup"
@@ -198,6 +250,7 @@ class _NeardupMinhash:
 class _Exact:
     tomb_types = [("event_id", "bigint")]
     report_keys = {"tombstones_folded", "store"}
+    reopens = True
 
     def __init__(self, spark, tmp, sf_dir):
         self.spark, self.tmp, self.table = spark, tmp, "t_lc_exact"
@@ -245,6 +298,7 @@ class _Exact:
 
 FAMILIES = {
     "posting": _Posting,
+    "posting-sink": _PostingSink,
     "vector": _Vector,
     "neardup-minhash": _NeardupMinhash,
     "exact": _Exact,
@@ -287,6 +341,10 @@ def test_tombstone_lifecycle_matrix(spark, sf_dir, tmp_path, monkeypatch, family
         monkeypatch.setattr(io_mod, "write_small_table", real)
         assert sorted(r[0] for r in store.live().collect()) == DEAD
 
+        if store.reopens:
+            # restart: every catalog entry goes; the next batch reopens
+            for t in store.tables():
+                spark.sql(f"DROP TABLE {t}")
         # re-ingest of the folded ids: admitted, stale tombstones scrubbed
         store.ingest(DEAD)
         assert store.live() is None
@@ -302,3 +360,46 @@ def test_tombstone_lifecycle_matrix(spark, sf_dir, tmp_path, monkeypatch, family
     finally:
         for t in store.tables():
             spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
+def test_vector_sink_first_batch_crash_replays(spark, sf_dir, tmp_path, monkeypatch):
+    """A vector sink whose FIRST batch dies before the quantizer tables
+    are written replays to a store that serves every vector: the first
+    batch commits through the same ledger-last append as later ones."""
+    from nlp_with_pyspark_spark.operators.similarity import pq_fixed_codebooks
+    from nlp_with_pyspark_spark.operators.vector_store import load_vector_index
+    from nlp_with_pyspark_spark.sources.io import read_table
+    from nlp_with_pyspark_spark.streaming.sinks import vector_index_upsert_batch
+
+    prefix, path = "t_lc_vec_boot", f"{tmp_path}/vb"
+    emb = read_table(spark, sf_dir, "embeddings").where(F.col("vec_id") < N).localCheckpoint()
+    cent = [
+        (int(r.vec_id), [float(x) for x in r.embedding])
+        for r in emb.where(F.col("vec_id") < 8).collect()
+    ]
+    real = io_mod.write_small_table
+
+    def crash_at_centroids(spark_, rows, ddl, table, p):
+        if table.endswith("_centroids"):
+            raise RuntimeError("simulated crash before the centroids")
+        return real(spark_, rows, ddl, table, p)
+
+    def upsert():
+        return vector_index_upsert_batch(
+            emb, path, cent, pq_fixed_codebooks(), prefix, n_buckets=4
+        )
+
+    try:
+        monkeypatch.setattr(io_mod, "write_small_table", crash_at_centroids)
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            upsert()
+        monkeypatch.setattr(io_mod, "write_small_table", real)
+        assert upsert() == N
+        idx = load_vector_index(spark, prefix)
+        assert {r.vec_id for r in idx.vecs.collect()} == set(range(N))
+        # one codes row per vector: the replay cancelled the crashed rows
+        assert sorted(r.vec_id for r in idx.codes.collect()) == list(range(N))
+        assert upsert() == 0
+    finally:
+        for s in ("codes", "vecs", "centroids", "codebooks", "tombstones"):
+            spark.sql(f"DROP TABLE IF EXISTS {prefix}_{s}")

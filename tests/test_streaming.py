@@ -406,6 +406,24 @@ def _write_events_file(spark, d, rows):
     df.coalesce(1).write.parquet(str(d))
 
 
+def _stored(spark, table, col):
+    """Sorted values of ``col`` in the store table ``table``, refreshed
+    first (the sinks write through a cloned session)."""
+    spark.catalog.refreshTable(table)
+    return sorted(r[0] for r in spark.table(table).select(col).collect())
+
+
+def _drop_tables(spark, *tables):
+    for t in tables:
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
+def _tbl(spark, table):
+    """The store table ``table``, refreshed first."""
+    spark.catalog.refreshTable(table)
+    return spark.table(table)
+
+
 def test_incremental_dedup_sink_across_batches(spark, tmp_path):
     """foreachBatch dedup-on-ingest: a key arriving again in a LATER
     micro-batch (beyond any dropDuplicates state window) must not reach
@@ -428,15 +446,17 @@ def test_incremental_dedup_sink_across_batches(spark, tmp_path):
     )
     store = str(tmp_path / "store")
     ckpt = str(tmp_path / "ckpt")
-    stream = events_stream_from_dir(spark, str(src / "f*"), max_files_per_trigger=1)
-    incremental_dedup_sink(stream, store, ckpt)
-    got = spark.read.parquet(store)
-    ids = sorted(r.event_id for r in got.select("event_id").collect())
-    assert ids == [1, 2, 3]
-    # resume from the same checkpoint: no new input, store unchanged
-    stream2 = events_stream_from_dir(spark, str(src / "f*"), max_files_per_trigger=1)
-    incremental_dedup_sink(stream2, store, ckpt)
-    assert sorted(r.event_id for r in spark.read.parquet(store).select("event_id").collect()) == [1, 2, 3]
+    tbl = "t_exact_across"
+    try:
+        stream = events_stream_from_dir(spark, str(src / "f*"), max_files_per_trigger=1)
+        incremental_dedup_sink(stream, store, ckpt, table=tbl, n_buckets=4)
+        assert _stored(spark, tbl, "event_id") == [1, 2, 3]
+        # resume from the same checkpoint: no new input, store unchanged
+        stream2 = events_stream_from_dir(spark, str(src / "f*"), max_files_per_trigger=1)
+        incremental_dedup_sink(stream2, store, ckpt, table=tbl, n_buckets=4)
+        assert _stored(spark, tbl, "event_id") == [1, 2, 3]
+    finally:
+        _drop_tables(spark, tbl)
 
 
 def test_interval_join_outer_batch_semantics(spark):
@@ -607,6 +627,7 @@ def test_incremental_dedup_sink_fails_on_store_schema_mismatch(spark, tmp_path):
     import pytest
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
+    from nlp_with_pyspark_spark.sources.io import write_bucketed
     from nlp_with_pyspark_spark.streaming.sinks import incremental_dedup_sink
     from nlp_with_pyspark_spark.streaming.windows import events_stream_from_dir
 
@@ -615,11 +636,20 @@ def test_incremental_dedup_sink_fails_on_store_schema_mismatch(spark, tmp_path):
     src.mkdir()
     _write_events_file(spark, src / "f1", [(1, base, 10, "click", 1.0, "{}")])
     store = str(tmp_path / "mm_store")
-    # pre-existing store WITHOUT the key column
-    spark.createDataFrame([(99,)], "other_id long").write.parquet(store)
-    stream = events_stream_from_dir(spark, str(src / "f*"))
-    with pytest.raises(StreamingQueryException):
-        incremental_dedup_sink(stream, store, str(tmp_path / "mm_ckpt"))
+    tbl = "t_exact_mismatch"
+    try:
+        # pre-existing store WITHOUT the key column
+        write_bucketed(
+            spark.createDataFrame([(99,)], "other_id long"), tbl, "other_id", 4, path=store
+        )
+        stream = events_stream_from_dir(spark, str(src / "f*"))
+        with pytest.raises(StreamingQueryException):
+            incremental_dedup_sink(
+                stream, store, str(tmp_path / "mm_ckpt"), table=tbl, n_buckets=4
+            )
+        assert _stored(spark, tbl, "other_id") == [99]
+    finally:
+        _drop_tables(spark, tbl)
 
 
 def test_incremental_dedup_sink_replay_after_crash(spark, tmp_path):
@@ -649,30 +679,33 @@ def test_incremental_dedup_sink_replay_after_crash(spark, tmp_path):
     )
     store = str(tmp_path / "store")
     ckpt = str(tmp_path / "ckpt")
-    stream = events_stream_from_dir(spark, str(src / "f*"), max_files_per_trigger=1)
-    incremental_dedup_sink(stream, store, ckpt)
-    assert sorted(
-        r.event_id for r in spark.read.parquet(store).select("event_id").collect()
-    ) == [1, 2, 3]
+    tbl = "t_exact_replay"
+    kw = dict(table=tbl, n_buckets=4)
+    try:
+        stream = events_stream_from_dir(spark, str(src / "f*"), max_files_per_trigger=1)
+        incremental_dedup_sink(stream, store, ckpt, **kw)
+        assert _stored(spark, tbl, "event_id") == [1, 2, 3]
 
-    # crash window: last batch appended to the store, commit marker lost
-    commits = sorted(
-        f for f in os.listdir(os.path.join(ckpt, "commits")) if not f.startswith(".")
-    )
-    os.remove(os.path.join(ckpt, "commits", commits[-1]))
-    crc = os.path.join(ckpt, "commits", f".{commits[-1]}.crc")
-    if os.path.exists(crc):
-        os.remove(crc)
-    stream2 = events_stream_from_dir(spark, str(src / "f*"), max_files_per_trigger=1)
-    incremental_dedup_sink(stream2, store, ckpt)
-    ids = [r.event_id for r in spark.read.parquet(store).select("event_id").collect()]
-    assert sorted(ids) == [1, 2, 3], f"replayed batch duplicated keys: {sorted(ids)}"
+        # crash window: last batch appended to the store, commit marker lost
+        commits = sorted(
+            f for f in os.listdir(os.path.join(ckpt, "commits")) if not f.startswith(".")
+        )
+        os.remove(os.path.join(ckpt, "commits", commits[-1]))
+        crc = os.path.join(ckpt, "commits", f".{commits[-1]}.crc")
+        if os.path.exists(crc):
+            os.remove(crc)
+        stream2 = events_stream_from_dir(spark, str(src / "f*"), max_files_per_trigger=1)
+        incremental_dedup_sink(stream2, store, ckpt, **kw)
+        ids = _stored(spark, tbl, "event_id")
+        assert ids == [1, 2, 3], f"replayed batch duplicated keys: {ids}"
 
-    # total checkpoint loss: the WHOLE stream replays against the store
-    stream3 = events_stream_from_dir(spark, str(src / "f*"), max_files_per_trigger=1)
-    incremental_dedup_sink(stream3, store, str(tmp_path / "ckpt_fresh"))
-    ids = [r.event_id for r in spark.read.parquet(store).select("event_id").collect()]
-    assert sorted(ids) == [1, 2, 3], f"full replay duplicated keys: {sorted(ids)}"
+        # total checkpoint loss: the WHOLE stream replays against the store
+        stream3 = events_stream_from_dir(spark, str(src / "f*"), max_files_per_trigger=1)
+        incremental_dedup_sink(stream3, store, str(tmp_path / "ckpt_fresh"), **kw)
+        ids = _stored(spark, tbl, "event_id")
+        assert ids == [1, 2, 3], f"full replay duplicated keys: {ids}"
+    finally:
+        _drop_tables(spark, tbl)
 
 
 def test_enrich_stream_matches_batch(spark, tmp_path):
@@ -715,7 +748,7 @@ def test_enrich_stream_matches_batch(spark, tmp_path):
     assert (3, 99, None) in got
 
 
-def test_neardup_sink_invariants_and_replay(spark, sf_dir, tmp_path):
+def test_neardup_sink_invariants_and_replay(spark, sf_dir, tmp_path, request):
     """Streaming minhash dedup-on-ingest (streaming/sinks.py
     neardup_dedup_sink): (1) the store invariant — no near-dup pair
     among stored docs; (2) every dropped doc had batch-global cause;
@@ -744,6 +777,10 @@ def test_neardup_sink_invariants_and_replay(spark, sf_dir, tmp_path):
 
     store = str(tmp_path / "store")
     ckpt = str(tmp_path / "ckpt")
+    prefix = "t_ndstream"
+    request.addfinalizer(
+        lambda: _drop_tables(spark, *(f"{prefix}_{t}" for t in ("docs", "buckets", "shingles")))
+    )
 
     def run_sink():
         stream = (
@@ -752,10 +789,12 @@ def test_neardup_sink_invariants_and_replay(spark, sf_dir, tmp_path):
             .parquet(str(src / "b*"))
             .withColumn("tokens", tokens_pipeline(F.col("text")))
         )
-        neardup_dedup_sink(stream, store, ckpt, threshold=0.2)
+        neardup_dedup_sink(
+            stream, store, ckpt, threshold=0.2, table_prefix=prefix, n_buckets=4
+        )
 
     run_sink()
-    stored = spark.read.parquet(f"{store}/docs").localCheckpoint()
+    stored = _tbl(spark, f"{prefix}_docs").localCheckpoint()
     stored_ids = {r.doc_id for r in stored.select("doc_id").collect()}
     assert stored_ids, "empty store"
 
@@ -773,20 +812,14 @@ def test_neardup_sink_invariants_and_replay(spark, sf_dir, tmp_path):
 
     # (3) index rows track the stored docs exactly
     for part in ("buckets", "shingles"):
-        idx_ids = {
-            r.doc_id
-            for r in spark.read.parquet(f"{store}/{part}").select("doc_id").distinct().collect()
-        }
-        assert idx_ids == stored_ids, part
+        assert set(_stored(spark, f"{prefix}_{part}", "doc_id")) == stored_ids, part
 
     # (4) replay from the same checkpoint: no new input, store unchanged
     run_sink()
-    assert {
-        r.doc_id for r in spark.read.parquet(f"{store}/docs").select("doc_id").collect()
-    } == stored_ids
+    assert set(_stored(spark, f"{prefix}_docs", "doc_id")) == stored_ids
 
 
-def test_neardup_sink_single_batch_equals_canonical(spark, sf_dir, tmp_path):
+def test_neardup_sink_single_batch_equals_canonical(spark, sf_dir, tmp_path, request):
     """With the whole corpus in ONE batch, dedup-on-ingest coincides
     exactly with the batch pipeline (pairs → components → keep-first
     canonical corpus)."""
@@ -803,8 +836,12 @@ def test_neardup_sink_single_batch_equals_canonical(spark, sf_dir, tmp_path):
     docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
     toks = docs.withColumn("tokens", tokens_pipeline(F.col("text")))
     store = str(tmp_path / "store1")
-    neardup_upsert_batch(toks, store, threshold=0.2)
-    got = {r.doc_id for r in spark.read.parquet(f"{store}/docs").select("doc_id").collect()}
+    prefix = "t_ndcanon"
+    request.addfinalizer(
+        lambda: _drop_tables(spark, *(f"{prefix}_{t}" for t in ("docs", "buckets", "shingles")))
+    )
+    neardup_upsert_batch(toks, store, threshold=0.2, table_prefix=prefix, n_buckets=4)
+    got = set(_stored(spark, f"{prefix}_docs", "doc_id"))
     pairs = minhash_dedup_pairs(toks, threshold=0.2)
     expected = {r.doc_id for r in canonical_corpus(docs, pairs).select("doc_id").collect()}
     assert got == expected
@@ -822,7 +859,46 @@ def _id_cuts(toks, parts=2):
     return [ids[(i + 1) * len(ids) // parts] for i in range(parts - 1)]
 
 
-def test_neardup_upsert_simhash_family_single_batch(spark, sf_dir, tmp_path):
+def _ingest_reference(batches, pairs):
+    """Driver-side reference of neardup_upsert_batch's ingest rule over
+    ``batches`` (lists of ids, in arrival order) and the corpus's
+    near-dup ``pairs``: a batch's doc is dropped iff its connected
+    component — over the pairs among the batch and between the batch
+    and the earlier survivors — holds an earlier survivor or a
+    smaller-id batch mate. Returns the survivor ids."""
+    adj = {}
+    for a, b in pairs:
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+    kept = set()
+    for ids in batches:
+        delta, seen = set(ids) - kept, set()
+        for start in sorted(delta):
+            if start in seen:
+                continue
+            comp, stack = {start}, [start]
+            while stack:
+                x = stack.pop()
+                for y in adj.get(x, ()):
+                    if y not in comp and (y in delta or (x in delta and y in kept)):
+                        comp.add(y)
+                        stack.append(y)
+            seen |= comp & delta
+            if not comp & kept:
+                kept.add(start)  # the component's smallest batch id
+    return kept
+
+
+def _minhash_reference(toks, batches, threshold=0.2):
+    from nlp_with_pyspark_spark.operators.dedup import minhash_dedup_pairs
+
+    pairs = [(r.doc_a, r.doc_b) for r in minhash_dedup_pairs(toks, threshold=threshold).collect()]
+    return _ingest_reference(
+        [[r.doc_id for r in b.select("doc_id").collect()] for b in batches], pairs
+    )
+
+
+def test_neardup_upsert_simhash_family_single_batch(spark, sf_dir, tmp_path, request):
     """hash_family='simhash': single-batch ingest coincides with the
     batch pipeline (simhash pairs → components → keep-first canonical),
     and the store invariant holds under the SAME blocking config."""
@@ -834,8 +910,14 @@ def test_neardup_upsert_simhash_family_single_batch(spark, sf_dir, tmp_path):
 
     toks = _neardup_toks(spark, sf_dir)
     store = str(tmp_path / "sim_store")
-    neardup_upsert_batch(toks, store, hash_family="simhash", max_hamming=3)
-    got = {r.doc_id for r in spark.read.parquet(f"{store}/docs").select("doc_id").collect()}
+    prefix = "t_ndsim1"
+    request.addfinalizer(
+        lambda: _drop_tables(spark, *(f"{prefix}_{t}" for t in ("docs", "keys", "fingerprints")))
+    )
+    neardup_upsert_batch(
+        toks, store, hash_family="simhash", max_hamming=3, table_prefix=prefix, n_buckets=4
+    )
+    got = set(_stored(spark, f"{prefix}_docs", "doc_id"))
     pairs = simhash_near_pairs(toks, max_hamming=3)
     assert pairs.count() > 0, "no simhash structure; test is vacuous"
     expected = {
@@ -846,16 +928,16 @@ def test_neardup_upsert_simhash_family_single_batch(spark, sf_dir, tmp_path):
     }
     assert got == expected
     # invariant: re-checking the stored docs finds nothing
-    stored = spark.read.parquet(f"{store}/docs")
+    stored = _tbl(spark, f"{prefix}_docs")
     assert simhash_near_pairs(stored, max_hamming=3).count() == 0
     # index layout: simhash family stores keys/ + fingerprints/
-    assert spark.read.parquet(f"{store}/keys").columns == ["doc_id", "band_id", "band_hash"]
-    assert spark.read.parquet(f"{store}/fingerprints").columns == ["doc_id", "simhash"]
+    assert spark.table(f"{prefix}_keys").columns == ["doc_id", "band_id", "band_hash"]
+    assert spark.table(f"{prefix}_fingerprints").columns == ["doc_id", "simhash"]
 
 
-def test_neardup_upsert_bucketed_store_matches_plain_and_plan(spark, sf_dir, tmp_path):
-    """table_prefix mode: (1) same survivors as the plain-parquet store
-    over the same arrival order; (2) replayed batch appends nothing;
+def test_neardup_upsert_bucketed_store_matches_reference_and_plan(spark, sf_dir, tmp_path):
+    """(1) the survivors equal the driver-side reference of the ingest
+    rule over the same arrival order; (2) replayed batch appends nothing;
     (3) the replay-guard anti-join reads the docs table with ZERO
     store-side shuffle Exchange (the whole point of the bucketed
     layout); (4) the delta check against the bucketed index tables is
@@ -869,18 +951,13 @@ def test_neardup_upsert_bucketed_store_matches_plain_and_plan(spark, sf_dir, tmp
     batches = [toks.where(F.col("doc_id") < cut), toks.where(F.col("doc_id") >= cut)]
     prefix = "t_ndsink"
     try:
-        plain = str(tmp_path / "plain")
         buck = str(tmp_path / "buck")
         for b in batches:
-            neardup_upsert_batch(b, plain, threshold=0.2)
             neardup_upsert_batch(
                 b, buck, threshold=0.2, table_prefix=prefix, n_buckets=8
             )
-        plain_ids = {
-            r.doc_id for r in spark.read.parquet(f"{plain}/docs").select("doc_id").collect()
-        }
         buck_ids = {r.doc_id for r in spark.table(f"{prefix}_docs").select("doc_id").collect()}
-        assert buck_ids == plain_ids and buck_ids
+        assert buck_ids == _minhash_reference(toks, batches) and buck_ids
         # store invariant on the bucketed store
         assert minhash_dedup_pairs(spark.table(f"{prefix}_docs"), threshold=0.2).count() == 0
         # replay: nothing appended
@@ -935,8 +1012,7 @@ def test_neardup_upsert_bucketed_store_matches_plain_and_plan(spark, sf_dir, tmp
             spark.sql(f"DROP TABLE IF EXISTS {prefix}_{t}")
 
 
-@pytest.mark.parametrize("bucketed", [False, True])
-def test_neardup_upsert_crash_replay_no_duplicate_index_rows(spark, sf_dir, tmp_path, bucketed):
+def test_neardup_upsert_crash_replay_no_duplicate_index_rows(spark, sf_dir, tmp_path):
     """Simulate the worst crash window — index rows appended, docs
     append never ran — then replay the batch. The scrub + idempotent
     append must leave the store EXACTLY as a crash-free run would:
@@ -955,29 +1031,16 @@ def test_neardup_upsert_crash_replay_no_duplicate_index_rows(spark, sf_dir, tmp_
     cut = _id_cuts(toks)[0]
     b1 = toks.where(F.col("doc_id") < cut)
     b2 = toks.where(F.col("doc_id") >= cut)
-    prefix = "t_ndcrash" if bucketed else None
-    kw = dict(threshold=0.2)
-    if bucketed:
-        kw.update(table_prefix=prefix, n_buckets=8)
+    from nlp_with_pyspark_spark.sources.io import table_bucket_spec
+
+    prefix = "t_ndcrash"
+    kw = dict(threshold=0.2, table_prefix=prefix, n_buckets=8)
     try:
         store = str(tmp_path / "store")
-        ref_store = str(tmp_path / "ref")
         neardup_upsert_batch(b1, store, **kw)
-        # crash-free reference run of both batches (plain layout is
-        # enough for the expected id set — layouts agree, tested above)
-        neardup_upsert_batch(b1, ref_store, threshold=0.2)
-        neardup_upsert_batch(b2, ref_store, threshold=0.2)
-        expected_ids = {
-            r.doc_id
-            for r in spark.read.parquet(f"{ref_store}/docs").select("doc_id").collect()
-        }
-
-        if bucketed:
-            from nlp_with_pyspark_spark.sources.io import table_bucket_spec
-
-            docs_path = table_bucket_spec(spark, f"{prefix}_docs")[2]
-        else:
-            docs_path = f"{store}/docs"
+        # crash-free reference of both batches
+        expected_ids = _minhash_reference(toks, [b1, b2])
+        docs_path = table_bucket_spec(spark, f"{prefix}_docs")[2]
 
         def docs_files():
             return set(_glob.glob(os.path.join(docs_path, "*.parquet")))
@@ -986,17 +1049,13 @@ def test_neardup_upsert_crash_replay_no_duplicate_index_rows(spark, sf_dir, tmp_
         neardup_upsert_batch(b2, store, **kw)
         for f in docs_files() - before:  # crash: undo ONLY the commit point
             os.remove(f)
-        if bucketed:
-            spark.catalog.refreshTable(f"{prefix}_docs")
+        spark.catalog.refreshTable(f"{prefix}_docs")
 
         # replay b2 (foreachBatch at-least-once)
         neardup_upsert_batch(b2, store, **kw)
 
         def tbl(name):
-            if bucketed:
-                spark.catalog.refreshTable(f"{prefix}_{name}")
-                return spark.table(f"{prefix}_{name}")
-            return spark.read.parquet(f"{store}/{name}")
+            return _tbl(spark, f"{prefix}_{name}")
 
         got_ids = {r.doc_id for r in tbl("docs").select("doc_id").collect()}
         assert got_ids == expected_ids
@@ -1018,23 +1077,19 @@ def test_neardup_upsert_crash_replay_no_duplicate_index_rows(spark, sf_dir, tmp_
         sh_ids = {r.doc_id for r in tbl("shingles").select("doc_id").distinct().collect()}
         assert sh_ids == stored_bucket_ids
     finally:
-        if bucketed:
-            for t in ("docs", "buckets", "shingles"):
-                spark.sql(f"DROP TABLE IF EXISTS t_ndcrash_{t}")
+        for t in ("docs", "buckets", "shingles"):
+            spark.sql(f"DROP TABLE IF EXISTS t_ndcrash_{t}")
 
 
-@pytest.mark.parametrize("bucketed", [False, True])
-def test_neardup_sink_compaction_keeps_invariants(spark, sf_dir, tmp_path, bucketed):
+def test_neardup_sink_compaction_keeps_invariants(spark, sf_dir, tmp_path):
     """compact_threshold_files wiring: with an aggressive threshold the
     store is compacted mid-stream; the invariant, the replay guard, and
-    (bucketed) the zero-Exchange guard plan all survive compaction and
-    a post-compaction batch."""
+    the zero-Exchange guard plan all survive compaction and a
+    post-compaction batch."""
     from nlp_with_pyspark_spark.operators.dedup import minhash_dedup_pairs
     from nlp_with_pyspark_spark.plans import exchanges_covering, plan_string
-    from nlp_with_pyspark_spark.streaming.sinks import (
-        _parquet_file_count,
-        neardup_upsert_batch,
-    )
+    from nlp_with_pyspark_spark.sources.io import parquet_file_count, table_bucket_spec
+    from nlp_with_pyspark_spark.streaming.sinks import neardup_upsert_batch
 
     toks = _neardup_toks(spark, sf_dir).localCheckpoint()
     cuts = _id_cuts(toks, parts=3)
@@ -1043,56 +1098,40 @@ def test_neardup_sink_compaction_keeps_invariants(spark, sf_dir, tmp_path, bucke
         toks.where((F.col("doc_id") >= cuts[0]) & (F.col("doc_id") < cuts[1])),
         toks.where(F.col("doc_id") >= cuts[1]),
     ]
-    prefix = "t_ndcomp" if bucketed else None
-    kw = dict(threshold=0.2, compact_threshold_files=2)
-    if bucketed:
-        kw.update(table_prefix=prefix, n_buckets=4)
+    prefix = "t_ndcomp"
+    kw = dict(threshold=0.2, compact_threshold_files=2, table_prefix=prefix, n_buckets=4)
     try:
         store = str(tmp_path / "store")
         for b in batches[:2]:
             neardup_upsert_batch(b, store, **kw)
-        if bucketed:
-            from nlp_with_pyspark_spark.sources.io import table_bucket_spec
-
-            docs_path = table_bucket_spec(spark, f"{prefix}_docs")[2]
-            col, nb, _ = table_bucket_spec(spark, f"{prefix}_buckets")
-            assert (col, nb) == ("band_hash", 4)  # spec survived compaction
-        else:
-            docs_path = f"{store}/docs"
-        files_mid = _parquet_file_count(docs_path)
+        docs_path = table_bucket_spec(spark, f"{prefix}_docs")[2]
+        col, nb, _ = table_bucket_spec(spark, f"{prefix}_buckets")
+        assert (col, nb) == ("band_hash", 4)  # spec survived compaction
+        files_mid = parquet_file_count(docs_path)
         # threshold 2 with ≥2 appended file sets: compaction ran
         assert files_mid <= 4 + 2  # ~one file per bucket (+1 fresh append)
 
         # post-compaction batch + replay
         neardup_upsert_batch(batches[2], store, **kw)
         neardup_upsert_batch(batches[2], store, **kw)
-        stored = (
-            spark.table(f"{prefix}_docs") if bucketed else spark.read.parquet(docs_path)
-        )
+        stored = _tbl(spark, f"{prefix}_docs")
         assert minhash_dedup_pairs(stored, threshold=0.2).count() == 0
-        # reference: same batches, no compaction → same survivors
-        ref = str(tmp_path / "ref")
-        for b in batches:
-            neardup_upsert_batch(b, ref, threshold=0.2)
-        ref_ids = {
-            r.doc_id for r in spark.read.parquet(f"{ref}/docs").select("doc_id").collect()
-        }
+        # reference: the ingest rule over the same batches
+        ref_ids = _minhash_reference(toks, batches)
         assert {r.doc_id for r in stored.select("doc_id").collect()} == ref_ids
-        if bucketed:
-            thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-            try:
-                guard = batches[2].join(
-                    spark.table(f"{prefix}_docs").select("doc_id"), "doc_id", "left_anti"
-                )
-                assert "SortMergeJoin" in plan_string(guard)
-                assert exchanges_covering(guard, f"{prefix}_docs") == 0
-            finally:
-                spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
+        thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        try:
+            guard = batches[2].join(
+                spark.table(f"{prefix}_docs").select("doc_id"), "doc_id", "left_anti"
+            )
+            assert "SortMergeJoin" in plan_string(guard)
+            assert exchanges_covering(guard, f"{prefix}_docs") == 0
+        finally:
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
     finally:
-        if bucketed:
-            for t in ("docs", "buckets", "shingles"):
-                spark.sql(f"DROP TABLE IF EXISTS t_ndcomp_{t}")
+        for t in ("docs", "buckets", "shingles"):
+            spark.sql(f"DROP TABLE IF EXISTS t_ndcomp_{t}")
 
 
 def test_neardup_upsert_simhash_bucketed_two_batches(spark, sf_dir, tmp_path):
@@ -1151,14 +1190,8 @@ def test_neardup_upsert_bucketed_survives_catalog_loss(spark, sf_dir, tmp_path):
         neardup_upsert_batch(b2, store, **kw)
         ids2 = {r.doc_id for r in spark.table(f"{prefix}_docs").select("doc_id").collect()}
         assert ids1 <= ids2 and len(ids2) > len(ids1)
-        # reference: same two batches without the catalog loss
-        ref = str(tmp_path / "ref")
-        neardup_upsert_batch(b1, ref, threshold=0.2)
-        neardup_upsert_batch(b2, ref, threshold=0.2)
-        ref_ids = {
-            r.doc_id for r in spark.read.parquet(f"{ref}/docs").select("doc_id").collect()
-        }
-        assert ids2 == ref_ids
+        # reference: the ingest rule over the same two batches
+        assert ids2 == _minhash_reference(toks, [b1, b2])
     finally:
         for t in ("docs", "buckets", "shingles"):
             spark.sql(f"DROP TABLE IF EXISTS t_ndrestart_{t}")
@@ -1217,7 +1250,7 @@ def test_incremental_dedup_sink_bucketed_table(spark, tmp_path):
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
 
 
-def test_neardup_upsert_semantic_family_single_batch(spark, sf_dir, tmp_path):
+def test_neardup_upsert_semantic_family_single_batch(spark, sf_dir, tmp_path, request):
     """hash_family='semantic': single-batch ingest coincides with the
     batch pipeline (semantic pairs → components → keep-first canonical),
     and the store invariant holds under the same centroids/threshold."""
@@ -1233,6 +1266,10 @@ def test_neardup_upsert_semantic_family_single_batch(spark, sf_dir, tmp_path):
         for r in emb.where(F.col("vec_id") < 8).select("vec_id", "embedding").collect()
     ]
     store = str(tmp_path / "sem_store")
+    prefix = "t_sem1"
+    request.addfinalizer(
+        lambda: _drop_tables(spark, *(f"{prefix}_{t}" for t in ("docs", "keys", "assigned")))
+    )
     neardup_upsert_batch(
         emb,
         store,
@@ -1241,8 +1278,10 @@ def test_neardup_upsert_semantic_family_single_batch(spark, sf_dir, tmp_path):
         hash_family="semantic",
         centroids=cents,
         threshold=0.3,
+        table_prefix=prefix,
+        n_buckets=4,
     )
-    got = {r.vec_id for r in spark.read.parquet(f"{store}/docs").select("vec_id").collect()}
+    got = set(_stored(spark, f"{prefix}_docs", "vec_id"))
     pairs = semantic_dedup_pairs(emb, cents, threshold=0.3).select(
         F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b")
     )
@@ -1252,19 +1291,19 @@ def test_neardup_upsert_semantic_family_single_batch(spark, sf_dir, tmp_path):
         for r in canonical_corpus(emb, pairs, id_col="vec_id").select("vec_id").collect()
     }
     assert got == expected
-    stored = spark.read.parquet(f"{store}/docs")
+    stored = _tbl(spark, f"{prefix}_docs")
     assert semantic_dedup_pairs(stored, cents, threshold=0.3).count() == 0
-    # index layout: semantic family stores keys/ (band_hash = cluster
-    # label) + assigned/ (label + normalized vector)
-    assert spark.read.parquet(f"{store}/keys").columns == ["doc_id", "band_id", "band_hash"]
-    assert spark.read.parquet(f"{store}/assigned").columns == ["doc_id", "list_id", "nv"]
+    # index layout: semantic family stores keys (band_hash = cluster
+    # label) + assigned (label + normalized vector)
+    assert spark.table(f"{prefix}_keys").columns == ["doc_id", "band_id", "band_hash"]
+    assert spark.table(f"{prefix}_assigned").columns == ["doc_id", "list_id", "nv"]
 
 
 def test_neardup_upsert_semantic_bucketed_multi_batch(spark, sf_dir, tmp_path):
-    """Semantic family across batches, bucketed store: plain and
-    bucketed layouts agree, the invariant holds after every batch, a
-    replayed batch appends nothing, and the assigned table is bucketed
-    by the cluster label (the delta join key)."""
+    """Semantic family across batches: the survivors equal the
+    driver-side reference of the ingest rule, the invariant holds after
+    every batch, a replayed batch appends nothing, and the assigned
+    table is bucketed by the cluster label (the delta join key)."""
     from nlp_with_pyspark_spark.operators.dedup import semantic_dedup_pairs
     from nlp_with_pyspark_spark.sources.io import table_bucket_spec
     from nlp_with_pyspark_spark.streaming.sinks import neardup_upsert_batch
@@ -1285,16 +1324,18 @@ def test_neardup_upsert_semantic_bucketed_multi_batch(spark, sf_dir, tmp_path):
         threshold=0.3,
     )
     try:
-        plain = str(tmp_path / "plain")
         buck = str(tmp_path / "buck")
         for b in batches:
-            neardup_upsert_batch(b, plain, **kw)
             neardup_upsert_batch(b, buck, table_prefix=prefix, n_buckets=8, **kw)
-        plain_ids = {
-            r.vec_id for r in spark.read.parquet(f"{plain}/docs").select("vec_id").collect()
-        }
+        pairs = [
+            (r.id_a, r.id_b)
+            for r in semantic_dedup_pairs(emb, cents, threshold=0.3).collect()
+        ]
+        ref_ids = _ingest_reference(
+            [[r.vec_id for r in b.select("vec_id").collect()] for b in batches], pairs
+        )
         buck_ids = {r.vec_id for r in spark.table(f"{prefix}_docs").select("vec_id").collect()}
-        assert buck_ids == plain_ids and buck_ids
+        assert buck_ids == ref_ids and buck_ids
         assert (
             semantic_dedup_pairs(spark.table(f"{prefix}_docs"), cents, threshold=0.3).count()
             == 0
@@ -1356,7 +1397,7 @@ def test_neardup_bucketed_restart_with_empty_index_tables(spark, tmp_path):
             spark.sql(f"DROP TABLE IF EXISTS {prefix}_{t}")
 
 
-def test_hygiene_gate_composes_with_neardup_ingest(spark, tmp_path):
+def test_hygiene_gate_composes_with_neardup_ingest(spark, tmp_path, request):
     """The full ingest pipeline a training-data store runs per
     micro-batch: decontaminate (exact + fuzzy, stateless vs a fixed
     benchmark) THEN near-dup-dedup against the persistent store. Two
@@ -1395,13 +1436,17 @@ def test_hygiene_gate_composes_with_neardup_ingest(spark, tmp_path):
         ]
     )
     store = str(tmp_path / "hygiene_store")
+    prefix = "t_hygiene"
+    request.addfinalizer(
+        lambda: _drop_tables(spark, *(f"{prefix}_{t}" for t in ("docs", "buckets", "shingles")))
+    )
     for batch in (b1, b2):
         clean = decontaminated_corpus(
             batch, bench, n=3, exact_threshold=0.5, fuzzy_threshold=0.4
         )
-        neardup_upsert_batch(clean, store, threshold=0.4)
+        neardup_upsert_batch(clean, store, threshold=0.4, table_prefix=prefix, n_buckets=4)
 
-    stored = spark.read.parquet(f"{store}/docs")
+    stored = _tbl(spark, f"{prefix}_docs")
     got = {r.doc_id for r in stored.select("doc_id").collect()}
     assert got == {1, 3, 6}
     # invariant 1: nothing stored is contamination-flagged
@@ -1411,7 +1456,7 @@ def test_hygiene_gate_composes_with_neardup_ingest(spark, tmp_path):
     assert minhash_dedup_pairs(stored, threshold=0.4).count() == 0
 
 
-def test_neardup_upsert_semantic_pandas_assign_matches_literal(spark, sf_dir, tmp_path):
+def test_neardup_upsert_semantic_pandas_assign_matches_literal(spark, sf_dir, tmp_path, request):
     """assign_via='pandas' (the BLAS path mandatory at production
     quantizer sizes) must store the exact same survivor set as the
     literal-compiled path — the sink's new passthrough wires the
@@ -1426,6 +1471,12 @@ def test_neardup_upsert_semantic_pandas_assign_matches_literal(spark, sf_dir, tm
     ids = {}
     for via in ("literal", "pandas"):
         store = str(tmp_path / f"sem_{via}")
+        prefix = f"t_sem_{via}"
+        request.addfinalizer(
+            lambda p=prefix: _drop_tables(
+                spark, *(f"{p}_{t}" for t in ("docs", "keys", "assigned"))
+            )
+        )
         neardup_upsert_batch(
             emb,
             store,
@@ -1435,11 +1486,10 @@ def test_neardup_upsert_semantic_pandas_assign_matches_literal(spark, sf_dir, tm
             centroids=cents,
             threshold=0.3,
             assign_via=via,
+            table_prefix=prefix,
+            n_buckets=4,
         )
-        ids[via] = {
-            r.vec_id
-            for r in spark.read.parquet(f"{store}/docs").select("vec_id").collect()
-        }
+        ids[via] = set(_stored(spark, f"{prefix}_docs", "vec_id"))
     assert ids["literal"] == ids["pandas"] and ids["literal"]
 
 
@@ -1454,16 +1504,12 @@ def _bm25_rows(df):
     return [(r.doc_id, r.matched, r.score) for r in df.collect()]
 
 
-@pytest.mark.parametrize("bucketed", [False, True])
-def test_search_index_upsert_across_batches_matches_direct(
-    spark, sf_dir, bucketed, tmp_path
-):
+def test_search_index_upsert_across_batches_matches_direct(spark, sf_dir, tmp_path):
     """Two ingest batches, then BM25 against the store: identical rows
     (scores compared with ==, not approx) to the direct scorer over the
     full corpus, and the derived stats equal the one-shot build's exact
     BIGINTs."""
     from nlp_with_pyspark_spark.operators.search import (
-        PostingIndex,
         bm25_topk,
         bm25_topk_indexed,
         build_posting_index,
@@ -1474,18 +1520,12 @@ def test_search_index_upsert_across_batches_matches_direct(
     toks = _neardup_toks(spark, sf_dir).localCheckpoint()
     cut = _id_cuts(toks)[0]
     store = str(tmp_path / "store")
-    prefix = "t_sidx" if bucketed else None
-    kw = dict(table_prefix=prefix, n_buckets=8) if bucketed else {}
+    prefix = "t_sidx"
+    kw = dict(table_prefix=prefix, n_buckets=8)
     try:
         search_index_upsert_batch(toks.where(F.col("doc_id") < cut), store, **kw)
         search_index_upsert_batch(toks.where(F.col("doc_id") >= cut), store, **kw)
-        if bucketed:
-            idx = load_posting_index(spark, prefix)
-        else:
-            idx = PostingIndex(
-                spark.read.parquet(f"{store}/postings"),
-                spark.read.parquet(f"{store}/stats"),
-            )
+        idx = load_posting_index(spark, prefix)
         assert _bm25_rows(bm25_topk_indexed(idx, _BM25_TERMS, k=15)) == _bm25_rows(
             bm25_topk(toks, _BM25_TERMS, k=15)
         )
@@ -1493,15 +1533,11 @@ def test_search_index_upsert_across_batches_matches_direct(
         ref = build_posting_index(toks).stats.collect()[0]
         assert (got["n_docs"], got["total_dl"]) == (ref["n_docs"], ref["total_dl"])
     finally:
-        if bucketed:
-            for t in ("postings", "docs", "stats"):
-                spark.sql(f"DROP TABLE IF EXISTS t_sidx_{t}")
+        for t in ("postings", "docs", "stats"):
+            spark.sql(f"DROP TABLE IF EXISTS t_sidx_{t}")
 
 
-@pytest.mark.parametrize("bucketed", [False, True])
-def test_search_index_crash_replay_no_duplicate_postings(
-    spark, sf_dir, bucketed, tmp_path
-):
+def test_search_index_crash_replay_no_duplicate_postings(spark, sf_dir, tmp_path):
     """Worst crash window — postings appended, docs append (the commit
     point) never ran — then replay. The idempotent append must cancel
     the stale rows: no duplicate (word, doc_id) anywhere, results and
@@ -1521,8 +1557,8 @@ def test_search_index_crash_replay_no_duplicate_postings(
     b1 = toks.where(F.col("doc_id") < cut)
     b2 = toks.where(F.col("doc_id") >= cut)
     store = str(tmp_path / "store")
-    prefix = "t_sidxcrash" if bucketed else None
-    kw = dict(table_prefix=prefix, n_buckets=8) if bucketed else {}
+    prefix = "t_sidxcrash"
+    kw = dict(table_prefix=prefix, n_buckets=8)
     try:
         search_index_upsert_batch(b1, store, **kw)
         docs_path = f"{store}/docs"
@@ -1534,16 +1570,12 @@ def test_search_index_crash_replay_no_duplicate_postings(
         search_index_upsert_batch(b2, store, **kw)
         for f in docs_files() - before:  # crash: undo ONLY the commit point
             os.remove(f)
-        if bucketed:
-            spark.catalog.refreshTable(f"{prefix}_docs")
+        spark.catalog.refreshTable(f"{prefix}_docs")
 
         search_index_upsert_batch(b2, store, **kw)  # replay
 
         def tbl(name):
-            if bucketed:
-                spark.catalog.refreshTable(f"{prefix}_{name}")
-                return spark.table(f"{prefix}_{name}")
-            return spark.read.parquet(f"{store}/{name}")
+            return _tbl(spark, f"{prefix}_{name}")
 
         postings = tbl("postings")
         dups = postings.groupBy("word", "doc_id").count().where(F.col("count") > 1)
@@ -1558,12 +1590,11 @@ def test_search_index_crash_replay_no_duplicate_postings(
             bm25_topk(toks, _BM25_TERMS, k=15)
         )
     finally:
-        if bucketed:
-            for t in ("postings", "docs", "stats"):
-                spark.sql(f"DROP TABLE IF EXISTS t_sidxcrash_{t}")
+        for t in ("postings", "docs", "stats"):
+            spark.sql(f"DROP TABLE IF EXISTS t_sidxcrash_{t}")
 
 
-def test_search_index_streaming_sink_end_to_end(spark, tmp_path):
+def test_search_index_streaming_sink_end_to_end(spark, tmp_path, request):
     """The writeStream wrapper drains a file stream one file per
     trigger; the index then serves the whole corpus, and re-running
     from the same checkpoint appends nothing (stats unchanged)."""
@@ -1585,6 +1616,10 @@ def test_search_index_streaming_sink_end_to_end(spark, tmp_path):
     docs.where(F.col("doc_id") >= cut).coalesce(1).write.parquet(str(src / "b1"))
     store = str(tmp_path / "store")
     ckpt = str(tmp_path / "ckpt")
+    prefix = "t_sidx_e2e"
+    request.addfinalizer(
+        lambda: _drop_tables(spark, *(f"{prefix}_{t}" for t in ("postings", "docs", "stats")))
+    )
 
     def run():
         stream = (
@@ -1593,9 +1628,10 @@ def test_search_index_streaming_sink_end_to_end(spark, tmp_path):
             .parquet(str(src / "b*"))
             .withColumn("tokens", tokens_pipeline(F.col("text")))
         )
-        search_index_sink(stream, store, ckpt)
+        search_index_sink(stream, store, ckpt, table_prefix=prefix, n_buckets=4)
 
     run()
+    # the store's dirs read back as plain parquet too
     idx = PostingIndex(
         spark.read.parquet(f"{store}/postings"), spark.read.parquet(f"{store}/stats")
     )
@@ -1956,7 +1992,7 @@ def test_dsir_score_stream_equals_batch(spark, tmp_path):
     assert 0 < len(kept) < len(batch)
 
 
-def test_dsir_gate_then_search_index_ingest(spark, tmp_path):
+def test_dsir_gate_then_search_index_ingest(spark, tmp_path, request):
     """The score-then-index pipeline the docstrings promise, end to
     end: documents stream through the frozen-model DSIR keep gate and
     the survivors flow straight into the search-index ingest sink —
@@ -1999,7 +2035,13 @@ def test_dsir_gate_then_search_index_ingest(spark, tmp_path):
     )
     gated = dsir_score_stream(stream, w, keep_min=cut)
     store = str(tmp_path / "gate_store")
-    search_index_sink(gated, store, str(tmp_path / "gate_ckpt"))
+    prefix = "t_sidx_gate"
+    request.addfinalizer(
+        lambda: _drop_tables(spark, *(f"{prefix}_{t}" for t in ("postings", "docs", "stats")))
+    )
+    search_index_sink(
+        gated, store, str(tmp_path / "gate_ckpt"), table_prefix=prefix, n_buckets=4
+    )
 
     kept = toks.where(
         F.col("doc_id").isin([d for d, s in batch_scores.items() if s >= cut])
