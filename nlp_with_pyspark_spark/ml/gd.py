@@ -9,32 +9,35 @@ vector to executors inside a *pickled lambda closure*, map every row to
 Our engine keeps the math but fixes the physics (SURVEY §4.2):
   * weights go out via ``sc.broadcast`` (torrent, once per executor) —
     not per-task closure pickling;
-  * per-row Python lambdas → ONE ``mapInArrow`` pass that emits a
-    single (cost, grad) partial per partition; the driver sums
-    #partitions small rows — the same partial-aggregation shape as
-    MLlib's ``treeAggregate``. The kernel reads the ``indices``/
-    ``values`` list columns as flat Arrow buffers through their offsets
-    and reduces with ``np.bincount`` — no pandas conversion, no per-row
-    ``np.asarray``;
   * features stay SPARSE ``(indices, values)`` end-to-end — the
     reference's dense 10k-dim row (80 KB/row) is its scaling cliff;
-  * the features are cached before the loop — the reference re-runs the
-    full tokenize→join→groupBy lineage on every one of its 300
-    iterations (SURVEY §4.1, 'the single biggest perf fix'). An input
-    that is already cached (``storageLevel`` not ``NONE``) is read
-    through its own cache; only an uncached input gets a cached copy,
-    materialized once and released when the fit ends. A second copy
-    would cost an extra job per fit and the memory of the features;
+  * the features are blockified ONCE per fit, in the shape of Spark
+    MLlib's ``InstanceBlock`` training: one ``mapInArrow`` pass turns
+    each Arrow batch of ``(label, indices, values)`` into one CSR block
+    (row count, labels, row lengths, int32 columns, float64 values as
+    raw buffers), read through each list column's offsets. The blocks
+    are an RDD persisted ``MEMORY_AND_DISK``; the first iteration's job
+    materializes them, and they are released before ``fit`` returns.
+    The reference instead re-runs the full tokenize→join→groupBy
+    lineage on every one of its 300 iterations (SURVEY §4.1, 'the
+    single biggest perf fix');
+  * per-row Python lambdas → one ``mapPartitions`` pass over the cached
+    blocks per iteration that emits a single (cost, grad, n) partial
+    per partition; the driver sums #partitions small tuples — the same
+    partial-aggregation shape as MLlib's ``treeAggregate``. An
+    iteration builds no SQL plan and converts no rows to Arrow: the
+    kernel reads each block's buffers with ``np.frombuffer`` and
+    reduces with ``np.bincount``;
   * an iteration is bound by fixed costs at the JVM/Python boundary,
     not by arithmetic, so each task first installs
     :func:`.worker.spark_zips_read_once`. Every Python task starts with
     ``importlib.invalidate_caches()``, which makes the worker re-read
-    the central directory of Spark's own ``pyspark.zip`` and py4j zip
-    through every cached ``zipimporter``: 0.13–0.24 s per task (4-core
-    host, pyspark 4.1.2, CPython 3.11.7). Skipping those two immutable
-    archives spares a reused worker that cost on every later task.
+    the central directory of every archive on its path: Spark's
+    ``pyspark.zip`` and py4j zip and the spark-core jar. Skipping those
+    immutable archives spares a reused worker 0.1–0.3 s on every later
+    task (4-core host, pyspark 4.1.2, CPython 3.11.7).
 
-The worker closure is self-contained — nested functions only, pickled
+The worker functions are self-contained — nested functions only, pickled
 by value — so executors need numpy and pyarrow, not this package.
 
 Optimizer update rules are the standard published forms (SGD, Momentum,
@@ -75,19 +78,20 @@ def sparse_features(
     )
 
 
-def _partials(loss: str, k: int, weights_bc) -> callable:
-    """mapInArrow generator: one (cost, grad, n) partial per partition.
+#: one CSR block per Arrow batch: row count, then the raw buffers of the
+#: float64 labels, int32 row lengths, int32 columns and float64 values
+BLOCK_SCHEMA = "rows int, y binary, lens binary, cols binary, vals binary"
+
+
+def _pack() -> callable:
+    """mapInArrow generator: each Arrow batch of ``(label, indices,
+    values)`` becomes one CSR block row (:data:`BLOCK_SCHEMA`).
 
     Reads ``indices``/``values`` as flat buffers through each
-    ``ListArray``'s offsets (a sliced batch's ``offsets[0]`` is honoured)
-    and reduces with ``np.bincount``. θ is summed per row in element
-    order, and the gradient is ONE bincount over the partition's
-    contributions in arrival order — the order of accumulating element
-    by element with ``np.add.at``, so the gradient does not depend on
-    how Spark cuts a partition into batches.
+    ``ListArray``'s offsets (a sliced batch's ``offsets[0]`` is honoured);
+    an empty batch yields no block. A block holds at most
+    ``spark.sql.execution.arrow.maxRecordsPerBatch`` rows.
     """
-    if loss not in ("logistic", "hinge"):
-        raise ValueError(loss)
     keep_spark_zips = spark_zips_read_once()
 
     def flat(arr: pa.ListArray) -> tuple[np.ndarray, np.ndarray]:
@@ -98,19 +102,52 @@ def _partials(loss: str, k: int, weights_bc) -> callable:
 
     def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         keep_spark_zips()
+        for batch in batches:
+            if batch.num_rows == 0:
+                continue
+            lens, cols = flat(batch.column("indices"))
+            _, vals = flat(batch.column("values"))
+            y = batch.column("label").to_numpy(zero_copy_only=False)
+            buffers = (
+                y.astype(np.float64),
+                lens.astype(np.int32, copy=False),
+                cols.astype(np.int32, copy=False),
+                vals.astype(np.float64, copy=False),
+            )
+            yield pa.RecordBatch.from_arrays(
+                [pa.array([batch.num_rows], pa.int32())]
+                + [pa.array([b.tobytes()], pa.binary()) for b in buffers],
+                names=["rows", "y", "lens", "cols", "vals"],
+            )
+
+    return gen
+
+
+def _block_partials(loss: str, k: int, weights_bc) -> callable:
+    """mapPartitions kernel over CSR blocks: one ``(cost, grad, n)``
+    partial per partition.
+
+    θ is summed per row with ``np.bincount`` over each block, and the
+    gradient is ONE bincount over the partition's contributions in
+    arrival order — the order of accumulating element by element with
+    ``np.add.at``, so the gradient does not depend on how the partition
+    was cut into blocks.
+    """
+    if loss not in ("logistic", "hinge"):
+        raise ValueError(loss)
+    keep_spark_zips = spark_zips_read_once()
+
+    def partials(blocks: Iterator[tuple]) -> Iterator[tuple]:
+        keep_spark_zips()
         w = weights_bc.value
         cost = 0.0
         n = 0
         grad_cols, grad_terms = [], []
-        for batch in batches:
-            rows = batch.num_rows
-            if rows == 0:
-                continue
-            lens, cols = flat(batch.column("indices"))
-            _, vals = flat(batch.column("values"))
-            vals = vals.astype(np.float64, copy=False)
-            row_ids = np.repeat(np.arange(rows), lens)
-            y = batch.column("label").to_numpy(zero_copy_only=False).astype(np.float64)
+        for rows, y, lens, cols, vals in blocks:
+            y = np.frombuffer(y, np.float64)
+            cols = np.frombuffer(cols, np.int32)
+            vals = np.frombuffer(vals, np.float64)
+            row_ids = np.repeat(np.arange(rows), np.frombuffer(lens, np.int32))
             theta = np.bincount(row_ids, weights=vals * w[cols], minlength=rows)
             if loss == "logistic":
                 # cost = -yθ + log(1+e^θ); grad = x·(σ(θ) - y)
@@ -130,16 +167,9 @@ def _partials(loss: str, k: int, weights_bc) -> callable:
             if grad_cols
             else np.zeros(k, dtype=np.float64)
         )
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array([cost], pa.float64()),
-                pa.ListArray.from_arrays(pa.array([0, len(grad)], pa.int32()), pa.array(grad)),
-                pa.array([n], pa.int64()),
-            ],
-            names=["cost", "grad", "n"],
-        )
+        yield cost, grad, n
 
-    return gen
+    return partials
 
 
 @dataclass
@@ -261,56 +291,63 @@ class GDTrainer:
     costs_: list[float] = field(default_factory=list)
 
     def fit(self, features: DataFrame) -> "GDTrainer":
-        spark = features.sparkSession
-        sc = spark.sparkContext
-        feat = features.select("label", "indices", "values")
-        # a cached input is read through its cache (the projection hits
-        # the cache manager); only an uncached one gets its own copy
-        owned = features.storageLevel == StorageLevel.NONE
-        if owned:
-            feat = feat.persist(StorageLevel.MEMORY_AND_DISK)
-            feat.count()  # materialize once; loop reuses the cached partitions
+        """Run up to ``iterations`` full-batch steps over ``features``
+        (``label``, ``indices``, ``values``); one Spark job per iteration.
+
+        Cached or not, the input is blockified into one fit-owned RDD of
+        CSR blocks — a second, transient copy of the features that is
+        released (blocking) before ``fit`` returns; the input's own
+        storage level is left as it was.
+        """
+        sc = features.sparkSession.sparkContext
+        # blockify once: the first iteration's job materializes the blocks,
+        # every later one reads them straight from the block manager
+        blocks = (
+            features.select("label", "indices", "values")
+            .mapInArrow(_pack(), schema=BLOCK_SCHEMA)
+            .rdd.persist(StorageLevel.MEMORY_AND_DISK)
+        )
         w = np.zeros(self.k, dtype=np.float64)
         opt = Optimizer(name=self.optimizer, lr=self.lr, compat=self.compat)
         lr = self.lr
         # reference: old_cost = 0 (LR_Optimizers.py:134) — iteration 0's
         # positive cost always halves the rate under the bold driver
         prev_cost = 0.0 if self.compat == "reference" else float("inf")
-        schema = "cost double, grad array<double>, n long"
-        for _ in range(self.iterations):
-            bw = sc.broadcast(w)
-            parts = feat.mapInArrow(_partials(self.loss, self.k, bw), schema=schema).collect()
-            bw.destroy()
-            cost = sum(p["cost"] for p in parts)
-            grad = np.sum([np.asarray(p["grad"]) for p in parts], axis=0)
-            n = sum(p["n"] for p in parts)
-            if self.loss == "hinge":
-                lam = 1.0 / (0.5 * max(n, 1))  # reference: λ = 1/(c·n), c=0.5
-                cost += 0.5 * lam * float(w @ w)
-                grad = grad + lam * w
-            else:
-                cost += self.l2 * float(w @ w)
-                grad = grad + 2.0 * self.l2 * w
-            self.costs_.append(float(cost))
-            if self.early_stop_tol is not None and abs(prev_cost - cost) <= self.early_stop_tol:
-                break
-            if self.compat == "reference":
-                # LR_Optimizers.py:144-200: update with the CURRENT shared
-                # lr (all six rules read it), THEN bold-driver adjust it
-                # for the next iteration.
-                opt.lr = lr
-                w = opt.step(w, grad)
-                if self.bold_driver:
-                    lr = lr * 1.05 if cost < prev_cost else lr * 0.5
-            elif self.optimizer == "gd":
-                if self.bold_driver:
-                    lr = lr * 1.05 if cost < prev_cost else lr * 0.5
-                w = w - lr * grad
-            else:
-                w = opt.step(w, grad)
-            prev_cost = cost
-        if owned:
-            feat.unpersist()
+        try:
+            for _ in range(self.iterations):
+                bw = sc.broadcast(w)
+                parts = blocks.mapPartitions(_block_partials(self.loss, self.k, bw)).collect()
+                bw.destroy()
+                cost = sum(p[0] for p in parts)
+                grad = np.sum([p[1] for p in parts], axis=0)
+                n = sum(p[2] for p in parts)
+                if self.loss == "hinge":
+                    lam = 1.0 / (0.5 * max(n, 1))  # reference: λ = 1/(c·n), c=0.5
+                    cost += 0.5 * lam * float(w @ w)
+                    grad = grad + lam * w
+                else:
+                    cost += self.l2 * float(w @ w)
+                    grad = grad + 2.0 * self.l2 * w
+                self.costs_.append(float(cost))
+                if self.early_stop_tol is not None and abs(prev_cost - cost) <= self.early_stop_tol:
+                    break
+                if self.compat == "reference":
+                    # LR_Optimizers.py:144-200: update with the CURRENT shared
+                    # lr (all six rules read it), THEN bold-driver adjust it
+                    # for the next iteration.
+                    opt.lr = lr
+                    w = opt.step(w, grad)
+                    if self.bold_driver:
+                        lr = lr * 1.05 if cost < prev_cost else lr * 0.5
+                elif self.optimizer == "gd":
+                    if self.bold_driver:
+                        lr = lr * 1.05 if cost < prev_cost else lr * 0.5
+                    w = w - lr * grad
+                else:
+                    w = opt.step(w, grad)
+                prev_cost = cost
+        finally:
+            blocks.unpersist(blocking=True)
         self.weights_ = w
         return self
 

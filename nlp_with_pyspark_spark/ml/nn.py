@@ -125,7 +125,9 @@ class NNTrainer:
         spark = features.sparkSession
         sc = spark.sparkContext
         feat = features.select("label", "indices", "values")
-        owned = features.storageLevel == StorageLevel.NONE  # same rule as GDTrainer.fit
+        # a cached input is read through its own cache; only an uncached
+        # one gets a cached copy for the loop, released when the fit ends
+        owned = features.storageLevel == StorageLevel.NONE
         if owned:
             feat = feat.persist(StorageLevel.MEMORY_AND_DISK)
             feat.count()
@@ -198,8 +200,10 @@ class NNTrainer:
 
         wts = self.weights_
         k = self.k
+        keep_spark_zips = spark_zips_read_once()
 
         def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            keep_spark_zips()
             for pdf in batches:
                 if pdf.empty:
                     continue

@@ -154,7 +154,12 @@ def decode_features_arrow(assets: DataFrame, n_bins: int = 16) -> DataFrame:
     """
     import pyarrow as pa
 
+    from ..ml.worker import spark_zips_read_once  # lazy: ml/ pulls in pyspark.ml
+
+    keep_spark_zips = spark_zips_read_once()
+
     def gen(batches):
+        keep_spark_zips()
         for batch in batches:
             ids = batch.column("asset_id").to_pylist()
             mods = batch.column("modality").to_pylist()
@@ -206,8 +211,12 @@ def resize_images(assets: DataFrame, out_w: int = 4, out_h: int = 4) -> DataFram
     Input rows are filtered to images *before* the Python boundary so
     non-image payloads never cross into the worker.
     """
+    from ..ml.worker import spark_zips_read_once  # lazy: ml/ pulls in pyspark.ml
+
+    keep_spark_zips = spark_zips_read_once()
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        keep_spark_zips()
         for pdf in batches:
             out = []
             for aid, content, meta in zip(pdf["asset_id"], pdf["content"], pdf["meta"]):
@@ -247,8 +256,12 @@ def sample_frames(assets: DataFrame, stride: int = 4) -> DataFrame:
 
     The fake codec treats the payload as n_frames equal slices.
     """
+    from ..ml.worker import spark_zips_read_once  # lazy: ml/ pulls in pyspark.ml
+
+    keep_spark_zips = spark_zips_read_once()
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        keep_spark_zips()
         for pdf in batches:
             out = []
             for aid, content, meta in zip(pdf["asset_id"], pdf["content"], pdf["meta"]):

@@ -9,7 +9,7 @@ from pyspark.storagelevel import StorageLevel
 
 from nlp_with_pyspark_spark.functions.text import tokens_pipeline
 from nlp_with_pyspark_spark.ml import gd
-from nlp_with_pyspark_spark.ml.gd import GDTrainer, _partials, sparse_features
+from nlp_with_pyspark_spark.ml.gd import GDTrainer, _block_partials, _pack, sparse_features
 from nlp_with_pyspark_spark.ml.nn import NNTrainer
 from nlp_with_pyspark_spark.operators.features import tf_idf
 from nlp_with_pyspark_spark.operators.vocab import top_k_vocabulary
@@ -32,11 +32,13 @@ def _tiny_batch():
 
 
 def _run_partials(loss, k, w, batches):
-    """(cost, grad, n) of the single partial ``_partials`` yields."""
-    out = list(_partials(loss, k, _FakeBC(w))(iter(batches)))
-    assert len(out) == 1 and out[0].num_rows == 1
-    row = out[0].to_pylist()[0]
-    return row["cost"], np.asarray(row["grad"]), row["n"]
+    """(cost, grad, n) of the single partial the block kernel yields over
+    the CSR blocks ``_pack`` makes of ``batches`` (rows as the blocks'
+    RDD hands them over: tuples in schema order)."""
+    blocks = [tuple(r.values()) for b in _pack()(iter(batches)) for r in b.to_pylist()]
+    out = list(_block_partials(loss, k, _FakeBC(w))(iter(blocks)))
+    assert len(out) == 1
+    return out[0]
 
 
 @pytest.mark.parametrize("loss", ["logistic", "hinge"])
@@ -135,9 +137,11 @@ def _persistent_rdd_ids(spark):
     return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
 
 
-def _fit_watching_cache(spark, monkeypatch, feats):
+def _fit_watching_cache(spark, monkeypatch, feats, iterations):
     """Fit Adam on ``feats``; return the persistent RDD ids seen before,
-    during (at every optimizer step) and after the fit."""
+    during (at every optimizer step) and after the fit, and the number of
+    Spark jobs the fit ran."""
+    sc = spark.sparkContext
     during = []
     step = gd.Optimizer.step
 
@@ -147,32 +151,37 @@ def _fit_watching_cache(spark, monkeypatch, feats):
 
     monkeypatch.setattr(gd.Optimizer, "step", spy)
     before = _persistent_rdd_ids(spark)
-    GDTrainer(k=50, loss="logistic", optimizer="adam", iterations=2).fit(feats)
-    return before, during, _persistent_rdd_ids(spark)
+    group = f"fit-watch-{id(feats)}"
+    sc.setJobGroup(group, "GDTrainer.fit under test")
+    try:
+        GDTrainer(k=50, loss="logistic", optimizer="adam", iterations=iterations).fit(feats)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    return before, during, _persistent_rdd_ids(spark), jobs
 
 
-def test_fit_reuses_a_cached_input(spark, doc_features, monkeypatch):
-    """A cached input is read through its own cache: fit adds no second
-    cached copy and leaves the input's storage level as it was."""
+@pytest.mark.parametrize("cached", [True, False], ids=["cached", "uncached"])
+def test_fit_owns_one_block_cache(spark, doc_features, monkeypatch, cached):
+    """Cached or not, the input is blockified into ONE persistent RDD of
+    the fit's own, released before ``fit`` returns; the input's storage
+    level is left as it was; and an N-iteration fit runs N Spark jobs
+    (the first iteration's job materializes the blocks)."""
     _, feats = doc_features
-    feats.count()  # materialize the fixture's own cache first
+    if cached:
+        feats.count()  # materialize the fixture's own cache first
+    else:
+        feats = spark.createDataFrame(feats.collect(), feats.schema)
     level = feats.storageLevel
-    before, during, after = _fit_watching_cache(spark, monkeypatch, feats)
-    assert len(during) == 2
-    assert all(ids <= before for ids in during), "fit persisted a second copy"
-    assert after <= before
+    assert (level != StorageLevel.NONE) == cached
+    before, during, after, jobs = _fit_watching_cache(spark, monkeypatch, feats, iterations=3)
+    assert len(during) == 3
+    assert all(len(ids - before) == 1 for ids in during), "fit did not own exactly one cached RDD"
+    assert len(set().union(*during) - before) == 1, "fit cached its blocks more than once"
+    assert not after - before, "fit left its blocks cached"
     assert feats.storageLevel == level
-
-
-def test_fit_on_uncached_input_leaves_nothing_cached(spark, doc_features, monkeypatch):
-    """An uncached input gets its own cached copy for the loop, released
-    when the fit ends."""
-    _, cached = doc_features
-    feats = spark.createDataFrame(cached.collect(), cached.schema)
-    before, during, after = _fit_watching_cache(spark, monkeypatch, feats)
-    assert all(len(ids - before) == 1 for ids in during)
-    assert not after - before, "fit left its cached copy behind"
-    assert feats.storageLevel == StorageLevel.NONE
+    assert jobs == 3
 
 
 @pytest.mark.slow  # heavy e2e/marathon; kin + oracle parity cover the default run

@@ -1,15 +1,22 @@
-"""The worker-side zip helper (ml/worker.py): Spark's own archives are
-read once per worker, every other archive is still re-read by
-``importlib.invalidate_caches()``."""
+"""The worker-side zip helper (ml/worker.py): Spark's own archives
+(pyspark's and py4j's zips, the spark-core jar) are read once per worker,
+every other archive is still re-read by ``importlib.invalidate_caches()``;
+and every Python-worker pass of the engine installs the helper first."""
 
 import importlib
 import sys
 import zipfile
 import zipimport
 
+import numpy as np
+import pandas as pd
+import pyarrow as pa
 import pytest
 
+from nlp_with_pyspark_spark.ml.gd import _block_partials, _pack
+from nlp_with_pyspark_spark.ml.nn import NNTrainer, _nn_partials
 from nlp_with_pyspark_spark.ml.worker import spark_zips_read_once
+from nlp_with_pyspark_spark.operators import multimodal
 
 
 @pytest.fixture
@@ -23,12 +30,11 @@ def _write_zip(path, modules):
             z.writestr(f"{name}.py", body)
 
 
-def test_user_zip_rewritten_after_import_is_reread(tmp_path, keep_spark_zips, monkeypatch):
-    archive = tmp_path / "user_lib.zip"
+def _assert_rewritten_archive_is_reread(archive, monkeypatch):
     _write_zip(archive, {"zipmod_first": "V = 1\n"})
     monkeypatch.syspath_prepend(str(archive))
-    for name in ("zipmod_first", "zipmod_second"):
-        monkeypatch.delitem(sys.modules, name, raising=False)
+    for mod in ("zipmod_first", "zipmod_second"):
+        monkeypatch.delitem(sys.modules, mod, raising=False)
     assert importlib.import_module("zipmod_first").V == 1
 
     _write_zip(archive, {"zipmod_first": "V = 1\n", "zipmod_second": "V = 2\n"})
@@ -37,7 +43,18 @@ def test_user_zip_rewritten_after_import_is_reread(tmp_path, keep_spark_zips, mo
     sys.path_importer_cache.pop(str(archive), None)
 
 
-@pytest.mark.parametrize("name", ["pyspark.zip", "py4j-0.10.9.9-src.zip"])
+def test_user_zip_rewritten_after_import_is_reread(tmp_path, keep_spark_zips, monkeypatch):
+    _assert_rewritten_archive_is_reread(tmp_path / "user_lib.zip", monkeypatch)
+
+
+def test_user_jar_rewritten_after_import_is_reread(tmp_path, keep_spark_zips, monkeypatch):
+    """Only spark-core's jar is skipped, not every jar on the path."""
+    _assert_rewritten_archive_is_reread(tmp_path / "user_lib.jar", monkeypatch)
+
+
+@pytest.mark.parametrize(
+    "name", ["pyspark.zip", "py4j-0.10.9.9-src.zip", "spark-core_2.13-4.1.2.jar"]
+)
 def test_spark_archive_is_not_reread(tmp_path, keep_spark_zips, name):
     archive = tmp_path / name
     _write_zip(archive, {"first": "V = 1\n"})
@@ -52,3 +69,98 @@ def test_install_is_idempotent(keep_spark_zips):
     patched = zipimport.zipimporter.invalidate_caches
     spark_zips_read_once()()
     assert zipimport.zipimporter.invalidate_caches is patched
+
+
+class _FakeBC:
+    def __init__(self, v):
+        self.value = v
+
+
+def _one_asset(modality, **meta):
+    """One asset row as pandas wants it (``meta`` a dict of META_SCHEMA)."""
+    fields = ("fmt", "width", "height", "channels", "sample_rate", "n_frames")
+    return {
+        "asset_id": [7],
+        "modality": [modality],
+        "content": [bytes(range(48))],
+        "meta": [{f: meta.get(f) for f in fields}],
+    }
+
+
+def _pass_cases(spark):
+    """name → (builds the pass and returns its worker function, one-row input)."""
+    assets = spark.createDataFrame([], multimodal.ASSET_SCHEMA)
+    sparse = {"doc_id": [1], "label": [1], "indices": [[0, 2]], "values": [[0.5, 1.0]]}
+    arrow_sparse = pa.RecordBatch.from_pydict(
+        {
+            "label": pa.array([1], pa.int32()),
+            "indices": pa.array([[0, 2]], pa.list_(pa.int32())),
+            "values": pa.array([[0.5, 1.0]], pa.list_(pa.float64())),
+        }
+    )
+    # a one-row CSR block in BLOCK_SCHEMA order: rows, y, lens, cols, vals
+    block = (
+        1,
+        np.array([1.0]).tobytes(),
+        np.array([2], np.int32).tobytes(),
+        np.array([0, 2], np.int32).tobytes(),
+        np.array([0.5, 1.0]).tobytes(),
+    )
+    weights = {"w1": np.ones((3, 2)), "b1": np.zeros(2), "w2": np.ones((2, 2)), "b2": np.zeros(2)}
+    nn = NNTrainer(k=3, hidden=2)
+    nn.weights_ = weights
+    image = _one_asset("image", fmt="fake-rgb", width=4, height=4, channels=3)
+    video = _one_asset("video", fmt="fake-yuv", n_frames=2)
+    return {
+        "gd_pack": (_pack, arrow_sparse),
+        "gd_block_kernel": (lambda: _block_partials("logistic", 3, _FakeBC(np.zeros(3))), block),
+        "nn_partials": (lambda: _nn_partials(3, 2, _FakeBC(weights)), pd.DataFrame(sparse)),
+        "nn_predict": (
+            lambda: nn.predict(spark.createDataFrame(pd.DataFrame(sparse))),
+            pd.DataFrame(sparse),
+        ),
+        "decode_features_arrow": (
+            lambda: multimodal.decode_features_arrow(assets),
+            pa.RecordBatch.from_pydict({k: v for k, v in image.items() if k != "meta"}),
+        ),
+        "resize_images": (lambda: multimodal.resize_images(assets), pd.DataFrame(image)),
+        "sample_frames": (lambda: multimodal.sample_frames(assets), pd.DataFrame(video)),
+    }
+
+
+PASSES = [
+    "gd_pack",
+    "gd_block_kernel",
+    "nn_partials",
+    "nn_predict",
+    "decode_features_arrow",
+    "resize_images",
+    "sample_frames",
+]
+
+
+@pytest.mark.parametrize("name", PASSES)
+def test_every_python_pass_installs_the_patch_first(spark, restore_zipimporter, monkeypatch, name):
+    """Each Python-worker pass installs ``spark_zips_read_once`` in its
+    worker function: run on a one-row input in this process, the worker
+    function leaves ``zipimporter.invalidate_caches`` patched."""
+    captured = []
+
+    def capture(self, func, schema, *args, **kwargs):
+        captured.append(func)
+        return self
+
+    frame_cls = type(spark.createDataFrame([], "a int"))
+    monkeypatch.setattr(frame_cls, "mapInArrow", capture)
+    monkeypatch.setattr(frame_cls, "mapInPandas", capture)
+    build, row = _pass_cases(spark)[name]
+    built = build()
+    # a DataFrame pass hands its worker function to mapInArrow/mapInPandas;
+    # a kernel builder returns it
+    func = captured.pop() if captured else built
+    assert not getattr(zipimport.zipimporter.invalidate_caches, "_skips_spark_zips", False)
+    out = list(func(iter([row])))
+    assert out, f"{name} yielded nothing for a one-row input"
+    assert getattr(zipimport.zipimporter.invalidate_caches, "_skips_spark_zips", False), (
+        f"{name} does not install spark_zips_read_once"
+    )
