@@ -7,27 +7,32 @@ vector to executors inside a *pickled lambda closure*, map every row to
 (cost, grad) with NumPy, and ``reduce`` tuple-sums back to the driver.
 
 Our engine keeps the math but fixes the physics (SURVEY §4.2):
-  * weights go out via ``sc.broadcast`` (torrent, once per executor) —
-    not per-task closure pickling;
+  * the weights still ride in the kernel's closure, but as ONE numpy
+    array per job: a PythonRDD command reaches executors inside Spark's
+    once-per-stage task binary, and pyspark broadcasts a command larger
+    than ``spark.broadcast.UDFCompressionThreshold`` (1 MB) itself, so a
+    large ``k`` still travels by torrent broadcast. An ``sc.broadcast``
+    plus ``destroy`` of our own cost 10–30 ms per iteration;
   * features stay SPARSE ``(indices, values)`` end-to-end — the
     reference's dense 10k-dim row (80 KB/row) is its scaling cliff;
-  * the features are blockified ONCE per fit, in the shape of Spark
-    MLlib's ``InstanceBlock`` training: one ``mapInArrow`` pass turns
-    each Arrow batch of ``(label, indices, values)`` into one CSR block
-    (row count, labels, row lengths, int32 columns, float64 values as
-    raw buffers), read through each list column's offsets. The blocks
-    are an RDD persisted ``MEMORY_AND_DISK``; the first iteration's job
-    materializes them, and they are released before ``fit`` returns.
-    The reference instead re-runs the full tokenize→join→groupBy
-    lineage on every one of its 300 iterations (SURVEY §4.1, 'the
-    single biggest perf fix');
+  * the features are cached ONCE per fit as the Arrow record-batch
+    messages the JVM itself writes for ``(label, indices, values)``
+    (:func:`.worker.cached_arrow_batches`, persisted
+    ``MEMORY_AND_DISK``; the first iteration's job materializes them,
+    and they are released before ``fit`` returns). The kernel reads each
+    message as one CSR block (:func:`.worker.csr_blocks`: float64
+    labels, row ids, int32 columns, float64 values, through each list
+    column's offsets) — the shape of Spark MLlib's ``InstanceBlock``
+    training. No Python pass packs the rows and nothing returns to the
+    JVM but the partials. The reference instead re-runs the full
+    tokenize→join→groupBy lineage on every one of its 300 iterations
+    (SURVEY §4.1, 'the single biggest perf fix');
   * per-row Python lambdas → one ``mapPartitions`` pass over the cached
-    blocks per iteration that emits a single (cost, grad, n) partial
+    messages per iteration that emits a single (cost, grad, n) partial
     per partition; the driver sums #partitions small tuples — the same
     partial-aggregation shape as MLlib's ``treeAggregate``. An
     iteration builds no SQL plan and converts no rows to Arrow: the
-    kernel reads each block's buffers with ``np.frombuffer`` and
-    reduces with ``np.bincount``;
+    kernel reduces each block with ``np.bincount``;
   * an iteration is bound by fixed costs at the JVM/Python boundary,
     not by arithmetic, so each task first installs
     :func:`.worker.spark_zips_read_once`. Every Python task starts with
@@ -38,7 +43,9 @@ Our engine keeps the math but fixes the physics (SURVEY §4.2):
     task (4-core host, pyspark 4.1.2, CPython 3.11.7).
 
 The worker functions are self-contained — nested functions only, pickled
-by value — so executors need numpy and pyarrow, not this package.
+by value — so executors need numpy and pyarrow, not this package
+(``tests/test_worker.py`` runs the kernels in a process that cannot
+import it).
 
 Optimizer update rules are the standard published forms (SGD, Momentum,
 Nesterov, Adam, Adagrad, RMSprop). The reference's Nesterov and RMSprop
@@ -56,9 +63,8 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
-from .worker import spark_zips_read_once
+from .worker import cached_arrow_batches, csr_blocks, spark_zips_read_once
 
 
 def sparse_features(
@@ -78,54 +84,10 @@ def sparse_features(
     )
 
 
-#: one CSR block per Arrow batch: row count, then the raw buffers of the
-#: float64 labels, int32 row lengths, int32 columns and float64 values
-BLOCK_SCHEMA = "rows int, y binary, lens binary, cols binary, vals binary"
-
-
-def _pack() -> callable:
-    """mapInArrow generator: each Arrow batch of ``(label, indices,
-    values)`` becomes one CSR block row (:data:`BLOCK_SCHEMA`).
-
-    Reads ``indices``/``values`` as flat buffers through each
-    ``ListArray``'s offsets (a sliced batch's ``offsets[0]`` is honoured);
-    an empty batch yields no block. A block holds at most
-    ``spark.sql.execution.arrow.maxRecordsPerBatch`` rows.
-    """
-    keep_spark_zips = spark_zips_read_once()
-
-    def flat(arr: pa.ListArray) -> tuple[np.ndarray, np.ndarray]:
-        """(per-row lengths, flat child values) of a possibly sliced list array."""
-        off = arr.offsets.to_numpy()
-        child = arr.values.slice(off[0], off[-1] - off[0])
-        return np.diff(off), child.to_numpy(zero_copy_only=False)
-
-    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        keep_spark_zips()
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            lens, cols = flat(batch.column("indices"))
-            _, vals = flat(batch.column("values"))
-            y = batch.column("label").to_numpy(zero_copy_only=False)
-            buffers = (
-                y.astype(np.float64),
-                lens.astype(np.int32, copy=False),
-                cols.astype(np.int32, copy=False),
-                vals.astype(np.float64, copy=False),
-            )
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([batch.num_rows], pa.int32())]
-                + [pa.array([b.tobytes()], pa.binary()) for b in buffers],
-                names=["rows", "y", "lens", "cols", "vals"],
-            )
-
-    return gen
-
-
-def _block_partials(loss: str, k: int, weights_bc) -> callable:
-    """mapPartitions kernel over CSR blocks: one ``(cost, grad, n)``
-    partial per partition.
+def _block_partials(loss: str, k: int, w: np.ndarray, schema: pa.Schema) -> callable:
+    """mapPartitions kernel over Arrow record-batch messages (read as CSR
+    blocks by :func:`.worker.csr_blocks` against ``schema``): one
+    ``(cost, grad, n)`` partial per partition at the weights ``w``.
 
     θ is summed per row with ``np.bincount`` over each block, and the
     gradient is ONE bincount over the partition's contributions in
@@ -136,18 +98,14 @@ def _block_partials(loss: str, k: int, weights_bc) -> callable:
     if loss not in ("logistic", "hinge"):
         raise ValueError(loss)
     keep_spark_zips = spark_zips_read_once()
+    blocks = csr_blocks(schema)
 
-    def partials(blocks: Iterator[tuple]) -> Iterator[tuple]:
+    def partials(messages: Iterator[bytes]) -> Iterator[tuple]:
         keep_spark_zips()
-        w = weights_bc.value
         cost = 0.0
         n = 0
         grad_cols, grad_terms = [], []
-        for rows, y, lens, cols, vals in blocks:
-            y = np.frombuffer(y, np.float64)
-            cols = np.frombuffer(cols, np.int32)
-            vals = np.frombuffer(vals, np.float64)
-            row_ids = np.repeat(np.arange(rows), np.frombuffer(lens, np.int32))
+        for rows, y, row_ids, cols, vals in blocks(messages):
             theta = np.bincount(row_ids, weights=vals * w[cols], minlength=rows)
             if loss == "logistic":
                 # cost = -yθ + log(1+e^θ); grad = x·(σ(θ) - y)
@@ -294,30 +252,23 @@ class GDTrainer:
         """Run up to ``iterations`` full-batch steps over ``features``
         (``label``, ``indices``, ``values``); one Spark job per iteration.
 
-        Cached or not, the input is blockified into one fit-owned RDD of
-        CSR blocks — a second, transient copy of the features that is
-        released (blocking) before ``fit`` returns; the input's own
-        storage level is left as it was.
+        Cached or not, the input is read through one fit-owned cache of
+        its Arrow record batches (:func:`.worker.cached_arrow_batches`) —
+        a second, transient copy of the features that is released
+        (blocking) before ``fit`` returns; the input's own storage level
+        is left as it was. The weights ride in each iteration's kernel
+        closure.
         """
-        sc = features.sparkSession.sparkContext
-        # blockify once: the first iteration's job materializes the blocks,
-        # every later one reads them straight from the block manager
-        blocks = (
-            features.select("label", "indices", "values")
-            .mapInArrow(_pack(), schema=BLOCK_SCHEMA)
-            .rdd.persist(StorageLevel.MEMORY_AND_DISK)
-        )
         w = np.zeros(self.k, dtype=np.float64)
         opt = Optimizer(name=self.optimizer, lr=self.lr, compat=self.compat)
         lr = self.lr
         # reference: old_cost = 0 (LR_Optimizers.py:134) — iteration 0's
         # positive cost always halves the rate under the bold driver
         prev_cost = 0.0 if self.compat == "reference" else float("inf")
-        try:
+        with cached_arrow_batches(features) as (messages, schema):
             for _ in range(self.iterations):
-                bw = sc.broadcast(w)
-                parts = blocks.mapPartitions(_block_partials(self.loss, self.k, bw)).collect()
-                bw.destroy()
+                kernel = _block_partials(self.loss, self.k, w, schema)
+                parts = messages.mapPartitions(kernel).collect()
                 cost = sum(p[0] for p in parts)
                 grad = np.sum([p[1] for p in parts], axis=0)
                 n = sum(p[2] for p in parts)
@@ -346,8 +297,6 @@ class GDTrainer:
                 else:
                     w = opt.step(w, grad)
                 prev_cost = cost
-        finally:
-            blocks.unpersist(blocking=True)
         self.weights_ = w
         return self
 

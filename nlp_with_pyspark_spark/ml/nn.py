@@ -7,9 +7,13 @@ input k → hidden h (LeakyReLU) → 2 (sigmoid), one-hot labels, SSE cost
 Shape NOT preserved, deliberately (SURVEY §2.10 R9): the reference
 chains **11 separate ``.map`` stages** for forward/backward, each stage
 re-pickling ≈520 KB of closure-captured weights per task. Here the
-whole forward+backward is ONE vectorized NumPy pass inside a single
-``mapInPandas``, with weights broadcast once per iteration; each
-partition emits one (cost, dW1, dB1, dW2, dB2) partial.
+whole forward+backward is ONE vectorized NumPy pass per iteration: a
+``mapPartitions`` over the same fit-owned cache of the input's Arrow
+record batches that ``GDTrainer.fit`` reads
+(:func:`.worker.cached_arrow_batches`), with the weights in the
+kernel's closure (no broadcast of our own); each block is densified
+batch-locally and each partition emits one (cost, dW1, dB1, dW2, dB2)
+partial. ``predict`` stays one ``mapInPandas`` pass.
 
 Known reference bugs NOT replicated (SURVEY §7.4): Adam second moment
 uses ``DB`` instead of ``DB**2`` (RDD_NN.py:198, utils/nn_func.py:99)
@@ -24,77 +28,68 @@ from dataclasses import dataclass, field
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
-from pyspark.storagelevel import StorageLevel
 
-from .worker import spark_zips_read_once
-
-
-def _leaky_relu(x: np.ndarray, alpha: float = 0.01) -> np.ndarray:
-    return np.where(x > 0, x, alpha * x)
+from .worker import cached_arrow_batches, csr_blocks, spark_zips_read_once
 
 
-def _leaky_relu_grad(x: np.ndarray, alpha: float = 0.01) -> np.ndarray:
-    return np.where(x > 0, 1.0, alpha)
+def _activations() -> tuple:
+    """``(leaky_relu, leaky_relu_grad, sigmoid)`` as nested functions, so
+    a worker function that calls them is pickled by value with them."""
+
+    def leaky_relu(x: np.ndarray, alpha: float = 0.01) -> np.ndarray:
+        return np.where(x > 0, x, alpha * x)
+
+    def leaky_relu_grad(x: np.ndarray, alpha: float = 0.01) -> np.ndarray:
+        return np.where(x > 0, 1.0, alpha)
+
+    def sigmoid(x: np.ndarray) -> np.ndarray:
+        return 1.0 / (1.0 + np.exp(-np.clip(x, -60, 60)))
+
+    return leaky_relu, leaky_relu_grad, sigmoid
 
 
-def _sigmoid(x: np.ndarray) -> np.ndarray:
-    return 1.0 / (1.0 + np.exp(-np.clip(x, -60, 60)))
-
-
-def _nn_partials(k: int, h: int, weights_bc) -> callable:
+def _nn_partials(k: int, h: int, w: dict, schema: pa.Schema) -> callable:
+    """mapPartitions kernel over Arrow record-batch messages (read as CSR
+    blocks by :func:`.worker.csr_blocks` against ``schema``): one
+    ``(cost, dW1, dB1, dW2, dB2, n)`` partial per partition at the
+    weights ``w``."""
     keep_spark_zips = spark_zips_read_once()
+    blocks = csr_blocks(schema)
+    leaky_relu, leaky_relu_grad, sigmoid = _activations()
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def partials(messages: Iterator[bytes]) -> Iterator[tuple]:
         keep_spark_zips()
-        w1, b1, w2, b2 = (
-            weights_bc.value["w1"],
-            weights_bc.value["b1"],
-            weights_bc.value["w2"],
-            weights_bc.value["b2"],
-        )
+        w1, b1, w2, b2 = w["w1"], w["b1"], w["w2"], w["b2"]
         cost = 0.0
         dW1 = np.zeros_like(w1)
         dB1 = np.zeros_like(b1)
         dW2 = np.zeros_like(w2)
         dB2 = np.zeros_like(b2)
         n = 0
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            rows = len(pdf)
-            # densify the sparse batch (batch × k, batch-local only)
+        for rows, y, row_ids, cols, vals in blocks(messages):
+            # densify the sparse block (rows × k, block-local only)
             X = np.zeros((rows, k))
-            for r, (idxs, vals) in enumerate(zip(pdf["indices"], pdf["values"])):
-                X[r, np.asarray(idxs, dtype=np.int64)] = np.asarray(vals, dtype=np.float64)
-            y = pdf["label"].to_numpy(dtype=np.int64)
-            Y = np.eye(2)[y]  # one-hot (n×2)
+            X[row_ids, cols] = vals
+            Y = np.eye(2)[y.astype(np.int64)]  # one-hot (n×2)
             # forward
             Z1 = X @ w1 + b1
-            A1 = _leaky_relu(Z1)
+            A1 = leaky_relu(Z1)
             Z2 = A1 @ w2 + b2
-            A2 = _sigmoid(Z2)
+            A2 = sigmoid(Z2)
             cost += float(0.5 * np.sum((A2 - Y) ** 2))
             # backward (SSE → sigmoid → LeakyReLU chain)
             dZ2 = (A2 - Y) * A2 * (1.0 - A2)
             dW2 += A1.T @ dZ2
             dB2 += dZ2.sum(axis=0)
-            dZ1 = (dZ2 @ w2.T) * _leaky_relu_grad(Z1)
+            dZ1 = (dZ2 @ w2.T) * leaky_relu_grad(Z1)
             dW1 += X.T @ dZ1
             dB1 += dZ1.sum(axis=0)
             n += rows
-        yield pd.DataFrame(
-            {
-                "cost": [cost],
-                "dW1": [dW1.ravel().tolist()],
-                "dB1": [dB1.tolist()],
-                "dW2": [dW2.ravel().tolist()],
-                "dB2": [dB2.tolist()],
-                "n": [n],
-            }
-        )
+        yield cost, dW1, dB1, dW2, dB2, n
 
-    return gen
+    return partials
 
 
 @dataclass
@@ -122,15 +117,8 @@ class NNTrainer:
     costs_: list[float] = field(default_factory=list)
 
     def fit(self, features: DataFrame) -> "NNTrainer":
-        spark = features.sparkSession
-        sc = spark.sparkContext
-        feat = features.select("label", "indices", "values")
-        # a cached input is read through its own cache; only an uncached
-        # one gets a cached copy for the loop, released when the fit ends
-        owned = features.storageLevel == StorageLevel.NONE
-        if owned:
-            feat = feat.persist(StorageLevel.MEMORY_AND_DISK)
-            feat.count()
+        """One Spark job per iteration over a fit-owned cache of the
+        input's Arrow record batches, released before ``fit`` returns."""
         rng = np.random.default_rng(self.seed)
         k, h = self.k, self.hidden
         w = {
@@ -145,51 +133,45 @@ class NNTrainer:
         eps = 1e-7 if self.compat == "reference" else 1e-8
         lr = self.lr
         prev_cost = 0.0 if self.compat == "reference" else float("inf")
-        schema = "cost double, dW1 array<double>, dB1 array<double>, dW2 array<double>, dB2 array<double>, n long"
-        for t in range(1, self.iterations + 1):
-            bw = sc.broadcast(w)
-            parts = feat.mapInPandas(_nn_partials(k, h, bw), schema=schema).collect()
-            bw.destroy()
-            n = max(sum(p["n"] for p in parts), 1)
-            cost = sum(p["cost"] for p in parts) / n
-            grads = {
-                "w1": np.sum([np.asarray(p["dW1"]).reshape(k, h) for p in parts], axis=0) / n,
-                "b1": np.sum([np.asarray(p["dB1"]) for p in parts], axis=0) / n,
-                "w2": np.sum([np.asarray(p["dW2"]).reshape(h, 2) for p in parts], axis=0) / n,
-                "b2": np.sum([np.asarray(p["dB2"]) for p in parts], axis=0) / n,
-            }
-            self.costs_.append(float(cost))
-            if self.optimizer == "adam":
-                for key in w:
-                    m[key] = b1p * m[key] + (1 - b1p) * grads[key]
-                    if self.compat == "reference" and key in ("b1", "b2"):
-                        # as-written (utils/nn_func.py:98): bias 2nd moment
-                        # uses the raw gradient, sqrt(abs(·)) masks the sign
-                        v[key] = b2p * v[key] + (1 - b2p) * grads[key]
-                        vhat = np.abs(v[key] / (1 - b2p**t))
-                    else:
-                        v[key] = b2p * v[key] + (1 - b2p) * grads[key] ** 2
-                        vhat = v[key] / (1 - b2p**t)
-                    mhat = m[key] / (1 - b1p**t)
-                    w[key] = w[key] - lr * mhat / (np.sqrt(vhat) + eps)
-                if self.compat == "reference" and self.bold_driver:
-                    # RDD_NN.py:287-291: the bold driver also runs after
-                    # Adam updates — Adam reads the adapted shared lr
-                    lr = lr * 1.05 if cost < prev_cost else lr * 0.5
-            else:
-                if self.compat == "reference":
+        with cached_arrow_batches(features) as (messages, schema):
+            for t in range(1, self.iterations + 1):
+                parts = messages.mapPartitions(_nn_partials(k, h, w, schema)).collect()
+                n = max(sum(p[5] for p in parts), 1)
+                cost = sum(p[0] for p in parts) / n
+                grads = {
+                    key: np.sum([p[i] for p in parts], axis=0) / n
+                    for i, key in enumerate(("w1", "b1", "w2", "b2"), start=1)
+                }
+                self.costs_.append(float(cost))
+                if self.optimizer == "adam":
                     for key in w:
-                        w[key] = w[key] - lr * grads[key]
-                    if self.bold_driver:
+                        m[key] = b1p * m[key] + (1 - b1p) * grads[key]
+                        if self.compat == "reference" and key in ("b1", "b2"):
+                            # as-written (utils/nn_func.py:98): bias 2nd moment
+                            # uses the raw gradient, sqrt(abs(·)) masks the sign
+                            v[key] = b2p * v[key] + (1 - b2p) * grads[key]
+                            vhat = np.abs(v[key] / (1 - b2p**t))
+                        else:
+                            v[key] = b2p * v[key] + (1 - b2p) * grads[key] ** 2
+                            vhat = v[key] / (1 - b2p**t)
+                        mhat = m[key] / (1 - b1p**t)
+                        w[key] = w[key] - lr * mhat / (np.sqrt(vhat) + eps)
+                    if self.compat == "reference" and self.bold_driver:
+                        # RDD_NN.py:287-291: the bold driver also runs after
+                        # Adam updates — Adam reads the adapted shared lr
                         lr = lr * 1.05 if cost < prev_cost else lr * 0.5
                 else:
-                    if self.bold_driver:
-                        lr = lr * 1.05 if cost < prev_cost else lr * 0.5
-                    for key in w:
-                        w[key] = w[key] - lr * grads[key]
-            prev_cost = cost
-        if owned:
-            feat.unpersist()
+                    if self.compat == "reference":
+                        for key in w:
+                            w[key] = w[key] - lr * grads[key]
+                        if self.bold_driver:
+                            lr = lr * 1.05 if cost < prev_cost else lr * 0.5
+                    else:
+                        if self.bold_driver:
+                            lr = lr * 1.05 if cost < prev_cost else lr * 0.5
+                        for key in w:
+                            w[key] = w[key] - lr * grads[key]
+                prev_cost = cost
         self.weights_ = w
         return self
 
@@ -201,6 +183,7 @@ class NNTrainer:
         wts = self.weights_
         k = self.k
         keep_spark_zips = spark_zips_read_once()
+        leaky_relu, _, sigmoid = _activations()
 
         def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             keep_spark_zips()
@@ -211,8 +194,8 @@ class NNTrainer:
                 X = np.zeros((rows, k))
                 for r, (idxs, vals) in enumerate(zip(pdf["indices"], pdf["values"])):
                     X[r, np.asarray(idxs, dtype=np.int64)] = np.asarray(vals, dtype=np.float64)
-                A1 = _leaky_relu(X @ wts["w1"] + wts["b1"])
-                A2 = _sigmoid(A1 @ wts["w2"] + wts["b2"])
+                A1 = leaky_relu(X @ wts["w1"] + wts["b1"])
+                A2 = sigmoid(A1 @ wts["w2"] + wts["b2"])
                 yield pd.DataFrame(
                     {"doc_id": pdf["doc_id"], "pred": np.argmax(A2, axis=1).astype("int32")}
                 )

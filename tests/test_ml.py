@@ -5,20 +5,17 @@ import numpy as np
 import pyarrow as pa
 import pyspark.sql.functions as F
 import pytest
+from pyspark.sql.types import ArrayType, LongType
 from pyspark.storagelevel import StorageLevel
 
 from nlp_with_pyspark_spark.functions.text import tokens_pipeline
 from nlp_with_pyspark_spark.ml import gd
-from nlp_with_pyspark_spark.ml.gd import GDTrainer, _block_partials, _pack, sparse_features
+from nlp_with_pyspark_spark.ml.gd import GDTrainer, _block_partials, sparse_features
 from nlp_with_pyspark_spark.ml.nn import NNTrainer
+from nlp_with_pyspark_spark.ml.worker import cached_arrow_batches, csr_blocks
 from nlp_with_pyspark_spark.operators.features import tf_idf
 from nlp_with_pyspark_spark.operators.vocab import top_k_vocabulary
 from nlp_with_pyspark_spark.sources.io import read_table
-
-
-class _FakeBC:
-    def __init__(self, v):
-        self.value = v
 
 
 def _tiny_batch():
@@ -33,10 +30,10 @@ def _tiny_batch():
 
 def _run_partials(loss, k, w, batches):
     """(cost, grad, n) of the single partial the block kernel yields over
-    the CSR blocks ``_pack`` makes of ``batches`` (rows as the blocks'
-    RDD hands them over: tuples in schema order)."""
-    blocks = [tuple(r.values()) for b in _pack()(iter(batches)) for r in b.to_pylist()]
-    out = list(_block_partials(loss, k, _FakeBC(w))(iter(blocks)))
+    ``batches`` as Arrow record-batch messages (as the fit's cached RDD
+    hands them over: one IPC message per batch, as bytes)."""
+    messages = [b.serialize().to_pybytes() for b in batches]
+    out = list(_block_partials(loss, k, w, batches[0].schema)(iter(messages)))
     assert len(out) == 1
     return out[0]
 
@@ -139,17 +136,23 @@ def _persistent_rdd_ids(spark):
 
 def _fit_watching_cache(spark, monkeypatch, feats, iterations):
     """Fit Adam on ``feats``; return the persistent RDD ids seen before,
-    during (at every optimizer step) and after the fit, and the number of
-    Spark jobs the fit ran."""
+    during (at every optimizer step) and after the fit, the number of
+    Spark jobs the fit ran and its ``SparkContext.broadcast`` calls."""
     sc = spark.sparkContext
-    during = []
+    during, broadcasts = [], []
     step = gd.Optimizer.step
+    broadcast = type(sc).broadcast
 
     def spy(self, w, g):
         during.append(_persistent_rdd_ids(spark))
         return step(self, w, g)
 
+    def broadcast_spy(self, value):
+        broadcasts.append(value)
+        return broadcast(self, value)
+
     monkeypatch.setattr(gd.Optimizer, "step", spy)
+    monkeypatch.setattr(type(sc), "broadcast", broadcast_spy)
     before = _persistent_rdd_ids(spark)
     group = f"fit-watch-{id(feats)}"
     sc.setJobGroup(group, "GDTrainer.fit under test")
@@ -159,15 +162,17 @@ def _fit_watching_cache(spark, monkeypatch, feats, iterations):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-    return before, during, _persistent_rdd_ids(spark), jobs
+    return before, during, _persistent_rdd_ids(spark), jobs, len(broadcasts)
 
 
 @pytest.mark.parametrize("cached", [True, False], ids=["cached", "uncached"])
 def test_fit_owns_one_block_cache(spark, doc_features, monkeypatch, cached):
-    """Cached or not, the input is blockified into ONE persistent RDD of
-    the fit's own, released before ``fit`` returns; the input's storage
-    level is left as it was; and an N-iteration fit runs N Spark jobs
-    (the first iteration's job materializes the blocks)."""
+    """Cached or not, the input's Arrow batches are cached in ONE
+    persistent RDD of the fit's own, released before ``fit`` returns; the
+    input's storage level is left as it was; an N-iteration fit runs N
+    Spark jobs (the first iteration's job materializes the cache); and
+    the weights travel in the kernel's closure, never by a broadcast of
+    the fit's own."""
     _, feats = doc_features
     if cached:
         feats.count()  # materialize the fixture's own cache first
@@ -175,13 +180,83 @@ def test_fit_owns_one_block_cache(spark, doc_features, monkeypatch, cached):
         feats = spark.createDataFrame(feats.collect(), feats.schema)
     level = feats.storageLevel
     assert (level != StorageLevel.NONE) == cached
-    before, during, after, jobs = _fit_watching_cache(spark, monkeypatch, feats, iterations=3)
+    before, during, after, jobs, broadcasts = _fit_watching_cache(
+        spark, monkeypatch, feats, iterations=3
+    )
     assert len(during) == 3
     assert all(len(ids - before) == 1 for ids in during), "fit did not own exactly one cached RDD"
     assert len(set().union(*during) - before) == 1, "fit cached its blocks more than once"
     assert not after - before, "fit left its blocks cached"
     assert feats.storageLevel == level
     assert jobs == 3
+    assert broadcasts == 0
+
+
+def _replay_gd(rows, k, loss, lr, l2, iterations):
+    """Cost curve and final weights of ``GDTrainer(k, loss, optimizer="gd",
+    lr, l2, iterations)`` (standard compat, bold driver) in dense numpy
+    over the collected rows."""
+    X = np.zeros((len(rows), k))
+    for r, row in enumerate(rows):
+        np.add.at(X[r], np.asarray(row["indices"], dtype=np.int64), row["values"])
+    y = np.array([float(row["label"]) for row in rows])
+    w, prev, costs = np.zeros(k), float("inf"), []
+    for _ in range(iterations):
+        theta = X @ w
+        if loss == "logistic":
+            cost = float(np.sum(np.logaddexp(0.0, theta) - y * theta)) + l2 * float(w @ w)
+            grad = X.T @ (1.0 / (1.0 + np.exp(-theta)) - y) + 2.0 * l2 * w
+        else:
+            lam, ypm = 1.0 / (0.5 * len(rows)), 2.0 * y - 1.0
+            cost = float(np.sum(np.maximum(0.0, 1.0 - ypm * theta))) + 0.5 * lam * float(w @ w)
+            grad = X.T @ np.where(ypm * theta < 1.0, -ypm, 0.0) + lam * w
+        costs.append(cost)
+        lr = lr * 1.05 if cost < prev else lr * 0.5
+        w, prev = w - lr * grad, cost
+    return costs, w
+
+
+@pytest.mark.parametrize("loss", ["logistic", "hinge"])
+def test_fit_reads_the_jvm_arrow_batches(spark, loss):
+    """The fit reads the Arrow record-batch messages the JVM writes
+    (``Dataset.toArrowBatchRdd``, a ``private[sql]`` Scala method that
+    pyspark does not wrap): on a frame with a ``bigint`` label,
+    ``array<bigint>`` indices, rows without features, an empty partition
+    and ``maxRecordsPerBatch=7``, the cache holds 7-row messages and the
+    cost curve and weights match a driver-side numpy replay. A pyspark
+    upgrade that drops or reshapes that method fails here."""
+    k = 6
+    no_features = F.col("id") % 11 == 0
+    frame = (
+        spark.range(0, 60, 1, numPartitions=3)
+        .where(F.spark_partition_id() != 1)
+        .select(
+            (F.col("id") % 2).alias("label"),
+            F.when(no_features, F.array().cast("array<bigint>"))
+            .otherwise(F.array(F.col("id") % k, (F.col("id") * 5 + 2) % k))
+            .alias("indices"),
+            F.when(no_features, F.array().cast("array<double>"))
+            .otherwise(F.array(F.lit(0.25) + F.col("id") / 60.0, F.lit(1.0) - F.col("id") / 90.0))
+            .alias("values"),
+        )
+    )
+    assert frame.schema["label"].dataType == LongType()
+    assert frame.schema["indices"].dataType == ArrayType(LongType())
+    rows = frame.collect()
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    saved = spark.conf.get(conf)
+    spark.conf.set(conf, "7")
+    try:
+        with cached_arrow_batches(frame) as (messages, schema):
+            read = csr_blocks(schema)
+            sizes = messages.mapPartitions(lambda ms: [b[0] for b in read(ms)]).glom().collect()
+        t = GDTrainer(k=k, loss=loss, optimizer="gd", lr=0.05, iterations=6, l2=0.01).fit(frame)
+    finally:
+        spark.conf.set(conf, saved)
+    assert sizes == [[7, 7, 6], [], [7, 7, 6]]
+    want_costs, want_w = _replay_gd(rows, k, loss, lr=0.05, l2=0.01, iterations=6)
+    np.testing.assert_allclose(t.costs_, want_costs, rtol=1e-12)
+    np.testing.assert_allclose(t.weights_, want_w, rtol=1e-12)
 
 
 @pytest.mark.slow  # heavy e2e/marathon; kin + oracle parity cover the default run

@@ -1,9 +1,13 @@
-"""The worker-side zip helper (ml/worker.py): Spark's own archives
+"""The worker-side helpers (ml/worker.py): Spark's own archives
 (pyspark's and py4j's zips, the spark-core jar) are read once per worker,
 every other archive is still re-read by ``importlib.invalidate_caches()``;
-and every Python-worker pass of the engine installs the helper first."""
+every Python-worker pass of the engine installs the helper first; and the
+trainers' kernels run where this package cannot be imported."""
 
 import importlib
+import os
+import pickle
+import subprocess
 import sys
 import zipfile
 import zipimport
@@ -13,7 +17,9 @@ import pandas as pd
 import pyarrow as pa
 import pytest
 
-from nlp_with_pyspark_spark.ml.gd import _block_partials, _pack
+from pyspark import cloudpickle
+
+from nlp_with_pyspark_spark.ml.gd import _block_partials
 from nlp_with_pyspark_spark.ml.nn import NNTrainer, _nn_partials
 from nlp_with_pyspark_spark.ml.worker import spark_zips_read_once
 from nlp_with_pyspark_spark.operators import multimodal
@@ -71,11 +77,6 @@ def test_install_is_idempotent(keep_spark_zips):
     assert zipimport.zipimporter.invalidate_caches is patched
 
 
-class _FakeBC:
-    def __init__(self, v):
-        self.value = v
-
-
 def _one_asset(modality, **meta):
     """One asset row as pandas wants it (``meta`` a dict of META_SCHEMA)."""
     fields = ("fmt", "width", "height", "channels", "sample_rate", "n_frames")
@@ -87,34 +88,38 @@ def _one_asset(modality, **meta):
     }
 
 
+#: one sparse row ``(label, indices, values)`` as an Arrow batch
+_ARROW_SPARSE = pa.RecordBatch.from_pydict(
+    {
+        "label": pa.array([1], pa.int32()),
+        "indices": pa.array([[0, 2]], pa.list_(pa.int32())),
+        "values": pa.array([[0.5, 1.0]], pa.list_(pa.float64())),
+    }
+)
+_NN_WEIGHTS = {"w1": np.ones((3, 2)), "b1": np.zeros(2), "w2": np.ones((2, 2)), "b2": np.zeros(2)}
+
+
+def _kernels():
+    """name → (a trainer's fit kernel, one input element: the IPC message
+    of :data:`_ARROW_SPARSE` as the fit's cached RDD hands it over)."""
+    schema, message = _ARROW_SPARSE.schema, _ARROW_SPARSE.serialize().to_pybytes()
+    return {
+        "gd_block_kernel": (_block_partials("logistic", 3, np.zeros(3), schema), message),
+        "nn_partials": (_nn_partials(3, 2, _NN_WEIGHTS, schema), message),
+    }
+
+
 def _pass_cases(spark):
     """name → (builds the pass and returns its worker function, one-row input)."""
     assets = spark.createDataFrame([], multimodal.ASSET_SCHEMA)
     sparse = {"doc_id": [1], "label": [1], "indices": [[0, 2]], "values": [[0.5, 1.0]]}
-    arrow_sparse = pa.RecordBatch.from_pydict(
-        {
-            "label": pa.array([1], pa.int32()),
-            "indices": pa.array([[0, 2]], pa.list_(pa.int32())),
-            "values": pa.array([[0.5, 1.0]], pa.list_(pa.float64())),
-        }
-    )
-    # a one-row CSR block in BLOCK_SCHEMA order: rows, y, lens, cols, vals
-    block = (
-        1,
-        np.array([1.0]).tobytes(),
-        np.array([2], np.int32).tobytes(),
-        np.array([0, 2], np.int32).tobytes(),
-        np.array([0.5, 1.0]).tobytes(),
-    )
-    weights = {"w1": np.ones((3, 2)), "b1": np.zeros(2), "w2": np.ones((2, 2)), "b2": np.zeros(2)}
     nn = NNTrainer(k=3, hidden=2)
-    nn.weights_ = weights
+    nn.weights_ = _NN_WEIGHTS
     image = _one_asset("image", fmt="fake-rgb", width=4, height=4, channels=3)
     video = _one_asset("video", fmt="fake-yuv", n_frames=2)
+    kernels = {name: (lambda f=f: f, row) for name, (f, row) in _kernels().items()}
     return {
-        "gd_pack": (_pack, arrow_sparse),
-        "gd_block_kernel": (lambda: _block_partials("logistic", 3, _FakeBC(np.zeros(3))), block),
-        "nn_partials": (lambda: _nn_partials(3, 2, _FakeBC(weights)), pd.DataFrame(sparse)),
+        **kernels,
         "nn_predict": (
             lambda: nn.predict(spark.createDataFrame(pd.DataFrame(sparse))),
             pd.DataFrame(sparse),
@@ -129,7 +134,6 @@ def _pass_cases(spark):
 
 
 PASSES = [
-    "gd_pack",
     "gd_block_kernel",
     "nn_partials",
     "nn_predict",
@@ -164,3 +168,37 @@ def test_every_python_pass_installs_the_patch_first(spark, restore_zipimporter, 
     assert getattr(zipimport.zipimporter.invalidate_caches, "_skips_spark_zips", False), (
         f"{name} does not install spark_zips_read_once"
     )
+
+
+#: run in a child process: unpickle ``(kernel, element)`` from stdin with
+#: plain ``pickle`` and print the kernel's output as a pickle hex string
+_CHILD = """
+import importlib.util, pickle, sys
+assert importlib.util.find_spec("nlp_with_pyspark_spark") is None, "package importable"
+kernel, element = pickle.loads(sys.stdin.buffer.read())
+print(pickle.dumps(list(kernel(iter([element])))).hex())
+"""
+
+
+@pytest.mark.parametrize("name", ["gd_block_kernel", "nn_partials"])
+def test_fit_kernels_run_without_the_package(tmp_path, restore_zipimporter, name):
+    """A fit kernel, pickled with pyspark's cloudpickle, runs in a fresh
+    interpreter whose working directory and ``PYTHONPATH`` cannot reach
+    this package, and yields what it yields in this process: executors
+    need numpy and pyarrow, not the package."""
+    kernel, element = _kernels()[name]
+    env = {key: val for key, val in os.environ.items() if key != "PYTHONPATH"}
+    child = subprocess.run(
+        [sys.executable, "-c", _CHILD],
+        input=cloudpickle.dumps((kernel, element)),
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        timeout=120,
+    )
+    assert child.returncode == 0, child.stderr.decode()[-2000:]
+    got = pickle.loads(bytes.fromhex(child.stdout.decode().strip()))
+    want = list(kernel(iter([element])))
+    assert len(got) == len(want) == 1
+    for g, v in zip(got[0], want[0]):
+        np.testing.assert_array_equal(g, v)
