@@ -120,13 +120,11 @@ LIFECYCLE = {
     "ann_ivfpq_merged_topk",
     "ann_ivfpq_retrained_topk",
     "vector_index_rebalance_stats",
-    "bm25_indexed_topk",
     "bm25_maintained_topk",
     "dedup_maintained_corpus",
     "zorder_file_envelopes",
     "curation_funnel",
     "full_curation_funnel",
-    "corpus_pipeline_funnel",
 }
 
 #: SCALE-DEMONSTRATION legs (round 14, ADDED — the round-13 scaling
@@ -147,223 +145,18 @@ SCALE_LEGS = {
     "scale10x_decontam_overlap": ("decontamination_overlap", 10),
 }
 
-# MEMBERSHIP POLICY. The printed JSON line must stay under ~1850 chars
-# (the driver captures only the last 2000 chars of stdout), capping the
-# suite at ~68 entries — fewer than the registry. Rules (since r8):
-#   1. PERMANENTLY excluded — quadratic-by-definition all-pairs
+# MEMBERSHIP POLICY. HEADLINE plus SCALE_LEGS is the benched suite:
+#   1. The printed JSON line stays under ~1850 chars (the suite's
+#      caller keeps only the last 2000 chars of stdout), which caps the
+#      suite at ~68 legs, fewer than the registry: a query joins by
+#      swapping another out, never by growing the list.
+#   2. PERMANENTLY excluded — quadratic-by-definition all-pairs
 #      VERIFIERS for the LSH/minhash scale paths, never meaningful as
 #      throughput numbers: dedup_ngram_jaccard, embedding_near_dups.
-#   2. Every other registered query must be benched at least once every
-#      3 rounds. Each round swaps the stalest never-/least-recently-
-#      benched queries IN and rotates OUT long-benched queries whose
-#      perf shape a still-benched kin covers (swap, never grow).
-#
-# Swap history, rounds 8-9 (compressed round 10; per-swap kin
-# rationales in git history): r8 ran eleven swaps — every new r8
-# registration entered, and by the fifth swap every registered query
-# outside the two permanent exclusions had been benched at least once.
-# r9 swapped in bm25_indexed_topk / events_distinct_sketch /
-# bm25_batch_topk / dsir_selection_scores plus the full r7-stale debt
-# (7 queries); 12 r8-benched queries with benched kin rotated out.
-#
-# Round 10 swap — IN: the three new registrations (bm25_maintained_
-# topk, dsir_selected_topk, curation_funnel — never benched) plus nine
-# of the r8-benched debt due by r11 (bigram_top50, corpus_clean_stats,
-# doc_token_chunks, multimodal_frame_sample, local_supplier_volume,
-# price_percentiles, events_sliding_10m, order_priority_pivot,
-# tfidf_smoothed_long). OUT (all benched r9, kin stays benched):
-# bm25_search_topk (indexed/maintained/batch run the same scoring
-# core), semantic_dedup_stats + semantic_delta_pairs
-# (semantic_dedup_pairs + dedup_delta_pairs), doc_lm_scores
-# (dsir_selection_scores + curation_funnel), model_calibration_bins
-# (quality_lr_filter, same prediction frame), events_json_stats
-# (events_session_stats), customer_order_setops + high_balance_inactive
-# (dormant_customers), sql_top_unshipped_orders + supplier_nation_
-# revenue (customer_nation_revenue / top_orders_per_customer),
-# order_priority_counts (the returning order_priority_pivot composes
-# it), promo_revenue_share (revenue_rollup).
-# Round 10 (second swap) — IN: ann_recall_at_k (new registration;
-# its approx side runs the identical ivfpq configuration, so the leg
-# prices ivfpq + exact-L2 ground truth + the recall join). OUT:
-# ann_ivfpq_topk (benched r8-r10; composed verbatim by the new leg).
-#
-# Round 11 swap — IN: the full r8-benched debt due this round
-# (ann_lsh_topk, confusion_metrics, stratified_sample_by_lang,
-# lang_id_counts, doc_fingerprints, simhash_near_pairs,
-# session_event_overlap, click_purchase_attribution,
-# markup_strip_stats, embedding_rp_project) plus the two round-11
-# registrations (full_curation_funnel, dedup_maintained_corpus —
-# never benched). OUT (12, all benched r9-r10, kin stays benched):
-# salted_nation_revenue (customer_nation_revenue — same query,
-# salting variant), top_orders_per_customer (customer_rolling_7d_
-# revenue + latest_event_per_user), quality_scores (quality_lr_filter,
-# the same scoring frame), events_session_stats (session_event_overlap
-# returning — the same sessionize machinery), embedding_centroid_topk
-# (ann_brute_force_topk, the same broadcast cosine scan),
-# dedup_canonical_corpus (corpus_pipeline_funnel composes the same
-# drop; the NEW dedup_maintained_corpus serves the same canonical
-# survivors), corpus_stats_card (corpus_clean_stats), model_auc_eval
-# (quality_lr_filter + confusion_metrics returning), line_dedup_stats
-# (dedup_exact_groups, the same hash-group family),
-# click_purchase_funnel (events_asof_click_purchase + click_purchase_
-# attribution returning), collocations_pmi_top50 (bigram_top50, the
-# same bigram explode+count), doc_length_quantiles (price_percentiles,
-# the same exact-quantile operator).
-# Rotation debt for round 12: the r9-OUT set (benched r9) and this
-# round's OUT set (benched r10) come due rounds 12-13.
-#
-# Round 12 swap — IN (13): the full never-since-r8 debt the round-11
-# verdict enumerated (ann_ivf_topk, corpus_train_split,
-# customer_running_revenue, doc_length_histogram,
-# embedding_quantization_stats, events_distinct_users,
-# multimodal_asset_stats, multimodal_resize, order_priority_melt,
-# order_status_cube, simhash_fingerprints, token_budget) plus the new
-# registration ivfpq_rerank_topk (never benched). OUT (13, all benched
-# r10-r11, kin stays benched): bigram_top50 (vocab_top100 — same
-# explode+count), corpus_clean_stats (doc_token_stats — textstats
-# composition), events_sliding_10m (events_tumbling_5m — the same
-# windowed-agg core), order_priority_pivot (order_priority_melt
-# returning — the same priority reshaping, inverse direction),
-# tfidf_smoothed_long (tfidf_long — the same tf-idf core),
-# local_supplier_volume (customer_nation_revenue — join-agg family),
-# price_percentiles (doc_length_histogram returning +
-# vocab_heavy_hitters — the sketch/binning family), small_qty_part_
-# revenue (top_parts_by_revenue — the pre-agg join pair),
-# latest_event_per_user (customer_rolling_7d_revenue — window family),
-# leakage_safe_split + corpus_shuffle_order (corpus_train_split
-# returning — the same deterministic md5 split/order family),
-# multimodal_decode_features (multimodal_asset_stats +
-# multimodal_resize returning — the same decode plumbing),
-# ann_brute_force_topk (ann_recall_at_k embeds the same exact ground
-# truth; ann_ivf_topk returning). The four legs the round-11 verdict
-# graded weak-pending-A/B (decontam_fuzzy_overlap, dsir_selected_topk,
-# vocab_heavy_hitters, token_pack_assignments) stay IN deliberately so
-# BENCH_r12 re-measures them after the SCALING.md round-12 A/B.
-# Round 12 (second swap) — IN: ann_ivfpq_maintained_topk (new
-# registration, never benched; LIFECYCLE leg — prices build + two
-# takedown waves + vacuum + two-stage serve per call). OUT:
-# events_distinct_sketch (benched r9-r11; kin events_distinct_users —
-# the exact twin of the same distinct-count question — returns to the
-# bench this round).
-# Round 12 (third swap) — the full r9-benched debt due this round (13
-# queries, unbenched r10-r11) comes IN: order_priority_counts,
-# events_json_stats, customer_order_setops, sql_top_unshipped_orders,
-# supplier_nation_revenue, high_balance_inactive, promo_revenue_share,
-# semantic_delta_pairs, semantic_dedup_stats, doc_lm_scores,
-# bm25_search_topk, model_calibration_bins, ann_ivfpq_topk. OUT (13,
-# all benched r10+r11, kin stays benched r12): revenue_rollup
-# (promo_revenue_share returning + pricing_summary), dormant_customers
-# (high_balance_inactive + customer_order_setops returning),
-# customer_nation_revenue (supplier_nation_revenue returning — the
-# same nation join-agg shape), top_parts_by_revenue
-# (sql_top_unshipped_orders returning), events_tumbling_5m
-# (events_json_stats returning + events_gap_filled_hourly),
-# semantic_dedup_pairs (semantic_delta_pairs + semantic_dedup_stats
-# returning — the same SemDeDup machinery), dsir_selection_scores
-# (doc_lm_scores returning + dsir_selected_topk — the same scoring
-# frame), bm25_indexed_topk (bm25_search_topk returning, pinned
-# bit-identical + bm25_maintained_topk), quality_lr_filter
-# (model_calibration_bins returning + confusion_metrics),
-# ann_recall_at_k (ann_ivfpq_topk returning — its approx side verbatim
-# — + ivfpq_rerank_topk new), embedding_pq_codes (ann_ivfpq_topk +
-# embedding_quantization_stats returning this round), pii_scrub_stats
-# (markup_strip_stats — the same regex-scrub family),
-# events_asof_click_purchase (click_purchase_attribution). The four
-# A/B-flagged legs all keep their r12 rows.
-#
-# Round 13 swap — IN (12): the full round-11-OUT set, last benched r10
-# and due this round under the every-3-rounds rule
-# (salted_nation_revenue, top_orders_per_customer, quality_scores,
-# events_session_stats, embedding_centroid_topk,
-# dedup_canonical_corpus, corpus_stats_card, model_auc_eval,
-# line_dedup_stats, click_purchase_funnel, collocations_pmi_top50,
-# doc_length_quantiles). After this swap nothing non-excluded is
-# unbenched since before r11. OUT (12, all benched r12, kin stays
-# benched or returns this round):
-#   repetition_features     (quality_scores returning — the same
-#                            textstats scoring family — +
-#                            markup_strip_stats stays)
-#   confusion_metrics       (model_auc_eval returning — the same
-#                            prediction frame — + model_calibration_bins
-#                            stays)
-#   dup_ngram_coverage      (line_dedup_stats returning — the same
-#                            line/substring dedup stats)
-#   session_event_overlap   (events_session_stats returning — the same
-#                            sessionize machinery)
-#   embedding_rp_project    (embedding_centroid_topk returning +
-#                            embedding_quantization_stats stays)
-#   supplier_nation_revenue (salted_nation_revenue returning — the
-#                            same nation join-agg shape; benched r12,
-#                            an r12-IN leg yielding its slot)
-#   customer_rolling_7d_revenue (top_orders_per_customer returning —
-#                            the window/top-1-per-key family — +
-#                            customer_running_revenue stays)
-#   click_purchase_attribution (click_purchase_funnel returning —
-#                            composes the same click→purchase asof)
-#   order_priority_counts   (order_status_cube + order_priority_melt
-#                            both stay — the same grouped-count
-#                            reshaping family; an r12-IN leg yielding)
-#   doc_length_histogram    (doc_length_quantiles returning — the same
-#                            exact-binning family; an r12-IN leg
-#                            yielding)
-#   doc_token_stats         (corpus_stats_card returning — the same
-#                            textstats composition — + token_budget
-#                            stays)
-#   corpus_pipeline_funnel  (dedup_canonical_corpus returning —
-#                            composes the same canonical drop — +
-#                            curation_funnel / full_curation_funnel
-#                            stay as the LIFECYCLE pipeline reps)
-# zorder_file_envelopes stays IN deliberately: the r12 verdict graded
-# its 4.9 s reading weak-pending-A/B; BENCH_r13 re-measures it after
-# this round's SCALING.md A/B (the same protocol that exonerated the
-# four r11 flags).
-#
-# Round 13 (sixth swap, char budget) — the four r13-IN names are
-# 6-14 chars longer than the legs they replaced, and BENCH_r12's
-# parsed line already sat at 1,988 of the driver's 2,000-char capture
-# window: two more kin-covered legs yield their slots and per-leg
-# values drop to one decimal (see emit()). OUT: decontamination_overlap
-# (kin decontam_fuzzy_overlap stays benched — same benchmark-broadcast
-# family, fuzzy is the superset machinery; same kin pair as its r13
-# window demotion) and stratified_sample_by_lang (kin
-# corpus_train_split stays benched — the same deterministic
-# hash-sampling family, the r12 window-demotion kin in reverse), plus
-# embedding_quantization_stats (kin embedding_centroid_topk returned
-# this round — the embedding-compression family — and
-# embedding_rp_project's r13 bench-OUT used the same pairing) and
-# multimodal_asset_stats (kin multimodal_frame_sample stays benched —
-# the same binary-column plumbing). All four benched r12, due again
-# r15; 62 legs total, simulated worst-case line ~1,890 chars.
-#
-# Round 13 (fifth swap) — IN: ann_ivfpq_merged_topk (new
-# registration: parallel shard builds folded into one serving store —
-# two builds + merge + two-stage serve per call, a LIFECYCLE leg).
-# OUT: bm25_batch_topk (benched r12; kin bm25_search_topk returned
-# this round's swap and bm25_maintained_topk stays — all three share
-# the scoring core, pinned bit-identical; due again r15).
-#
-# Round 13 (fourth swap) — IN: ann_ivfpq_retrained_topk (new
-# registration: epoch maintenance — build + pinned coarse-quantizer
-# retrain through the compact seam + two-stage serve per call, a
-# LIFECYCLE leg). OUT: simhash_near_pairs (benched r12; kin
-# simhash_delta_pairs stays — the same banding/verify core over the
-# persisted index — and simhash_fingerprints stays benched; due r15).
-#
-# Round 13 (third swap) — IN: ann_ivfpq_filtered_topk (new
-# registration: multi-tenant/policy-scoped serve from the persisted
-# store — build + allowed-semi-join two-stage serve per call, a
-# LIFECYCLE leg). OUT: multimodal_resize (benched r12; kin
-# multimodal_asset_stats and multimodal_frame_sample both stay — the
-# same binary-column mapInArrow plumbing; due again r15).
-#
-# Round 13 (second swap) — IN: vector_index_rebalance_stats (new
-# registration, the vector store's drift-maintenance stage — build +
-# occupancy stats + hot-list hyperplane split + compact rewrite per
-# call, a LIFECYCLE leg). OUT: ann_ivfpq_topk (benched r12; kin
-# ivfpq_rerank_topk stays — it composes the identical ADC stage
-# verbatim at k=50 as its shortlist — and ann_ivfpq_maintained_topk
-# stays as the store-side serve of the same configuration; due again
-# r15 under the every-3-rounds rule).
+#   3. Every other registered query is benched at least once every 3
+#      rounds: a swap brings the stalest queries in and rotates out
+#      long-benched ones whose perf shape a still-benched kin covers
+#      (per-swap kin rationales: git log -p bench.py).
 
 
 def run_one(name: str, sf_dir: str, runs: int) -> None:
@@ -463,9 +256,6 @@ def main() -> None:
         if pending:
             out["pending"] = pending
         line = json.dumps(out, separators=(",", ":"))
-        if len(line) > 1850:  # headroom under the 2000-char tail capture
-            out["queries"] = {k: round(v, 1) for k, v in times.items()}
-            line = json.dumps(out, separators=(",", ":"))
         if len(line) > 1900:
             print("bench: line %d chars nears tail buffer" % len(line), file=sys.stderr)
         print(line, flush=True)

@@ -1730,7 +1730,7 @@ def load_exact_dedup_store(
     """The store's LIVE rows: the committed first-occurrence table
     minus tombstoned keys (one broadcast anti-join that disappears
     after a vacuum). This is the frame every reader of an
-    ``incremental_dedup_sink`` store should consume once takedowns are
+    ``dedup_store_upsert_batch`` store should consume once takedowns are
     in play."""
     spark.catalog.refreshTable(table)
     live = spark.table(table)
@@ -1746,7 +1746,7 @@ def remove_from_exact_dedup_store(
     spark, keys, table: str, key_cols: tuple = ("event_id",)
 ) -> int:
     """Logically DELETE keys from a persisted exact-dedup store
-    (streaming/sinks.incremental_dedup_sink's bucketed layout) through
+    (streaming/sinks.dedup_store_upsert_batch's bucketed layout) through
     the shared tombstone protocol (operators/store.py). Tombstoned rows
     leave every :func:`load_exact_dedup_store` read immediately;
     :func:`vacuum_exact_dedup_store` folds them out physically. A

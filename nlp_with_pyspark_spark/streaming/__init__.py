@@ -5,21 +5,14 @@ from .joins import (
 )
 from .sinks import (
     dedup_store_delete_batch,
-    dedup_store_delete_sink,
-    incremental_dedup_sink,
-    neardup_dedup_sink,
+    dedup_store_upsert_batch,
     neardup_delete_batch,
-    neardup_delete_sink,
     neardup_upsert_batch,
     search_index_delete_batch,
-    search_index_delete_sink,
-    search_index_sink,
     search_index_upsert_batch,
+    sink,
     takedown_fanout_batch,
-    takedown_fanout_sink,
     vector_index_delete_batch,
-    vector_index_delete_sink,
-    vector_index_sink,
     vector_index_upsert_batch,
 )
 from .stateful import gap_filled_stream, user_running_stats
@@ -36,31 +29,24 @@ from .windows import (
 __all__ = [
     "click_purchase_attribution",
     "dedup_store_delete_batch",
-    "dedup_store_delete_sink",
+    "dedup_store_upsert_batch",
     "events_stream_from_dir",
     "gap_filled_stream",
-    "incremental_dedup_sink",
     "interval_join_streams",
-    "neardup_dedup_sink",
     "neardup_delete_batch",
-    "neardup_delete_sink",
     "neardup_upsert_batch",
     "search_index_delete_batch",
-    "search_index_delete_sink",
-    "search_index_sink",
     "search_index_upsert_batch",
     "interval_join_streams_outer",
     "sessionized_stream",
+    "sink",
     "sliding_stream",
     "stream_to_parquet",
     "streaming_dedup",
     "streaming_dedup_within_watermark",
     "takedown_fanout_batch",
-    "takedown_fanout_sink",
     "tumbling_stream",
     "user_running_stats",
     "vector_index_delete_batch",
-    "vector_index_delete_sink",
-    "vector_index_sink",
     "vector_index_upsert_batch",
 ]

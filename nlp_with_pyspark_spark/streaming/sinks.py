@@ -1,14 +1,22 @@
 """Streaming sinks beyond the plain file sink (streaming/windows.py:
-stream_to_parquet): ``foreachBatch`` patterns for sinks Spark has no
-native writer for.
+stream_to_parquet): ``foreachBatch`` steps for the persisted stores
+Spark has no native writer for.
+
+Every store is driven one way: :func:`sink` runs a per-batch step —
+``*_upsert_batch`` to ingest, ``*_delete_batch`` to take down,
+:func:`takedown_fanout_batch` to take down from every store at once —
+on each micro-batch of a stream, e.g.
+``sink(stream, search_index_upsert_batch, ckpt, store_path=...,
+table_prefix=...)``. The step is the replayable unit: the same call
+runs a stream, a batch job or a test.
 
 ``foreachBatch`` hands each micro-batch to arbitrary batch code. Its
 delivery guarantee is AT-LEAST-ONCE — a retried batch re-runs the
-function with the same ``batch_id`` — so the function itself must be
-idempotent. The incremental-dedup sink below gets idempotence for free
-from its anti-join (a replayed batch finds its keys already in the
-store and appends nothing), which is exactly why dedup-on-ingest is the
-canonical foreachBatch example.
+step with the same ``batch_id`` — so every step is idempotent. The
+exact-dedup upsert gets idempotence for free from its anti-join (a
+replayed batch finds its keys already in the store and appends
+nothing), which is exactly why dedup-on-ingest is the canonical
+foreachBatch example.
 """
 
 from __future__ import annotations
@@ -21,12 +29,14 @@ from pyspark.sql import functions as F
 from ..operators import store
 
 
-def _run_foreach_batch(stream: DataFrame, fn, checkpoint: str):
-    """Run ``fn(batch_df, batch_id)`` on every micro-batch of ``stream``
+def sink(stream: DataFrame, step, checkpoint: str, **opts):
+    """Run ``step(batch_df, **opts)`` on every micro-batch of ``stream``
     until the input available at start is drained (``availableNow``),
-    checkpointed at ``checkpoint``; returns the finished query."""
+    checkpointed at ``checkpoint``; returns the finished query. A replay
+    from the checkpoint re-runs the step on the same batch, which every
+    store step treats as a no-op."""
     q = (
-        stream.writeStream.foreachBatch(fn)
+        stream.writeStream.foreachBatch(lambda batch_df, _: step(batch_df, **opts))
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
         .start()
@@ -35,26 +45,25 @@ def _run_foreach_batch(stream: DataFrame, fn, checkpoint: str):
     return q
 
 
-def incremental_dedup_sink(
-    stream_df: DataFrame,
+def dedup_store_upsert_batch(
+    batch_df: DataFrame,
     path: str,
-    checkpoint: str,
     key_cols: tuple[str, ...] = ("event_id",),
     *,
     table: str,
     n_buckets: int = 32,
     compact_threshold_files: int | None = None,
-):
-    """Continuously ingest a stream into a store, keeping only the FIRST
-    occurrence of each key — streaming exact dedup with a persistent,
-    queryable output (the batch counterpart is
-    operators/dedup.exact_dedup).
+) -> None:
+    """One exact-dedup-on-ingest step: append ``batch_df``'s rows to a
+    store, keeping only the FIRST occurrence of each key — streaming
+    exact dedup with a persistent, queryable output (the batch
+    counterpart is operators/dedup.exact_dedup).
 
     The store is the bucketed catalog table ``table`` (bucketed by
-    ``key_cols[0]``, data at ``path``), and every micro-batch runs the
-    shared append protocol (operators/store.py): open, admit — drop
-    in-batch duplicates, anti-join the batch against the store's key
-    column (read already partitioned on the join key: zero store-side
+    ``key_cols[0]``, data at ``path``), and the step runs the shared
+    append protocol (operators/store.py): open, admit — drop in-batch
+    duplicates, anti-join the batch against the store's key column
+    (read already partitioned on the join key: zero store-side
     Exchange, only the O(batch) side shuffles), scrub — then commit and
     compact past ``compact_threshold_files`` (appends add one file set
     per batch). Replayed batches are no-ops (idempotent under
@@ -63,16 +72,12 @@ def incremental_dedup_sink(
     is against all history, not a time window, and a session-scoped
     catalog loss is healed by re-registering over the surviving files.
     """
+    spark = batch_df.sparkSession
     spec = store.exact(table, key_cols)
-
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        store.open(spark, spec, path, n_buckets)
-        fresh, _ = store.admit(spark, spec, batch_df)
-        store.commit(spark, spec, path, n_buckets, {table: fresh})
-        store.compact(spark, spec, compact_threshold_files)
-
-    return _run_foreach_batch(stream_df, upsert, checkpoint)
+    store.open(spark, spec, path, n_buckets)
+    fresh, _ = store.admit(spark, spec, batch_df)
+    store.commit(spark, spec, path, n_buckets, {table: fresh})
+    store.compact(spark, spec, compact_threshold_files)
 
 
 def _neardup_family(
@@ -381,39 +386,6 @@ def neardup_upsert_batch(
     store.compact(spark, spec, compact_threshold_files)
 
 
-def neardup_dedup_sink(
-    stream_docs: DataFrame,
-    store_path: str,
-    checkpoint: str,
-    tokens_col: str = "tokens",
-    id_col: str = "doc_id",
-    threshold: float = 0.7,
-    **kwargs,
-):
-    """Streaming near-dup dedup-on-ingest: the near-dup extension of
-    ``incremental_dedup_sink`` (which dedups exact keys only). Each
-    micro-batch runs :func:`neardup_upsert_batch` against the persistent
-    store; the store's invariant — no near-dup pair among stored docs —
-    survives restarts and has no watermark bound. All
-    :func:`neardup_upsert_batch` knobs pass through: ``table_prefix``
-    (required: the store's bucketed tables), ``hash_family``
-    ('minhash' | 'simhash' | 'semantic' — the latter needs
-    ``centroids`` and an embedding ``tokens_col``),
-    ``compact_threshold_files`` (small-file maintenance)."""
-
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        neardup_upsert_batch(
-            batch_df,
-            store_path,
-            tokens_col=tokens_col,
-            id_col=id_col,
-            threshold=threshold,
-            **kwargs,
-        )
-
-    return _run_foreach_batch(stream_docs, upsert, checkpoint)
-
-
 def search_index_upsert_batch(
     batch_df: DataFrame,
     store_path: str,
@@ -457,30 +429,6 @@ def search_index_upsert_batch(
     store.compact(spark, spec, compact_threshold_files)
 
 
-def search_index_sink(
-    stream_docs: DataFrame,
-    store_path: str,
-    checkpoint: str,
-    tokens_col: str = "tokens",
-    id_col: str = "doc_id",
-    **kwargs,
-):
-    """Streaming search-index-on-ingest: each micro-batch runs
-    :func:`search_index_upsert_batch` against the persistent inverted
-    index, so a BM25 query (``bm25_topk_indexed`` over
-    ``load_posting_index``) serves every document as soon as its batch
-    commits. All upsert knobs pass through (``table_prefix`` for the
-    bucketed 100 TB layout, ``compact_threshold_files`` for small-file
-    maintenance)."""
-
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        search_index_upsert_batch(
-            batch_df, store_path, tokens_col=tokens_col, id_col=id_col, **kwargs
-        )
-
-    return _run_foreach_batch(stream_docs, upsert, checkpoint)
-
-
 def neardup_delete_batch(
     batch_df: DataFrame,
     table_prefix: str,
@@ -509,36 +457,6 @@ def neardup_delete_batch(
         lambda: vacuum_neardup_store(spark, table_prefix, hash_family, id_col=id_col),
     )
 
-def neardup_delete_sink(
-    stream_ids: DataFrame,
-    table_prefix: str,
-    checkpoint: str,
-    hash_family: str = "minhash",
-    id_col: str = "doc_id",
-    vacuum_threshold_tombstones: int | None = None,
-):
-    """Streaming takedowns against a persisted survivor store: each
-    micro-batch of doc ids is tombstoned via
-    :func:`neardup_delete_batch` — the delete twin of
-    :func:`neardup_dedup_sink`, completing the right-to-be-forgotten
-    story for all three dedup families exactly as
-    :func:`search_index_delete_sink` does for the posting index
-    (takedowns arrive as streams exactly like ingest does). Replaying a
-    batch from the checkpoint is a no-op, and the optional vacuum
-    threshold keeps the store physically bounded under an unbounded
-    delete stream."""
-
-    def delete(batch_df: DataFrame, batch_id: int) -> None:
-        neardup_delete_batch(
-            batch_df,
-            table_prefix,
-            hash_family=hash_family,
-            id_col=id_col,
-            vacuum_threshold_tombstones=vacuum_threshold_tombstones,
-        )
-
-    return _run_foreach_batch(stream_ids, delete, checkpoint)
-
 
 def dedup_store_delete_batch(
     batch_df: DataFrame,
@@ -548,7 +466,7 @@ def dedup_store_delete_batch(
 ) -> int:
     """One streaming takedown step against an exact-dedup store
     (operators/dedup.remove_from_exact_dedup_store — the delete half of
-    :func:`incremental_dedup_sink`'s append), with the threshold vacuum
+    :func:`dedup_store_upsert_batch`'s append), with the threshold vacuum
     of operators/store.delete_batch. Returns the number of newly
     tombstoned keys."""
     from ..operators.dedup import (
@@ -566,30 +484,6 @@ def dedup_store_delete_batch(
         ),
         lambda: vacuum_exact_dedup_store(spark, table, key_cols=key_cols),
     )
-
-def dedup_store_delete_sink(
-    stream_keys: DataFrame,
-    table: str,
-    checkpoint: str,
-    key_cols: tuple[str, ...] = ("event_id",),
-    vacuum_threshold_tombstones: int | None = None,
-):
-    """Streaming takedowns against a persisted exact-dedup store — the
-    delete twin of :func:`incremental_dedup_sink`, completing the
-    right-to-be-forgotten story for the fourth and last persisted
-    store family (posting index, three near-dup families, exact
-    dedup). Replays are no-ops; the optional vacuum threshold keeps
-    the store physically bounded under an unbounded delete stream."""
-
-    def delete(batch_df: DataFrame, batch_id: int) -> None:
-        dedup_store_delete_batch(
-            batch_df,
-            table,
-            key_cols=key_cols,
-            vacuum_threshold_tombstones=vacuum_threshold_tombstones,
-        )
-
-    return _run_foreach_batch(stream_keys, delete, checkpoint)
 
 
 def search_index_delete_batch(
@@ -614,6 +508,7 @@ def search_index_delete_batch(
         lambda: remove_from_posting_index(spark, batch_df.select(id_col), table_prefix),
         lambda: vacuum_posting_index(spark, table_prefix),
     )
+
 
 def vector_index_upsert_batch(
     batch_df: DataFrame,
@@ -660,38 +555,6 @@ def vector_index_upsert_batch(
     return n
 
 
-def vector_index_sink(
-    stream_df: DataFrame,
-    store_path: str,
-    checkpoint: str,
-    centroids: list,
-    codebooks: list,
-    table_prefix: str,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    n_buckets: int = 8,
-    compact_threshold_files: int | None = None,
-):
-    """Streaming ingest into the persisted IVF-PQ store — one
-    :func:`vector_index_upsert_batch` per micro-batch, idempotent under
-    foreachBatch's at-least-once replay."""
-
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        vector_index_upsert_batch(
-            batch_df,
-            store_path,
-            centroids,
-            codebooks,
-            table_prefix,
-            vec_col=vec_col,
-            id_col=id_col,
-            n_buckets=n_buckets,
-            compact_threshold_files=compact_threshold_files,
-        )
-
-    return _run_foreach_batch(stream_df, upsert, checkpoint)
-
-
 def vector_index_delete_batch(
     batch_df: DataFrame,
     table_prefix: str,
@@ -713,28 +576,6 @@ def vector_index_delete_batch(
         lambda: remove_from_vector_index(spark, batch_df.select(id_col), table_prefix),
         lambda: vacuum_vector_index(spark, table_prefix),
     )
-
-def vector_index_delete_sink(
-    stream_ids: DataFrame,
-    table_prefix: str,
-    checkpoint: str,
-    id_col: str = "vec_id",
-    vacuum_threshold_tombstones: int | None = None,
-):
-    """Streaming takedowns against the persisted vector index — ANN
-    stops retrieving a vector as soon as its takedown batch commits
-    (embeddings are user-derived data; right-to-be-forgotten must purge
-    the vector store as surely as the text indexes)."""
-
-    def delete(batch_df: DataFrame, batch_id: int) -> None:
-        vector_index_delete_batch(
-            batch_df,
-            table_prefix,
-            id_col=id_col,
-            vacuum_threshold_tombstones=vacuum_threshold_tombstones,
-        )
-
-    return _run_foreach_batch(stream_ids, delete, checkpoint)
 
 
 #: takedown target kind → (delete step, store-name key, {option: default})
@@ -789,48 +630,3 @@ def takedown_fanout_batch(batch_df: DataFrame, targets: list[dict]) -> dict:
             **{k: t.get(k, default) for k, default in opts.items()},
         )
     return out
-
-
-def takedown_fanout_sink(
-    stream_ids: DataFrame, targets: list[dict], checkpoint: str
-):
-    """One takedown-id stream driving EVERY persisted store the engine
-    keeps — posting index, near-dup survivor stores, exact-dedup store,
-    IVF-PQ vector index
-    — through a single checkpointed sink (:func:`takedown_fanout_batch`
-    per micro-batch). A replay after a crash anywhere in the fan-out
-    converges: stores that already committed their delete re-tombstone
-    nothing. The per-store vacuum thresholds keep every tombstone list
-    broadcast-small under an unbounded delete stream."""
-
-    def delete(batch_df: DataFrame, batch_id: int) -> None:
-        takedown_fanout_batch(batch_df, targets)
-
-    return _run_foreach_batch(stream_ids, delete, checkpoint)
-
-
-def search_index_delete_sink(
-    stream_ids: DataFrame,
-    table_prefix: str,
-    checkpoint: str,
-    id_col: str = "doc_id",
-    vacuum_threshold_tombstones: int | None = None,
-):
-    """Streaming takedowns against a persisted posting index: each
-    micro-batch of doc ids is tombstoned via
-    :func:`search_index_delete_batch`, so a BM25 query stops serving a
-    document as soon as its takedown batch commits — the delete twin of
-    :func:`search_index_sink` (takedowns arrive as streams exactly like
-    ingest does). Replaying a batch from the checkpoint is a no-op (the
-    tombstone anti-join), and the optional vacuum threshold keeps the
-    store physically bounded under an unbounded delete stream."""
-
-    def delete(batch_df: DataFrame, batch_id: int) -> None:
-        search_index_delete_batch(
-            batch_df,
-            table_prefix,
-            id_col=id_col,
-            vacuum_threshold_tombstones=vacuum_threshold_tombstones,
-        )
-
-    return _run_foreach_batch(stream_ids, delete, checkpoint)

@@ -1,5 +1,6 @@
 """The lifecycle of every persisted store family in the default run, on
-stores of at most 200 rows: remove → replay → restart heal → vacuum
+stores of at most 200 rows: remove → replay (the family's delete step
+run by ``sink`` under foreachBatch) → restart heal → vacuum
 crashed between fold and clear → (sink-fed stores: a full catalog loss)
 → re-ingest → vacuum; and a vector sink whose first batch crashed.
 
@@ -68,6 +69,11 @@ class _Posting:
         from nlp_with_pyspark_spark.operators.search import vacuum_posting_index
 
         return vacuum_posting_index(self.spark, self.prefix)
+
+    def delete_step(self):
+        from nlp_with_pyspark_spark.streaming.sinks import search_index_delete_batch
+
+        return search_index_delete_batch, "doc_id long", {"table_prefix": self.prefix}
 
     def live(self):
         from nlp_with_pyspark_spark.operators.search import load_posting_index
@@ -170,6 +176,11 @@ class _Vector:
 
         return vacuum_vector_index(self.spark, self.prefix)
 
+    def delete_step(self):
+        from nlp_with_pyspark_spark.streaming.sinks import vector_index_delete_batch
+
+        return vector_index_delete_batch, "vec_id long", {"table_prefix": self.prefix}
+
     def live(self):
         from nlp_with_pyspark_spark.operators.vector_store import vector_index_tombstones
 
@@ -223,6 +234,11 @@ class _NeardupMinhash:
 
         return vacuum_neardup_store(self.spark, self.prefix, "minhash", id_col="id")
 
+    def delete_step(self):
+        from nlp_with_pyspark_spark.streaming.sinks import neardup_delete_batch
+
+        return neardup_delete_batch, "id int", {"table_prefix": self.prefix, "id_col": "id"}
+
     def live(self):
         from nlp_with_pyspark_spark.operators.dedup import neardup_store_tombstones
 
@@ -269,13 +285,18 @@ class _Exact:
 
         return vacuum_exact_dedup_store(self.spark, self.table)
 
+    def delete_step(self):
+        from nlp_with_pyspark_spark.streaming.sinks import dedup_store_delete_batch
+
+        return dedup_store_delete_batch, "event_id long", {"table": self.table}
+
     def live(self):
         from nlp_with_pyspark_spark.operators.dedup import exact_dedup_store_tombstones
 
         return exact_dedup_store_tombstones(self.spark, self.table)
 
     def ingest(self, ids):
-        from nlp_with_pyspark_spark.streaming.sinks import incremental_dedup_sink
+        from nlp_with_pyspark_spark.streaming.sinks import dedup_store_upsert_batch, sink
 
         self.n_ingest += 1
         src = f"{self.tmp}/src{self.n_ingest}"
@@ -283,8 +304,9 @@ class _Exact:
             [(int(i), f"e{i}") for i in ids], "event_id long, payload string"
         ).coalesce(1).write.parquet(src)
         stream = self.spark.readStream.schema("event_id long, payload string").parquet(src)
-        incremental_dedup_sink(
-            stream, self.path, f"{self.tmp}/ck{self.n_ingest}", table=self.table, n_buckets=4
+        sink(
+            stream, dedup_store_upsert_batch, f"{self.tmp}/ck{self.n_ingest}",
+            path=self.path, table=self.table, n_buckets=4,
         )
 
     def served(self):
@@ -294,6 +316,23 @@ class _Exact:
 
     def tables(self):
         return [self.table, f"{self.table}_tombstones"]
+
+
+def _remove_through_sink(spark, store, ids, tmp):
+    """Run the family's delete step on ``ids`` as one micro-batch of a
+    stream through ``sink``; returns what the step returned per batch."""
+    from nlp_with_pyspark_spark.streaming.sinks import sink
+
+    step, ddl, opts = store.delete_step()
+    src = f"{tmp}/takedown"
+    spark.createDataFrame([(i,) for i in ids], ddl).coalesce(1).write.parquet(src)
+    counts = []
+
+    def recorded(batch_df, **kw):
+        counts.append(step(batch_df, **kw))
+
+    sink(spark.readStream.schema(ddl).parquet(src), recorded, f"{tmp}/takedown_ck", **opts)
+    return counts
 
 
 FAMILIES = {
@@ -312,9 +351,10 @@ def test_tombstone_lifecycle_matrix(spark, sf_dir, tmp_path, monkeypatch, family
     everything = set(range(N))
     try:
         assert store.served() == everything
-        # remove returns n, then 0 on replay; a never-stored id is ignored
+        # remove returns n, then 0 on replay (the family's delete step
+        # under foreachBatch); a never-stored id is ignored
         assert store.remove(DEAD) == len(DEAD)
-        assert store.remove(DEAD) == 0
+        assert _remove_through_sink(spark, store, DEAD, str(tmp_path)) == [0]
         assert store.remove([NEVER_STORED]) == 0
 
         # restart: the catalog entry goes, the sidecar dir stays; the

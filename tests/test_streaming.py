@@ -428,7 +428,7 @@ def test_incremental_dedup_sink_across_batches(spark, tmp_path):
     """foreachBatch dedup-on-ingest: a key arriving again in a LATER
     micro-batch (beyond any dropDuplicates state window) must not reach
     the store twice; replaying the drained stream appends nothing."""
-    from nlp_with_pyspark_spark.streaming.sinks import incremental_dedup_sink
+    from nlp_with_pyspark_spark.streaming.sinks import dedup_store_upsert_batch, sink
     from nlp_with_pyspark_spark.streaming.windows import events_stream_from_dir
 
     base = 1_700_000_000_000_000
@@ -449,11 +449,13 @@ def test_incremental_dedup_sink_across_batches(spark, tmp_path):
     tbl = "t_exact_across"
     try:
         stream = events_stream_from_dir(spark, str(src / "f*"), max_files_per_trigger=1)
-        incremental_dedup_sink(stream, store, ckpt, table=tbl, n_buckets=4)
+        sink(stream, dedup_store_upsert_batch, ckpt, path=store, table=tbl, n_buckets=4)
         assert _stored(spark, tbl, "event_id") == [1, 2, 3]
         # resume from the same checkpoint: no new input, store unchanged
         stream2 = events_stream_from_dir(spark, str(src / "f*"), max_files_per_trigger=1)
-        incremental_dedup_sink(stream2, store, ckpt, table=tbl, n_buckets=4)
+        sink(
+            stream2, dedup_store_upsert_batch, ckpt, path=store, table=tbl, n_buckets=4
+        )
         assert _stored(spark, tbl, "event_id") == [1, 2, 3]
     finally:
         _drop_tables(spark, tbl)
@@ -628,7 +630,7 @@ def test_incremental_dedup_sink_fails_on_store_schema_mismatch(spark, tmp_path):
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
     from nlp_with_pyspark_spark.sources.io import write_bucketed
-    from nlp_with_pyspark_spark.streaming.sinks import incremental_dedup_sink
+    from nlp_with_pyspark_spark.streaming.sinks import dedup_store_upsert_batch, sink
     from nlp_with_pyspark_spark.streaming.windows import events_stream_from_dir
 
     base = 1_700_000_000_000_000
@@ -644,8 +646,9 @@ def test_incremental_dedup_sink_fails_on_store_schema_mismatch(spark, tmp_path):
         )
         stream = events_stream_from_dir(spark, str(src / "f*"))
         with pytest.raises(StreamingQueryException):
-            incremental_dedup_sink(
-                stream, store, str(tmp_path / "mm_ckpt"), table=tbl, n_buckets=4
+            sink(
+                stream, dedup_store_upsert_batch, str(tmp_path / "mm_ckpt"),
+                path=store, table=tbl, n_buckets=4
             )
         assert _stored(spark, tbl, "other_id") == [99]
     finally:
@@ -661,7 +664,7 @@ def test_incremental_dedup_sink_replay_after_crash(spark, tmp_path):
     checkpoint replays the whole stream against the populated store."""
     import os
 
-    from nlp_with_pyspark_spark.streaming.sinks import incremental_dedup_sink
+    from nlp_with_pyspark_spark.streaming.sinks import dedup_store_upsert_batch, sink
     from nlp_with_pyspark_spark.streaming.windows import events_stream_from_dir
 
     base = 1_700_000_000_000_000
@@ -683,7 +686,7 @@ def test_incremental_dedup_sink_replay_after_crash(spark, tmp_path):
     kw = dict(table=tbl, n_buckets=4)
     try:
         stream = events_stream_from_dir(spark, str(src / "f*"), max_files_per_trigger=1)
-        incremental_dedup_sink(stream, store, ckpt, **kw)
+        sink(stream, dedup_store_upsert_batch, ckpt, path=store, **kw)
         assert _stored(spark, tbl, "event_id") == [1, 2, 3]
 
         # crash window: last batch appended to the store, commit marker lost
@@ -695,13 +698,16 @@ def test_incremental_dedup_sink_replay_after_crash(spark, tmp_path):
         if os.path.exists(crc):
             os.remove(crc)
         stream2 = events_stream_from_dir(spark, str(src / "f*"), max_files_per_trigger=1)
-        incremental_dedup_sink(stream2, store, ckpt, **kw)
+        sink(stream2, dedup_store_upsert_batch, ckpt, path=store, **kw)
         ids = _stored(spark, tbl, "event_id")
         assert ids == [1, 2, 3], f"replayed batch duplicated keys: {ids}"
 
         # total checkpoint loss: the WHOLE stream replays against the store
         stream3 = events_stream_from_dir(spark, str(src / "f*"), max_files_per_trigger=1)
-        incremental_dedup_sink(stream3, store, str(tmp_path / "ckpt_fresh"), **kw)
+        sink(
+            stream3, dedup_store_upsert_batch, str(tmp_path / "ckpt_fresh"),
+            path=store, **kw,
+        )
         ids = _stored(spark, tbl, "event_id")
         assert ids == [1, 2, 3], f"full replay duplicated keys: {ids}"
     finally:
@@ -750,7 +756,7 @@ def test_enrich_stream_matches_batch(spark, tmp_path):
 
 def test_neardup_sink_invariants_and_replay(spark, sf_dir, tmp_path, request):
     """Streaming minhash dedup-on-ingest (streaming/sinks.py
-    neardup_dedup_sink): (1) the store invariant — no near-dup pair
+    ``sink`` over neardup_upsert_batch): (1) the store invariant — no near-dup pair
     among stored docs; (2) every dropped doc had batch-global cause;
     (3) the index tables track the stored docs exactly; (4) replaying
     the drained stream appends nothing."""
@@ -759,7 +765,7 @@ def test_neardup_sink_invariants_and_replay(spark, sf_dir, tmp_path, request):
     from nlp_with_pyspark_spark.functions.text import tokens_pipeline
     from nlp_with_pyspark_spark.operators.dedup import minhash_dedup_pairs
     from nlp_with_pyspark_spark.sources.io import read_table
-    from nlp_with_pyspark_spark.streaming.sinks import neardup_dedup_sink
+    from nlp_with_pyspark_spark.streaming.sinks import neardup_upsert_batch, sink
 
     docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
     # three arrival batches in doc_id order, one parquet file each
@@ -789,8 +795,9 @@ def test_neardup_sink_invariants_and_replay(spark, sf_dir, tmp_path, request):
             .parquet(str(src / "b*"))
             .withColumn("tokens", tokens_pipeline(F.col("text")))
         )
-        neardup_dedup_sink(
-            stream, store, ckpt, threshold=0.2, table_prefix=prefix, n_buckets=4
+        sink(
+            stream, neardup_upsert_batch, ckpt,
+            store_path=store, threshold=0.2, table_prefix=prefix, n_buckets=4
         )
 
     run_sink()
@@ -1202,7 +1209,7 @@ def test_incremental_dedup_sink_bucketed_table(spark, tmp_path):
     the plain layout, replay appends nothing, compaction wired, and the
     replay guard reads the store with zero store-side Exchange."""
     from nlp_with_pyspark_spark.plans import exchanges_covering, plan_string
-    from nlp_with_pyspark_spark.streaming.sinks import incremental_dedup_sink
+    from nlp_with_pyspark_spark.streaming.sinks import dedup_store_upsert_batch, sink
     from nlp_with_pyspark_spark.streaming.windows import events_stream_from_dir
 
     base = 1_700_000_000_000_000
@@ -1223,14 +1230,17 @@ def test_incremental_dedup_sink_bucketed_table(spark, tmp_path):
     tbl = "t_exact_sink"
     try:
         stream = events_stream_from_dir(spark, str(src / "f*"), max_files_per_trigger=1)
-        incremental_dedup_sink(
-            stream, store, ckpt, table=tbl, n_buckets=4, compact_threshold_files=2
+        sink(
+            stream, dedup_store_upsert_batch, ckpt,
+            path=store, table=tbl, n_buckets=4, compact_threshold_files=2
         )
         ids = sorted(r.event_id for r in spark.table(tbl).select("event_id").collect())
         assert ids == [1, 2, 3]
         # resume from the same checkpoint: no new input ⇒ unchanged
         stream2 = events_stream_from_dir(spark, str(src / "f*"), max_files_per_trigger=1)
-        incremental_dedup_sink(stream2, store, ckpt, table=tbl, n_buckets=4)
+        sink(
+            stream2, dedup_store_upsert_batch, ckpt, path=store, table=tbl, n_buckets=4
+        )
         assert sorted(
             r.event_id for r in spark.table(tbl).select("event_id").collect()
         ) == [1, 2, 3]
@@ -1604,7 +1614,7 @@ def test_search_index_streaming_sink_end_to_end(spark, tmp_path, request):
         bm25_topk,
         bm25_topk_indexed,
     )
-    from nlp_with_pyspark_spark.streaming.sinks import search_index_sink
+    from nlp_with_pyspark_spark.streaming.sinks import search_index_upsert_batch, sink
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
         "doc_id", "text"
@@ -1628,7 +1638,10 @@ def test_search_index_streaming_sink_end_to_end(spark, tmp_path, request):
             .parquet(str(src / "b*"))
             .withColumn("tokens", tokens_pipeline(F.col("text")))
         )
-        search_index_sink(stream, store, ckpt, table_prefix=prefix, n_buckets=4)
+        sink(
+            stream, search_index_upsert_batch, ckpt,
+            store_path=store, table_prefix=prefix, n_buckets=4,
+        )
 
     run()
     # the store's dirs read back as plain parquet too
@@ -1833,7 +1846,7 @@ def test_search_index_delete_sink_stream_equals_batch(spark, sf_dir, tmp_path):
         load_posting_index,
         persist_posting_index,
     )
-    from nlp_with_pyspark_spark.streaming.sinks import search_index_delete_sink
+    from nlp_with_pyspark_spark.streaming.sinks import search_index_delete_batch, sink
 
     toks = _neardup_toks(spark, sf_dir).localCheckpoint()
     prefix = "t_sidx_delsink"
@@ -1859,7 +1872,7 @@ def test_search_index_delete_sink_stream_equals_batch(spark, sf_dir, tmp_path):
                 .option("maxFilesPerTrigger", 1)
                 .parquet(str(src / "b*"))
             )
-            search_index_delete_sink(stream, prefix, ckpt)
+            sink(stream, search_index_delete_batch, ckpt, table_prefix=prefix)
 
         run()
         live = toks.where(F.col("doc_id") % 6 != 0)
@@ -2009,7 +2022,7 @@ def test_dsir_gate_then_search_index_ingest(spark, tmp_path, request):
         dsir_scores,
         dsir_weights,
     )
-    from nlp_with_pyspark_spark.streaming.sinks import search_index_sink
+    from nlp_with_pyspark_spark.streaming.sinks import search_index_upsert_batch, sink
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
         "doc_id", "text", "lang"
@@ -2039,8 +2052,9 @@ def test_dsir_gate_then_search_index_ingest(spark, tmp_path, request):
     request.addfinalizer(
         lambda: _drop_tables(spark, *(f"{prefix}_{t}" for t in ("postings", "docs", "stats")))
     )
-    search_index_sink(
-        gated, store, str(tmp_path / "gate_ckpt"), table_prefix=prefix, n_buckets=4
+    sink(
+        gated, search_index_upsert_batch, str(tmp_path / "gate_ckpt"),
+        store_path=store, table_prefix=prefix, n_buckets=4
     )
 
     kept = toks.where(
@@ -2264,7 +2278,7 @@ def test_neardup_takedown_unsuppresses_future_neardups(
 @pytest.mark.parametrize("family", ["minhash", "simhash", "semantic"])
 def test_neardup_delete_sink_stream_equals_batch(spark, sf_dir, tmp_path, family):
     """Streaming takedowns ≡ batch takedowns, per family: ids arriving
-    as a file stream through ``neardup_delete_sink`` leave the store in
+    as a file stream through ``sink`` over ``neardup_delete_batch`` leave the store in
     exactly the filtered-snapshot state the batch delete + vacuum
     produces (the vacuum threshold fires on the last micro-batch), and
     replaying the whole stream against a fresh checkpoint is a no-op."""
@@ -2273,8 +2287,9 @@ def test_neardup_delete_sink_stream_equals_batch(spark, sf_dir, tmp_path, family
         neardup_store_tombstones,
     )
     from nlp_with_pyspark_spark.streaming.sinks import (
-        neardup_delete_sink,
+        neardup_delete_batch,
         neardup_upsert_batch,
+        sink,
     )
 
     kw, corpus, id_col = _takedown_setup(spark, sf_dir, family)
@@ -2306,10 +2321,11 @@ def test_neardup_delete_sink_stream_equals_batch(spark, sf_dir, tmp_path, family
             .option("maxFilesPerTrigger", 1)
             .parquet(str(src / "b*"))
         )
-        neardup_delete_sink(
+        sink(
             stream,
-            prefix,
+            neardup_delete_batch,
             str(tmp_path / "ckpt1"),
+            table_prefix=prefix,
             hash_family=family,
             id_col=id_col,
             vacuum_threshold_tombstones=len(dead),
@@ -2333,10 +2349,11 @@ def test_neardup_delete_sink_stream_equals_batch(spark, sf_dir, tmp_path, family
             .option("maxFilesPerTrigger", 1)
             .parquet(str(src / "b*"))
         )
-        neardup_delete_sink(
+        sink(
             stream2,
-            prefix,
+            neardup_delete_batch,
             str(tmp_path / "ckpt2"),
+            table_prefix=prefix,
             hash_family=family,
             id_col=id_col,
             vacuum_threshold_tombstones=len(dead),
@@ -2378,7 +2395,7 @@ def test_exact_dedup_store_takedown(spark, tmp_path):
         register_bucketed_table,
         table_bucket_spec,
     )
-    from nlp_with_pyspark_spark.streaming.sinks import incremental_dedup_sink
+    from nlp_with_pyspark_spark.streaming.sinks import dedup_store_upsert_batch, sink
     from nlp_with_pyspark_spark.streaming.windows import events_stream_from_dir
 
     base = 1_700_000_000_000_000
@@ -2393,8 +2410,9 @@ def test_exact_dedup_store_takedown(spark, tmp_path):
     tbl = "t_exact_takedown"
     try:
         stream = events_stream_from_dir(spark, str(src / "f*"), max_files_per_trigger=1)
-        incremental_dedup_sink(
-            stream, store, str(tmp_path / "ck1"), table=tbl, n_buckets=4
+        sink(
+            stream, dedup_store_upsert_batch, str(tmp_path / "ck1"),
+            path=store, table=tbl, n_buckets=4
         )
         snap = _exact_store_rows(spark, tbl)
         assert len(snap) == 6
@@ -2410,8 +2428,9 @@ def test_exact_dedup_store_takedown(spark, tmp_path):
         # re-admitted (the guard still sees the stored row)
         _write_events_file(spark, src / "f2", [rows[1]])  # event_id 2
         stream2 = events_stream_from_dir(spark, str(src / "f*"), max_files_per_trigger=1)
-        incremental_dedup_sink(
-            stream2, store, str(tmp_path / "ck2"), table=tbl, n_buckets=4
+        sink(
+            stream2, dedup_store_upsert_batch, str(tmp_path / "ck2"),
+            path=store, table=tbl, n_buckets=4
         )
         assert sorted(
             r.event_id for r in load_exact_dedup_store(spark, tbl).collect()
@@ -2438,8 +2457,9 @@ def test_exact_dedup_store_takedown(spark, tmp_path):
         # occurrence (a fresh checkpoint replays all files; only the
         # genuinely-missing key lands)
         stream3 = events_stream_from_dir(spark, str(src / "f*"), max_files_per_trigger=1)
-        incremental_dedup_sink(
-            stream3, store, str(tmp_path / "ck3"), table=tbl, n_buckets=4
+        sink(
+            stream3, dedup_store_upsert_batch, str(tmp_path / "ck3"),
+            path=store, table=tbl, n_buckets=4
         )
         assert sorted(
             r.event_id for r in load_exact_dedup_store(spark, tbl).collect()
@@ -2458,8 +2478,9 @@ def test_dedup_store_delete_sink_stream_equals_batch(spark, tmp_path):
         exact_dedup_store_tombstones,
     )
     from nlp_with_pyspark_spark.streaming.sinks import (
-        dedup_store_delete_sink,
-        incremental_dedup_sink,
+        dedup_store_delete_batch,
+        dedup_store_upsert_batch,
+        sink,
     )
     from nlp_with_pyspark_spark.streaming.windows import events_stream_from_dir
 
@@ -2475,8 +2496,9 @@ def test_dedup_store_delete_sink_stream_equals_batch(spark, tmp_path):
     tbl = "t_exact_delsink"
     try:
         stream = events_stream_from_dir(spark, str(src / "f*"), max_files_per_trigger=1)
-        incremental_dedup_sink(
-            stream, store, str(tmp_path / "ck"), table=tbl, n_buckets=4
+        sink(
+            stream, dedup_store_upsert_batch, str(tmp_path / "ck"),
+            path=store, table=tbl, n_buckets=4
         )
         snap = _exact_store_rows(spark, tbl)
         dead = [2, 4, 6, 8]
@@ -2491,8 +2513,8 @@ def test_dedup_store_delete_sink_stream_equals_batch(spark, tmp_path):
             .option("maxFilesPerTrigger", 1)
             .parquet(str(ids_src / "b*"))
         )
-        dedup_store_delete_sink(
-            key_stream, tbl, str(tmp_path / "dck1"),
+        sink(
+            key_stream, dedup_store_delete_batch, str(tmp_path / "dck1"), table=tbl,
             vacuum_threshold_tombstones=len(dead),
         )
         spark.catalog.refreshTable(tbl)
@@ -2505,8 +2527,8 @@ def test_dedup_store_delete_sink_stream_equals_batch(spark, tmp_path):
             .option("maxFilesPerTrigger", 1)
             .parquet(str(ids_src / "b*"))
         )
-        dedup_store_delete_sink(
-            key_stream2, tbl, str(tmp_path / "dck2"),
+        sink(
+            key_stream2, dedup_store_delete_batch, str(tmp_path / "dck2"), table=tbl,
             vacuum_threshold_tombstones=len(dead),
         )
         spark.catalog.refreshTable(tbl)
@@ -2589,7 +2611,7 @@ def test_exact_store_upsert_scrubs_stale_tombstone_after_crashed_vacuum(
         remove_from_exact_dedup_store,
         vacuum_exact_dedup_store,
     )
-    from nlp_with_pyspark_spark.streaming.sinks import incremental_dedup_sink
+    from nlp_with_pyspark_spark.streaming.sinks import dedup_store_upsert_batch, sink
     from nlp_with_pyspark_spark.streaming.windows import events_stream_from_dir
 
     base = 1_700_000_000_000_000
@@ -2604,8 +2626,9 @@ def test_exact_store_upsert_scrubs_stale_tombstone_after_crashed_vacuum(
     tbl = "t_exact_crashwin"
     try:
         stream = events_stream_from_dir(spark, str(src / "f*"), max_files_per_trigger=1)
-        incremental_dedup_sink(
-            stream, store, str(tmp_path / "ck1"), table=tbl, n_buckets=4
+        sink(
+            stream, dedup_store_upsert_batch, str(tmp_path / "ck1"),
+            path=store, table=tbl, n_buckets=4
         )
         snap = _exact_store_rows(spark, tbl)
         dead = [2, 4]
@@ -2621,8 +2644,9 @@ def test_exact_store_upsert_scrubs_stale_tombstone_after_crashed_vacuum(
         # fresh-checkpoint replay re-ingests the folded keys — admitted
         # (the table lacks them) and their stale tombstone rows scrubbed
         stream2 = events_stream_from_dir(spark, str(src / "f*"), max_files_per_trigger=1)
-        incremental_dedup_sink(
-            stream2, store, str(tmp_path / "ck2"), table=tbl, n_buckets=4
+        sink(
+            stream2, dedup_store_upsert_batch, str(tmp_path / "ck2"),
+            path=store, table=tbl, n_buckets=4
         )
         assert exact_dedup_store_tombstones(spark, tbl) is None
         # refresh: the outer session's file-listing cache predates the
@@ -2755,7 +2779,8 @@ def test_takedown_fanout_hits_every_store(spark, sf_dir, tmp_path):
     )
     from nlp_with_pyspark_spark.streaming.sinks import (
         neardup_upsert_batch,
-        takedown_fanout_sink,
+        sink,
+        takedown_fanout_batch,
     )
 
     toks = _neardup_toks(spark, sf_dir).localCheckpoint()
@@ -2792,7 +2817,7 @@ def test_takedown_fanout_hits_every_store(spark, sf_dir, tmp_path):
                 .option("maxFilesPerTrigger", 1)
                 .parquet(str(src / "b*"))
             )
-            takedown_fanout_sink(stream, targets, str(tmp_path / ck))
+            sink(stream, takedown_fanout_batch, str(tmp_path / ck), targets=targets)
 
         run("ck1")
         # posting index: answers equal the direct path over the live corpus

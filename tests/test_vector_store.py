@@ -314,11 +314,11 @@ def test_register_recovers_nondefault_bucket_count(spark, emb, quantizer, tmp_pa
 
 
 def test_streaming_ingest_sink_converges(spark, emb, quantizer, tmp_path):
-    """Two micro-batches through vector_index_sink build the same store
-    as a one-shot persist of their union (codes AND vecs tables
+    """Two micro-batches through ``sink`` over vector_index_upsert_batch
+    build the same store as a one-shot persist of their union (codes AND vecs tables
     row-identical), and a full replay against a fresh checkpoint
     changes nothing — foreachBatch at-least-once convergence."""
-    from nlp_with_pyspark_spark.streaming.sinks import vector_index_sink
+    from nlp_with_pyspark_spark.streaming.sinks import sink, vector_index_upsert_batch
 
     cent, cbs = quantizer
     prefix = "t_vstore_sink"
@@ -337,8 +337,10 @@ def test_streaming_ingest_sink_converges(spark, emb, quantizer, tmp_path):
             .option("maxFilesPerTrigger", 1)
             .parquet(str(src / "b*"))
         )
-        vector_index_sink(
-            stream, store, str(tmp_path / ck), cent, cbs, prefix, n_buckets=8
+        sink(
+            stream, vector_index_upsert_batch, str(tmp_path / ck),
+            store_path=store, centroids=cent, codebooks=cbs,
+            table_prefix=prefix, n_buckets=8,
         )
 
     try:
@@ -361,14 +363,15 @@ def test_streaming_ingest_sink_converges(spark, emb, quantizer, tmp_path):
 @pytest.mark.slow  # heavy e2e/marathon; kin + oracle parity cover the default run
 def test_fanout_drives_vector_store(spark, sf_dir, emb, quantizer, tmp_path):
     """One takedown-id stream converges the vector store alongside a
-    text-side store through takedown_fanout_sink's new 'vector' kind:
+    text-side store through takedown_fanout_batch's 'vector' kind:
     after the drain both stores have tombstoned exactly the dead ids,
     ANN stops retrieving them, and a full replay against a fresh
     checkpoint re-tombstones nothing anywhere."""
     from nlp_with_pyspark_spark.queries import _tokenized_documents
     from nlp_with_pyspark_spark.streaming.sinks import (
         neardup_upsert_batch,
-        takedown_fanout_sink,
+        sink,
+        takedown_fanout_batch,
     )
     from nlp_with_pyspark_spark.operators.dedup import neardup_store_tombstones
 
@@ -414,7 +417,7 @@ def test_fanout_drives_vector_store(spark, sf_dir, emb, quantizer, tmp_path):
                 .option("maxFilesPerTrigger", 1)
                 .parquet(str(src / "b*"))
             )
-            takedown_fanout_sink(stream, targets, str(tmp_path / ck))
+            sink(stream, takedown_fanout_batch, str(tmp_path / ck), targets=targets)
 
         run("ck1")
         vt = vector_index_tombstones(spark, vprefix)
@@ -501,10 +504,11 @@ def test_filtered_serve_equals_rebuild_with_only_allowed(
 
 def test_streaming_ingest_drift_rebalance_cycle(spark, emb, quantizer, tmp_path):
     """The drift story END TO END: skewed micro-batches stream into the
-    store through vector_index_sink and pile into one list (ingest-time
-    membership is the argmin under the build quantizer — drift is
-    invisible to the writer), vector_index_list_stats surfaces the
-    skew, rebalance_vector_index splits the hot list, and the NEXT
+    store through ``sink`` over vector_index_upsert_batch and pile into
+    one list (ingest-time membership is the argmin under the build
+    quantizer — drift is invisible to the writer),
+    vector_index_list_stats surfaces the skew, rebalance_vector_index
+    splits the hot list, and the NEXT
     streamed batch assigns against the post-split quantizer — its
     vectors land in the parent/child halves, never re-inflating a
     single cell. Serving stays pinned (full-probe ≡ inline) across the
@@ -513,7 +517,7 @@ def test_streaming_ingest_drift_rebalance_cycle(spark, emb, quantizer, tmp_path)
         rebalance_vector_index,
         vector_index_list_stats,
     )
-    from nlp_with_pyspark_spark.streaming.sinks import vector_index_sink
+    from nlp_with_pyspark_spark.streaming.sinks import sink, vector_index_upsert_batch
 
     cent, cbs = quantizer
     prefix = "t_vstore_drift"
@@ -549,8 +553,10 @@ def test_streaming_ingest_drift_rebalance_cycle(spark, emb, quantizer, tmp_path)
                 .option("maxFilesPerTrigger", 1)
                 .parquet(str(src / pattern))
             )
-            vector_index_sink(
-                stream, store, str(tmp_path / ck), cent, cbs, prefix, n_buckets=8
+            sink(
+                stream, vector_index_upsert_batch, str(tmp_path / ck),
+                store_path=store, centroids=cent, codebooks=cbs,
+                table_prefix=prefix, n_buckets=8,
             )
 
         run("ck1", "b[12]")
