@@ -31,10 +31,15 @@ _MEMO_COLS: dict[tuple, tuple[object, Column]] = {}
 
 def col_key(col: Column | str) -> str:
     """Stable memo-key form of an input column: the name itself for a
-    string, the JVM expression's string form for a Column (ONE py4j
-    call — microseconds against the hundreds of calls a deep tree
-    build costs)."""
-    return col if isinstance(col, str) else str(col)
+    string; for a Column, the string form of its JVM node with the
+    call-site origins stripped (``normalized``; three py4j calls —
+    microseconds against the hundreds a deep tree build costs). That
+    form carries a DataFrame-bound attribute's expression id
+    (``text#0``), so the same-named columns of two DataFrames key
+    apart — ``str(Column)`` prints both as ``Column<'text'>`` on
+    pyspark 4.1.2, and a tree bound to one fails analysis over the
+    other — while every unresolved ``F.col("text")`` shares one key."""
+    return col if isinstance(col, str) else col._jc.node().normalized().toString()
 
 
 def memo_col(key: tuple, build: Callable[[], Column]) -> Column:

@@ -1088,21 +1088,24 @@ def semantic_dedup_stats(
 
 
 # ---------------------------------------------------------------------------
-# incremental (delta) dedup against a persisted index
+# incremental (delta) dedup against a stored index
 # ---------------------------------------------------------------------------
 
 
 class MinhashIndex(NamedTuple):
-    """The persisted state of a deduplicated corpus, sufficient to check
+    """The index state of a deduplicated corpus, sufficient to check
     a NEW crawl batch for near-duplicates without rescanning the corpus:
 
       * ``buckets``  — (doc_id, band_id, band_hash): the LSH band-bucket
-        membership of every indexed doc. Persist bucketed by
-        ``band_hash`` (``sources.io.write_bucketed``) so the delta
-        lookup joins it with no index-side Exchange.
+        membership of every indexed doc. The survivor store
+        (streaming/sinks.neardup_upsert_batch) keeps it bucketed by
+        ``band_hash``, so the delta lookup joins it with no index-side
+        Exchange.
       * ``shingles`` — (doc_id, shingles): the distinct-shingle sets the
-        Jaccard verify needs. Persist bucketed by ``doc_id`` for the
+        Jaccard verify needs. Stored bucketed by ``doc_id`` for the
         same reason.
+
+    :func:`load_neardup_index` reads a store's live index back.
 
     Both tables are keys-and-hashes only — the corpus *text* is never
     part of the index. At 100 TB of corpus the index is tens of GB per
@@ -1123,72 +1126,19 @@ def build_minhash_index(
     bands: int = 4,
     hash_fn: str = "md5",
 ) -> MinhashIndex:
-    """Compute the index state for a corpus (in-memory DataFrames; pair
-    with :func:`persist_minhash_index` to write it down).
+    """Compute the index state for a corpus (in-memory DataFrames; the
+    survivor store writes the same tables).
 
     The shingle projection is localCheckpoint-ed: both index tables
     derive from it AND both are consumed by every delta check, so an
     unmaterialized lineage would re-run the shingle+signature fold once
-    per consumer (the persisted path has no such issue — parquet is its
+    per consumer (a stored index has no such cost — parquet is its
     barrier)."""
     sh = _shingle_sets(docs, tokens_col, id_col, n).localCheckpoint()
     return MinhashIndex(
         buckets=_band_buckets_from_shingles(sh, k, bands, hash_fn),
         shingles=sh,
     )
-
-
-def persist_minhash_index(
-    index: MinhashIndex, table_prefix: str, n_buckets: int = 32, path: str | None = None
-) -> None:
-    """Write the index as two bucketed+sorted catalog tables:
-    ``{prefix}_buckets`` (by band_hash) and ``{prefix}_shingles`` (by
-    doc_id). Bucket counts must stay fixed for the life of the index —
-    they are its join-layout contract."""
-    from ..sources.io import write_bucketed
-
-    write_bucketed(
-        index.buckets,
-        f"{table_prefix}_buckets",
-        "band_hash",
-        n_buckets,
-        path=None if path is None else f"{path}/buckets",
-    )
-    write_bucketed(
-        index.shingles,
-        f"{table_prefix}_shingles",
-        "doc_id",
-        n_buckets,
-        path=None if path is None else f"{path}/shingles",
-    )
-
-
-def load_minhash_index(spark, table_prefix: str) -> MinhashIndex:
-    """Reopen a persisted index by catalog name."""
-    return MinhashIndex(
-        buckets=spark.table(f"{table_prefix}_buckets"),
-        shingles=spark.table(f"{table_prefix}_shingles"),
-    )
-
-
-def append_to_minhash_index(index_delta: MinhashIndex, table_prefix: str) -> None:
-    """Append a delta batch's SURVIVOR index rows into a persisted
-    bucketed index — the write half of the incremental-ingest loop
-    (:func:`minhash_delta_pairs` is the read half).
-
-    The bucket counts are looked up from the catalog, never taken from
-    the caller (``sources.io.append_to_bucketed_table``), so an append
-    can NOT drift the fixed-bucket-count contract that
-    :func:`persist_minhash_index` documents — the layout that keeps the
-    delta check's index side Exchange-free survives every append
-    (asserted before/after in tests/test_dedup_delta.py). Appended doc
-    ids must be disjoint from the index (run the delta check + drop
-    decision first); each append adds a file set, so pair with
-    ``sources.io.compact_bucketed_table`` as maintenance."""
-    from ..sources.io import append_to_bucketed_table
-
-    append_to_bucketed_table(index_delta.buckets, f"{table_prefix}_buckets")
-    append_to_bucketed_table(index_delta.shingles, f"{table_prefix}_shingles")
 
 
 def _delta_bucket_pairs(
@@ -1294,7 +1244,8 @@ def minhash_delta_pairs(
     the index is scanned (keys-and-hashes tables, no corpus text) but
     NO index row ever crosses an Exchange: shuffle volume is
     O(delta + collisions), not O(corpus). Asserted on the physical plan
-    in tests/test_dedup_delta.py against the persisted index.
+    in tests/test_dedup_delta.py against a stored index read through
+    :func:`load_neardup_index`.
 
     ``materialize=False`` skips the two localCheckpoints (delta
     shingles, candidates) so the WHOLE lineage stays in one inspectable
@@ -1335,10 +1286,10 @@ def minhash_delta_pairs(
 
 
 class SimhashIndex(NamedTuple):
-    """Persisted simhash state of a deduplicated corpus: ``keys`` —
-    (doc_id, band_id, band_hash) combination-blocking keys (persist
+    """Simhash index state of a deduplicated corpus: ``keys`` —
+    (doc_id, band_id, band_hash) combination-blocking keys (stored
     bucketed by band_hash); ``fingerprints`` — (doc_id, simhash)
-    64-bit fingerprint strings (persist bucketed by doc_id). The
+    64-bit fingerprint strings (stored bucketed by doc_id). The
     blocking parameters (max_hamming, bands, combo_size, hash_fn) are
     part of the index's contract — the delta check must be called with
     the SAME values the index was built with."""
@@ -1382,9 +1333,8 @@ def build_simhash_index(
     combo_size: int | None = None,
     hash_fn: str = "md5",
 ) -> SimhashIndex:
-    """Compute the simhash index state for a corpus (pair with
-    ``sources.io.write_bucketed`` for persistence, as
-    ``persist_minhash_index`` does for the minhash family)."""
+    """Compute the simhash index state for a corpus (in-memory; the
+    survivor store writes the same tables)."""
     bands, combo_size = _simhash_blocking_params(max_hamming, bands, combo_size)
     # checkpoint: keys and fingerprints are separate consumers of the
     # same (expensive) 64-bit fold — see build_minhash_index
@@ -1392,48 +1342,6 @@ def build_simhash_index(
     return SimhashIndex(
         keys=_simhash_band_buckets(fp, bands, combo_size), fingerprints=fp
     )
-
-
-def persist_simhash_index(
-    index: SimhashIndex, table_prefix: str, n_buckets: int = 32, path: str | None = None
-) -> None:
-    """Write the simhash index as two bucketed+sorted catalog tables:
-    ``{prefix}_keys`` (by band_hash) and ``{prefix}_fingerprints`` (by
-    doc_id) — same fixed-bucket-count contract as
-    :func:`persist_minhash_index`."""
-    from ..sources.io import write_bucketed
-
-    write_bucketed(
-        index.keys,
-        f"{table_prefix}_keys",
-        "band_hash",
-        n_buckets,
-        path=None if path is None else f"{path}/keys",
-    )
-    write_bucketed(
-        index.fingerprints,
-        f"{table_prefix}_fingerprints",
-        "doc_id",
-        n_buckets,
-        path=None if path is None else f"{path}/fingerprints",
-    )
-
-
-def load_simhash_index(spark, table_prefix: str) -> SimhashIndex:
-    """Reopen a persisted simhash index by catalog name."""
-    return SimhashIndex(
-        keys=spark.table(f"{table_prefix}_keys"),
-        fingerprints=spark.table(f"{table_prefix}_fingerprints"),
-    )
-
-
-def append_to_simhash_index(index_delta: SimhashIndex, table_prefix: str) -> None:
-    """SimHash twin of :func:`append_to_minhash_index` — bucket counts
-    come from the catalog, so appends preserve the layout contract."""
-    from ..sources.io import append_to_bucketed_table
-
-    append_to_bucketed_table(index_delta.keys, f"{table_prefix}_keys")
-    append_to_bucketed_table(index_delta.fingerprints, f"{table_prefix}_fingerprints")
 
 
 def simhash_delta_pairs(
@@ -1494,13 +1402,12 @@ def simhash_delta_pairs(
 
 
 class SemanticIndex(NamedTuple):
-    """Persisted semantic-dedup state of an embedding corpus: one table,
+    """Semantic-dedup index state of an embedding corpus: one table,
     ``assigned`` — (id, list_id, nv): the nearest-centroid cluster label
     plus the UNIT-NORMALIZED vector (so a delta check never re-normalizes
-    the corpus). Persist bucketed by ``list_id``
-    (:func:`persist_semantic_index`): the delta check's corpus-side join
-    key is the cluster label, so a bucketed store crosses zero index-side
-    Exchange. The centroid set is part of the index's identity — a delta
+    the corpus). The survivor store keeps it bucketed by ``list_id``:
+    the delta check's corpus-side join key is the cluster label, so a
+    bucketed store crosses zero index-side Exchange. The centroid set is part of the index's identity — a delta
     check MUST use the same centroids the index was built with, or
     cluster labels (and therefore candidate generation) silently drift.
     """
@@ -1515,9 +1422,9 @@ def build_semantic_index(
     id_col: str = "vec_id",
     assign_via: str = "literal",
 ) -> SemanticIndex:
-    """Compute the semantic index state (in-memory; pair with
-    :func:`persist_semantic_index` to write it down). localCheckpoint-ed:
-    a delta check consumes the table for members AND cluster sizes."""
+    """Compute the semantic index state (in-memory; the survivor store
+    writes the same table). localCheckpoint-ed: a delta check consumes
+    the table for members AND cluster sizes."""
     from ..functions.vector import unit_normalized
 
     assigned = unit_normalized(
@@ -1526,36 +1433,6 @@ def build_semantic_index(
         "nv",
     ).select(id_col, "list_id", "nv")
     return SemanticIndex(assigned=assigned.localCheckpoint())
-
-
-def persist_semantic_index(
-    index: SemanticIndex, table_prefix: str, n_buckets: int = 32, path: str | None = None
-) -> None:
-    """Write the index as one bucketed+sorted catalog table,
-    ``{prefix}_assigned`` (by list_id) — same fixed-bucket-count layout
-    contract as :func:`persist_minhash_index`."""
-    from ..sources.io import write_bucketed
-
-    write_bucketed(
-        index.assigned,
-        f"{table_prefix}_assigned",
-        "list_id",
-        n_buckets,
-        path=None if path is None else f"{path}/assigned",
-    )
-
-
-def load_semantic_index(spark, table_prefix: str) -> SemanticIndex:
-    """Reopen a persisted semantic index by catalog name."""
-    return SemanticIndex(assigned=spark.table(f"{table_prefix}_assigned"))
-
-
-def append_to_semantic_index(index_delta: SemanticIndex, table_prefix: str) -> None:
-    """Semantic twin of :func:`append_to_minhash_index` — bucket counts
-    come from the catalog, so appends preserve the layout contract."""
-    from ..sources.io import append_to_bucketed_table
-
-    append_to_bucketed_table(index_delta.assigned, f"{table_prefix}_assigned")
 
 
 def semantic_delta_pairs(
@@ -1588,8 +1465,8 @@ def semantic_delta_pairs(
     values) broadcast-semi-filter the index, so only members of TOUCHED
     clusters are read — and those members must be read, because each one
     is cosine-compared against the co-clustered delta vectors (the
-    irreducible SemDeDup delta cost). With the index persisted bucketed
-    by list_id, the per-cluster joins consume it pre-partitioned on the
+    irreducible SemDeDup delta cost). With the index stored bucketed
+    by list_id (the survivor store's layout), the per-cluster joins consume it pre-partitioned on the
     join key: no index-side Exchange (asserted on the plan). Shuffle
     volume is O(delta); index rows stream from the bucketed scan.
     """
@@ -1656,16 +1533,218 @@ def semantic_delta_pairs(
 
 
 # ---------------------------------------------------------------------------
-# Survivor-store takedowns (right-to-be-forgotten maintenance)
+# The near-dup survivor store: one writer (_append), one reader
 # ---------------------------------------------------------------------------
 
-#: (keys_table_suffix, features_table_suffix) per dedup-on-ingest hash
-#: family — the index tables streaming/sinks.neardup_upsert_batch keeps
-#: alongside ``{prefix}_docs`` (operators/store.NEARDUP_INDEX).
-NEARDUP_STORE_TABLES = {
-    family: (keys[0], feats[0]) for family, (keys, feats) in store.NEARDUP_INDEX.items()
-}
 
+def _store_rows(index, id_col: str) -> tuple[DataFrame, DataFrame]:
+    """An index's (keys, features) rows in the survivor store's layout
+    (operators/store.NEARDUP_INDEX: every table carries ``doc_id``). The
+    semantic keys are the cluster labels (band_id 0, band_hash =
+    list_id)."""
+    if not isinstance(index, SemanticIndex):
+        return tuple(index)
+    feats = index.assigned.select(F.col(id_col).alias("doc_id"), "list_id", "nv")
+    keys = feats.select(
+        "doc_id", F.lit(0).alias("band_id"), F.col("list_id").cast("long").alias("band_hash")
+    )
+    return keys, feats
+
+
+def _as_index(
+    hash_family: str, keys: DataFrame, feats: DataFrame, id_col: str
+) -> MinhashIndex | SimhashIndex | SemanticIndex:
+    """The family's index over store-layout (keys, features) rows, in the
+    column names its ``*_delta_pairs`` reads — the inverse of
+    :func:`_store_rows`."""
+    if hash_family == "minhash":
+        return MinhashIndex(buckets=keys, shingles=feats)
+    if hash_family == "simhash":
+        return SimhashIndex(keys=keys, fingerprints=feats)
+    return SemanticIndex(
+        assigned=feats.select(F.col("doc_id").alias(id_col), "list_id", "nv")
+    )
+
+
+def _live_rows(spark, table: str, tombs: DataFrame | None) -> DataFrame:
+    """``table``'s rows minus the tombstoned docs' (one broadcast
+    anti-join, absent while the list is empty)."""
+    rows = spark.table(table)
+    if tombs is None:
+        return rows
+    return rows.join(F.broadcast(tombs.select("doc_id")), "doc_id", "left_anti")
+
+
+def load_neardup_index(
+    spark, table_prefix: str, hash_family: str, id_col: str = "doc_id"
+) -> MinhashIndex | SimhashIndex | SemanticIndex:
+    """The live index of a near-dup survivor store
+    (streaming/sinks.neardup_upsert_batch) — a :class:`MinhashIndex`,
+    :class:`SimhashIndex` or :class:`SemanticIndex` by ``hash_family``,
+    ready for that family's ``*_delta_pairs``. Rows of tombstoned docs
+    (:func:`remove_from_neardup_store`) are left out, so a taken-down
+    document matches nothing — the same view the sink's own delta check
+    reads. ``id_col`` is the docs ledger's id column, and the
+    :class:`SemanticIndex` id column.
+
+    The index tables are refreshed first — the family-wide read-entry
+    idiom (search.load_posting_index): a streaming sink writes through a
+    CLONED SparkSession whose cache invalidation never reaches this
+    session's cached file listing."""
+    spec = store.neardup(table_prefix, id_col, hash_family)
+    tables = [t for t, _, _ in spec.tables[:2]]
+    for t in tables:
+        if not spark.catalog.tableExists(t):
+            raise ValueError(
+                f"{t} not found: no {hash_family} near-dup store at this "
+                "prefix — ingest one with neardup_upsert_batch first"
+            )
+        spark.catalog.refreshTable(t)
+    tombs = store.live(spark, spec)
+    keys, feats = (_live_rows(spark, t, tombs) for t in tables)
+    return _as_index(hash_family, keys, feats, id_col)
+
+
+def _append(
+    batch: DataFrame,
+    table_prefix: str,
+    hash_family: str,
+    tokens_col: str,
+    id_col: str,
+    path: str,
+    n_buckets: int,
+    *,
+    n: int,
+    k: int,
+    bands: int | None,
+    threshold: float,
+    max_docs_per_bucket: int,
+    hash_fn: str,
+    max_hamming: int,
+    combo_size: int | None,
+    centroids,
+    assign_via: str,
+) -> None:
+    """Admit ``batch`` into the survivor store, drop every admitted doc
+    with a near-duplicate among the live stored docs or a smaller-id
+    batch mate, and commit the survivors with their index rows, the docs
+    ledger last. Semantics, replay rules and parameters:
+    streaming/sinks.neardup_upsert_batch. ``path``/``n_buckets`` place
+    the tables the store does not have yet."""
+    from .graph import connected_components
+
+    if hash_family == "semantic" and centroids is None:
+        raise ValueError("hash_family='semantic' requires centroids")
+    spark = batch.sparkSession
+    spec = store.neardup(table_prefix, id_col, hash_family)
+    keys_tbl, feats_tbl = (t for t, _, _ in spec.tables[:2])
+    fresh, tombs = store.admit(spark, spec, batch)
+    if fresh.limit(1).count() == 0:
+        return
+    fresh_ids = F.broadcast(fresh.select(F.col(id_col).alias("doc_id")))
+
+    if hash_family == "minhash":
+        bands = 4 if bands is None else bands
+        built = build_minhash_index(fresh, tokens_col, id_col, n, k, bands, hash_fn)
+    elif hash_family == "simhash":
+        built = build_simhash_index(
+            fresh, tokens_col, id_col, max_hamming, bands, combo_size, hash_fn
+        )
+    else:
+        built = build_semantic_index(fresh, centroids, tokens_col, id_col, assign_via)
+    delta_keys, delta_feats = _store_rows(built, id_col)
+    # checkpointed: consumed by BOTH the index append and the delta
+    # check — sharing only the lineage would re-run the band/signature
+    # fold once per consumer (tiny table: ~bands rows per doc, ids+hashes)
+    delta_keys = delta_keys.localCheckpoint()
+
+    def view(tbl: str, delta: DataFrame) -> tuple[DataFrame, DataFrame]:
+        """(stale rows of this batch's ids, the rest) of the loader's view
+        of ``tbl``; an absent table is an EMPTY index with the delta's
+        schema (key types depend on hash_fn)."""
+        if not spark.catalog.tableExists(tbl):
+            return delta.limit(0), delta.limit(0)
+        rows = _live_rows(spark, tbl, tombs)
+        return (
+            rows.join(fresh_ids, "doc_id", "left_semi"),
+            rows.join(fresh_ids, "doc_id", "left_anti"),
+        )
+
+    stale_keys, keys_view = view(keys_tbl, delta_keys)
+    stale_feats, feats_view = view(feats_tbl, delta_feats)
+    index = _as_index(hash_family, keys_view, feats_view, id_col)
+    # the batch's own index, already materialized for the append — the
+    # delta check must not pay the shingle/fingerprint/argmin pass twice
+    delta = _as_index(hash_family, delta_keys, delta_feats, id_col)
+    if hash_family == "minhash":
+        pairs = minhash_delta_pairs(
+            fresh, index, tokens_col, id_col, n, k, bands, threshold,
+            max_docs_per_bucket, hash_fn,
+            delta_shingles=delta.shingles, delta_bands=delta.buckets,
+        )
+    elif hash_family == "simhash":
+        pairs = simhash_delta_pairs(
+            fresh, index, tokens_col, id_col, max_hamming, bands, combo_size,
+            max_docs_per_bucket, hash_fn,
+            delta_fingerprints=delta.fingerprints, delta_keys=delta.keys,
+        )
+    else:
+        pairs = semantic_delta_pairs(
+            fresh, index, centroids, threshold, tokens_col, id_col,
+            max_docs_per_bucket, assign_via=assign_via, delta_assigned=delta.assigned,
+        ).select(F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"), "cosine")
+
+    asg = connected_components(pairs, src="doc_a", dst="doc_b").join(
+        fresh.select(F.col(id_col).alias("node"), F.lit(1).alias("is_delta")),
+        "node",
+        "left",
+    )
+    comp_stats = asg.groupBy("component").agg(
+        F.max(F.when(F.col("is_delta").isNull(), 1).otherwise(0)).alias("has_index"),
+        F.min(F.when(F.col("is_delta") == 1, F.col("node"))).alias("min_delta"),
+    )
+    drops = (
+        asg.where(F.col("is_delta") == 1)
+        .join(comp_stats, "component")
+        .where((F.col("has_index") == 1) | (F.col("node") != F.col("min_delta")))
+        .select(F.col("node").alias(id_col))
+    )
+    # checkpoint the DROPS side, not the survivors: drops (this batch's
+    # duplicate ids, ≤ batch-sized — the same bound as the fresh_ids
+    # broadcasts above) pins the components chain's one evaluation,
+    # and every survivor consumer then derives lazily from the two
+    # pinned frames (fresh ckpt minus drops ckpt) — a map-side
+    # broadcast anti-join per consumer instead of a second corpus-wide
+    # checkpoint materialization. The index filters flip from
+    # semi-join-against-survivors (corpus-sized build side at scale)
+    # to anti-join-against-drops: delta_keys/delta_feats rows belong to
+    # fresh docs by construction, and survivors = fresh − drops, so
+    # semi(survivors) ≡ anti(drops) row-for-row.
+    drops = drops.localCheckpoint()
+    survivors = fresh.join(F.broadcast(drops), id_col, "left_anti")
+    drop_ids = F.broadcast(drops.select(F.col(id_col).alias("doc_id")))
+    new_keys = delta_keys.join(drop_ids, "doc_id", "left_anti")
+    new_feats = delta_feats.join(drop_ids, "doc_id", "left_anti")
+    # idempotent append: drop rows a crashed attempt already stored
+    # ((doc_id, band_id) identifies a key row — band_hash is a function
+    # of it; doc_id identifies a feature row)
+    new_keys = new_keys.join(
+        F.broadcast(stale_keys.select("doc_id", "band_id")),
+        ["doc_id", "band_id"],
+        "left_anti",
+    )
+    new_feats = new_feats.join(
+        F.broadcast(stale_feats.select("doc_id")), "doc_id", "left_anti"
+    )
+    store.commit(
+        spark, spec, path, n_buckets,
+        {keys_tbl: new_keys, feats_tbl: new_feats, spec.ledger: survivors},
+    )
+
+
+# ---------------------------------------------------------------------------
+# Survivor-store takedowns (right-to-be-forgotten maintenance)
+# ---------------------------------------------------------------------------
 
 def neardup_store_tombstones(
     spark, table_prefix: str, id_col: str = "doc_id"

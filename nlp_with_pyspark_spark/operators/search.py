@@ -22,8 +22,8 @@ touches a corpus-sized build side.
 
 Scale shape (indexed path): a retrieval service doesn't re-tokenize
 100 TB per query — it searches a PERSISTED inverted index. The index
-here follows the engine's bucketed-store contract (the
-``persist_minhash_index`` pattern, operators/dedup.py): postings
+here follows the engine's bucketed-store contract (the near-dup
+survivor store's layout, operators/dedup.py): postings
 ``(word, doc_id, tf, dl)`` live in a bucketed+sorted catalog table
 keyed by word, the doc-length norm DENORMALIZED into each posting (the
 classic posting-list layout) so query-time needs NO join back to a

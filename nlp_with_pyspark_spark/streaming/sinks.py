@@ -21,8 +21,6 @@ foreachBatch example.
 
 from __future__ import annotations
 
-from types import SimpleNamespace
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -47,7 +45,7 @@ def sink(stream: DataFrame, step, checkpoint: str, **opts):
 
 def dedup_store_upsert_batch(
     batch_df: DataFrame,
-    path: str,
+    store_path: str,
     key_cols: tuple[str, ...] = ("event_id",),
     *,
     table: str,
@@ -60,7 +58,7 @@ def dedup_store_upsert_batch(
     counterpart is operators/dedup.exact_dedup).
 
     The store is the bucketed catalog table ``table`` (bucketed by
-    ``key_cols[0]``, data at ``path``), and the step runs the shared
+    ``key_cols[0]``, data at ``store_path``), and the step runs the shared
     append protocol (operators/store.py): open, admit — drop in-batch
     duplicates, anti-join the batch against the store's key column
     (read already partitioned on the join key: zero store-side
@@ -71,142 +69,16 @@ def dedup_store_upsert_batch(
     state, the store survives restarts with NO watermark bound: dedup
     is against all history, not a time window, and a session-scoped
     catalog loss is healed by re-registering over the surviving files.
+
+    The store is one table, so ``table`` names it whole, where the other
+    families' ``table_prefix`` names a set of ``{prefix}_*`` tables.
     """
     spark = batch_df.sparkSession
     spec = store.exact(table, key_cols)
-    store.open(spark, spec, path, n_buckets)
+    store.open(spark, spec, store_path, n_buckets)
     fresh, _ = store.admit(spark, spec, batch_df)
-    store.commit(spark, spec, path, n_buckets, {table: fresh})
+    store.commit(spark, spec, store_path, n_buckets, {table: fresh})
     store.compact(spark, spec, compact_threshold_files)
-
-
-def _neardup_family(
-    hash_family: str,
-    n: int,
-    k: int,
-    bands: int | None,
-    threshold: float,
-    max_hamming: int,
-    combo_size: int | None,
-    max_docs_per_bucket: int,
-    hash_fn: str,
-    centroids=None,
-    assign_via: str = "literal",
-):
-    """Adapter between the sink's generic store logic and one near-dup
-    hash family. All families share the store shape
-    (operators/store.NEARDUP_INDEX) — a per-doc FEATURES table (one row
-    per doc: shingle set / fingerprint / normalized embedding) and a
-    per-doc KEYS table (blocking keys, bucketed by band_hash) — and a
-    delta-pairs function whose index side is only consumed through
-    broadcast semi-join prefilters. For ``'semantic'`` the blocking key
-    IS the cluster label (band_id = 0, band_hash = list_id) and the
-    features table carries the assignment + unit-normalized vector,
-    bucketed by list_id — the :class:`~..operators.dedup.SemanticIndex`
-    layout, so the per-batch delta check reads it with zero store-side
-    Exchange."""
-    from ..operators import dedup as D
-
-    if hash_family == "minhash":
-        mh_bands = 4 if bands is None else bands
-        return SimpleNamespace(
-            feats=lambda df, tokens_col, id_col: D._shingle_sets(
-                df, tokens_col, id_col, n
-            ),
-            keys=lambda feats: D._band_buckets_from_shingles(
-                feats, k, mh_bands, hash_fn
-            ),
-            delta_pairs=lambda fresh, keys, feats, tokens_col, id_col, dfeats, dkeys: D.minhash_delta_pairs(
-                fresh,
-                D.MinhashIndex(buckets=keys, shingles=feats),
-                tokens_col=tokens_col,
-                id_col=id_col,
-                n=n,
-                k=k,
-                bands=mh_bands,
-                threshold=threshold,
-                max_docs_per_bucket=max_docs_per_bucket,
-                hash_fn=hash_fn,
-                delta_shingles=dfeats,
-                delta_bands=dkeys,
-            ),
-        )
-    if hash_family == "simhash":
-        sh_bands, sh_combo = D._simhash_blocking_params(max_hamming, bands, combo_size)
-        return SimpleNamespace(
-            feats=lambda df, tokens_col, id_col: D.simhash_fingerprints(
-                df, tokens_col, id_col, hash_fn
-            ),
-            keys=lambda feats: D._simhash_band_buckets(feats, sh_bands, sh_combo),
-            delta_pairs=lambda fresh, keys, feats, tokens_col, id_col, dfeats, dkeys: D.simhash_delta_pairs(
-                fresh,
-                D.SimhashIndex(keys=keys, fingerprints=feats),
-                tokens_col=tokens_col,
-                id_col=id_col,
-                max_hamming=max_hamming,
-                bands=sh_bands,
-                combo_size=sh_combo,
-                max_docs_per_bucket=max_docs_per_bucket,
-                hash_fn=hash_fn,
-                delta_fingerprints=dfeats,
-                delta_keys=dkeys,
-            ),
-        )
-    if hash_family == "semantic":
-        if centroids is None:
-            raise ValueError("hash_family='semantic' requires centroids")
-
-        def sem_feats(df, vec_col, id_col):
-            from ..functions.vector import unit_normalized
-
-            return unit_normalized(
-                D.semantic_cluster_assign(
-                    df, centroids, vec_col, id_col, via=assign_via
-                ),
-                vec_col,
-                "nv",
-            ).select(F.col(id_col).alias("doc_id"), "list_id", "nv")
-
-        def sem_delta(fresh, keys, feats, vec_col, id_col, dfeats, dkeys):
-            # dkeys unused: the semantic key table is a trivial
-            # projection of the features (no hash fold to save)
-            idx = D.SemanticIndex(
-                assigned=feats.select(
-                    F.col("doc_id").alias(id_col), "list_id", "nv"
-                )
-            )
-            return D.semantic_delta_pairs(
-                fresh,
-                idx,
-                centroids,
-                threshold=threshold,
-                vec_col=vec_col,
-                id_col=id_col,
-                max_vecs_per_cluster=max_docs_per_bucket,
-                assign_via=assign_via,
-                # the batch's assignment is already materialized for the
-                # index append — never pay the argmin twice per batch
-                delta_assigned=dfeats.select(
-                    F.col("doc_id").alias(id_col), "list_id", "nv"
-                ),
-            ).select(
-                F.col("id_a").alias("doc_a"),
-                F.col("id_b").alias("doc_b"),
-                "cosine",
-            )
-
-        return SimpleNamespace(
-            feats=sem_feats,
-            keys=lambda feats: feats.select(
-                "doc_id",
-                F.lit(0).alias("band_id"),
-                F.col("list_id").cast("long").alias("band_hash"),
-            ),
-            delta_pairs=sem_delta,
-        )
-    raise ValueError(
-        f"unknown hash_family {hash_family!r} (minhash | simhash | semantic)"
-    )
 
 
 def neardup_upsert_batch(
@@ -254,12 +126,14 @@ def neardup_upsert_batch(
     The store is three bucketed catalog tables (``{prefix}_docs`` by
     ``id_col`` — the ledger —, the keys table by band_hash, the features
     table by doc_id, or list_id for semantic) with data under
-    ``store_path``, driven through the shared append protocol
-    (operators/store.py): open, admit (the docs ledger guard reads the
-    stored id column already partitioned on the join key — zero
-    store-side Exchange, asserted on the plan in
-    tests/test_streaming.py), commit (keys and features, then docs),
-    compact past ``compact_threshold_files``.
+    ``store_path``. The step opens the store (operators/store.open), runs
+    the family's append (operators/dedup._append: admit — the docs
+    ledger guard reads the stored id column already partitioned on the
+    join key, zero store-side Exchange, asserted on the plan in
+    tests/test_streaming.py —, the delta check against
+    :func:`~..operators.dedup.load_neardup_index`'s live view of the
+    store, then commit: keys and features, then docs), and compacts past
+    ``compact_threshold_files``.
 
     Semantics — dedup-against-survivors, the standard incremental-ingest
     rule: a document is dropped iff its cluster (connected components
@@ -297,91 +171,17 @@ def neardup_upsert_batch(
     never shuffled, the corpus text is never re-read, and the
     scrub/idempotence joins broadcast the (small) batch id list.
     """
-    from ..operators.graph import connected_components
+    from ..operators import dedup
 
     spark = batch_df.sparkSession
-    fam = _neardup_family(
-        hash_family, n, k, bands, threshold, max_hamming, combo_size,
-        max_docs_per_bucket, hash_fn, centroids, assign_via,
-    )
     spec = store.neardup(table_prefix, id_col, hash_family)
-    keys_tbl, feats_tbl = (t for t, _, _ in spec.tables[:2])
     store.open(spark, spec, store_path, n_buckets)
-    fresh, tombs = store.admit(spark, spec, batch_df)
-    if fresh.limit(1).count() == 0:
-        return
-    fresh_ids = F.broadcast(fresh.select(F.col(id_col).alias("doc_id")))
-
-    delta_feats = fam.feats(fresh, tokens_col, id_col).localCheckpoint()
-    # checkpointed: consumed by BOTH the index append and the delta
-    # check — sharing only the lineage would re-run the band/signature
-    # fold once per consumer (tiny table: ~bands rows per doc, ids+hashes)
-    delta_keys = fam.keys(delta_feats).localCheckpoint()
-
-    def index(tbl: str, delta: DataFrame) -> tuple[DataFrame, DataFrame]:
-        """(stale rows of this batch's ids, the view the delta check
-        reads); an absent table is an EMPTY index with the delta's
-        schema (key types depend on hash_fn)."""
-        if not spark.catalog.tableExists(tbl):
-            return delta.limit(0), delta.limit(0)
-        rows = spark.table(tbl)
-        if tombs is not None:
-            rows = rows.join(F.broadcast(tombs.select("doc_id")), "doc_id", "left_anti")
-        return (
-            rows.join(fresh_ids, "doc_id", "left_semi"),
-            rows.join(fresh_ids, "doc_id", "left_anti"),
-        )
-
-    stale_keys, keys_view = index(keys_tbl, delta_keys)
-    stale_feats, feats_view = index(feats_tbl, delta_feats)
-    pairs = fam.delta_pairs(
-        fresh, keys_view, feats_view, tokens_col, id_col, delta_feats, delta_keys
-    )
-    asg = connected_components(pairs, src="doc_a", dst="doc_b").join(
-        fresh.select(F.col(id_col).alias("node"), F.lit(1).alias("is_delta")),
-        "node",
-        "left",
-    )
-    comp_stats = asg.groupBy("component").agg(
-        F.max(F.when(F.col("is_delta").isNull(), 1).otherwise(0)).alias("has_index"),
-        F.min(F.when(F.col("is_delta") == 1, F.col("node"))).alias("min_delta"),
-    )
-    drops = (
-        asg.where(F.col("is_delta") == 1)
-        .join(comp_stats, "component")
-        .where((F.col("has_index") == 1) | (F.col("node") != F.col("min_delta")))
-        .select(F.col("node").alias(id_col))
-    )
-    # checkpoint the DROPS side, not the survivors: drops (this batch's
-    # duplicate ids, ≤ batch-sized — the same bound as the fresh_ids
-    # broadcasts above) pins the components chain's one evaluation,
-    # and every survivor consumer then derives lazily from the two
-    # pinned frames (fresh ckpt minus drops ckpt) — a map-side
-    # broadcast anti-join per consumer instead of a second corpus-wide
-    # checkpoint materialization. The index filters flip from
-    # semi-join-against-survivors (corpus-sized build side at scale)
-    # to anti-join-against-drops: delta_keys/delta_feats rows belong to
-    # fresh docs by construction, and survivors = fresh − drops, so
-    # semi(survivors) ≡ anti(drops) row-for-row.
-    drops = drops.localCheckpoint()
-    survivors = fresh.join(F.broadcast(drops), id_col, "left_anti")
-    drop_ids = F.broadcast(drops.select(F.col(id_col).alias("doc_id")))
-    new_keys = delta_keys.join(drop_ids, "doc_id", "left_anti")
-    new_feats = delta_feats.join(drop_ids, "doc_id", "left_anti")
-    # idempotent append: drop rows a crashed attempt already stored
-    # ((doc_id, band_id) identifies a key row — band_hash is a function
-    # of it; doc_id identifies a feature row)
-    new_keys = new_keys.join(
-        F.broadcast(stale_keys.select("doc_id", "band_id")),
-        ["doc_id", "band_id"],
-        "left_anti",
-    )
-    new_feats = new_feats.join(
-        F.broadcast(stale_feats.select("doc_id")), "doc_id", "left_anti"
-    )
-    store.commit(
-        spark, spec, store_path, n_buckets,
-        {keys_tbl: new_keys, feats_tbl: new_feats, spec.ledger: survivors},
+    dedup._append(
+        batch_df, table_prefix, hash_family, tokens_col, id_col, store_path, n_buckets,
+        n=n, k=k, bands=bands, threshold=threshold,
+        max_docs_per_bucket=max_docs_per_bucket, hash_fn=hash_fn,
+        max_hamming=max_hamming, combo_size=combo_size, centroids=centroids,
+        assign_via=assign_via,
     )
     store.compact(spark, spec, compact_threshold_files)
 
@@ -515,9 +315,10 @@ def vector_index_upsert_batch(
     store_path: str,
     centroids: list,
     codebooks: list,
-    table_prefix: str,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
+    *,
+    table_prefix: str,
     n_buckets: int = 8,
     compact_threshold_files: int | None = None,
 ) -> int:

@@ -1,11 +1,14 @@
-"""Incremental (delta) dedup against a persisted minhash index.
+"""Incremental (delta) dedup against an indexed corpus.
 
 The contract under test (operators/dedup.minhash_delta_pairs): checking
 a NEW batch against an indexed corpus — without rescanning the corpus —
 produces EXACTLY the pairs the batch-global run would emit restricted to
-pairs touching the delta, including the combined-bucket skew guard; and
-the index tables are only ever consumed through broadcast semi-join
-prefilters, so no unfiltered index row crosses an Exchange.
+pairs touching the delta, including the combined-bucket skew guard; a
+survivor store (streaming/sinks.neardup_upsert_batch) read through
+``load_neardup_index`` answers like the in-memory index built over its
+stored docs; and the stored index tables are only ever consumed through
+broadcast semi-join prefilters, so no unfiltered index row crosses an
+Exchange.
 """
 
 import pyspark.sql.functions as F
@@ -14,13 +17,13 @@ import pytest
 from nlp_with_pyspark_spark.functions.text import tokens_pipeline
 from nlp_with_pyspark_spark.operators.dedup import (
     build_minhash_index,
-    load_minhash_index,
+    load_neardup_index,
     minhash_dedup_pairs,
     minhash_delta_pairs,
-    persist_minhash_index,
 )
 from nlp_with_pyspark_spark.plans import ancestor_chains
 from nlp_with_pyspark_spark.sources.io import read_table
+from nlp_with_pyspark_spark.streaming.sinks import neardup_upsert_batch
 
 
 @pytest.fixture(scope="module")
@@ -35,6 +38,17 @@ def toks(spark, sf_dir):
 
 def _rows(df):
     return sorted(map(tuple, df.collect()))
+
+
+def _stored(spark, frame, prefix, id_col="doc_id"):
+    """The rows of ``frame`` the survivor store at ``prefix`` holds."""
+    ids = spark.table(f"{prefix}_docs").select(id_col)
+    return frame.join(ids, id_col, "left_semi")
+
+
+def _drop_store(spark, prefix, tables):
+    for t in ("docs", "tombstones") + tables:
+        spark.sql(f"DROP TABLE IF EXISTS {prefix}_{t}")
 
 
 def _split(toks, mod, rem):
@@ -76,14 +90,20 @@ def test_combined_bucket_cap_matches_batch(spark, toks):
 
 
 def test_persisted_index_equal_and_broadcast_filtered(spark, toks, tmp_path):
+    """The survivor store read through ``load_neardup_index`` answers a
+    delta check exactly like ``build_minhash_index`` over its stored
+    docs, and the read is broadcast-prefiltered."""
     delta, corpus = _split(toks, 10, 3)
-    idx = build_minhash_index(corpus)
-    persist_minhash_index(idx, "t_delta_idx", n_buckets=8, path=str(tmp_path / "idx"))
+    prefix = "t_delta_idx"
     try:
-        loaded = load_minhash_index(spark, "t_delta_idx")
+        neardup_upsert_batch(corpus, str(tmp_path / "idx"), table_prefix=prefix, n_buckets=8)
+        loaded = load_neardup_index(spark, prefix, "minhash")
         out = minhash_delta_pairs(delta, loaded, threshold=0.2)
-        inmem = minhash_delta_pairs(delta, idx, threshold=0.2)
+        inmem = minhash_delta_pairs(
+            delta, build_minhash_index(_stored(spark, corpus, prefix)), threshold=0.2
+        )
         assert _rows(out) == _rows(inmem)
+        assert out.count() > 0
 
         # plan shape: every access of either index table must meet a
         # broadcast semi-join prefilter BELOW any shuffle — i.e. the
@@ -91,7 +111,7 @@ def test_persisted_index_equal_and_broadcast_filtered(spark, toks, tmp_path):
         # BroadcastHashJoin LeftSemi (band keys resp. candidate ids),
         # so only matching rows ever enter an Exchange
         unmat = minhash_delta_pairs(delta, loaded, threshold=0.2, materialize=False)
-        for table in ("t_delta_idx_buckets", "t_delta_idx_shingles"):
+        for table in (f"{prefix}_buckets", f"{prefix}_shingles"):
             chains = ancestor_chains(unmat, table)
             assert chains, f"no scan of {table} in the plan"
             for chain in chains:
@@ -102,8 +122,7 @@ def test_persisted_index_equal_and_broadcast_filtered(spark, toks, tmp_path):
                     first_join,
                 )
     finally:
-        spark.sql("DROP TABLE IF EXISTS t_delta_idx_buckets")
-        spark.sql("DROP TABLE IF EXISTS t_delta_idx_shingles")
+        _drop_store(spark, prefix, ("buckets", "shingles"))
 
 
 def test_disjoint_outputs_union_to_batch(spark, toks):
@@ -146,13 +165,13 @@ def test_simhash_delta_equals_batch_restricted(spark, toks, mod, rem):
 
 
 def test_append_to_index_preserves_plan_and_equivalence(spark, toks, tmp_path):
-    """append_to_minhash_index: appending a delta's index rows into the
-    persisted bucketed index (a) cannot drift the bucket-count layout
-    contract (the spec is read from the catalog; a direct append with a
-    different count is rejected by Spark), and (b) leaves the NEXT delta
-    check both correct and index-side-Exchange-free — the plan pin runs
-    before AND after the append."""
-    from nlp_with_pyspark_spark.operators.dedup import append_to_minhash_index
+    """The survivor store's append of a batch's index rows (a) cannot
+    drift the bucket-count layout contract (the spec is read from the
+    catalog; a direct append with a different count is rejected by
+    Spark), and (b) leaves the NEXT delta check through
+    ``load_neardup_index`` both correct — equal to the in-memory index
+    over every stored doc — and index-side-Exchange-free: the plan pin
+    runs before AND after the append."""
     from nlp_with_pyspark_spark.sources.io import table_bucket_spec
 
     delta1 = toks.where(F.col("doc_id") % 10 == 3)
@@ -172,35 +191,35 @@ def test_append_to_index_preserves_plan_and_equivalence(spark, toks, tmp_path):
                     and "LeftSemi" in first_join
                 ), (table, first_join)
 
+    path = str(tmp_path / "idx")
     try:
-        persist_minhash_index(
-            build_minhash_index(corpus), prefix, n_buckets=8, path=str(tmp_path / "idx")
-        )
-        loaded = load_minhash_index(spark, prefix)
+        neardup_upsert_batch(corpus, path, table_prefix=prefix, n_buckets=8)
+        n_before = spark.table(f"{prefix}_docs").count()
         assert_index_plan(
-            minhash_delta_pairs(delta1, loaded, threshold=0.2, materialize=False)
+            minhash_delta_pairs(
+                delta1, load_neardup_index(spark, prefix, "minhash"), threshold=0.2,
+                materialize=False,
+            )
         )
-        out1 = minhash_delta_pairs(delta1, loaded, threshold=0.2)
-        # ingest delta1 wholesale (ids are disjoint by construction —
-        # survivor filtering is the sink's job, not the index's)
-        append_to_minhash_index(build_minhash_index(delta1), prefix)
-        assert out1.count() >= 0  # delta1 check ran against the pre-append view
+        # ingest delta1: its survivors' index rows are appended
+        neardup_upsert_batch(delta1, path, table_prefix=prefix, n_buckets=8)
+        assert spark.table(f"{prefix}_docs").count() > n_before
 
         # layout contract intact
         assert table_bucket_spec(spark, f"{prefix}_buckets")[:2] == ("band_hash", 8)
         assert table_bucket_spec(spark, f"{prefix}_shingles")[:2] == ("doc_id", 8)
 
-        loaded2 = load_minhash_index(spark, prefix)
+        loaded2 = load_neardup_index(spark, prefix, "minhash")
         unmat2 = minhash_delta_pairs(delta2, loaded2, threshold=0.2, materialize=False)
         assert_index_plan(unmat2)
-        # correctness across the append: delta2 vs (corpus ∪ delta1)
-        # index == batch over EVERYTHING restricted to delta2-touching
+        # correctness across the append: delta2 vs the stored index ==
+        # delta2 vs the in-memory index over every stored doc
         out2 = minhash_delta_pairs(delta2, loaded2, threshold=0.2)
-        restricted = minhash_dedup_pairs(toks, threshold=0.2).where(
-            (F.col("doc_a") % 10 == 4) | (F.col("doc_b") % 10 == 4)
+        scratch = minhash_delta_pairs(
+            delta2, build_minhash_index(_stored(spark, toks, prefix)), threshold=0.2
         )
-        assert _rows(out2) == _rows(restricted)
-        assert restricted.count() > 0
+        assert _rows(out2) == _rows(scratch)
+        assert out2.count() > 0
 
         # a bucket-count-drifting append is rejected outright
         with pytest.raises(Exception, match="(?i)bucket"):
@@ -213,22 +232,17 @@ def test_append_to_index_preserves_plan_and_equivalence(spark, toks, tmp_path):
                 .saveAsTable(f"{prefix}_buckets")
             )
     finally:
-        spark.sql(f"DROP TABLE IF EXISTS {prefix}_buckets")
-        spark.sql(f"DROP TABLE IF EXISTS {prefix}_shingles")
+        _drop_store(spark, prefix, ("buckets", "shingles"))
 
 
 @pytest.mark.slow  # heavy e2e/marathon; kin + oracle parity cover the default run
 def test_simhash_index_persist_append_roundtrip(spark, toks, tmp_path):
-    """persist/load/append for the simhash index family: the delta
-    check against a persisted-then-appended index stays correct and the
-    bucket specs survive the append."""
+    """The simhash survivor store across an append: the delta check
+    through ``load_neardup_index`` equals the in-memory index over the
+    stored docs, and the bucket specs survive the append."""
     from nlp_with_pyspark_spark.operators.dedup import (
-        append_to_simhash_index,
         build_simhash_index,
-        load_simhash_index,
-        persist_simhash_index,
         simhash_delta_pairs,
-        simhash_near_pairs,
     )
     from nlp_with_pyspark_spark.sources.io import table_bucket_spec
 
@@ -237,23 +251,22 @@ def test_simhash_index_persist_append_roundtrip(spark, toks, tmp_path):
     delta2 = toks.where(F.col("doc_id") % 10 == 4)
     corpus = toks.where(~(F.col("doc_id") % 10).isin(3, 4))
     prefix = "t_sim_idx"
+    path = str(tmp_path / "sidx")
     try:
-        persist_simhash_index(
-            build_simhash_index(corpus, **kw), prefix, n_buckets=8,
-            path=str(tmp_path / "sidx"),
-        )
-        append_to_simhash_index(build_simhash_index(delta1, **kw), prefix)
+        for batch in (corpus, delta1):
+            neardup_upsert_batch(
+                batch, path, hash_family="simhash", table_prefix=prefix, n_buckets=8, **kw
+            )
         assert table_bucket_spec(spark, f"{prefix}_keys")[:2] == ("band_hash", 8)
         assert table_bucket_spec(spark, f"{prefix}_fingerprints")[:2] == ("doc_id", 8)
-        out = simhash_delta_pairs(delta2, load_simhash_index(spark, prefix), **kw)
-        restricted = simhash_near_pairs(toks, **kw).where(
-            (F.col("doc_a") % 10 == 4) | (F.col("doc_b") % 10 == 4)
+        out = simhash_delta_pairs(delta2, load_neardup_index(spark, prefix, "simhash"), **kw)
+        scratch = simhash_delta_pairs(
+            delta2, build_simhash_index(_stored(spark, toks, prefix), **kw), **kw
         )
-        assert _rows(out) == _rows(restricted)
-        assert restricted.count() > 0
+        assert _rows(out) == _rows(scratch)
+        assert out.count() > 0
     finally:
-        spark.sql(f"DROP TABLE IF EXISTS {prefix}_keys")
-        spark.sql(f"DROP TABLE IF EXISTS {prefix}_fingerprints")
+        _drop_store(spark, prefix, ("keys", "fingerprints"))
 
 
 # ---------------------------------------------------------------------------
@@ -273,6 +286,14 @@ def _sem_cents(emb, n_lists=8):
         .select("vec_id", "embedding")
         .collect()
     ]
+
+
+def _sem_ingest(spark, batch, path, prefix, cents):
+    """Run ``batch`` through the semantic survivor-store sink."""
+    neardup_upsert_batch(
+        batch, path, tokens_col="embedding", id_col="vec_id", hash_family="semantic",
+        centroids=cents, table_prefix=prefix, n_buckets=8,
+    )
 
 
 def _emb_split(emb, mod, rem):
@@ -338,23 +359,26 @@ def test_semantic_delta_combined_cluster_cap_matches_batch(spark, emb):
 
 
 def test_semantic_persisted_index_equal_and_exchange_free(spark, emb, tmp_path):
+    """The semantic survivor store read through ``load_neardup_index``
+    answers a delta check exactly like ``build_semantic_index`` over its
+    stored vectors, with zero Exchange above the index scans."""
     from nlp_with_pyspark_spark.operators.dedup import (
         build_semantic_index,
-        load_semantic_index,
-        persist_semantic_index,
         semantic_delta_pairs,
     )
     from nlp_with_pyspark_spark.plans import exchanges_covering
 
     cents = _sem_cents(emb)
     delta, corpus = _emb_split(emb, 10, 3)
-    idx = build_semantic_index(corpus, cents)
-    persist_semantic_index(idx, "t_sem_idx", n_buckets=8, path=str(tmp_path / "idx"))
+    prefix = "t_sem_idx"
     try:
-        loaded = load_semantic_index(spark, "t_sem_idx")
+        _sem_ingest(spark, corpus, str(tmp_path / "idx"), prefix, cents)
+        loaded = load_neardup_index(spark, prefix, "semantic", id_col="vec_id")
         out = semantic_delta_pairs(delta, loaded, cents, threshold=0.3)
+        idx = build_semantic_index(_stored(spark, corpus, prefix, "vec_id"), cents)
         inmem = semantic_delta_pairs(delta, idx, cents, threshold=0.3)
         assert _rows(out) == _rows(inmem)
+        assert out.count() > 0
 
         # no unfiltered index row ever crosses a shuffle: zero Exchange
         # anywhere above the index table's scans (the delta side is
@@ -362,20 +386,18 @@ def test_semantic_persisted_index_equal_and_exchange_free(spark, emb, tmp_path):
         unmat = semantic_delta_pairs(
             delta, loaded, cents, threshold=0.3, materialize=False
         )
-        assert exchanges_covering(unmat, "t_sem_idx_assigned") == 0
+        assert exchanges_covering(unmat, f"{prefix}_assigned") == 0
     finally:
-        spark.sql("DROP TABLE IF EXISTS t_sem_idx_assigned")
+        _drop_store(spark, prefix, ("keys", "assigned"))
 
 
 def test_semantic_index_append_preserves_plan_and_equivalence(spark, emb, tmp_path):
-    """Appending delta survivors through append_to_semantic_index keeps
-    the bucketed layout (zero-Exchange contract) and the appended index
-    answers the next delta check exactly like a from-scratch build."""
+    """Appending a batch's survivors to the semantic store keeps the
+    bucketed layout (zero-Exchange contract), and the store read through
+    ``load_neardup_index`` answers the next delta check exactly like a
+    from-scratch build over the stored vectors."""
     from nlp_with_pyspark_spark.operators.dedup import (
-        append_to_semantic_index,
         build_semantic_index,
-        load_semantic_index,
-        persist_semantic_index,
         semantic_delta_pairs,
     )
     from nlp_with_pyspark_spark.plans import exchanges_covering
@@ -384,29 +406,25 @@ def test_semantic_index_append_preserves_plan_and_equivalence(spark, emb, tmp_pa
     batch1 = emb.where(F.col("vec_id") % 3 == 1)
     batch2 = emb.where(F.col("vec_id") % 3 == 2)
     base = emb.where(F.col("vec_id") % 3 == 0)
-    persist_semantic_index(
-        build_semantic_index(base, cents),
-        "t_sem_app",
-        n_buckets=8,
-        path=str(tmp_path / "app"),
-    )
+    prefix, path = "t_sem_app", str(tmp_path / "app")
     try:
-        loaded = load_semantic_index(spark, "t_sem_app")
-        append_to_semantic_index(build_semantic_index(batch1, cents), "t_sem_app")
-        spark.catalog.refreshTable("t_sem_app_assigned")
+        _sem_ingest(spark, base, path, prefix, cents)
+        n_base = spark.table(f"{prefix}_docs").count()
+        _sem_ingest(spark, batch1, path, prefix, cents)
+        assert spark.table(f"{prefix}_docs").count() > n_base
+        loaded = load_neardup_index(spark, prefix, "semantic", id_col="vec_id")
         out = semantic_delta_pairs(batch2, loaded, cents, threshold=0.3)
         scratch = semantic_delta_pairs(
             batch2,
-            build_semantic_index(
-                base.unionByName(batch1), cents
-            ),
+            build_semantic_index(_stored(spark, emb, prefix, "vec_id"), cents),
             cents,
             threshold=0.3,
         )
         assert _rows(out) == _rows(scratch)
+        assert out.count() > 0
         unmat = semantic_delta_pairs(
             batch2, loaded, cents, threshold=0.3, materialize=False
         )
-        assert exchanges_covering(unmat, "t_sem_app_assigned") == 0
+        assert exchanges_covering(unmat, f"{prefix}_assigned") == 0
     finally:
-        spark.sql("DROP TABLE IF EXISTS t_sem_app_assigned")
+        _drop_store(spark, prefix, ("keys", "assigned"))

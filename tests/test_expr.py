@@ -77,6 +77,32 @@ def test_memo_col_distinct_keys_distinct_trees(spark):
     assert (row.x, row.y) == (1, 2)
 
 
+def test_memo_col_keys_bound_columns_apart(spark):
+    """Two DataFrames' same-named columns must not share a memo slot:
+    each is bound to its own DataFrame's attribute, so a tree built over
+    one fails analysis over the other. The same DataFrame's column, and
+    an unresolved name, still hit the memo. (A stop list of its own
+    keeps this test's memo slots fresh.)"""
+    from nlp_with_pyspark_spark.functions.text import (
+        clean_text,
+        filter_stopwords,
+        tokenize,
+        tokens_pipeline,
+    )
+
+    stop = ("reads", "decode")
+    a = spark.createDataFrame([("Spark reads parquet files",)], "text string")
+    b = spark.createDataFrame([("Python workers decode arrow",)], "text string")
+    for df in (a, b):
+        got = df.select(tokens_pipeline(df["text"], stop).alias("t")).first().t
+        want = df.select(
+            filter_stopwords(tokenize(clean_text(df["text"])), stop).alias("t")
+        ).first().t
+        assert got == want and got
+    assert tokens_pipeline(a["text"], stop) is tokens_pipeline(a["text"], stop)
+    assert tokens_pipeline(F.col("text"), stop) is tokens_pipeline(F.col("text"), stop)
+
+
 def test_memo_col_evicts_dead_context_entries(spark):
     """A miss drops every entry built under a SparkContext that is no
     longer active, and keeps the live context's entries."""

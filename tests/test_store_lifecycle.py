@@ -2,7 +2,8 @@
 stores of at most 200 rows: remove → replay (the family's delete step
 run by ``sink`` under foreachBatch) → restart heal → vacuum
 crashed between fold and clear → (sink-fed stores: a full catalog loss)
-→ re-ingest → vacuum; and a vector sink whose first batch crashed.
+→ re-ingest → vacuum; a near-dup takedown seen through the store's
+reader; and a vector sink whose first batch crashed.
 
 Each family is driven only through its public API; the tombstone
 table's sidecar path and column types are pinned literally, so a store
@@ -207,22 +208,42 @@ class _Vector:
         ]
 
 
-class _NeardupMinhash:
+class _Neardup:
+    """A near-dup survivor store fed by the sink's per-batch step, with an
+    ``id int`` ledger column; every doc's content is its own, so no two
+    stored docs are near-duplicates. ``served`` reads the store through
+    ``load_neardup_index``, whose every table must serve exactly the
+    live ledger."""
+
     # tombstones are `doc_id` with the docs table's `id` type
     tomb_types = [("doc_id", "int")]
-    report_keys = {"tombstones_folded", "docs", "buckets", "shingles"}
     reopens = True
+    family = "minhash"
+    #: the sink's family options beyond ``hash_family``
+    extra: dict = {}
 
     def __init__(self, spark, tmp, sf_dir):
-        self.spark, self.prefix = spark, "t_lc_neardup"
+        from nlp_with_pyspark_spark.operators.store import NEARDUP_INDEX
+
+        self.spark, self.prefix = spark, f"t_lc_nd_{self.family}"
         self.path = f"{tmp}/nd"
         self.sidecar = f"{self.path}/docs__tombstones"
-        # every doc's tokens are its own: no near-duplicate pairs
-        self.docs = spark.createDataFrame(
+        self.suffixes = ("docs",) + tuple(s for s, _ in NEARDUP_INDEX[self.family])
+        self.report_keys = {"tombstones_folded", *self.suffixes}
+        self.opts = {"hash_family": self.family, **self.extra}
+        self.docs = self.corpus(spark)
+        self.ingest(list(range(N)))
+
+    def corpus(self, spark):
+        return spark.createDataFrame(
             [(i, [f"d{i}t{j}" for j in range(6)]) for i in range(N)],
             "id int, tokens array<string>",
         )
-        self.ingest(list(range(N)))
+
+    def delta_pairs(self, batch, index):
+        from nlp_with_pyspark_spark.operators.dedup import minhash_delta_pairs
+
+        return minhash_delta_pairs(batch, index, id_col="id")
 
     def remove(self, ids):
         from nlp_with_pyspark_spark.operators.dedup import remove_from_neardup_store
@@ -232,7 +253,7 @@ class _NeardupMinhash:
     def vacuum(self):
         from nlp_with_pyspark_spark.operators.dedup import vacuum_neardup_store
 
-        return vacuum_neardup_store(self.spark, self.prefix, "minhash", id_col="id")
+        return vacuum_neardup_store(self.spark, self.prefix, self.family, id_col="id")
 
     def delete_step(self):
         from nlp_with_pyspark_spark.streaming.sinks import neardup_delete_batch
@@ -244,23 +265,65 @@ class _NeardupMinhash:
 
         return neardup_store_tombstones(self.spark, self.prefix, id_col="id")
 
-    def ingest(self, ids):
+    def upsert(self, batch):
         from nlp_with_pyspark_spark.streaming.sinks import neardup_upsert_batch
 
         neardup_upsert_batch(
-            self.docs.where(F.col("id").isin(ids)), self.path, id_col="id",
-            table_prefix=self.prefix, n_buckets=4,
+            batch, self.path, id_col="id", table_prefix=self.prefix, n_buckets=4,
+            **self.opts,
         )
+
+    def ingest(self, ids):
+        self.upsert(self.docs.where(F.col("id").isin(ids)))
+
+    def index(self):
+        from nlp_with_pyspark_spark.operators.dedup import load_neardup_index
+
+        return load_neardup_index(self.spark, self.prefix, self.family, id_col="id")
 
     def served(self):
         docs = f"{self.prefix}_docs"
         self.spark.catalog.refreshTable(docs)
         stored = {r.id for r in self.spark.table(docs).collect()}
         tombs = self.live()
-        return stored - ({r.doc_id for r in tombs.collect()} if tombs is not None else set())
+        ids = stored - ({r.doc_id for r in tombs.collect()} if tombs is not None else set())
+        for frame in self.index():
+            assert {r[0] for r in frame.select(frame.columns[0]).collect()} == ids
+        return ids
 
     def tables(self):
-        return [f"{self.prefix}_{s}" for s in ("docs", "buckets", "shingles", "tombstones")]
+        return [f"{self.prefix}_{s}" for s in self.suffixes + ("tombstones",)]
+
+
+class _NeardupSimhash(_Neardup):
+    family = "simhash"
+    extra = {"max_hamming": 3}
+
+    def delta_pairs(self, batch, index):
+        from nlp_with_pyspark_spark.operators.dedup import simhash_delta_pairs
+
+        return simhash_delta_pairs(batch, index, id_col="id", max_hamming=3)
+
+
+class _NeardupSemantic(_Neardup):
+    """One-hot embeddings (pairwise cosine 0) under four block centroids."""
+
+    family = "semantic"
+    cents = [(c, [float(i // 30 == c) for i in range(N)]) for c in range(4)]
+    extra = {"tokens_col": "embedding", "centroids": cents}
+
+    def corpus(self, spark):
+        return spark.createDataFrame(
+            [(i, [float(i == j) for j in range(N)]) for i in range(N)],
+            "id int, embedding array<float>",
+        )
+
+    def delta_pairs(self, batch, index):
+        from nlp_with_pyspark_spark.operators.dedup import semantic_delta_pairs
+
+        return semantic_delta_pairs(batch, index, self.cents, 0.7, id_col="id").select(
+            "id_a", "id_b"
+        )
 
 
 class _Exact:
@@ -306,7 +369,7 @@ class _Exact:
         stream = self.spark.readStream.schema("event_id long, payload string").parquet(src)
         sink(
             stream, dedup_store_upsert_batch, f"{self.tmp}/ck{self.n_ingest}",
-            path=self.path, table=self.table, n_buckets=4,
+            store_path=self.path, table=self.table, n_buckets=4,
         )
 
     def served(self):
@@ -339,7 +402,9 @@ FAMILIES = {
     "posting": _Posting,
     "posting-sink": _PostingSink,
     "vector": _Vector,
-    "neardup-minhash": _NeardupMinhash,
+    "neardup-minhash": _Neardup,
+    "neardup-simhash": _NeardupSimhash,
+    "neardup-semantic": _NeardupSemantic,
     "exact": _Exact,
 }
 
@@ -402,6 +467,29 @@ def test_tombstone_lifecycle_matrix(spark, sf_dir, tmp_path, monkeypatch, family
             spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
+@pytest.mark.parametrize("family", [f for f in FAMILIES if f.startswith("neardup-")])
+def test_neardup_takedown_matches_nothing(spark, sf_dir, tmp_path, family):
+    """A taken-down doc matches nothing: through ``load_neardup_index``,
+    a copy of stored doc X pairs with X until X is removed, then names
+    no removed doc, and the sink admits the copy."""
+    store = FAMILIES[family](spark, str(tmp_path), sf_dir)
+    x, copy_id = DEAD[0], N
+    copy = store.docs.where(F.col("id") == x).withColumn("id", F.lit(copy_id))
+
+    def pairs():
+        return sorted(tuple(r)[:2] for r in store.delta_pairs(copy, store.index()).collect())
+
+    try:
+        assert pairs() == [(x, copy_id)]
+        assert store.remove([x]) == 1
+        assert pairs() == []
+        store.upsert(copy)
+        assert store.served() == set(range(N + 1)) - {x}
+    finally:
+        for t in store.tables():
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
 def test_vector_sink_first_batch_crash_replays(spark, sf_dir, tmp_path, monkeypatch):
     """A vector sink whose FIRST batch dies before the quantizer tables
     are written replays to a store that serves every vector: the first
@@ -426,7 +514,7 @@ def test_vector_sink_first_batch_crash_replays(spark, sf_dir, tmp_path, monkeypa
 
     def upsert():
         return vector_index_upsert_batch(
-            emb, path, cent, pq_fixed_codebooks(), prefix, n_buckets=4
+            emb, path, cent, pq_fixed_codebooks(), table_prefix=prefix, n_buckets=4
         )
 
     try:

@@ -20,6 +20,7 @@ from nlp_with_pyspark_spark.operators.windows import (
     sessionize,
     tumbling_counts,
 )
+from nlp_with_pyspark_spark.operators.store import NEARDUP_INDEX
 from nlp_with_pyspark_spark.sources.io import read_table
 from nlp_with_pyspark_spark.streaming.stateful import user_running_stats
 from nlp_with_pyspark_spark.streaming.windows import (
@@ -449,12 +450,12 @@ def test_incremental_dedup_sink_across_batches(spark, tmp_path):
     tbl = "t_exact_across"
     try:
         stream = events_stream_from_dir(spark, str(src / "f*"), max_files_per_trigger=1)
-        sink(stream, dedup_store_upsert_batch, ckpt, path=store, table=tbl, n_buckets=4)
+        sink(stream, dedup_store_upsert_batch, ckpt, store_path=store, table=tbl, n_buckets=4)
         assert _stored(spark, tbl, "event_id") == [1, 2, 3]
         # resume from the same checkpoint: no new input, store unchanged
         stream2 = events_stream_from_dir(spark, str(src / "f*"), max_files_per_trigger=1)
         sink(
-            stream2, dedup_store_upsert_batch, ckpt, path=store, table=tbl, n_buckets=4
+            stream2, dedup_store_upsert_batch, ckpt, store_path=store, table=tbl, n_buckets=4
         )
         assert _stored(spark, tbl, "event_id") == [1, 2, 3]
     finally:
@@ -648,7 +649,7 @@ def test_incremental_dedup_sink_fails_on_store_schema_mismatch(spark, tmp_path):
         with pytest.raises(StreamingQueryException):
             sink(
                 stream, dedup_store_upsert_batch, str(tmp_path / "mm_ckpt"),
-                path=store, table=tbl, n_buckets=4
+                store_path=store, table=tbl, n_buckets=4
             )
         assert _stored(spark, tbl, "other_id") == [99]
     finally:
@@ -686,7 +687,7 @@ def test_incremental_dedup_sink_replay_after_crash(spark, tmp_path):
     kw = dict(table=tbl, n_buckets=4)
     try:
         stream = events_stream_from_dir(spark, str(src / "f*"), max_files_per_trigger=1)
-        sink(stream, dedup_store_upsert_batch, ckpt, path=store, **kw)
+        sink(stream, dedup_store_upsert_batch, ckpt, store_path=store, **kw)
         assert _stored(spark, tbl, "event_id") == [1, 2, 3]
 
         # crash window: last batch appended to the store, commit marker lost
@@ -698,7 +699,7 @@ def test_incremental_dedup_sink_replay_after_crash(spark, tmp_path):
         if os.path.exists(crc):
             os.remove(crc)
         stream2 = events_stream_from_dir(spark, str(src / "f*"), max_files_per_trigger=1)
-        sink(stream2, dedup_store_upsert_batch, ckpt, path=store, **kw)
+        sink(stream2, dedup_store_upsert_batch, ckpt, store_path=store, **kw)
         ids = _stored(spark, tbl, "event_id")
         assert ids == [1, 2, 3], f"replayed batch duplicated keys: {ids}"
 
@@ -706,7 +707,7 @@ def test_incremental_dedup_sink_replay_after_crash(spark, tmp_path):
         stream3 = events_stream_from_dir(spark, str(src / "f*"), max_files_per_trigger=1)
         sink(
             stream3, dedup_store_upsert_batch, str(tmp_path / "ckpt_fresh"),
-            path=store, **kw,
+            store_path=store, **kw,
         )
         ids = _stored(spark, tbl, "event_id")
         assert ids == [1, 2, 3], f"full replay duplicated keys: {ids}"
@@ -996,14 +997,15 @@ def test_neardup_upsert_bucketed_store_matches_reference_and_plan(spark, sf_dir,
         # later shuffles by design; that's the O(delta + collisions)
         # shuffle volume, not O(store))
         from nlp_with_pyspark_spark.operators.dedup import (
-            load_minhash_index,
+            load_neardup_index,
             minhash_delta_pairs,
         )
         from nlp_with_pyspark_spark.plans import ancestor_chains
 
         delta = toks.limit(20).withColumn("doc_id", F.col("doc_id") + 10_000_000)
         unmat = minhash_delta_pairs(
-            delta, load_minhash_index(spark, prefix), threshold=0.2, materialize=False
+            delta, load_neardup_index(spark, prefix, "minhash"), threshold=0.2,
+            materialize=False,
         )
         for table in (f"{prefix}_buckets", f"{prefix}_shingles"):
             chains = ancestor_chains(unmat, table)
@@ -1232,14 +1234,14 @@ def test_incremental_dedup_sink_bucketed_table(spark, tmp_path):
         stream = events_stream_from_dir(spark, str(src / "f*"), max_files_per_trigger=1)
         sink(
             stream, dedup_store_upsert_batch, ckpt,
-            path=store, table=tbl, n_buckets=4, compact_threshold_files=2
+            store_path=store, table=tbl, n_buckets=4, compact_threshold_files=2
         )
         ids = sorted(r.event_id for r in spark.table(tbl).select("event_id").collect())
         assert ids == [1, 2, 3]
         # resume from the same checkpoint: no new input ⇒ unchanged
         stream2 = events_stream_from_dir(spark, str(src / "f*"), max_files_per_trigger=1)
         sink(
-            stream2, dedup_store_upsert_batch, ckpt, path=store, table=tbl, n_buckets=4
+            stream2, dedup_store_upsert_batch, ckpt, store_path=store, table=tbl, n_buckets=4
         )
         assert sorted(
             r.event_id for r in spark.table(tbl).select("event_id").collect()
@@ -2115,7 +2117,6 @@ def test_neardup_takedown_delete_equals_filter(spark, sf_dir, tmp_path, family):
     is reset, and the bucket-spec layout contract survives the staged
     rewrite."""
     from nlp_with_pyspark_spark.operators.dedup import (
-        NEARDUP_STORE_TABLES,
         neardup_store_tombstones,
         remove_from_neardup_store,
         vacuum_neardup_store,
@@ -2128,7 +2129,7 @@ def test_neardup_takedown_delete_equals_filter(spark, sf_dir, tmp_path, family):
 
     kw, corpus, id_col = _takedown_setup(spark, sf_dir, family)
     prefix = f"t_takedown_{family}"
-    keys_sfx, feats_sfx = NEARDUP_STORE_TABLES[family]
+    keys_sfx, feats_sfx = (s for s, _ in NEARDUP_INDEX[family])
     suffixes = ("docs", keys_sfx, feats_sfx)
     store = str(tmp_path / "store")
     try:
@@ -2215,14 +2216,13 @@ def test_neardup_takedown_unsuppresses_future_neardups(
     fresh copy is ADMITTED — while X itself stays excluded by the docs
     guard until a vacuum (the posting-index re-ingest rule)."""
     from nlp_with_pyspark_spark.operators.dedup import (
-        NEARDUP_STORE_TABLES,
         remove_from_neardup_store,
     )
     from nlp_with_pyspark_spark.streaming.sinks import neardup_upsert_batch
 
     kw, corpus, id_col = _takedown_setup(spark, sf_dir, family)
     prefix = f"t_unsup_{family}"
-    keys_sfx, feats_sfx = NEARDUP_STORE_TABLES[family]
+    keys_sfx, feats_sfx = (s for s, _ in NEARDUP_INDEX[family])
     suffixes = ("docs", keys_sfx, feats_sfx)
     store = str(tmp_path / "store")
     try:
@@ -2283,7 +2283,6 @@ def test_neardup_delete_sink_stream_equals_batch(spark, sf_dir, tmp_path, family
     produces (the vacuum threshold fires on the last micro-batch), and
     replaying the whole stream against a fresh checkpoint is a no-op."""
     from nlp_with_pyspark_spark.operators.dedup import (
-        NEARDUP_STORE_TABLES,
         neardup_store_tombstones,
     )
     from nlp_with_pyspark_spark.streaming.sinks import (
@@ -2294,7 +2293,7 @@ def test_neardup_delete_sink_stream_equals_batch(spark, sf_dir, tmp_path, family
 
     kw, corpus, id_col = _takedown_setup(spark, sf_dir, family)
     prefix = f"t_delsink_{family}"
-    keys_sfx, feats_sfx = NEARDUP_STORE_TABLES[family]
+    keys_sfx, feats_sfx = (s for s, _ in NEARDUP_INDEX[family])
     suffixes = ("docs", keys_sfx, feats_sfx)
     store = str(tmp_path / "store")
     try:
@@ -2412,7 +2411,7 @@ def test_exact_dedup_store_takedown(spark, tmp_path):
         stream = events_stream_from_dir(spark, str(src / "f*"), max_files_per_trigger=1)
         sink(
             stream, dedup_store_upsert_batch, str(tmp_path / "ck1"),
-            path=store, table=tbl, n_buckets=4
+            store_path=store, table=tbl, n_buckets=4
         )
         snap = _exact_store_rows(spark, tbl)
         assert len(snap) == 6
@@ -2430,7 +2429,7 @@ def test_exact_dedup_store_takedown(spark, tmp_path):
         stream2 = events_stream_from_dir(spark, str(src / "f*"), max_files_per_trigger=1)
         sink(
             stream2, dedup_store_upsert_batch, str(tmp_path / "ck2"),
-            path=store, table=tbl, n_buckets=4
+            store_path=store, table=tbl, n_buckets=4
         )
         assert sorted(
             r.event_id for r in load_exact_dedup_store(spark, tbl).collect()
@@ -2459,7 +2458,7 @@ def test_exact_dedup_store_takedown(spark, tmp_path):
         stream3 = events_stream_from_dir(spark, str(src / "f*"), max_files_per_trigger=1)
         sink(
             stream3, dedup_store_upsert_batch, str(tmp_path / "ck3"),
-            path=store, table=tbl, n_buckets=4
+            store_path=store, table=tbl, n_buckets=4
         )
         assert sorted(
             r.event_id for r in load_exact_dedup_store(spark, tbl).collect()
@@ -2498,7 +2497,7 @@ def test_dedup_store_delete_sink_stream_equals_batch(spark, tmp_path):
         stream = events_stream_from_dir(spark, str(src / "f*"), max_files_per_trigger=1)
         sink(
             stream, dedup_store_upsert_batch, str(tmp_path / "ck"),
-            path=store, table=tbl, n_buckets=4
+            store_path=store, table=tbl, n_buckets=4
         )
         snap = _exact_store_rows(spark, tbl)
         dead = [2, 4, 6, 8]
@@ -2628,7 +2627,7 @@ def test_exact_store_upsert_scrubs_stale_tombstone_after_crashed_vacuum(
         stream = events_stream_from_dir(spark, str(src / "f*"), max_files_per_trigger=1)
         sink(
             stream, dedup_store_upsert_batch, str(tmp_path / "ck1"),
-            path=store, table=tbl, n_buckets=4
+            store_path=store, table=tbl, n_buckets=4
         )
         snap = _exact_store_rows(spark, tbl)
         dead = [2, 4]
@@ -2646,7 +2645,7 @@ def test_exact_store_upsert_scrubs_stale_tombstone_after_crashed_vacuum(
         stream2 = events_stream_from_dir(spark, str(src / "f*"), max_files_per_trigger=1)
         sink(
             stream2, dedup_store_upsert_batch, str(tmp_path / "ck2"),
-            path=store, table=tbl, n_buckets=4
+            store_path=store, table=tbl, n_buckets=4
         )
         assert exact_dedup_store_tombstones(spark, tbl) is None
         # refresh: the outer session's file-listing cache predates the
